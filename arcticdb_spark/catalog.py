@@ -2846,6 +2846,115 @@ class Library:
             out = out.unionByName(p)
         return out
 
+    def _scan_files_arrow(self, symbol: str, m: "VersionManifest",
+                          files: list, columns: list | None,
+                          date_range: tuple | None, rows: tuple | None,
+                          with_row_ids: bool, orig_pos: bool):
+        """Driver-side twin of ``_scan_files`` + the plain read's column
+        shaping (see arrowread.py): the pruned files are read with pyarrow
+        in ``row_start`` order, i.e. write order, so no sort is needed.
+        ``date_range`` is an inclusive (lo_ns, hi_ns) pair applied on the
+        physical index, ``rows`` a resolved [start, end) row-id range.
+        Returns an ``arrowread.LocalFrame`` with the columns, order and
+        Spark types the Spark read path would collect, or None when the
+        read must take the Spark path:
+
+        - a file is on a schema epoch other than the manifest's, i.e. its
+          schema lacks a stored manifest column or types it differently
+          (those scans cast and backfill per epoch, see ``_scan_files``;
+          extra physical columns are ignored there as here);
+        - a file is not on a local path (object stores read through Spark);
+        - a selected dictionary-coded column's sidecar is over the driver
+          read cap (``_dict_sidecar_over_cap``); smaller sidecars decode
+          through the driver-side ``_dict_map``."""
+        import pyarrow.compute as pc
+
+        from arcticdb_spark import arrowread as ar
+        from arcticdb_spark.expr import UINT64_META
+        paths = [ar.local_path(fe.path) for fe in files]
+        if None in paths:
+            return None
+        mschema = T.StructType.fromJson(json.loads(m.schema_json))
+        fields = {f.name: f for f in mschema.fields}
+        stored = {c: f.dataType for c, f in fields.items()
+                  if not isinstance(f.dataType, T.NullType)}
+        for sj in {fe.schema_json for fe in files} - {None, m.schema_json}:
+            epoch = {f.name: f.dataType
+                     for f in T.StructType.fromJson(json.loads(sj)).fields}
+            if any(epoch.get(c) != t for c, t in stored.items()):
+                return None
+        nm = m.norm_meta or {}
+        idx = m.index_column
+        index_ns = bool(idx) and bool(nm.get("index_ns"))
+        keep = list(fields)
+        if columns is not None:
+            # same selection as the Spark path: requested stored names in
+            # request order, index column(s) force-included in front
+            keep = [c for c in columns if c in fields]
+            idx_cols = (nm.get("physical") if nm.get("index_type")
+                        == "multiindex" else ([idx] if idx else []))
+            for c in reversed(idx_cols or []):
+                if c in fields and c not in keep:
+                    keep = [c] + keep
+        dicts = {}
+        for c in self.dictionary_columns:
+            if (c in keep and isinstance(fields[c].dataType, T.LongType)
+                    and os.path.isdir(self._dicts_dir(symbol, c))):
+                if self._dict_sidecar_over_cap(symbol, c):
+                    return None
+                dicts[c] = self._dict_map(symbol, c) or {}
+        large = self.spark._jconf.arrowUseLargeVarTypes()
+        want = {c: ar.arrow_type(stored[c], large) for c in keep
+                if c in stored}
+        if date_range is not None and not isinstance(fields[idx].dataType,
+                                                     T.LongType):
+            # a µs-timestamp index compares against µs-truncated bounds,
+            # as the Spark filter's timestamp literals do
+            date_range = tuple(None if b is None else b // 1000
+                               for b in date_range)
+        tbl = ar.read_files(
+            [(p, fe.row_start) for p, fe in zip(paths, files)], want,
+            ROW_ID, idx, date_range, rows)
+
+        out, sfields = tbl.select([]), []
+
+        def add(arr, sfield):
+            nonlocal out
+            sfields.append(sfield)
+            out = out.append_column(
+                sfield.name, arr.cast(ar.arrow_type(sfield.dataType, large)))
+
+        u64 = set(nm.get("uint64") or ())
+        for c in keep:
+            f = fields[c]
+            if isinstance(f.dataType, T.NullType):
+                add(pa.nulls(tbl.num_rows), T.StructField(c, T.NullType()))
+            elif c == idx and index_ns:
+                add(ar.ns_to_us_view(tbl.column(c)),
+                    T.StructField(c, T.TimestampType()))
+            elif c in dicts:
+                add(ar.decode_codes(tbl.column(c), dicts[c]),
+                    T.StructField(c, T.StringType()))
+            else:
+                md = dict(f.metadata or {})
+                if c in u64:
+                    md[UINT64_META] = True
+                add(tbl.column(c), T.StructField(c, f.dataType, True, md))
+        tail = []
+        if with_row_ids:
+            tail.append((ROW_ID, tbl.column(ROW_ID), True))
+        if index_ns:
+            shadow = (ns_shadow_col(idx),
+                      pc.fill_null(tbl.column(idx), NAT_SENTINEL), False)
+            # the Spark path appends the shadow after the row id on a full
+            # read and before it on a column selection
+            tail.insert(0 if columns is not None else len(tail), shadow)
+        if orig_pos:
+            tail.append((ORIG_POS, tbl.column(ROW_ID), True))
+        for name, arr, nullable in tail:
+            add(arr, T.StructField(name, T.LongType(), nullable))
+        return ar.LocalFrame(self.spark, T.StructType(sfields), out)
+
     def _read_physical(self, m: "VersionManifest",
                        files: list | None = None) -> DataFrame:
         """Scan the given files under the manifest's physical schema (void
@@ -4017,7 +4126,18 @@ class Library:
 
         ``lazy=True`` returns a LazyDataFrame (reference library.py:442) to
         chain further clauses; ``output_format`` in {"spark", "pandas",
-        "arrow"} (reference OutputFormat, options.py:170-196)."""
+        "arrow"} (reference OutputFormat, options.py:170-196).
+
+        Where the rows are read: a "pandas", "arrow" or "polars" read
+        without a ``query_builder`` (``as_of``, ``date_range``,
+        ``row_range``, ``columns`` and ``with_row_ids`` included) reads the
+        pruned files on the driver with pyarrow and runs no Spark job
+        (``_scan_files_arrow``). It falls back to the Spark scan when a
+        file is on another schema epoch than the manifest, a file is not
+        on a local path, or a selected dictionary column's sidecar is too
+        large to decode on the driver. QueryBuilder reads, "spark" /
+        "spark-ns" output, ``lazy`` and ``incomplete`` reads always run
+        on Spark. Both paths feed the same output finisher."""
         import pandas as pd
         output_format = self._resolve_output_format(output_format)
         if date_range is not None and row_range is not None:
@@ -4236,6 +4356,43 @@ class Library:
             end = total if end is None else (end + total if end < 0 else end)
             files = [fe for fe in files
                      if fe.row_start < end and fe.row_start + fe.rows > start]
+        # positional slicing of a RangeIndex symbol restores ORIGINAL
+        # positions (reference test_read_index.py: row_range/head/tail
+        # with columns=[] gives df.iloc[a:b].index, start offset and step
+        # preserved) — carried in a dedicated column because the tail
+        # kernel REBASES ROW_ID for clause chaining; a FILTER re-numbers
+        # instead (the reference resets the rowcount index on filtered
+        # reads, test_filtering generic_filter_test).
+        qb_clauses = getattr(query_builder, "_clauses", []) \
+            if query_builder is not None else []
+        range_positions = (
+            output_format == "pandas" and not with_row_ids
+            and (m.norm_meta or {}).get("index_type") in (None, "range")
+            and not (m.norm_meta or {}).get("series")
+            and idx is None
+            and (row_range is not None
+                 or any(k in ("head", "tail", "row_range")
+                        for k, _ in qb_clauses))
+            and not any(k in ("filter", "groupby_agg", "resample_agg")
+                        for k, _ in qb_clauses))
+
+        if order_out:
+            # a plain read whose rows all land on the driver anyway: read
+            # the pruned files there (no Spark job, no row-id sort) unless
+            # _scan_files_arrow names a structural reason to fall back.
+            # With every file pruned, format like the Spark path's empty
+            # branch below (no position column, undecided index honoured)
+            orig_pos = range_positions and bool(files)
+            local = self._scan_files_arrow(
+                symbol, m, files, columns,
+                None if date_range is None else (lo_ns, hi_ns),
+                None if row_range is None else (start, end),
+                with_row_ids, orig_pos)
+            if local is not None:
+                return self._format_output(
+                    local, output_format, m.norm_meta,
+                    undecided_index=_index_undecided(m) and not files,
+                    range_positions=orig_pos, sorted_flag=m.sorted)
 
         if not files:
             from pyspark.sql import types as T
@@ -4334,26 +4491,6 @@ class Library:
             if need_row_id:
                 keep.append(ROW_ID)
             df = df.select(keep)
-        # positional slicing of a RangeIndex symbol restores ORIGINAL
-        # positions (reference test_read_index.py: row_range/head/tail
-        # with columns=[] gives df.iloc[a:b].index, start offset and step
-        # preserved) — carried in a dedicated column because the tail
-        # kernel REBASES ROW_ID for clause chaining; a FILTER re-numbers
-        # instead (the reference resets the rowcount index on filtered
-        # reads, test_filtering generic_filter_test).
-        qb_clauses = getattr(query_builder, "_clauses", []) \
-            if query_builder is not None else []
-        range_positions = (
-            output_format == "pandas" and not with_row_ids
-            and (m.norm_meta or {}).get("index_type") in (None, "range")
-            and not (m.norm_meta or {}).get("series")
-            and idx is None
-            and ROW_ID in df.columns
-            and (row_range is not None
-                 or any(k in ("head", "tail", "row_range")
-                        for k, _ in qb_clauses))
-            and not any(k in ("filter", "groupby_agg", "resample_agg")
-                        for k, _ in qb_clauses))
         if range_positions:
             df = df.withColumn(ORIG_POS, F.col(ROW_ID))
         # dictionary-coded columns (string-pool analogue): when the
@@ -4513,6 +4650,10 @@ class Library:
                        group_index_cols: list | None = None,
                        range_positions: bool = False,
                        sorted_flag: str | None = None):
+        """Collect ``df`` and finish it for ``output_format``. ``df`` is a
+        Spark DataFrame or the driver scan's ``arrowread.LocalFrame``; both
+        collect through ``toPandas()`` / ``toArrow()`` and feed the one
+        finisher per format (``_finish_pandas`` / ``_finish_arrow``)."""
         if norm_meta and norm_meta.get("index_type") == "ndarray":
             # reference NdArrayNormalizer.denormalize: reshape the flat
             # column back to the stored shape — for every output format
@@ -4538,150 +4679,20 @@ class Library:
                         .drop(s))
             return df
         if output_format == "pandas":
-            import numpy as np
-            import pandas as pd
-            u64_cols = _uint64_output_cols(df)
-            pdf = df.toPandas()   # Arrow-accelerated collection
-            # uint64 restore: the stored LONG is the exact bit pattern —
-            # view back (zero-copy). A null (possible only via dynamic-
-            # schema backfill) degrades the column to float64 first, so
-            # keep uint64 only for fully-present columns.
-            for c in u64_cols:
-                if c in pdf.columns and not pdf[c].isna().any():
-                    pdf[c] = pdf[c].to_numpy(dtype="int64").view("uint64")
-            # small-uint restore: storage widened uint8/16/32 to int64; the
-            # recorded original width comes back when the values still fit
-            # (a dynamic-schema merge may have widened them legitimately)
-            for c, w in ((norm_meta or {}).get("unsigned_dtypes")
-                         or {}).items():
-                if (c in pdf.columns and pdf[c].dtype.kind == "i"
-                        and not pdf[c].isna().any()):
-                    info = np.iinfo(w)
-                    if pdf[c].between(info.min, info.max).all():
-                        pdf[c] = pdf[c].astype(w)
-            # rebuild exact datetime64[ns] from the LONG shadows (bit-level
-            # view: int64 min IS numpy's NaT) — before tz re-localization
-            # and index restore, which operate on the rebuilt column
-            for s in shadows:
-                tgt = s[len(NS_SHADOW_PREFIX):]
-                if tgt in pdf.columns and s in pdf.columns:
-                    pdf[tgt] = (pdf[s].to_numpy(dtype="int64")
-                                .view("datetime64[ns]"))
-                if s in pdf.columns:
-                    pdf = pdf.drop(columns=[s])
-            # re-localize tz-aware datetime columns/index levels (reference
-            # get_timezone_from_metadata + tz_localize("UTC").tz_convert,
-            # _normalization.py:461-462) — before any set_index so demoted
-            # levels are still plain columns here
-            for cname, tz in ((norm_meta or {}).get("tzs") or {}).items():
-                if cname in pdf.columns:
-                    pdf[cname] = (pdf[cname].dt.tz_localize("UTC")
-                                  .dt.tz_convert(tz))
-            # restore a demoted MultiIndex (reference _denormalize,
-            # _normalization.py:931-950) when all physical level columns
-            # survived the query pipeline
-            if (norm_meta and norm_meta.get("index_type") == "multiindex"
-                    and all(c in pdf.columns for c in norm_meta["physical"])):
-                pdf = pdf.set_index(norm_meta["physical"])
-                pdf.index = pdf.index.set_names(norm_meta["level_names"])
-            # re-promote a demoted DatetimeIndex / named index (reference
-            # _index_from_records, _normalization.py:450-463)
-            elif (norm_meta and norm_meta.get("index_type") in ("datetime",
-                                                                "named")
-                    and norm_meta.get("physical") in pdf.columns):
-                pdf = pdf.set_index(norm_meta["physical"])
-                if norm_meta.get("fake_name"):
-                    pdf.index.name = None
-                elif "orig_name" in norm_meta:
-                    # physical name was disambiguated (like-named data
-                    # column, or the legal empty-string name) — restore
-                    # the user's index name verbatim
-                    pdf.index.name = norm_meta["orig_name"]
-            # rebuild a non-default RangeIndex from recorded start/step —
-            # rows arrive in write order (ROW_ID restore), so position i is
-            # original row i
-            elif (range_positions and ORIG_POS in pdf.columns
-                    and (norm_meta or {}).get("index_type") in (None,
-                                                                "range")):
-                # positional slice of a RangeIndex/rowcount symbol: map
-                # each surviving physical row id back to its ORIGINAL
-                # index value (start + pos*step; the default 0..n index
-                # records no meta) — reference test_read_index.py
-                # row_range/head/tail preserve df.iloc positions
-                nm_rng = norm_meta or {}
-                pos = pdf[ORIG_POS].to_numpy()
-                pdf = pdf.drop(columns=[ORIG_POS])
-                pdf.index = pd.Index(
-                    nm_rng.get("start", 0) + pos * nm_rng.get("step", 1),
-                    name=nm_rng.get("name"))
-            elif norm_meta and norm_meta.get("index_type") == "range":
-                pdf.index = pd.RangeIndex(
-                    norm_meta["start"],
-                    norm_meta["start"] + norm_meta["step"] * len(pdf),
-                    norm_meta["step"], name=norm_meta.get("name"))
-            # re-categorize (reference _denormalize restore,
-            # _normalization.py:1203-1217): keys are physical column names,
-            # so this runs before renamed_cols maps names back
-            for cname, info in ((norm_meta or {}).get("categoricals")
-                                or {}).items():
-                if cname in pdf.columns:
-                    pdf[cname] = pd.Categorical(
-                        pdf[cname], categories=info["categories"])
-            ren = (norm_meta or {}).get("renamed_cols")
-            if ren:
-                back = {}
-                for entry in ren:
-                    phys, kind = entry[0], entry[1]
-                    orig = entry[2] if len(entry) > 2 else phys
-                    back[phys] = (None if kind == "none"
-                                  else phys == "True" if kind == "bool"
-                                  else int(orig) if kind == "int"
-                                  else float(orig) if kind == "float"
-                                  else orig)
-                pdf = pdf.rename(columns=back)
-            if (group_index_cols
-                    and all(c in pdf.columns for c in group_index_cols)):
-                # groupby output: the group key(s) become the index like
-                # the reference (and pandas groupby().agg())
-                pdf = pdf.set_index(group_index_cols
-                                    if len(group_index_cols) > 1
-                                    else group_index_cols[0])
-            if ((norm_meta or {}).get("timeframe")
-                    and isinstance(pdf.index, pd.DatetimeIndex)):
-                # TimeFrame symbols read back AS TimeFrame (reference
-                # TimeFrameNormalizer.denormalize, _normalization.py:1518)
-                from arcticdb_spark.timeframe import TimeFrame
-                return TimeFrame(pdf.index.values, list(pdf.columns),
-                                 [pdf[c].to_numpy() for c in pdf.columns])
-            s = (norm_meta or {}).get("series")
-            if s and s["col"] in pdf.columns:
-                # reference SeriesNormalizer.denormalize: back to a Series
-                out = pdf[s["col"]]
-                # non-index companion columns (e.g. a demoted ts index)
-                # become the index when exactly one exists
-                other = [c for c in pdf.columns if c != s["col"]]
-                if len(other) == 1 and not isinstance(pdf.index, pd.MultiIndex):
-                    out = out.set_axis(pd.Index(pdf[other[0]],
-                                                name=other[0]))
-                return out.rename(s["name"])
-            if undecided_index and len(pdf) == 0:
-                # an EMPTY symbol's index type is undecided until the first
-                # non-empty append; the reference's empty-index feature
-                # reads it as an empty DatetimeIndex
-                # (test_empty_column_type.py create_empty_column fixtures:
-                # "data.index.equals(pd.DatetimeIndex([]))")
-                pdf.index = pd.DatetimeIndex([])
-            return pdf
+            return Library._finish_pandas(
+                df.toPandas(), _uint64_output_cols(df), shadows, norm_meta,
+                undecided_index, group_index_cols, range_positions)
         if output_format == "arrow":
-            return Library._arrow_with_ns(df, shadows, norm_meta)
+            return Library._finish_arrow(
+                df.toArrow(), _uint64_output_cols(df), shadows, norm_meta)
         if output_format == "polars":
             try:
                 import polars as pl
             except ImportError as e:
                 raise ArcticException(
                     "output_format='polars' requires the polars package") from e
-            out = pl.from_arrow(Library._arrow_with_ns(df, shadows,
-                                                       norm_meta))
+            out = pl.from_arrow(Library._finish_arrow(
+                df.toArrow(), _uint64_output_cols(df), shadows, norm_meta))
             # reference test_polars_set_sorted.py: a sorted timeseries
             # symbol's INDEX column carries the polars SORTED_ASC/DESC
             # flag (from the manifest's SortedValue); value columns and
@@ -4697,19 +4708,159 @@ class Library:
         raise ArcticException(f"unknown output_format {output_format!r}")
 
     @staticmethod
-    def _arrow_with_ns(df: DataFrame, shadows: list[str], norm_meta=None):
-        """Collect to Arrow, rebuilding exact timestamp[ns] index columns
-        from their LONG shadows (the reference's Arrow output is ns) and
-        bit-viewing uint64 columns back to uint64 (Arrow has the type).
-        Then applies the reference's Arrow output contract
-        (test_arrow_normalization.py): tz-aware columns come back as
-        timestamp[ns, tz], an unnamed index is exposed as ``__index__`` /
-        ``__index_level_N__``, and name clashes are disambiguated by
-        wrapping in underscores."""
+    def _finish_pandas(pdf, u64_cols: list[str], shadows: list[str],
+                       norm_meta=None, undecided_index: bool = False,
+                       group_index_cols: list | None = None,
+                       range_positions: bool = False):
+        """Pandas finisher for a collected frame: every post-collection
+        normalisation of a pandas read, whichever collector produced
+        ``pdf``."""
+        import numpy as np
+        import pandas as pd
+        # uint64 restore: the stored LONG is the exact bit pattern —
+        # view back (zero-copy). A null (possible only via dynamic-
+        # schema backfill) degrades the column to float64 first, so
+        # keep uint64 only for fully-present columns.
+        for c in u64_cols:
+            if c in pdf.columns and not pdf[c].isna().any():
+                pdf[c] = pdf[c].to_numpy(dtype="int64").view("uint64")
+        # small-uint restore: storage widened uint8/16/32 to int64; the
+        # recorded original width comes back when the values still fit
+        # (a dynamic-schema merge may have widened them legitimately)
+        for c, w in ((norm_meta or {}).get("unsigned_dtypes")
+                     or {}).items():
+            if (c in pdf.columns and pdf[c].dtype.kind == "i"
+                    and not pdf[c].isna().any()):
+                info = np.iinfo(w)
+                if pdf[c].between(info.min, info.max).all():
+                    pdf[c] = pdf[c].astype(w)
+        # rebuild exact datetime64[ns] from the LONG shadows (bit-level
+        # view: int64 min IS numpy's NaT) — before tz re-localization
+        # and index restore, which operate on the rebuilt column
+        for s in shadows:
+            tgt = s[len(NS_SHADOW_PREFIX):]
+            if tgt in pdf.columns and s in pdf.columns:
+                pdf[tgt] = (pdf[s].to_numpy(dtype="int64")
+                            .view("datetime64[ns]"))
+            if s in pdf.columns:
+                pdf = pdf.drop(columns=[s])
+        # re-localize tz-aware datetime columns/index levels (reference
+        # get_timezone_from_metadata + tz_localize("UTC").tz_convert,
+        # _normalization.py:461-462) — before any set_index so demoted
+        # levels are still plain columns here
+        for cname, tz in ((norm_meta or {}).get("tzs") or {}).items():
+            if cname in pdf.columns:
+                pdf[cname] = (pdf[cname].dt.tz_localize("UTC")
+                              .dt.tz_convert(tz))
+        # restore a demoted MultiIndex (reference _denormalize,
+        # _normalization.py:931-950) when all physical level columns
+        # survived the query pipeline
+        if (norm_meta and norm_meta.get("index_type") == "multiindex"
+                and all(c in pdf.columns for c in norm_meta["physical"])):
+            pdf = pdf.set_index(norm_meta["physical"])
+            pdf.index = pdf.index.set_names(norm_meta["level_names"])
+        # re-promote a demoted DatetimeIndex / named index (reference
+        # _index_from_records, _normalization.py:450-463)
+        elif (norm_meta and norm_meta.get("index_type") in ("datetime",
+                                                            "named")
+                and norm_meta.get("physical") in pdf.columns):
+            pdf = pdf.set_index(norm_meta["physical"])
+            if norm_meta.get("fake_name"):
+                pdf.index.name = None
+            elif "orig_name" in norm_meta:
+                # physical name was disambiguated (like-named data
+                # column, or the legal empty-string name) — restore
+                # the user's index name verbatim
+                pdf.index.name = norm_meta["orig_name"]
+        # rebuild a non-default RangeIndex from recorded start/step —
+        # rows arrive in write order (ROW_ID restore), so position i is
+        # original row i
+        elif (range_positions and ORIG_POS in pdf.columns
+                and (norm_meta or {}).get("index_type") in (None,
+                                                            "range")):
+            # positional slice of a RangeIndex/rowcount symbol: map
+            # each surviving physical row id back to its ORIGINAL
+            # index value (start + pos*step; the default 0..n index
+            # records no meta) — reference test_read_index.py
+            # row_range/head/tail preserve df.iloc positions
+            nm_rng = norm_meta or {}
+            pos = pdf[ORIG_POS].to_numpy()
+            pdf = pdf.drop(columns=[ORIG_POS])
+            pdf.index = pd.Index(
+                nm_rng.get("start", 0) + pos * nm_rng.get("step", 1),
+                name=nm_rng.get("name"))
+        elif norm_meta and norm_meta.get("index_type") == "range":
+            pdf.index = pd.RangeIndex(
+                norm_meta["start"],
+                norm_meta["start"] + norm_meta["step"] * len(pdf),
+                norm_meta["step"], name=norm_meta.get("name"))
+        # re-categorize (reference _denormalize restore,
+        # _normalization.py:1203-1217): keys are physical column names,
+        # so this runs before renamed_cols maps names back
+        for cname, info in ((norm_meta or {}).get("categoricals")
+                            or {}).items():
+            if cname in pdf.columns:
+                pdf[cname] = pd.Categorical(
+                    pdf[cname], categories=info["categories"])
+        ren = (norm_meta or {}).get("renamed_cols")
+        if ren:
+            back = {}
+            for entry in ren:
+                phys, kind = entry[0], entry[1]
+                orig = entry[2] if len(entry) > 2 else phys
+                back[phys] = (None if kind == "none"
+                              else phys == "True" if kind == "bool"
+                              else int(orig) if kind == "int"
+                              else float(orig) if kind == "float"
+                              else orig)
+            pdf = pdf.rename(columns=back)
+        if (group_index_cols
+                and all(c in pdf.columns for c in group_index_cols)):
+            # groupby output: the group key(s) become the index like
+            # the reference (and pandas groupby().agg())
+            pdf = pdf.set_index(group_index_cols
+                                if len(group_index_cols) > 1
+                                else group_index_cols[0])
+        if ((norm_meta or {}).get("timeframe")
+                and isinstance(pdf.index, pd.DatetimeIndex)):
+            # TimeFrame symbols read back AS TimeFrame (reference
+            # TimeFrameNormalizer.denormalize, _normalization.py:1518)
+            from arcticdb_spark.timeframe import TimeFrame
+            return TimeFrame(pdf.index.values, list(pdf.columns),
+                             [pdf[c].to_numpy() for c in pdf.columns])
+        s = (norm_meta or {}).get("series")
+        if s and s["col"] in pdf.columns:
+            # reference SeriesNormalizer.denormalize: back to a Series
+            out = pdf[s["col"]]
+            # non-index companion columns (e.g. a demoted ts index)
+            # become the index when exactly one exists
+            other = [c for c in pdf.columns if c != s["col"]]
+            if len(other) == 1 and not isinstance(pdf.index, pd.MultiIndex):
+                out = out.set_axis(pd.Index(pdf[other[0]],
+                                            name=other[0]))
+            return out.rename(s["name"])
+        if undecided_index and len(pdf) == 0:
+            # an EMPTY symbol's index type is undecided until the first
+            # non-empty append; the reference's empty-index feature
+            # reads it as an empty DatetimeIndex
+            # (test_empty_column_type.py create_empty_column fixtures:
+            # "data.index.equals(pd.DatetimeIndex([]))")
+            pdf.index = pd.DatetimeIndex([])
+        return pdf
+
+    @staticmethod
+    def _finish_arrow(tbl, u64_cols: list[str], shadows: list[str],
+                      norm_meta=None):
+        """Arrow/polars finisher for a collected table: rebuilds exact
+        timestamp[ns] index columns from their LONG shadows (the
+        reference's Arrow output is ns) and bit-views uint64 columns back
+        to uint64 (Arrow has the type). Then applies the reference's Arrow
+        output contract (test_arrow_normalization.py): tz-aware columns
+        come back as timestamp[ns, tz], an unnamed index is exposed as
+        ``__index__`` / ``__index_level_N__``, and name clashes are
+        disambiguated by wrapping in underscores."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        u64_cols = _uint64_output_cols(df)
-        tbl = df.toArrow()
         for c in u64_cols:
             i = tbl.column_names.index(c)
             arr = pa.chunked_array([ch.view(pa.uint64())
@@ -6897,6 +7048,7 @@ class Library:
     # IO executor (C++ thread pools). Spark job submission is thread-safe
     # per session, so a driver-side pool gives concurrent manifest IO +
     # concurrent Spark jobs (FAIR-schedulable) instead of N serial jobs.
+    # Batches of driver-side scans run no job and skip the pool.
     _BATCH_WORKERS = 8
 
     def _pmap(self, fn, items: list) -> list:
@@ -6912,7 +7064,11 @@ class Library:
         per-symbol as_of/date_range/row_range/columns/query_builder
         (reference ``library.py:2161`` accepts Union[str, ReadRequest]).
         With ``lazy=True`` returns a ``LazyDataFrameCollection`` (reference
-        read_batch lazy form; split()/collect()/concat() chain from it)."""
+        read_batch lazy form; split()/collect()/concat() chain from it).
+        A batch of plain pandas/arrow/polars reads (no query builder) is
+        read item by item on the calling thread, each a driver-side scan
+        (see ``read``); other batches fan out over a thread pool so their
+        Spark jobs overlap."""
         for s in symbols:
             if not isinstance(s, (str, ReadRequest)):
                 # reference test_read_batch_unhandled_type: only str and
@@ -6961,7 +7117,27 @@ class Library:
                                  exception_string=str(e), error_category=cat,
                                  version_request_type=vt,
                                  version_request_data=vd)
+        if self._batch_reads_on_driver(symbols, kw):
+            # every read is a driver-side pyarrow scan (no Spark job to
+            # overlap): pool threads would only contend for the GIL and
+            # open a py4j connection each, so read the symbols in turn
+            return [safe(s) for s in symbols]
         return self._pmap(safe, symbols)
+
+    def _batch_reads_on_driver(self, symbols: list, kw: dict) -> bool:
+        """True when each ``read_batch`` item takes ``read``'s driver scan:
+        a pandas/arrow/polars output, no query builder, not an incomplete
+        read, and a local data root (the scan's structural fallbacks to
+        Spark remain possible per symbol and then run serially)."""
+        from arcticdb_spark.arrowread import local_path
+        return (self._resolve_output_format(kw.get("output_format"))
+                in ("pandas", "arrow", "polars")
+                and kw.get("query_builder") is None
+                and not kw.get("incomplete")
+                and local_path(self.data_root) is not None
+                and not any(isinstance(s, ReadRequest)
+                            and s.query_builder is not None
+                            for s in symbols))
 
     @staticmethod
     def _payload(p) -> tuple:

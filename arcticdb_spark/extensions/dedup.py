@@ -1240,6 +1240,9 @@ def _simhash_hash_pairs(groups: DataFrame, bands: int,
         m = chunk(sha, b - 1) == chunk(shb, b - 1)
         earlier = m if earlier is None else (earlier | m)
         keep = keep.when(F.col("bi") == b, ~earlier)
+    # posexplode bounds bi to [0, bands); an out-of-range band emits
+    # nothing (explicitly, rather than through a NULL filter result)
+    keep = keep.otherwise(F.lit(False))
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (grouped.select("bi", F.explode(pair_structs).alias("p"))
             .filter(keep)
@@ -1433,9 +1436,12 @@ def simhash_dedup(df: DataFrame, text_col: str = "text",
     base = _spread(df.select(F.col(id_col).alias("id"), text_col)) \
         .select("id", h.alias("sh"))
     # lazy persist (r14): the first consumer is the cluster gate's single
-    # Arrow collect (near_dup_clusters), which fills the cache; the member/
-    # rep joins in the returned plan then read it — the eager count here
-    # was a whole extra pass over the signature computation
+    # Arrow collect (near_dup_clusters); the member/rep joins in the
+    # returned plan then read the cache — the eager count here was a whole
+    # extra pass over the signature computation. That gate collects
+    # limit(driver_edges_max + 1).toArrow(), which may stop before every
+    # partition is scanned, so the cache can be only partly filled: the
+    # joins then recompute the signatures of the uncached partitions
     groups = _persist(base.groupBy("sh").agg(F.min("id").alias("min_id"),
                                              F.collect_list("id").alias("ids")))
     hpairs = _simhash_hash_pairs(groups, bands, max_hamming)

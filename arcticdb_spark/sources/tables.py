@@ -28,21 +28,6 @@ def ensure_session_conf(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.ansi.enabled", "false")
 
 
-_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CACHE_ENABLED = False
-
-
-def enable_cache() -> None:
-    """Keep loaded tables as cached (columnar in-memory) DataFrames.
-
-    Benchmark parity: the reference's ASV suite reads from LMDB-resident
-    data; the equivalent warm state for Spark is `.cache()` — used by
-    bench.py, off by default so normal plans keep real parquet scans
-    (pushdown, stats pruning)."""
-    global _CACHE_ENABLED
-    _CACHE_ENABLED = True
-
-
 def _footer_read_schema(path: str) -> T.StructType | None:
     """The EXACT schema Spark's parquet inference would produce for
     ``path``, derived from one driver-side pyarrow footer read (~0.3 ms)
@@ -113,9 +98,6 @@ def _footer_read_schema(path: str) -> T.StructType | None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (sf_dir, name)
-    if _CACHE_ENABLED and key in _CACHE:
-        return _CACHE[key]
     ensure_session_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
     schema = _footer_read_schema(path)
@@ -127,15 +109,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # back to a µs TIMESTAMP (floor/truncate — positive epochs only here)
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if _CACHE_ENABLED:
-        df = df.cache()
-        df.count()  # materialize now so queries measure compute, not IO
-        _CACHE[key] = df
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 def table_rows(sf_dir: str, name: str) -> int:
