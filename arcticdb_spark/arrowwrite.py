@@ -35,7 +35,8 @@ Eligibility is a strict whitelist — anything else falls back to the Spark
 writer unchanged:
 
 * the Spark frame handed to the writer must be the IDENTICAL object the
-  normalizer produced from the pandas frame (no intervening transform);
+  normalizer produced from the pandas frame (no intervening transform —
+  see :func:`source_table`);
 * every column dtype maps 1:1 between the pandas frame and the Spark
   schema (plain numpy int8/16/32/64, float32/64, bool, and object columns
   holding only str/None);
@@ -46,7 +47,11 @@ writer unchanged:
   (repartitionByRange quantiles) or partition coalescing are NOT
   replicated — those fall back.
 
-Kill switch: ``ARCTICDB_SPARK_ARROW_WRITE=0`` disables the path entirely.
+Explicit source: the library's normalizer returns the normalized pandas
+frame next to the Spark frame it built, and the write entry points hand
+that ``(spark_frame, pandas_frame)`` pair to the writer as an argument.
+No state outlives the call, so the pandas frame is released with the
+write that produced it.
 """
 
 from __future__ import annotations
@@ -58,10 +63,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 ROW_METADATA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def enabled() -> bool:
-    return os.environ.get("ARCTICDB_SPARK_ARROW_WRITE", "1") != "0"
 
 
 def _type_map():
@@ -81,16 +82,26 @@ def _type_map():
     }
 
 
-def arrow_table_for(spark_schema, pdf) -> "pa.Table | None":
-    """Build the arrow table matching ``spark_schema`` from the normalized
-    pandas frame, or None when any column falls outside the whitelist."""
-    import numpy as np
+def source_table(df, src) -> "pa.Table | None":
+    """The arrow table to write for the Spark frame ``df``, built from its
+    pandas source, or None to mean "use the Spark writer".
+
+    ``src`` is the normalizer's ``(spark_frame, pandas_frame)`` pair (the
+    pandas frame is None for Spark, Arrow and ndarray inputs). The pandas
+    frame is used only when ``df`` IS that Spark frame: any transform in
+    between (dict encoding, void-column drop, index alignment, a range
+    filter) could change values, so it falls back. None too when any
+    column falls outside the whitelist."""
     import pandas as pd
     from pandas.api.types import infer_dtype
     from pyspark.sql import types as T
 
-    if len(pdf) == 0:
+    if src is None or df is not src[0]:
         return None
+    pdf = src[1]
+    if pdf is None or len(pdf) == 0:
+        return None
+    spark_schema = df.schema
     names = [f.name for f in spark_schema.fields]
     if [str(c) for c in pdf.columns] != names:
         return None

@@ -68,31 +68,6 @@ _DICT_LITERAL_MAP_ROWS_MAX = 1024
 
 ORIG_POS = "__orig_pos__"
 
-# pandas-source stash for the pyarrow write fast path (arrowwrite.py): the
-# normalizer records (spark_frame, normalized_pandas_frame) per thread; the
-# data-file writer uses the pandas source ONLY when handed the IDENTICAL
-# Spark frame object — any intervening transform (dict encode, void drop,
-# index alignment, staged bookkeeping columns) breaks identity and falls
-# back to the Spark writer, so the fast path can never write stale values.
-import threading as _threading
-
-_NORM_STASH = _threading.local()
-
-
-def _stash_pandas_src(sdf, pdf) -> None:
-    _NORM_STASH.v = (sdf, pdf)
-
-
-def _pandas_src_for(sdf):
-    v = getattr(_NORM_STASH, "v", None)
-    if v is not None and v[0] is sdf:
-        # consume-once: don't keep a large pandas frame alive past the
-        # write that stashed it
-        _NORM_STASH.v = None
-        return v[1]
-    return None
-
-
 class ArcticException(RuntimeError):
     # the reference's base exception subclasses RuntimeError
     # (test_errors.py test_base_exception_is_runtimeerror), so callers
@@ -1963,7 +1938,8 @@ class Library:
                           index_column: str | None, sort: bool = True,
                           tiebreak_cols: list[str] | None = None,
                           rows_hint: int | None = None,
-                          exact_slices: bool = True
+                          exact_slices: bool = True,
+                          src: tuple | None = None
                           ) -> list[FileEntry]:
         """Materialize df as Parquet under data/<uuid>/, ts-sorted, and return
         footer-derived FileEntries in index order. ``tiebreak_cols`` extend
@@ -1974,17 +1950,20 @@ class Library:
         reference's segment_row_size contract: no slice exceeds
         ``rows_per_file`` rows (``ceil(rows/target)`` range partitions).
         Without a hint Spark's partitioning stands — a Spark-frame write
-        is already sized by the cluster's partitioning."""
+        is already sized by the cluster's partitioning.
+
+        ``src`` is the ``(spark_frame, pandas_frame)`` pair from
+        ``_normalize``; see ``arrowwrite.source_table`` for when the pandas
+        frame is written directly."""
         out_dir = os.path.join(self._data_sym_dir(symbol), "data", uuid.uuid4().hex)
         os.makedirs(os.path.dirname(out_dir), exist_ok=True)
         # pyarrow fast path: a pandas-sourced frame whose layout is exactly
         # reproducible driver-side skips the Spark job entirely (guide §5 —
         # a driver-resident frame gains nothing from a cluster round-trip);
         # every ineligible case returns None and takes the Spark writer
-        pdf_src = _pandas_src_for(df)
-        if pdf_src is not None and rows_hint is not None and not tiebreak_cols:
+        if rows_hint is not None and not tiebreak_cols:
             entries = self._arrow_write_data_files(
-                df, pdf_src, out_dir, index_column, sort, rows_hint,
+                df, src, out_dir, index_column, sort, rows_hint,
                 exact_slices)
             if entries is not None:
                 return entries
@@ -2103,7 +2082,7 @@ class Library:
             entries.sort(key=lambda e: (e.ts_min if e.ts_min is not None else 0, e.path))
         return _renumber(entries)
 
-    def _arrow_write_data_files(self, df: DataFrame, pdf, out_dir: str,
+    def _arrow_write_data_files(self, df: DataFrame, src, out_dir: str,
                                 index_column: str | None, sort: bool,
                                 rows_hint: int, exact_slices: bool
                                 ) -> "list[FileEntry] | None":
@@ -2112,21 +2091,7 @@ class Library:
         Spark writer's layout is not exactly reproducible driver-side —
         the caller then takes the normal Spark path."""
         from arcticdb_spark import arrowwrite as aw
-        if not aw.enabled() or rows_hint != len(pdf) or rows_hint == 0:
-            return None
         if index_column and sort:
-            if index_column not in pdf.columns:
-                return None
-            col = pdf[index_column]
-            if str(col.dtype) not in ("int64", "Int64") or col.isna().any():
-                return None
-            vals = col.to_numpy(dtype="int64", copy=False)
-            import numpy as np
-            if len(vals) > 1 and (np.diff(vals) < 0).any():
-                # the stable index sort would actually reorder rows; only
-                # the identity case (already-monotonic input, which is what
-                # validate_index admits) is replicated driver-side
-                return None
             if rows_hint > self.rows_per_file and not exact_slices:
                 return None   # repartitionByRange samples its boundaries
             slice_rows = min(self.rows_per_file, rows_hint)
@@ -2137,9 +2102,22 @@ class Library:
             if rows_hint > self.rows_per_file:
                 return None
             slice_rows = rows_hint
-        tbl = aw.arrow_table_for(df.schema, pdf)
-        if tbl is None:
+        tbl = aw.source_table(df, src)
+        if tbl is None or tbl.num_rows != rows_hint:
             return None
+        if index_column and sort:
+            if index_column not in tbl.column_names:
+                return None
+            col = tbl.column(index_column)
+            if col.type != pa.int64() or col.null_count:
+                return None
+            import numpy as np
+            vals = col.to_numpy()
+            if len(vals) > 1 and (np.diff(vals) < 0).any():
+                # the stable index sort would actually reorder rows; only
+                # the identity case (already-monotonic input, which is what
+                # validate_index admits) is replicated driver-side
+                return None
         schema_json = df.schema.json()
         entries = []
         for p in aw.write_slices(tbl, out_dir, slice_rows, schema_json):
@@ -2164,8 +2142,11 @@ class Library:
         return index_column
 
     def _normalize(self, df, index_column: str | None = None
-                   ) -> tuple[DataFrame, dict | None]:
-        """pandas/Spark input -> (Spark frame, normalization metadata).
+                   ) -> tuple[DataFrame, Any, dict | None]:
+        """pandas/Spark input -> (Spark frame, normalized pandas frame,
+        normalization metadata). The pandas frame is the exact source of
+        the Spark frame (the pyarrow write fast path writes it directly,
+        arrowwrite.source_table); None for Spark, Arrow and ndarray input.
 
         Index demotion follows the reference (_normalization.py:923-959):
         a DatetimeIndex becomes the physical ts column; MultiIndex level 0
@@ -2177,9 +2158,8 @@ class Library:
         test_arrow_pandas_interop.py test_write_pandas_df_with_specified_
         index_column: "index_column value should be ignored when writing
         as pandas")."""
-        _NORM_STASH.v = None   # set by the plain-pandas branch below
         if isinstance(df, DataFrame):
-            return df, None
+            return df, None, None
         import numpy as np
         import pandas as pd
         from arcticdb_spark.timeframe import TimeFrame
@@ -2190,10 +2170,10 @@ class Library:
             pdf = pd.DataFrame(
                 dict(zip(df.columns_names, df.columns_values)),
                 index=pd.DatetimeIndex(df.times))
-            sdf, meta = self._normalize(pdf)
+            sdf, src_pdf, meta = self._normalize(pdf)
             meta = dict(meta or {})
             meta["timeframe"] = True
-            return sdf, meta
+            return sdf, src_pdf, meta
         try:
             import pyarrow as pa
         except ImportError:  # pragma: no cover
@@ -2211,7 +2191,7 @@ class Library:
                     if isinstance(df, pa.RecordBatch) else df)
             try:
                 tbl, ameta = self._normalize_arrow_ns(orig, index_column)
-                return self.spark.createDataFrame(tbl), ameta
+                return self.spark.createDataFrame(tbl), None, ameta
             except Exception:
                 # exotic arrow types (dictionary etc.): pandas fallback
                 return self._normalize(orig.to_pandas())
@@ -2221,11 +2201,11 @@ class Library:
             # denormalization restores a Series (unnamed stays unnamed)
             name = df.name
             col = str(name) if name is not None else "__series__"
-            sdf, meta = self._normalize(df.rename(col).to_frame())
+            sdf, src_pdf, meta = self._normalize(df.rename(col).to_frame())
             meta = dict(meta or {})
             meta["series"] = {"name": None if name is None else str(name),
                               "col": col}
-            return sdf, meta
+            return sdf, src_pdf, meta
         if isinstance(df, np.ndarray):
             # reference NdArrayNormalizer (_normalization.py:1025-1051):
             # any-dimensional array flattens row-major into one column; the
@@ -2239,9 +2219,9 @@ class Library:
                     pdf, schema=_schema_from_pandas_dtypes(pdf))
             else:
                 sdf = self.spark.createDataFrame(pdf)
-            return sdf, {"index_type": "ndarray",
-                         "shape": [int(s) for s in df.shape],
-                         "dtype": str(df.dtype)}
+            return sdf, None, {"index_type": "ndarray",
+                               "shape": [int(s) for s in df.shape],
+                               "dtype": str(df.dtype)}
         if isinstance(df, pd.DataFrame):
             pdf = df
             # pandas Categorical columns (reference _to_primitive,
@@ -2283,10 +2263,10 @@ class Library:
                         dec = col.astype(object)
                     pdf.isetitem(pos, dec)
                     cat_meta[str(c)] = {"kind": kind, "categories": vals}
-                sdf, meta = self._normalize(pdf)
+                sdf, src_pdf, meta = self._normalize(pdf)
                 meta = dict(meta or {})
                 meta["categoricals"] = cat_meta
-                return sdf, meta
+                return sdf, src_pdf, meta
             # column names must be str or int (reference _check_valid_name,
             # _normalization.py:511 — "bools are a subclass of int, so we
             # need to check for them explicitly"; pinned by test_write.py
@@ -2363,10 +2343,10 @@ class Library:
                             f"column {c!r} mixes strings with other types "
                             f"(pandas inferred {k!r}); normalize it first")
             if renamed is not None:
-                sdf, meta = self._normalize(pdf)
+                sdf, src_pdf, meta = self._normalize(pdf)
                 meta = dict(meta or {})
                 meta["renamed_cols"] = renamed
-                return sdf, meta
+                return sdf, src_pdf, meta
             meta: dict | None = None
             tzs: dict[str, str] = {}
             if isinstance(pdf.index, pd.MultiIndex):
@@ -2558,12 +2538,7 @@ class Library:
                 # strict int->f64 promotion, type_utils.cpp:94) needs it to
                 # convert old epochs by unsigned VALUE at read time
                 sdf = _attach_uint64_marker(sdf, {"uint64": meta["uint64"]})
-            # record the (spark frame -> pandas source) pair for the pyarrow
-            # write fast path; recursive normalize wrappers (series,
-            # categorical, renamed, timeframe) return this sdf unchanged,
-            # so the stash stays valid through them
-            _stash_pandas_src(sdf, pdf)
-            return sdf, meta
+            return sdf, pdf, meta
         raise ArcticUnsupportedDataTypeException(
             f"cannot normalize {type(df).__name__}: write() takes a Spark or "
             "pandas DataFrame; use write_pickle() for arbitrary objects")
@@ -3104,7 +3079,8 @@ class Library:
                 "E_UNSORTED_DATA write requires a monotonically increasing "
                 f"datetime index (input is {sorted_flag}); pass "
                 "validate_index=False to store it as-given")
-        sdf, norm_meta = self._normalize(df, index_column)
+        sdf, pdf, norm_meta = self._normalize(df, index_column)
+        src = (sdf, pdf)
         nm = norm_meta or {}
         if nm.get("index_ns"):
             p = nm["physical"]
@@ -3136,7 +3112,8 @@ class Library:
             symbol, self._drop_void(sdf), idx,
             sort=(sorted_flag == "ASCENDING"),
             rows_hint=(len(df) if isinstance(df, (pd.DataFrame, pd.Series))
-                       else None))
+                       else None),
+            src=src)
         dedup_base = None
         if dedup:
             self._content_hashes(files)
@@ -3633,7 +3610,8 @@ class Library:
                 f"{prev.sorted if prev.sorted != 'ASCENDING' else chunk_sorted}"
                 " (pass validate_index=False to append anyway)")
         idx = prev.index_column
-        sdf, inm = self._normalize(df, idx)
+        sdf, pdf, inm = self._normalize(df, idx)
+        src = (sdf, pdf)
         if idx is not None and idx not in sdf.columns:
             # reference StreamDescriptorMismatch naming the index column
             # (hypothesis test_append.py
@@ -3670,7 +3648,8 @@ class Library:
             symbol, self._drop_void(sdf), idx,
             sort=(chunk_sorted == "ASCENDING"),
             rows_hint=(len(df) if isinstance(df, (_pd.DataFrame, _pd.Series))
-                       else None))
+                       else None),
+            src=src)
         overlap = False
         if idx and new_files and prev.ts_max is not None:
             mins = [f.ts_min for f in new_files if f.ts_min is not None]
@@ -3838,7 +3817,8 @@ class Library:
             # UnsortedDataException on update of unsorted data)
             raise UnsortedDataException(
                 f"update of {symbol!r}: symbol is {prev.sorted}")
-        sdf, inm = self._normalize(df, idx)
+        sdf, pdf, inm = self._normalize(df, idx)
+        src = (sdf, pdf)
         if idx is not None and idx not in sdf.columns:
             # reference StreamDescriptorMismatch naming the index column
             # (hypothesis test_append.py
@@ -3896,7 +3876,8 @@ class Library:
         new_entries += self._write_data_files(
             symbol, self._drop_void(sdf), idx,
             rows_hint=(len(df) if isinstance(df, (_pd.DataFrame, _pd.Series))
-                       else None))
+                       else None),
+            src=src)
         new_entries.sort(key=lambda e: (e.ts_min if e.ts_min is not None else 0, e.path))
         m = VersionManifest(symbol, self._next_version(symbol), time.time_ns(), idx,
                             schema_json, _renumber(new_entries),
@@ -3943,7 +3924,7 @@ class Library:
         if idx is None:
             raise ArcticException(
                 "merge_experimental requires a timestamp-indexed symbol")
-        src, src_nm = self._normalize(source, idx)
+        src, _, src_nm = self._normalize(source, idx)
         # uint64 source columns: bit patterns join/compare exactly against
         # the stored patterns, but a signed<->uint64 flip must not slip
         # through (same rule as append/update)
@@ -5038,7 +5019,7 @@ class Library:
                     "index; pass validate_index=False, sort_on_index=True, "
                     "or sort_columns to resolve")
             index_column = False      # pandas chunks keep their own index
-        sdf, nmeta = self._normalize(
+        sdf, pdf, nmeta = self._normalize(
             df, self._resolve_index_column_arg(df, index_column or None))
         # time-prefixed chunk dir: lexicographic listing = stage order, so
         # un-sorted finalize concatenates in arrival order (reference
@@ -5053,7 +5034,7 @@ class Library:
         # before the finalized version materializes
         seq = time.time_ns()
         base = self._drop_void(sdf)
-        if not self._arrow_stage_write(sdf, base, out, seq):
+        if not self._arrow_stage_write(base, (sdf, pdf), out, seq):
             (base
              .withColumn("__stage_seq__", F.lit(seq))
              .withColumn("__stage_pos__", F.monotonically_increasing_id())
@@ -5111,7 +5092,7 @@ class Library:
                       if fn.endswith(".parquet"))
         return StageResult(symbol, segs)
 
-    def _arrow_stage_write(self, sdf: DataFrame, base: DataFrame, out: str,
+    def _arrow_stage_write(self, sdf: DataFrame, src, out: str,
                            seq: int) -> bool:
         """pyarrow fast path for a pandas-sourced staged chunk: one file,
         driver-written, with the ``__stage_seq__``/``__stage_pos__`` order
@@ -5122,12 +5103,7 @@ class Library:
         Returns False when ineligible; the caller then takes the Spark
         writer."""
         from arcticdb_spark import arrowwrite as aw
-        if not aw.enabled() or base is not sdf:
-            return False
-        pdf = _pandas_src_for(sdf)
-        if pdf is None or len(pdf) == 0:
-            return False
-        tbl = aw.arrow_table_for(sdf.schema, pdf)
+        tbl = aw.source_table(sdf, src)
         if tbl is None:
             return False
         import numpy as np

@@ -32,9 +32,9 @@ from pyspark.sql import functions as F
 from arcticdb_spark.extensions.text import fingerprint, tokens
 from arcticdb_spark.extensions.text import quality_score as _quality_score
 
-# Persisted intermediates (signature / band tables) registered here so a
-# long-lived session doing repeated dedup can release executor memory:
-# call unpersist_all() after consuming the result (bench.py does).
+# Persisted intermediates of the dedup and similarity operators, registered
+# here so a long-lived session can release executor memory: call
+# unpersist_all() after consuming the result (bench.py does).
 _PERSISTED: list[DataFrame] = []
 
 
@@ -339,44 +339,6 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     return F.when(n >= k, sh).otherwise(F.array(full))
 
 
-def shingles(text: Column, k: int = 3) -> Column:
-    """k-token shingles as strings; prefer projecting the token array to a
-    column and calling :func:`shingles_from_tokens` in hot paths."""
-    return shingles_from_tokens(tokens(F.lower(text)), k)
-
-
-def minhash_signature(text: Column, num_hashes: int = 16, k: int = 3) -> Column:
-    """Array of ``num_hashes`` min-hashes.
-
-    Hash family: one seeded md5 per shingle yields FOUR independent 32-bit
-    hashes (8-hex-char substrings of the 128-bit digest) — 4x fewer digest
-    computations than one md5 per signature position; Catalyst subexpression
-    elimination shares the md5 across the 4 chunk extractions. Min over hex
-    strings is a valid uniform min-hash; identical SQL exists in DuckDB, so
-    the whole construction stays oracle-checkable."""
-    sh = shingles(text, k)
-    def chunk_hash(seed: int, chunk: int):
-        # single-arg lambda required (Spark maps lambda arity to HOF args)
-        return lambda s: F.substring(
-            F.md5(F.concat(F.lit(f"h{seed}:"), s)), chunk * 8 + 1, 8)
-
-    sigs = []
-    for i in range(num_hashes):
-        seed, chunk = divmod(i, 4)
-        sigs.append(F.array_min(F.transform(sh, chunk_hash(seed, chunk))))
-    return F.array(*sigs)
-
-
-def band_keys(sig: Column, bands: int, rows: int) -> Column:
-    """LSH banding: split the signature into ``bands`` groups of ``rows``
-    hashes; each band key = band index + md5 of the concatenated group."""
-    keys = []
-    for b in range(bands):
-        seg = F.slice(sig, b * rows + 1, rows)
-        keys.append(F.concat(F.lit(f"b{b}:"), F.md5(F.array_join(seg, "|"))))
-    return F.array(*keys)
-
-
 def _scan_partitions_estimate(df: DataFrame) -> int | None:
     """Exact scan-partition count for the few-local-files case, from file
     sizes + Spark's split-packing math (FilePartition.getFilePartitions):
@@ -450,13 +412,23 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def minhash_band_table(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_hashes: int = 16,
-                       bands: int = 4, k: int = 3) -> DataFrame:
-    """(id, band_key) rows. Lazy since r14: the only consumer
-    (minhash_near_dup_pairs) groups rather than self-joins, so the
-    expensive signature expression (num_hashes × md5 per shingle) is
-    evaluated exactly once per row with no persist/materialize job."""
+def _minhash_band_table_canonical(df: DataFrame, text_col: str,
+                                  id_col: str, num_hashes: int,
+                                  bands: int, k: int) -> DataFrame:
+    """MinHash band table for canonical-band pair emission: (id, bi, band,
+    ek) rows where ``bi`` is the band index and ``ek`` the row's EARLIER
+    band keys (slice [0, bi) of the key array). Carrying ~(bands-1)/2 x
+    35 B of earlier keys per keyed row lets the pair generator suppress
+    re-emissions in-group, removing the pair-stream ``distinct()``
+    exchange — the stream that goes quadratic on hot bands, far larger
+    than the keyed table whenever dedup pressure is real.
+
+    The signature and band-key construction is the oracle-pinned md5
+    family (the DuckDB oracle of ``dedup_minhash`` replays it): one seeded
+    md5 per shingle yields FOUR 32-bit hashes (8-hex-char substrings of
+    the digest), signature position i = min over shingles of
+    ``substring(md5("h{i//4}:" || shingle), (i%4)*8+1, 8)``, and band b's
+    key = ``"b{b}:" || md5(concat_ws("|", positions of band b))``."""
     rows = num_hashes // bands
     n_seeds = -(-num_hashes // 4)
     # ONE array traversal computes all digests (n_seeds md5 per shingle,
@@ -469,44 +441,10 @@ def minhash_band_table(df: DataFrame, text_col: str = "text",
     hs_df = (_spread(df.select(F.col(id_col).alias("id"), text_col))
              .select("id", tokens(F.lower(F.col(text_col))).alias("__toks__"))
              .select("id", digests.alias("hs")))
-    # signature position i = 8-hex-char chunk at offset i*8 of the concat
-    # (== substring(md5(h{i//4}:s), (i%4)*8+1, 8) — same family as
-    # minhash_signature and the DuckDB oracle). Band keys are built straight
-    # from the per-position mins so every position is traversed exactly once.
-    def sig_i(i: int):
-        off = i * 8 + 1
-        return F.array_min(F.transform(F.col("hs"),
-                                       lambda h: F.substring(h, off, 8)))
 
-    keys = [F.concat(F.lit(f"b{b}:"),
-                     F.md5(F.concat_ws("|", *[sig_i(b * rows + r)
-                                              for r in range(rows)])))
-            for b in range(bands)]
-    return hs_df.select("id", F.explode(F.array(*keys)).alias("band"))
-
-
-def _minhash_band_table_canonical(df: DataFrame, text_col: str,
-                                  id_col: str, num_hashes: int,
-                                  bands: int, k: int) -> DataFrame:
-    """``minhash_band_table`` variant for canonical-band pair emission:
-    (id, bi, band, ek) rows where ``bi`` is the band index and ``ek`` the
-    row's EARLIER band keys (slice [0, bi) of the key array). Carrying
-    ~(bands-1)/2 x 35 B of earlier keys per keyed row lets the pair
-    generator suppress re-emissions in-group, removing the pair-stream
-    ``distinct()`` exchange — the stream that goes quadratic on hot
-    bands, far larger than the keyed table whenever dedup pressure is
-    real. Same key construction as ``minhash_band_table`` (the md5
-    signature family is oracle-pinned)."""
-    rows = num_hashes // bands
-    n_seeds = -(-num_hashes // 4)
-    digests = F.transform(
-        shingles_from_tokens(F.col("__toks__"), k),
-        lambda s: F.concat(*[F.md5(F.concat(F.lit(f"h{j}:"), s))
-                             for j in range(n_seeds)]))
-    hs_df = (_spread(df.select(F.col(id_col).alias("id"), text_col))
-             .select("id", tokens(F.lower(F.col(text_col))).alias("__toks__"))
-             .select("id", digests.alias("hs")))
-
+    # signature position i = 8-hex-char chunk at offset i*8 of the concat;
+    # band keys are built straight from the per-position mins so every
+    # position is traversed exactly once
     def sig_i(i: int):
         off = i * 8 + 1
         return F.array_min(F.transform(F.col("hs"),
@@ -1470,17 +1408,6 @@ def ngrams_from_tokens(toks: Column, n: int) -> Column:
         F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)),
                     lambda i: F.array_join(F.slice(toks, i, n), " "))
     ).otherwise(F.array().cast("array<string>"))
-
-
-def word_ngrams(text: Column, n: int) -> Column:
-    """Lower-cased word n-grams as space-joined strings; documents shorter
-    than n tokens yield an empty array (no short-doc fallback — matches the
-    Gopher/decontamination recipes, which ignore sub-n docs).
-
-    Prefer projecting ``tokens(F.lower(c))`` to a column and calling
-    :func:`ngrams_from_tokens` in hot paths (see its docstring). Lowering
-    the whole string once beats a per-token transform."""
-    return ngrams_from_tokens(tokens(F.lower(text)), n)
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,

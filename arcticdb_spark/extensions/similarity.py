@@ -21,18 +21,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-# DataFrames persisted across an operator call (the kmeans base scan); call
-# unpersist_all() after consuming results (bench.py does, like dedup's).
-_PERSISTED: list = []
-
-
-def unpersist_all() -> None:
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:
-            pass
+# DataFrames persisted across an operator call (the kmeans base scan) go to
+# dedup's registry: unpersist_all() here IS dedup's, so calling either
+# releases every cached extension intermediate.
+from arcticdb_spark.extensions.dedup import _persist, unpersist_all  # noqa: F401
 
 
 def _seed_rows(corpus: DataFrame, k: int, id_col: str, vec_col: str) -> list:
@@ -93,15 +85,6 @@ def _planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     import numpy as np
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id as a string of 0/1 (pure-SQL variant)."""
-    bits = []
-    for p in planes:
-        lit = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(F.when(_dot(vec, lit) >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
 
 
 def _bucket_udf(planes_list: list[list[list[float]]], probe: int = 0):
@@ -319,12 +302,6 @@ def centroid_assign(corpus: DataFrame, k: int = 8,
                       F.col("a.cos").alias("cos"))
 
 
-def _sq_dist(v: Column, lit_vec: list[float]) -> Column:
-    arr = F.array(*[F.lit(float(x)) for x in lit_vec])
-    return F.aggregate(F.zip_with(v, arr, lambda x, y: (x - y) * (x - y)),
-                       F.lit(0.0), lambda acc, d: acc + d)
-
-
 def _kmeans_estep(base: DataFrame, cents: dict) -> DataFrame:
     """Assign each vector to the nearest centroid by euclidean distance
     (rounded 6dp; ties -> lowest cluster id). ``cents`` is {cid: [float]},
@@ -379,8 +356,7 @@ def kmeans(corpus: DataFrame, k: int = 8, iters: int = 2,
     # post-release recompute of the returned frame replays the SAME final
     # centroids, so results stay deterministic either way).
     if iters > 1:
-        base = base.persist()
-        _PERSISTED.append(base)
+        base = _persist(base)
     assigned = _kmeans_estep(base, cents)
     for _ in range(iters - 1):
         # M-step as posexplode -> avg per (cluster, dim): still map-side

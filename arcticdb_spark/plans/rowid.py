@@ -94,7 +94,3 @@ def prefix_sum(df: DataFrame, value_col: str, order_cols: list[str],
            .withColumn(out_col,
                        F.col("__asdb_off__") + F.sum(value_col).over(inner)))
     return out.drop(_PID, _PIDK, "__asdb_off__")
-
-
-def count_rows(df: DataFrame) -> int:
-    return df.count()

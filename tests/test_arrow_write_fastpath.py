@@ -46,21 +46,24 @@ def _roundtrip(spark, tmp_path, sub, pdf, rows_per_file=1500):
 
 
 def test_fast_path_equivalence(spark, tmp_path, counting, monkeypatch):
-    """write/append/stage+finalize round-trip byte-identically with the
-    fast path off vs on: same values, same per-file rows/offsets/ts
-    bounds, same manifest schema."""
+    """write/append/stage+finalize round-trip byte-identically through the
+    Spark writer (source_table declines every frame) and the pyarrow
+    writer: same values, same per-file rows/offsets/ts bounds, same
+    manifest schema."""
     pdf = _frame()
     tail = _frame(800, 1).set_index(
         pd.date_range("2024-02-01", periods=800, freq="s"))
     state = {}
-    for mode in ("0", "1"):
-        monkeypatch.setenv("ARCTICDB_SPARK_ARROW_WRITE", mode)
+    for mode in ("spark", "arrow"):
         counting["n"] = 0
-        lib = _roundtrip(spark, tmp_path, f"m{mode}", pdf)
-        lib.append("s", tail)
-        lib.stage("st", pdf.iloc[::2])
-        lib.stage("st", pdf.iloc[1::2])
-        lib.sort_and_finalize_staged_data("st", "write")
+        with monkeypatch.context() as mp:
+            if mode == "spark":
+                mp.setattr(aw, "source_table", lambda df, src: None)
+            lib = _roundtrip(spark, tmp_path, f"m{mode}", pdf)
+            lib.append("s", tail)
+            lib.stage("st", pdf.iloc[::2])
+            lib.stage("st", pdf.iloc[1::2])
+            lib.sort_and_finalize_staged_data("st", "write")
         m = lib._load_manifest("s", lib._load_ref("s")["latest"])
         state[mode] = {
             "read": lib.read("s", output_format="pandas"),
@@ -70,13 +73,44 @@ def test_fast_path_equivalence(spark, tmp_path, counting, monkeypatch):
             "schema": m.schema_json,
             "calls": counting["n"],
         }
-    assert state["0"]["calls"] == 0
-    assert state["1"]["calls"] >= 3          # write + append + 2 stages
-    pd.testing.assert_frame_equal(state["0"]["read"], state["1"]["read"])
-    pd.testing.assert_frame_equal(state["0"]["read_st"],
-                                  state["1"]["read_st"])
-    assert state["0"]["files"] == state["1"]["files"]
-    assert state["0"]["schema"] == state["1"]["schema"]
+    assert state["spark"]["calls"] == 0
+    assert state["arrow"]["calls"] >= 3      # write + append + 2 stages
+    pd.testing.assert_frame_equal(state["spark"]["read"],
+                                  state["arrow"]["read"])
+    pd.testing.assert_frame_equal(state["spark"]["read_st"],
+                                  state["arrow"]["read_st"])
+    assert state["spark"]["files"] == state["arrow"]["files"]
+    assert state["spark"]["schema"] == state["arrow"]["schema"]
+
+
+def test_pandas_source_not_retained_after_write(spark, tmp_path):
+    """The normalized pandas frame lives only as long as the write call
+    that made it. Neither a write whose frame loses identity before the
+    writer (the all-None column is dropped) nor an append that static
+    schema rejects may leave it reachable afterwards."""
+    import gc
+
+    from arcticdb_spark.catalog import ArcticException
+    n = 123_457
+    lib = Arctic(str(tmp_path / "retain"), spark).create_library("l")
+    df = pd.DataFrame(
+        {"a": np.arange(n, dtype="int64"), "void": [None] * n},
+        index=pd.date_range("2024-01-01", periods=n, freq="s"))
+    lib.write("s", df)
+    bad = pd.DataFrame(
+        {"a": np.arange(n, dtype="float64"), "void": [None] * n},
+        index=pd.date_range("2025-01-01", periods=n, freq="s"))
+    try:
+        lib.append("s", bad)
+    except ArcticException:
+        pass
+    else:
+        pytest.fail("static schema accepted an int64 -> float64 append")
+    del df, bad
+    gc.collect()
+    left = [type(o).__name__ for o in gc.get_objects()
+            if isinstance(o, pd.DataFrame) and len(o) == n]
+    assert not left, f"{len(left)} pandas frame(s) of {n} rows still alive"
 
 
 def test_fast_path_footer_contract(spark, tmp_path, counting):

@@ -1,0 +1,96 @@
+"""Static guards over the package source (AST only, no Spark session).
+
+* Every top-level function in ``arcticdb_spark/extensions`` and
+  ``arcticdb_spark/plans`` has a caller: its name appears as an ``ast.Name``
+  or ``ast.Attribute`` somewhere in the package, the entry module, the
+  bench, ``tools/``, ``perfbench/`` or ``tests/``, outside its own
+  definition. Strings and comments do not count.
+* Nothing in the package calls ``threading.local()``: per-thread hidden
+  state outlives the call that filled it (a pool thread pins whatever it
+  last stored), so state is passed explicitly instead.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "arcticdb_spark"
+
+
+def _py_files(*paths: Path) -> list[Path]:
+    out = []
+    for p in paths:
+        if p.is_file():
+            out.append(p)
+        elif p.is_dir():
+            out.extend(sorted(p.rglob("*.py")))
+    return out
+
+
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+
+
+def _references(path: Path):
+    """(name, enclosing top-level def name or None) for every Name and
+    Attribute in ``path``."""
+    tree = _parse(path)
+    for top in tree.body:
+        owner = (top.name if isinstance(top, (ast.FunctionDef,
+                                              ast.AsyncFunctionDef,
+                                              ast.ClassDef)) else None)
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                yield node.id, owner
+            elif isinstance(node, ast.Attribute):
+                yield node.attr, owner
+
+
+def test_extension_and_plan_helpers_have_callers():
+    defined = []   # (module path, function name)
+    for path in _py_files(PKG / "extensions", PKG / "plans"):
+        for top in _parse(path).body:
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defined.append((path, top.name))
+    assert defined
+
+    scope = _py_files(PKG, ROOT / "__spark_entry__.py", ROOT / "bench.py",
+                      ROOT / "tools", ROOT / "perfbench", ROOT / "tests")
+    # name -> set of (file, enclosing def) places it is referenced from
+    refs: dict[str, set] = {}
+    for path in scope:
+        for name, owner in _references(path):
+            refs.setdefault(name, set()).add((path, owner))
+
+    dead = [f"{path.relative_to(ROOT)}::{name}"
+            for path, name in defined
+            if not (refs.get(name, set()) - {(path, name)})]
+    assert not dead, f"functions with no caller: {dead}"
+
+
+def test_package_uses_no_thread_locals():
+    offenders = []
+    for path in _py_files(PKG):
+        tree = _parse(path)
+        # names bound to the threading module / its local class
+        mod_names, local_names = set(), set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name == "threading":
+                        mod_names.add(a.asname or a.name)
+            elif isinstance(node, ast.ImportFrom) and node.module == "threading":
+                for a in node.names:
+                    if a.name == "local":
+                        local_names.add(a.asname or a.name)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if ((isinstance(f, ast.Attribute) and f.attr == "local"
+                 and isinstance(f.value, ast.Name) and f.value.id in mod_names)
+                    or (isinstance(f, ast.Name) and f.id in local_names)):
+                offenders.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not offenders, f"threading.local() calls: {offenders}"
