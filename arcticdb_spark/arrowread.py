@@ -14,6 +14,10 @@ same columns (uint64 markers, µs index view, ns shadow, NULL void
 columns) and collects through the same conversions Spark applies in
 ``DataFrame.toArrow()`` / ``toPandas()``, so the shared finisher sees
 identical input from either collector.
+
+``read_files`` also feeds the driver-side rewrites of update,
+delete_data_in_range and compaction (``Library._rewrite_arrow``), which
+read under the physical types and write back through arrowwrite.
 """
 
 from __future__ import annotations

@@ -40,12 +40,19 @@ writer unchanged:
 * every column dtype maps 1:1 between the pandas frame and the Spark
   schema (plain numpy int8/16/32/64, float32/64, bool, and object columns
   holding only str/None);
-* the physical layout must be exactly reproducible driver-side: either the
-  stable ascending index sort of an already-monotonic frame (slice into
-  consecutive ``rows_per_file`` ranges) or a single-file order-preserving
-  write. Multi-file layouts whose boundaries Spark derives from sampling
-  (repartitionByRange quantiles) or partition coalescing are NOT
-  replicated — those fall back.
+* the physical layout must be exactly reproducible driver-side: the
+  stable ascending index sort of an already-monotonic frame, or an
+  order-preserving (rowcount / UNSORTED / DESCENDING) write, each sliced
+  into consecutive ``rows_per_file`` ranges — the Spark writer slices both
+  exactly too, numbering the rows by index order or by input position.
+  Multi-file layouts whose boundaries Spark derives from sampling
+  (repartitionByRange quantiles, the staged finalize) are NOT replicated —
+  those fall back.
+
+The library's driver-side rewrites (update / delete_data_in_range splices
+and compaction, ``Library._rewrite_arrow``) write through
+:func:`write_slices` as well, for stored columns whose Spark type
+:func:`physical_type` maps.
 
 Explicit source: the library's normalizer returns the normalized pandas
 frame next to the Spark frame it built, and the write entry points hand
@@ -80,6 +87,16 @@ def _type_map():
         T.FloatType: (pa.float32(), ("float32", "Float32")),
         T.BooleanType: (pa.bool_(), ("bool", "boolean")),
     }
+
+
+def physical_type(dtype) -> "pa.DataType | None":
+    """The arrow type this writer stores a Spark ``dtype`` column as, or
+    None when the type is outside the whitelist."""
+    from pyspark.sql import types as T
+    if isinstance(dtype, T.StringType):
+        return pa.string()
+    m = _type_map().get(type(dtype))
+    return None if m is None else m[0]
 
 
 def source_table(df, src) -> "pa.Table | None":
@@ -131,22 +148,27 @@ def source_table(df, src) -> "pa.Table | None":
     return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
 
 
-def write_slices(table: "pa.Table", out_dir: str, rows_per_slice: int,
+def write_slices(table: "pa.Table", out_dir: str, sizes,
                  spark_schema_json: str) -> list[str]:
-    """Write ``table`` as consecutive slices of ``rows_per_slice`` rows,
-    one file (one row group) per slice, named so lexicographic order is
-    slice order. Returns the file paths in slice order."""
+    """Write ``table`` as consecutive slices, one file (one row group) per
+    slice, named so lexicographic order is slice order. ``sizes`` is the
+    list of slice lengths, or one length for slices of that many rows (the
+    last one holding the remainder). Returns the file paths in slice
+    order."""
     os.makedirs(out_dir, exist_ok=True)
     table = table.replace_schema_metadata(
         {ROW_METADATA_KEY: spark_schema_json.encode("utf-8")})
     n = table.num_rows
-    paths = []
-    for i, start in enumerate(range(0, n, rows_per_slice)):
-        sl = table.slice(start, rows_per_slice)
+    if isinstance(sizes, int):
+        sizes = [sizes] * -(-n // sizes)
+    paths, start = [], 0
+    for i, size in enumerate(sizes):
+        sl = table.slice(start, size)
+        start += size
         p = os.path.join(out_dir,
                          f"part-{i:05d}-{uuid.uuid4().hex}.snappy.parquet")
         pq.write_table(sl, p, compression="snappy",
-                       row_group_size=rows_per_slice,
+                       row_group_size=size,
                        write_statistics=True)
         paths.append(p)
     return paths

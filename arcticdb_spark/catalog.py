@@ -41,20 +41,24 @@ from enum import Enum
 from typing import Any
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from arcticdb_spark import arrowread as ar
+from arcticdb_spark import arrowwrite as aw
 from arcticdb_spark.plans.rowid import ROW_ID
 
-# dictionary-coded column gates: the encode collects every declared
+# dictionary-coded column gate: the encode collects every declared
 # column's incoming distinct domain in ONE Spark job while it stays under
-# the row cap (above it, the per-column distributed encode runs instead);
-# the decode builds its lookup driver-side while the sidecar is under the
-# byte cap (above it, a persisted parquet scan serves the broadcast join)
+# the row cap (above it, the per-column distributed encode runs instead)
 _DICT_COLLECT_ROWS_MAX = 2_000_000
-_DICT_DRIVER_READ_BYTES_MAX = 64 << 20
+# driver read cap, in stored bytes: above it the dictionary decode serves
+# its lookup from a persisted parquet scan and update/delete/compaction
+# rewrite their files with Spark jobs instead of driver-side pyarrow
+_DRIVER_READ_BYTES_MAX = 64 << 20
 # local-relation decode lookup cap: LocalRelation data is embedded in
 # every consuming plan, so only small dictionaries skip the scan-backed
 # persisted lookup (a 100k-entry local relation re-shipped per query cost
@@ -1076,6 +1080,31 @@ def _footer_stats(path: str, index_column: str | None):
     return rows, ts_min, ts_max
 
 
+
+def _file_entries(paths: list, index_column: str | None,
+                  schema_json: str) -> list[FileEntry]:
+    """Footer-derived FileEntries of freshly written files, empty files
+    skipped (row_start is set by ``_renumber``)."""
+    out = []
+    for p in paths:
+        rows, ts_min, ts_max = _footer_stats(p, index_column)
+        if rows:
+            out.append(FileEntry(p, rows, 0, ts_min, ts_max,
+                                 schema_json=schema_json))
+    return out
+
+
+def _slice_files(out_dir: str) -> list[str]:
+    """The part files of a ``partitionBy("__slice__")`` write in slice
+    order: hive layout out_dir/__slice__=N/part-*.parquet, one part file
+    per slice, so numeric directory order IS slice order."""
+    dirs = sorted((d for d in os.listdir(out_dir)
+                   if d.startswith("__slice__=")),
+                  key=lambda d: int(d.split("=", 1)[1]))
+    return [os.path.join(out_dir, d, fn) for d in dirs
+            for fn in sorted(os.listdir(os.path.join(out_dir, d)))
+            if fn.endswith(".parquet")]
+
 def _json_safe(v):
     import datetime as _dt
     if isinstance(v, (_dt.datetime, _dt.date)):
@@ -1431,7 +1460,7 @@ class Library:
 
     def _dict_sidecar_over_cap(self, symbol: str, col: str) -> bool:
         """True when building the driver-side {code: value} map would read
-        more than ``_DICT_DRIVER_READ_BYTES_MAX`` sidecar bytes (ADVICE
+        more than ``_DRIVER_READ_BYTES_MAX`` sidecar bytes (ADVICE
         r13: the encode's batch row cap does not bound the STORED domain —
         a domain written by the distributed path can be multi-GB, and a
         later small write must not slurp it onto the driver). A map
@@ -1446,7 +1475,7 @@ class Library:
         if cached is not None and cached[0] == sig:
             return False
         total = sum(os.path.getsize(os.path.join(d, fn)) for fn in sig)
-        return total > _DICT_DRIVER_READ_BYTES_MAX
+        return total > _DRIVER_READ_BYTES_MAX
 
     def _dict_map(self, symbol: str, col: str):
         """Driver-side {code: value} map of a column's sidecar (pyarrow
@@ -1618,7 +1647,7 @@ class Library:
                 sig_files = [os.path.join(d, fn) for fn in os.listdir(d)
                              if fn.endswith(".parquet")]
                 if (sig_files and sum(map(os.path.getsize, sig_files))
-                        <= _DICT_DRIVER_READ_BYTES_MAX):
+                        <= _DRIVER_READ_BYTES_MAX):
                     mp = self._dict_map(symbol, c) or {}
                     if len(mp) <= _DICT_LITERAL_MAP_ROWS_MAX:
                         # tiny dictionary: a literal-map projection decodes
@@ -1976,97 +2005,80 @@ class Library:
             # away and the void columns NULL-backfill as usual)
             df = df.select(F.lit(0).cast("tinyint").alias("__void_fill__"))
         sliced_write = False
-        if index_column and sort:
-            # STABLE sort: equal index values keep INPUT row order (the
+        keys = ([index_column, *(tiebreak_cols or [])]
+                if index_column and sort else [])
+        exact = (rows_hint is not None and exact_slices
+                 and rows_hint > self.rows_per_file)
+        if keys or exact:
+            # STABLE order: equal index values keep INPUT row order (the
             # reference never reorders within a timestamp — its write
             # pipeline slices the frame as-is; test_append_compact_data.py
             # test_multiindex pins original-order roundtrips). The id is
             # computed BEFORE any exchange, so it reflects the incoming
             # partition-major row order; explicit tiebreak_cols (the
             # sort_index repair contract, which sorts by all MultiIndex
-            # levels like pandas sort_index) still take precedence.
+            # levels like pandas sort_index) still take precedence; an
+            # order-preserving write orders by the id alone.
             df = df.withColumn("__ipos__", F.monotonically_increasing_id())
-            order_tail = [*(tiebreak_cols or []), "__ipos__"]
-            if (rows_hint is not None and exact_slices
-                    and rows_hint > self.rows_per_file):
-                # EXACT segment_row_size slicing (reference contract: the
-                # leading slices hold exactly rows_per_file rows — the
-                # defrag utilities key off it). The global row_number is
-                # fine here: exact_slices is only passed for
-                # driver-bounded pandas inputs; cluster-scale Spark-frame
-                # writes take the quantile path below. Determinism: hash-
-                # repartition on the precomputed __slice__ puts every row
-                # of a slice in exactly one task (a collision only costs
-                # parallelism), and write.partitionBy routes rows to their
-                # slice directory regardless of partitioning — so one file
-                # per slice is CONTRACTUAL, unlike repartitionByRange
-                # whose sampled boundaries made the layout probabilistic.
-                from pyspark.sql import Window
-                n_parts = -(-rows_hint // self.rows_per_file)
-                w = Window.orderBy(F.col(index_column),
-                                   *[F.col(c) for c in order_tail])
-                (df.withColumn(
-                       "__slice__",
-                       F.floor((F.row_number().over(w) - F.lit(1))
-                               / F.lit(self.rows_per_file)))
-                   .repartition(n_parts, F.col("__slice__"))
-                   .sortWithinPartitions("__slice__", index_column,
-                                         *order_tail)
-                   .drop("__ipos__")
-                   .write.mode("overwrite").partitionBy("__slice__")
-                   .parquet(out_dir))
-                sliced_write = True
-            elif rows_hint is not None:
-                # approximate (quantile) slicing sized to the target — the
-                # scale path (staged finalize of arbitrarily large chunk
-                # sets). n_parts=1 for sub-segment inputs: a chunk smaller
-                # than rows_per_file is ONE segment (reference
-                # segment_row_size contract) — without the explicit count,
-                # repartitionByRange inherits shuffle.partitions and a
-                # 125-row append fragments into 32 four-row files, a 32x
-                # tiny-file/footer amplification at scale
-                n_parts = max(1, -(-rows_hint // self.rows_per_file))
-                df = (df.repartitionByRange(n_parts, F.col(index_column))
-                        .sortWithinPartitions(index_column, *order_tail)
-                        .drop("__ipos__"))
-            else:
-                # no hint (cluster-scale Spark-frame input): the cluster's
-                # own partitioning stands
-                df = (df.repartitionByRange(F.col(index_column))
-                        .sortWithinPartitions(index_column, *order_tail)
-                        .drop("__ipos__"))
+        if exact:
+            # EXACT segment_row_size slicing (reference contract: the
+            # leading slices hold exactly rows_per_file rows — the defrag
+            # and write-dedup utilities key off it). The global row_number
+            # is fine here: exact_slices is only passed for driver-bounded
+            # pandas inputs; cluster-scale Spark-frame writes take the
+            # quantile path below. Determinism: hash-repartition on the
+            # precomputed __slice__ puts every row of a slice in exactly
+            # one task (a collision only costs parallelism), and
+            # write.partitionBy routes rows to their slice directory
+            # regardless of partitioning — so one file per slice is
+            # CONTRACTUAL, and the slice directories give the file order.
+            from pyspark.sql import Window
+            order = [*keys, "__ipos__"]
+            n_parts = -(-rows_hint // self.rows_per_file)
+            w = Window.orderBy(*[F.col(c) for c in order])
+            (df.withColumn(
+                   "__slice__",
+                   F.floor((F.row_number().over(w) - F.lit(1))
+                           / F.lit(self.rows_per_file)))
+               .repartition(n_parts, F.col("__slice__"))
+               .sortWithinPartitions("__slice__", *order)
+               .drop("__ipos__")
+               .write.mode("overwrite").partitionBy("__slice__")
+               .parquet(out_dir))
+            df = df.drop("__ipos__")
+            sliced_write = True
+        elif keys:
+            # approximate (quantile) slicing sized to the target — the
+            # scale path (staged finalize of arbitrarily large chunk
+            # sets). n_parts=1 for sub-segment inputs: a chunk smaller
+            # than rows_per_file is ONE segment (reference
+            # segment_row_size contract) — without the explicit count,
+            # repartitionByRange inherits shuffle.partitions and a
+            # 125-row append fragments into 32 four-row files, a 32x
+            # tiny-file/footer amplification at scale. With no hint
+            # (cluster-scale Spark-frame input) the cluster's own
+            # partitioning stands.
+            part = ([max(1, -(-rows_hint // self.rows_per_file))]
+                    if rows_hint is not None else [])
+            df = (df.repartitionByRange(*part, F.col(index_column))
+                    .sortWithinPartitions(*keys, "__ipos__")
+                    .drop("__ipos__"))
         elif rows_hint is not None:
-            # rowcount / UNSORTED / DESCENDING writes preserve input row
-            # order, so no shuffle — but still size segments: coalesce
-            # (order-preserving, reduce-only) to the rows_per_file target,
-            # else createDataFrame's default parallelism fragments a
-            # 125-row chunk into 32 four-row files (tiny-file/footer
-            # amplification measured by tools/scale_probe prune section)
+            # order-preserving writes keep input row order, so no shuffle
+            # — but still size segments: coalesce (order-preserving,
+            # reduce-only) to the rows_per_file target, else
+            # createDataFrame's default parallelism fragments a 125-row
+            # chunk into 32 four-row files (tiny-file/footer amplification
+            # measured by tools/scale_probe prune section)
             df = df.coalesce(max(1, -(-rows_hint // self.rows_per_file)))
-        if not sliced_write:
-            df.write.mode("overwrite").parquet(out_dir)
         if sliced_write:
-            # hive layout: out_dir/__slice__=N/part-*.parquet — exactly
-            # one part file per slice (see above); numeric dir order IS
-            # slice order
-            files = []
-            for d in sorted((fn for fn in os.listdir(out_dir)
-                             if fn.startswith("__slice__=")),
-                            key=lambda s: int(s.split("=", 1)[1])):
-                for fn in sorted(os.listdir(os.path.join(out_dir, d))):
-                    if fn.endswith(".parquet"):
-                        files.append(os.path.join(out_dir, d, fn))
+            files = _slice_files(out_dir)
         else:
+            df.write.mode("overwrite").parquet(out_dir)
             files = [os.path.join(out_dir, fn)
                      for fn in sorted(os.listdir(out_dir))
                      if fn.endswith(".parquet")]
-        entries = []
-        for path in files:
-            rows, ts_min, ts_max = _footer_stats(path, index_column)
-            if rows == 0:
-                continue
-            entries.append(FileEntry(path, rows, 0, ts_min, ts_max,
-                                     schema_json=df.schema.json()))
+        entries = _file_entries(files, index_column, df.schema.json())
         if index_column and sort and not sliced_write:
             # (sliced writes are already in slice order, which IS the
             # global row_number order — a ts_min re-sort could misorder
@@ -2074,10 +2086,10 @@ class Library:
             # tie-break compares "__slice__=10" < "__slice__=2" lexically)
             # ts-sorted write: ranges are disjoint (repartitionByRange), so
             # ts_min order reconstructs the global ascending sequence.
-            # UNSORTED/DESCENDING writes (sort=False) keep file-listing
-            # order — part files are written partition-major from an
-            # in-order createDataFrame, so listing order IS input row
-            # order, which the reference preserves for non-ascending data
+            # Unsliced order-preserving writes (sort=False) keep
+            # file-listing order — part files are written partition-major
+            # from an in-order frame, so listing order IS input row order,
+            # which the reference preserves for non-ascending data
             # (test_append.py mix-order cases; sortedness state machine).
             entries.sort(key=lambda e: (e.ts_min if e.ts_min is not None else 0, e.path))
         return _renumber(entries)
@@ -2090,18 +2102,11 @@ class Library:
         arrowwrite.py for the physical contract). Returns None whenever the
         Spark writer's layout is not exactly reproducible driver-side —
         the caller then takes the normal Spark path."""
-        from arcticdb_spark import arrowwrite as aw
-        if index_column and sort:
-            if rows_hint > self.rows_per_file and not exact_slices:
-                return None   # repartitionByRange samples its boundaries
-            slice_rows = min(self.rows_per_file, rows_hint)
-        else:
-            # order-preserving (rowcount / DESCENDING / UNSORTED) write:
-            # only the single-file case reproduces the Spark coalesce
-            # layout exactly; multi-file boundary placement is Spark's
-            if rows_hint > self.rows_per_file:
-                return None
-            slice_rows = rows_hint
+        if rows_hint > self.rows_per_file and not exact_slices:
+            # repartitionByRange samples its boundaries; coalesce places
+            # them by partition
+            return None
+        slice_rows = min(self.rows_per_file, rows_hint)
         tbl = aw.source_table(df, src)
         if tbl is None or tbl.num_rows != rows_hint:
             return None
@@ -2119,14 +2124,9 @@ class Library:
                 # validate_index admits) is replicated driver-side
                 return None
         schema_json = df.schema.json()
-        entries = []
-        for p in aw.write_slices(tbl, out_dir, slice_rows, schema_json):
-            rows, ts_min, ts_max = _footer_stats(p, index_column)
-            if rows == 0:
-                continue
-            entries.append(FileEntry(p, rows, 0, ts_min, ts_max,
-                                     schema_json=schema_json))
-        return _renumber(entries)
+        return _renumber(_file_entries(
+            aw.write_slices(tbl, out_dir, slice_rows, schema_json),
+            index_column, schema_json))
 
     @staticmethod
     def _resolve_index_column_arg(df, index_column):
@@ -2672,7 +2672,6 @@ class Library:
         -> null everywhere (reference test_arrow_read.py). Returns
         (table, norm_meta|None)."""
         import pyarrow as pa
-        import pyarrow.compute as pc
         idx_name = index_column
         if idx_name is None:
             for f in tbl.schema:
@@ -2750,8 +2749,7 @@ class Library:
                 fphys = phys
             else:
                 fschema = T.StructType.fromJson(json.loads(sj))
-                fphys = T.StructType([f for f in fschema.fields
-                                      if f.name not in self._void_cols(fschema)])
+                fphys = self._phys_schema(sj)
             df = self.spark.read.schema(fphys).parquet(*[fe.path for fe in fes])
             if need_row_id:
                 keyed = [("file:" + fe.path
@@ -2834,30 +2832,20 @@ class Library:
         Spark types the Spark read path would collect, or None when the
         read must take the Spark path:
 
-        - a file is on a schema epoch other than the manifest's, i.e. its
-          schema lacks a stored manifest column or types it differently
-          (those scans cast and backfill per epoch, see ``_scan_files``;
-          extra physical columns are ignored there as here);
+        - a file is on another schema epoch (``_foreign_epoch``; those
+          scans cast and backfill per epoch, see ``_scan_files``);
         - a file is not on a local path (object stores read through Spark);
         - a selected dictionary-coded column's sidecar is over the driver
           read cap (``_dict_sidecar_over_cap``); smaller sidecars decode
           through the driver-side ``_dict_map``."""
-        import pyarrow.compute as pc
-
-        from arcticdb_spark import arrowread as ar
         from arcticdb_spark.expr import UINT64_META
         paths = [ar.local_path(fe.path) for fe in files]
-        if None in paths:
+        if None in paths or self._foreign_epoch(m, files):
             return None
         mschema = T.StructType.fromJson(json.loads(m.schema_json))
         fields = {f.name: f for f in mschema.fields}
         stored = {c: f.dataType for c, f in fields.items()
                   if not isinstance(f.dataType, T.NullType)}
-        for sj in {fe.schema_json for fe in files} - {None, m.schema_json}:
-            epoch = {f.name: f.dataType
-                     for f in T.StructType.fromJson(json.loads(sj)).fields}
-            if any(epoch.get(c) != t for c, t in stored.items()):
-                return None
         nm = m.norm_meta or {}
         idx = m.index_column
         index_ns = bool(idx) and bool(nm.get("index_ns"))
@@ -2930,17 +2918,109 @@ class Library:
             add(arr, T.StructField(name, T.LongType(), nullable))
         return ar.LocalFrame(self.spark, T.StructType(sfields), out)
 
+    @staticmethod
+    def _foreign_epoch(m: "VersionManifest", files: list) -> bool:
+        """True when a file's schema epoch lacks a stored (non-void) column
+        of the manifest or types it differently (extra columns are fine)."""
+        stored = {f.name: f.dataType
+                  for f in Library._phys_schema(m.schema_json).fields}
+        for sj in {fe.schema_json for fe in files} - {None, m.schema_json}:
+            epoch = {f.name: f.dataType
+                     for f in T.StructType.fromJson(json.loads(sj)).fields}
+            if any(epoch.get(c) != t for c, t in stored.items()):
+                return True
+        return False
+
+    def _rewrite_arrow(self, m: "VersionManifest", files: list, cut
+                       ) -> "list[list[FileEntry]] | None":
+        """Rewrite ``files`` of ``m`` on the driver: read them with pyarrow
+        in ``row_start`` order under the manifest's physical types (a
+        ROW_ID column first, ``arrowread.read_files``), let ``cut(table)``
+        pick the pieces to keep as (table, sizes) pairs and write each with
+        ``arrowwrite.write_slices``, one file and row group per slice.
+        Returns each piece's FileEntries in row order, or None — the caller
+        then runs its Spark path — when a file is not on a local path or is
+        on another schema epoch (``_foreign_epoch``), a stored column's type
+        is outside arrowwrite's whitelist (``arrowwrite.physical_type``), or
+        the files hold more than ``_DRIVER_READ_BYTES_MAX`` bytes."""
+        files = sorted(files, key=lambda fe: fe.row_start)
+        paths = [ar.local_path(fe.path) for fe in files]
+        if None in paths or self._foreign_epoch(m, files):
+            return None
+        phys = self._phys_schema(m.schema_json)
+        want = {f.name: aw.physical_type(f.dataType) for f in phys.fields}
+        if (not want or None in want.values()
+                or sum(map(os.path.getsize, paths)) > _DRIVER_READ_BYTES_MAX):
+            return None
+        tbl = ar.read_files(list(zip(paths, (fe.row_start for fe in files))),
+                            want, ROW_ID, None, None, None)
+        schema_json = phys.json()
+        out = []
+        for piece, sizes in cut(tbl):
+            out_dir = os.path.join(self._data_sym_dir(m.symbol), "data",
+                                   uuid.uuid4().hex)
+            out.append(_file_entries(
+                aw.write_slices(piece.drop_columns([ROW_ID]), out_dir, sizes,
+                                schema_json) if piece.num_rows else [],
+                m.index_column, schema_json))
+        return out
+
+    def _splice(self, prev: "VersionManifest", lo: int, hi: int
+                ) -> tuple[list, list]:
+        """Files of the ASCENDING symbol ``prev`` holding its rows below
+        ``lo`` and above ``hi`` (physical ns), as two row-ordered lists:
+        files outside [lo, hi] are kept; the overlapping ones are rewritten
+        into a below and an above piece (no file straddles the cut), sliced
+        at ``rows_per_file`` by ``_rewrite_arrow`` or, when it declines, by
+        Spark."""
+        idx = prev.index_column
+        below, rewrite, above = [], [], []
+        for fe in prev.files:
+            if fe.ts_max is not None and fe.ts_max < lo:
+                below.append(fe)
+            elif fe.ts_min is not None and fe.ts_min > hi:
+                above.append(fe)
+            else:
+                rewrite.append(fe)
+        if not rewrite:
+            return below, above
+
+        def cut(t):
+            iv = t.column(idx)
+            return [(t.filter(pc.less(iv, lo)), self.rows_per_file),
+                    (t.filter(pc.greater(iv, hi)), self.rows_per_file)]
+
+        pieces = self._rewrite_arrow(prev, rewrite, cut)
+        if pieces is None:
+            # the pieces keep row-id order (a multi-file scan's own order
+            # is not row order) and the manifest's physical schema
+            phys = self._phys_schema(prev.schema_json)
+            df = self._scan_files(prev, rewrite, phys, need_row_id=True)
+            pieces = []
+            for keep in (F.col(idx) < _idx_bound(df, idx, lo),
+                         F.col(idx) > _idx_bound(df, idx, hi)):
+                entries = self._write_data_files(
+                    prev.symbol, df.filter(keep).orderBy(ROW_ID).drop(ROW_ID),
+                    idx, sort=False)
+                for fe in entries:
+                    fe.schema_json = phys.json()
+                pieces.append(entries)
+        return below + pieces[0], pieces[1] + above
+
+    @staticmethod
+    def _phys_schema(schema_json: str):
+        """A stored schema minus its void columns: what data files hold."""
+        return T.StructType([
+            f for f in T.StructType.fromJson(json.loads(schema_json)).fields
+            if not isinstance(f.dataType, T.NullType)])
+
     def _read_physical(self, m: "VersionManifest",
                        files: list | None = None) -> DataFrame:
         """Scan the given files under the manifest's physical schema (void
         columns stripped; absent columns NULL-backfilled; schema-epoch
         grouping via ``_scan_files``)."""
-        from pyspark.sql import types as T
-        schema = T.StructType.fromJson(json.loads(m.schema_json))
-        phys = T.StructType([f for f in schema.fields
-                             if f.name not in self._void_cols(schema)])
         return self._scan_files(m, files if files is not None else m.files,
-                                phys)
+                                self._phys_schema(m.schema_json))
 
     def _detect_index(self, df: DataFrame, index_column) -> str | None:
         if index_column is not None:
@@ -3765,7 +3845,11 @@ class Library:
                coerce_columns: dict | None = None) -> VersionManifest:
         """Range surgery (``version_core.cpp:587``): delete the index range
         covered by ``df`` (or the given range), splice the new rows in.
-        Only files overlapping the range are rewritten.
+        Only files overlapping the range are rewritten: on the driver with
+        pyarrow (``_splice``), or with Spark when a file is non-local, on
+        another schema epoch or of a type arrowwrite does not write, or the
+        files pass the driver read cap. A pandas frame's new rows and index
+        bounds cost no Spark job either.
 
         ``upsert=True`` creates the symbol when it doesn't exist (reference
         ``library.py:1520``); zero-row input leaves the data untouched but
@@ -3829,7 +3913,7 @@ class Library:
                 f"update to {symbol!r}: the stored index column {idx!r} is "
                 f"missing from the incoming frame (columns: {sdf.columns})")
         out_norm_meta = self._uint64_meta_for(prev, inm, sdf.schema, "update")
-        if not sdf.head(1):
+        if pdf is None and not sdf.head(1):  # (pandas input: counted above)
             return prev  # zero-row update: nothing done, no new version
         sdf = self._align_index_phys(sdf, idx, prev)
         sdf = self._encode_dict_columns(symbol, sdf)
@@ -3846,41 +3930,22 @@ class Library:
             sdf = sdf.filter(F.col(idx).between(
                 _idx_bound(sdf, idx, lo), _idx_bound(sdf, idx, hi)))
         else:
-            mm = sdf.agg(F.min(idx), F.max(idx)).first()
-            if mm[0] is None:
+            # the index bounds from the pandas source while the aligned
+            # frame still is its Spark twin (no job); else from Spark
+            mm = ((pdf[idx].min(), pdf[idx].max()) if sdf is src[0]
+                  and pdf is not None and pdf[idx].dtype.kind == "i"
+                  else sdf.agg(F.min(idx), F.max(idx)).first())
+            if pd.isna(mm[0]):
                 return prev
             lo, hi = pd.Timestamp(mm[0]).value, pd.Timestamp(mm[1]).value
-
-        keep, rewrite = [], []
-        for fe in prev.files:
-            if fe.ts_max is None or fe.ts_min is None:
-                rewrite.append(fe)
-            elif fe.ts_max < lo or fe.ts_min > hi:
-                keep.append(fe)
-            else:
-                rewrite.append(fe)
-        new_entries = list(keep)
-        if rewrite:
-            # write the surviving boundary rows in two groups (below /
-            # above the spliced range) so no file straddles the hole:
-            # a straddling file's ts range overlaps the spliced rows,
-            # breaking ts-ordered row ids and blunting date_range pruning
-            phys = self._read_physical(prev, rewrite)
-            new_entries += self._write_data_files(
-                symbol, phys.filter(F.col(idx) < _idx_bound(phys, idx, lo)),
-                idx)
-            new_entries += self._write_data_files(
-                symbol, phys.filter(F.col(idx) > _idx_bound(phys, idx, hi)),
-                idx)
-        import pandas as _pd
-        new_entries += self._write_data_files(
+        below, above = self._splice(prev, lo, hi)
+        new_entries = self._write_data_files(
             symbol, self._drop_void(sdf), idx,
-            rows_hint=(len(df) if isinstance(df, (_pd.DataFrame, _pd.Series))
+            rows_hint=(len(df) if isinstance(df, (pd.DataFrame, pd.Series))
                        else None),
             src=src)
-        new_entries.sort(key=lambda e: (e.ts_min if e.ts_min is not None else 0, e.path))
         m = VersionManifest(symbol, self._next_version(symbol), time.time_ns(), idx,
-                            schema_json, _renumber(new_entries),
+                            schema_json, _renumber(below + new_entries + above),
                             metadata,  # per-version, verbatim (None clears;
                             # reference test_update_empty_frame_metadata)
                             norm_meta=out_norm_meta,
@@ -3959,11 +4024,15 @@ class Library:
     def delete_data_in_range(self, symbol: str, date_range: tuple,
                              prune_previous_versions: bool | None = None
                              ) -> VersionManifest:
-        """(``library.py:2750``) — like update with no new rows.
+        """(``library.py:2750``) — like update with no new rows: the files
+        overlapping the range are rewritten on the driver with pyarrow
+        (``_splice``), or with Spark when a file is non-local, on another
+        schema epoch or of a type arrowwrite does not write, or the files
+        pass the driver read cap. The symbol must be ASCENDING (reference
+        UnsortedDataException, as for update).
         ``prune_previous_versions`` tombstones the pre-delete versions
         (reference test_deletion.py
         test_delete_date_range_with_prune_previous)."""
-        import pandas as pd
         prev = self._load_manifest(symbol, self._load_ref(symbol)["latest"])
         if self._is_pickled(prev) or self._is_recursive(prev):
             # reference InternalException (test_deletion.py
@@ -3977,30 +4046,14 @@ class Library:
             raise ArcticException(
                 f"{symbol!r} has no datetime index: delete_data_in_range "
                 "requires a timestamp-indexed symbol")
-        lo, hi = _norm_range_ns(date_range)
-        keep, rewrite = [], []
-        for fe in prev.files:
-            if fe.ts_max is None or fe.ts_min is None:
-                rewrite.append(fe)
-            elif fe.ts_max < lo or fe.ts_min > hi:
-                keep.append(fe)
-            else:
-                rewrite.append(fe)
-        new_entries = list(keep)
-        if rewrite:
-            # below/above split, same reason as update(): a boundary file
-            # straddling the deleted range keeps an overlapping ts range
-            phys = self._read_physical(prev, rewrite)
-            new_entries += self._write_data_files(
-                symbol, phys.filter(F.col(idx) < _idx_bound(phys, idx, lo)),
-                idx)
-            new_entries += self._write_data_files(
-                symbol, phys.filter(F.col(idx) > _idx_bound(phys, idx, hi)),
-                idx)
-        new_entries.sort(key=lambda e: (e.ts_min if e.ts_min is not None else 0, e.path))
+        if prev.sorted != "ASCENDING":
+            raise UnsortedDataException(
+                f"delete_data_in_range of {symbol!r}: symbol is "
+                f"{prev.sorted}")
+        below, above = self._splice(prev, *_norm_range_ns(date_range))
         m = VersionManifest(symbol, self._next_version(symbol), time.time_ns(), idx,
-                            prev.schema_json, _renumber(new_entries), prev.metadata,
-                            norm_meta=prev.norm_meta,
+                            prev.schema_json, _renumber(below + above),
+                            prev.metadata, norm_meta=prev.norm_meta,
                             base_version=prev.version)
         out = self._commit(m)
         if self._resolve_prune(prune_previous_versions):
@@ -4412,9 +4465,8 @@ class Library:
         from pyspark.sql import types as T
         mschema = T.StructType.fromJson(json.loads(m.schema_json))
         void_cols = self._void_cols(mschema)
-        phys = T.StructType([f for f in mschema.fields
-                             if f.name not in void_cols])
-        df = self._scan_files(m, files, phys, need_row_id=need_row_id)
+        df = self._scan_files(m, files, self._phys_schema(m.schema_json),
+                              need_row_id=need_row_id)
         df = _attach_uint64_marker(df, m.norm_meta)
 
         if void_cols:
@@ -4841,7 +4893,6 @@ class Library:
         ``__index__`` / ``__index_level_N__``, and name clashes are
         disambiguated by wrapping in underscores."""
         import pyarrow as pa
-        import pyarrow.compute as pc
         for c in u64_cols:
             i = tbl.column_names.index(c)
             arr = pa.chunked_array([ch.view(pa.uint64())
@@ -5102,7 +5153,6 @@ class Library:
         keys only and are dropped before any version materializes).
         Returns False when ineligible; the caller then takes the Spark
         writer."""
-        from arcticdb_spark import arrowwrite as aw
         tbl = aw.source_table(sdf, src)
         if tbl is None:
             return False
@@ -6854,19 +6904,29 @@ class Library:
                        group_files: list, start: int,
                        sizes: list[int],
                        end: int | None = None) -> list[FileEntry]:
-        """Rewrite ONE plan group: scan just its files (with the global
-        row-id so original row order — whatever the sortedness — survives),
-        route rows to exact-size slices, one parquet file per slice.
-        Heterogeneous schema epochs inside the group normalize to the
-        manifest schema via _scan_files' per-epoch cast (the reference
-        equally re-encodes processed segments to the promoted descriptor,
-        test_compact_data.py three_slices case). ``end`` bounds the scan
-        when a file straddles the group boundary (inline append-compaction
-        cuts the appended frame mid-file)."""
-        from pyspark.sql import types as T
-        schema = T.StructType.fromJson(json.loads(prev.schema_json))
-        phys = T.StructType([f for f in schema.fields
-                             if f.name not in self._void_cols(schema)])
+        """Rewrite ONE plan group: read just its files in global row-id
+        order (original row order — whatever the sortedness — survives) and
+        cut the rows into the exact ReslicingInfo ``sizes``, one parquet
+        file per slice; ``end`` bounds the rows when a file straddles the
+        group boundary (inline append-compaction cuts the appended frame
+        mid-file). Rows are rewritten on the driver with pyarrow
+        (``_rewrite_arrow``), or with Spark when a file is non-local, on
+        another schema epoch or of a type arrowwrite does not write, or the
+        group passes the driver read cap. Spark casts heterogeneous epochs
+        to the manifest schema (_scan_files; the reference equally
+        re-encodes processed segments to the promoted descriptor,
+        test_compact_data.py three_slices case)."""
+        def cut(t):
+            if end is not None:
+                rid = t.column(ROW_ID)
+                t = t.filter(pc.and_(pc.greater_equal(rid, start),
+                                     pc.less(rid, end)))
+            return [(t, sizes)]
+
+        pieces = self._rewrite_arrow(prev, group_files, cut)
+        if pieces is not None:
+            return pieces[0]
+        phys = self._phys_schema(prev.schema_json)
         df = self._scan_files(prev, group_files, phys, need_row_id=True)
         if end is not None:
             df = df.filter((F.col(ROW_ID) >= F.lit(start))
@@ -6885,36 +6945,25 @@ class Library:
         out_dir = os.path.join(self._data_sym_dir(prev.symbol), "data",
                                uuid.uuid4().hex)
         os.makedirs(os.path.dirname(out_dir), exist_ok=True)
-        written_schema = df.drop(ROW_ID).schema.json()
         (df.withColumn("__slice__", slice_expr.cast("long"))
            .repartition(num, F.col("__slice__"))
            .sortWithinPartitions("__slice__", ROW_ID)
            .drop(ROW_ID)
            .write.mode("overwrite").partitionBy("__slice__")
            .parquet(out_dir))
-        paths = []
-        for d in sorted((fn for fn in os.listdir(out_dir)
-                         if fn.startswith("__slice__=")),
-                        key=lambda s: int(s.split("=", 1)[1])):
-            for fn in sorted(os.listdir(os.path.join(out_dir, d))):
-                if fn.endswith(".parquet"):
-                    paths.append(os.path.join(out_dir, d, fn))
-        entries = []
-        for path in paths:
-            rows, ts_min, ts_max = _footer_stats(path, prev.index_column)
-            if rows == 0:
-                continue
-            entries.append(FileEntry(path, rows, 0, ts_min, ts_max,
-                                     schema_json=written_schema))
-        return entries
+        return _file_entries(_slice_files(out_dir), prev.index_column,
+                             phys.json())
 
     def compact_symbol(self, symbol: str, target_rows_per_file: int | None = None
                        ) -> VersionManifest:
         """Defragment to the reference CompactDataClause contract
         (``clause_compact_data.cpp``): slices already within ±33% of the
         target are untouched; fragmented/oversized runs are merged/split to
-        exact ReslicingInfo sizes. An already-compact symbol is returned
-        unchanged (no new version)."""
+        exact ReslicingInfo sizes, on the driver with pyarrow or with Spark
+        under ``_rewrite_group``'s fallbacks (a non-local file, another
+        schema epoch, a type arrowwrite does not write, the driver read
+        cap). An already-compact symbol is returned unchanged (no new
+        version)."""
         self._validate_rows_per_segment(target_rows_per_file)
         prev = self._load_manifest(symbol, self._load_ref(symbol)["latest"])
         idx = prev.index_column

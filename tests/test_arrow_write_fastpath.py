@@ -49,10 +49,13 @@ def test_fast_path_equivalence(spark, tmp_path, counting, monkeypatch):
     """write/append/stage+finalize round-trip byte-identically through the
     Spark writer (source_table declines every frame) and the pyarrow
     writer: same values, same per-file rows/offsets/ts bounds, same
-    manifest schema."""
+    manifest schema. Order-preserving writes (rowcount index, UNSORTED
+    index) slice exactly at rows_per_file on both."""
     pdf = _frame()
     tail = _frame(800, 1).set_index(
         pd.date_range("2024-02-01", periods=800, freq="s"))
+    kept_order = {"rowcount": pdf.reset_index(drop=True),
+                  "unsorted": pdf.iloc[::-1].sample(frac=1, random_state=3)}
     state = {}
     for mode in ("spark", "arrow"):
         counting["n"] = 0
@@ -64,23 +67,27 @@ def test_fast_path_equivalence(spark, tmp_path, counting, monkeypatch):
             lib.stage("st", pdf.iloc[::2])
             lib.stage("st", pdf.iloc[1::2])
             lib.sort_and_finalize_staged_data("st", "write")
-        m = lib._load_manifest("s", lib._load_ref("s")["latest"])
-        state[mode] = {
-            "read": lib.read("s", output_format="pandas"),
-            "read_st": lib.read("st", output_format="pandas"),
-            "files": [(f.rows, f.row_start, f.ts_min, f.ts_max)
-                      for f in m.files],
-            "schema": m.schema_json,
-            "calls": counting["n"],
-        }
+            for sym, frame in kept_order.items():
+                lib.write(sym, frame, validate_index=False)
+        state[mode] = {"calls": counting["n"]}
+        for sym in ("s", "st", *kept_order):
+            m = lib._load_manifest(sym, lib._load_ref(sym)["latest"])
+            state[mode][sym] = (
+                lib.read(sym, output_format="pandas"),
+                [(f.rows, f.row_start, f.ts_min, f.ts_max) for f in m.files],
+                m.schema_json)
     assert state["spark"]["calls"] == 0
-    assert state["arrow"]["calls"] >= 3      # write + append + 2 stages
-    pd.testing.assert_frame_equal(state["spark"]["read"],
-                                  state["arrow"]["read"])
-    pd.testing.assert_frame_equal(state["spark"]["read_st"],
-                                  state["arrow"]["read_st"])
-    assert state["spark"]["files"] == state["arrow"]["files"]
-    assert state["spark"]["schema"] == state["arrow"]["schema"]
+    assert state["arrow"]["calls"] >= 5   # write + append + 2 stages + 2
+    for sym in ("s", "st", *kept_order):
+        spark_read, spark_files, spark_schema = state["spark"][sym]
+        arrow_read, arrow_files, arrow_schema = state["arrow"][sym]
+        pd.testing.assert_frame_equal(spark_read, arrow_read, obj=sym)
+        assert spark_schema == arrow_schema, sym
+        if sym != "st":   # the staged finalize samples its boundaries
+            assert spark_files == arrow_files, sym
+    for sym, frame in kept_order.items():
+        pd.testing.assert_frame_equal(state["arrow"][sym][0], frame, obj=sym)
+        assert [f[0] for f in state["arrow"][sym][1]] == [1500, 1500, 1000]
 
 
 def test_pandas_source_not_retained_after_write(spark, tmp_path):
