@@ -1,4 +1,4 @@
-"""Driver-side pyarrow read path for plain pandas/arrow/polars reads.
+"""Driver-side pyarrow read path for pandas/arrow/polars reads.
 
 A plain ``lib.read(sym, output_format="pandas")`` used to build a Spark
 plan over the pruned files, sort it by the physical row id and collect it
@@ -15,9 +15,11 @@ columns) and collects through the same conversions Spark applies in
 ``DataFrame.toArrow()`` / ``toPandas()``, so the shared finisher sees
 identical input from either collector.
 
-``read_files`` also feeds the driver-side rewrites of update,
-delete_data_in_range and compaction (``Library._rewrite_arrow``), which
-read under the physical types and write back through arrowwrite.
+QueryBuilder reads run their clauses on the same ``LocalFrame``
+(``arrowquery.run``). ``read_files`` also feeds the driver-side rewrites
+of update, delete_data_in_range and compaction
+(``Library._rewrite_arrow``), which read under the physical types and
+write back through arrowwrite.
 """
 
 from __future__ import annotations
@@ -122,6 +124,12 @@ class LocalFrame:
 
     def toArrow(self) -> "pa.Table":
         return self._table
+
+    def select(self, names: list) -> "LocalFrame":
+        fields = {f.name: f for f in self.schema.fields}
+        return LocalFrame(self._spark,
+                          type(self.schema)([fields[n] for n in names]),
+                          self._table.select(names))
 
     def toPandas(self):
         """Spark's Arrow ``toPandas()`` conversion applied to the table:

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from arcticdb_spark import arrowquery as aq
 from arcticdb_spark import arrowread as ar
 from arcticdb_spark import arrowwrite as aw
 from arcticdb_spark.plans.rowid import ROW_ID
@@ -2838,7 +2839,7 @@ class Library:
         - a selected dictionary-coded column's sidecar is over the driver
           read cap (``_dict_sidecar_over_cap``); smaller sidecars decode
           through the driver-side ``_dict_map``."""
-        from arcticdb_spark.expr import UINT64_META
+        from arcticdb_spark.expr import UINT64_META, UNSIGNED_META
         paths = [ar.local_path(fe.path) for fe in files]
         if None in paths or self._foreign_epoch(m, files):
             return None
@@ -2888,6 +2889,7 @@ class Library:
                 sfield.name, arr.cast(ar.arrow_type(sfield.dataType, large)))
 
         u64 = set(nm.get("uint64") or ())
+        unsigned = set(nm.get("unsigned") or ()) - u64
         for c in keep:
             f = fields[c]
             if isinstance(f.dataType, T.NullType):
@@ -2900,8 +2902,8 @@ class Library:
                     T.StructField(c, T.StringType()))
             else:
                 md = dict(f.metadata or {})
-                if c in u64:
-                    md[UINT64_META] = True
+                if c in u64 or c in unsigned:
+                    md[UINT64_META if c in u64 else UNSIGNED_META] = True
                 add(tbl.column(c), T.StructField(c, f.dataType, True, md))
         tail = []
         if with_row_ids:
@@ -2917,6 +2919,16 @@ class Library:
         for name, arr, nullable in tail:
             add(arr, T.StructField(name, T.LongType(), nullable))
         return ar.LocalFrame(self.spark, T.StructType(sfields), out)
+
+    @staticmethod
+    def _driver_paths(files: list) -> list | None:
+        """The local paths of ``files``, or None when one is not local or
+        together they hold more than ``_DRIVER_READ_BYTES_MAX`` bytes."""
+        paths = [ar.local_path(fe.path) for fe in files]
+        if None in paths or sum(map(os.path.getsize, paths)) \
+                > _DRIVER_READ_BYTES_MAX:
+            return None
+        return paths
 
     @staticmethod
     def _foreign_epoch(m: "VersionManifest", files: list) -> bool:
@@ -2944,13 +2956,12 @@ class Library:
         is outside arrowwrite's whitelist (``arrowwrite.physical_type``), or
         the files hold more than ``_DRIVER_READ_BYTES_MAX`` bytes."""
         files = sorted(files, key=lambda fe: fe.row_start)
-        paths = [ar.local_path(fe.path) for fe in files]
-        if None in paths or self._foreign_epoch(m, files):
+        paths = self._driver_paths(files)
+        if paths is None or self._foreign_epoch(m, files):
             return None
         phys = self._phys_schema(m.schema_json)
         want = {f.name: aw.physical_type(f.dataType) for f in phys.fields}
-        if (not want or None in want.values()
-                or sum(map(os.path.getsize, paths)) > _DRIVER_READ_BYTES_MAX):
+        if not want or None in want.values():
             return None
         tbl = ar.read_files(list(zip(paths, (fe.row_start for fe in files))),
                             want, ROW_ID, None, None, None)
@@ -4163,15 +4174,20 @@ class Library:
         "arrow"} (reference OutputFormat, options.py:170-196).
 
         Where the rows are read: a "pandas", "arrow" or "polars" read
-        without a ``query_builder`` (``as_of``, ``date_range``,
-        ``row_range``, ``columns`` and ``with_row_ids`` included) reads the
-        pruned files on the driver with pyarrow and runs no Spark job
-        (``_scan_files_arrow``). It falls back to the Spark scan when a
-        file is on another schema epoch than the manifest, a file is not
-        on a local path, or a selected dictionary column's sidecar is too
-        large to decode on the driver. QueryBuilder reads, "spark" /
-        "spark-ns" output, ``lazy`` and ``incomplete`` reads always run
-        on Spark. Both paths feed the same output finisher."""
+        (``as_of``, ``date_range``, ``row_range``, ``columns`` and
+        ``with_row_ids`` included) reads the pruned files on the driver
+        with pyarrow and runs no Spark job (``_scan_files_arrow``). It
+        falls back to the Spark scan when a file is on another schema
+        epoch than the manifest, a file is not on a local path, or a
+        selected dictionary column's sidecar is too large to decode on the
+        driver. With a ``query_builder`` the clauses then run on the
+        scanned table (``arrowquery.run``: filter, project, groupby and
+        resample with sum/mean/min/max/count/first/last) unless the pruned
+        files exceed ``_DRIVER_READ_BYTES_MAX`` bytes, ``with_row_ids`` is
+        set or ``arrowquery`` declines (head/tail/row_range clauses,
+        uint64 columns, pipelines that raise); those run on Spark, as do
+        "spark" / "spark-ns" output, ``lazy`` and ``incomplete`` reads.
+        Both paths feed the same output finisher."""
         import pandas as pd
         output_format = self._resolve_output_format(output_format)
         if date_range is not None and row_range is not None:
@@ -4427,6 +4443,23 @@ class Library:
                     local, output_format, m.norm_meta,
                     undecided_index=_index_undecided(m) and not files,
                     range_positions=orig_pos, sorted_flag=m.sorted)
+        elif (output_format in ("pandas", "arrow", "polars")
+                and not with_row_ids and aq.eligible(query_builder)
+                and self._driver_paths(files) is not None):
+            # the same for a QueryBuilder read: its clauses run on the
+            # scanned table (arrowquery.py) unless the scan or they decline
+            local = self._scan_files_arrow(symbol, m, files, None, None,
+                                           None, False, False)
+            if local is not None:
+                local = aq.run(qb_clauses, local, idx)
+            if local is not None:
+                if columns is not None:
+                    local = local.select(
+                        self._pipeline_columns(m, local.columns, columns))
+                return self._format_output(
+                    local, output_format, m.norm_meta,
+                    undecided_index=_index_undecided(m) and not files,
+                    group_index_cols=self._groupby_index_cols(query_builder))
 
         if not files:
             from pyspark.sql import types as T
@@ -4504,26 +4537,7 @@ class Library:
             post_select = list(columns)
             columns = None
         if columns is not None:
-            # requested columns intersect the stored fields — missing names
-            # are silently ignored like the reference
-            # (read_pipeline.hpp:125 generate_filtered_field_descriptors)
-            keep = [c for c in columns if c in df.columns]
-            # index force-included (version_core.cpp:1285) — for a
-            # MultiIndex that is EVERY demoted level column, so
-            # columns=[] still restores the full index (reference
-            # test_read_index.py TestBasicReadIndex)
-            nm_r = m.norm_meta or {}
-            idx_cols = (nm_r.get("physical")
-                        if nm_r.get("index_type") == "multiindex"
-                        else ([idx] if idx else []))
-            for c in reversed(idx_cols or []):
-                if c in df.columns and c not in keep:
-                    keep = [c] + keep
-            if index_ns:
-                keep.append(ns_shadow_col(idx))
-            if need_row_id:
-                keep.append(ROW_ID)
-            df = df.select(keep)
+            df = df.select(self._pipeline_columns(m, df.columns, columns))
         if range_positions:
             df = df.withColumn(ORIG_POS, F.col(ROW_ID))
         # dictionary-coded columns (string-pool analogue): when the
@@ -4558,23 +4572,9 @@ class Library:
         if dict_fast:
             df = self._decode_dict_columns(symbol, df, dict_cols)
         if post_select is not None:
-            # pipeline-output column selection (see the deferral above):
-            # requested names that survived (stored OR projected), plus the
-            # index / restore helper columns
-            keep = [c for c in post_select if c in df.columns]
-            nm_r = m.norm_meta or {}
-            idx_cols = (nm_r.get("physical")
-                        if nm_r.get("index_type") == "multiindex"
-                        else ([idx] if idx else []))
-            for c in reversed(idx_cols or []):
-                if c in df.columns and c not in keep:
-                    keep = [c] + keep
-            if index_ns and ns_shadow_col(idx) in df.columns:
-                keep.append(ns_shadow_col(idx))
-            for helper in (ROW_ID, ORIG_POS):
-                if helper in df.columns:
-                    keep.append(helper)
-            df = df.select(keep)
+            # pipeline-output column selection (see the deferral above)
+            df = df.select(self._pipeline_columns(m, df.columns,
+                                                  post_select))
         if ROW_ID in df.columns:
             if order_out or range_positions:
                 df = df.orderBy(ROW_ID)
@@ -4661,6 +4661,26 @@ class Library:
         return self._format_output(
             df, output_format, norm_meta,
             group_index_cols=self._groupby_index_cols(query_builder))
+
+    @staticmethod
+    def _pipeline_columns(m: "VersionManifest", have: list,
+                          columns: list) -> list:
+        """A column selection from ``have``: the requested names present
+        (missing ones are ignored like the reference, read_pipeline.hpp:125;
+        with a pipeline they may be projected), the index forced in front
+        (version_core.cpp:1285; every level of a MultiIndex, so
+        ``columns=[]`` still restores it), then the ns shadow and the
+        row-id / position helpers."""
+        keep = [c for c in columns if c in have]
+        nm = m.norm_meta or {}
+        idx = m.index_column
+        idx_cols = (nm.get("physical") if nm.get("index_type")
+                    == "multiindex" else ([idx] if idx else []))
+        for c in reversed(idx_cols or []):
+            if c in have and c not in keep:
+                keep = [c] + keep
+        helpers = [ns_shadow_col(idx)] if idx else []
+        return keep + [c for c in helpers + [ROW_ID, ORIG_POS] if c in have]
 
     @staticmethod
     def _groupby_index_cols(query_builder) -> list | None:
@@ -7090,10 +7110,10 @@ class Library:
         (reference ``library.py:2161`` accepts Union[str, ReadRequest]).
         With ``lazy=True`` returns a ``LazyDataFrameCollection`` (reference
         read_batch lazy form; split()/collect()/concat() chain from it).
-        A batch of plain pandas/arrow/polars reads (no query builder) is
-        read item by item on the calling thread, each a driver-side scan
-        (see ``read``); other batches fan out over a thread pool so their
-        Spark jobs overlap."""
+        A batch of pandas/arrow/polars reads, with no query builder or
+        with ones ``arrowquery.eligible`` accepts, is read item by item on
+        the calling thread, each a driver-side scan (see ``read``); other
+        batches fan out over a thread pool so their Spark jobs overlap."""
         for s in symbols:
             if not isinstance(s, (str, ReadRequest)):
                 # reference test_read_batch_unhandled_type: only str and
@@ -7151,18 +7171,18 @@ class Library:
 
     def _batch_reads_on_driver(self, symbols: list, kw: dict) -> bool:
         """True when each ``read_batch`` item takes ``read``'s driver scan:
-        a pandas/arrow/polars output, no query builder, not an incomplete
-        read, and a local data root (the scan's structural fallbacks to
-        Spark remain possible per symbol and then run serially)."""
-        from arcticdb_spark.arrowread import local_path
+        a pandas/arrow/polars output, no query builder or one that
+        ``arrowquery.eligible`` accepts (clause kinds and aggregator names
+        only), not an incomplete read, and a local data root (the scan's
+        and the executor's fallbacks to Spark remain possible per symbol
+        and then run serially)."""
+        qbs = [kw.get("query_builder")] + [
+            s.query_builder for s in symbols if isinstance(s, ReadRequest)]
         return (self._resolve_output_format(kw.get("output_format"))
                 in ("pandas", "arrow", "polars")
-                and kw.get("query_builder") is None
+                and all(q is None or aq.eligible(q) for q in qbs)
                 and not kw.get("incomplete")
-                and local_path(self.data_root) is not None
-                and not any(isinstance(s, ReadRequest)
-                            and s.query_builder is not None
-                            for s in symbols))
+                and ar.local_path(self.data_root) is not None)
 
     @staticmethod
     def _payload(p) -> tuple:

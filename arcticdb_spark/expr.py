@@ -15,7 +15,8 @@ JVM-side. The load-bearing semantic differences vs plain Spark, handled here:
   ``nanvl(col, NULL)`` so NaN behaves as null in filters, arithmetic
   (propagates), and aggregations (skipped) — matching pandas/ArcticDB.
 * **Division always yields float64** (``operation_types.hpp:248``):
-  both operands cast to double before ``/``.
+  both operands cast to double before ``/``, with IEEE results for a zero
+  divisor (±inf; NaN for 0/0 and NaN/0) where Spark's ``/`` gives NULL.
 * **Integer arithmetic widens** to 64-bit (reference widens to the next
   size up; we go straight to long — same values for all inputs
   representable in 64 bits).
@@ -185,6 +186,16 @@ def _kind_of_value(v: Any) -> str:
     except ImportError:  # pragma: no cover
         pass
     return OTHER
+
+
+def _is_missing(v) -> bool:
+    """None, NaN or NaT: a value-set member that matches no row."""
+    if v is None:
+        return True
+    try:
+        return bool(v != v)   # NaN and NaT are both self-unequal
+    except Exception:
+        return False
 
 
 def _is_value_set(v) -> bool:
@@ -418,6 +429,17 @@ def _ts_to_nanos(c: Column) -> Column:
     return F.unix_micros(c.cast("timestamp")) * F.lit(1000).cast("long")
 
 
+def _ieee_div(lc: Column, rc: Column) -> Column:
+    """IEEE-754 double division. Spark's ``/`` yields NULL for a zero
+    divisor; pandas and the reference give ±inf, and NaN for 0/0 and
+    NaN/0. The sign of a zero divisor comes from its string form, the one
+    Spark expression that tells -0.0 from 0.0."""
+    inf = lc * F.lit(float("inf"))
+    return F.when(rc == F.lit(0.0),
+                  F.when(rc.cast("string").startswith("-"), -inf)
+                  .otherwise(inf)).otherwise(lc / rc)
+
+
 def _lit(v) -> Column:
     # pandas Timestamps / numpy datetime64 to Spark literal
     k = _kind_of_value(v)
@@ -537,7 +559,7 @@ def _compile(node: ExpressionNode, schema: dict[str, T.StructField]) -> tuple[Co
                 lc = _u64_to_double(lc) if lk == UINT else lc.cast("double")
                 rc = _u64_to_double(rc) if rk == UINT else rc.cast("double")
                 if op == "DIV":
-                    return lc / rc, FLOAT
+                    return _ieee_div(lc, rc), FLOAT
                 if op == "POW":
                     if rk == FLOAT:
                         raise ExpressionError(
@@ -567,7 +589,7 @@ def _compile(node: ExpressionNode, schema: dict[str, T.StructField]) -> tuple[Co
                             "MUL": lambda a, b: a * b}[op]
                 return spark_op(lc, rc), FLOAT
             if op == "DIV":
-                return lc.cast("double") / rc.cast("double"), FLOAT
+                return _ieee_div(lc.cast("double"), rc.cast("double")), FLOAT
             if op == "POW":
                 # the reference rejects float exponents (test_project_pow_
                 # float_exponent_raises); signed int exponents produce
@@ -685,16 +707,7 @@ def _compile(node: ExpressionNode, schema: dict[str, T.StructField]) -> tuple[Co
 
     if isinstance(node, IsInOp):
         c, k = _compile(node.child, schema)
-
-        def _missing(v):
-            if v is None:
-                return True
-            try:
-                return bool(v != v)   # NaN and NaT are both self-unequal
-            except Exception:
-                return False
-
-        vals = [v for v in node.values if not _missing(v)]
+        vals = [v for v in node.values if not _is_missing(v)]
         # the value set must be kind-compatible with the column: a numeric
         # set on a string column (or vice versa) is a user error in the
         # reference (UserInputException — test_filter_string_number_set_
@@ -782,17 +795,11 @@ def _compile(node: ExpressionNode, schema: dict[str, T.StructField]) -> tuple[Co
     raise ExpressionError(f"cannot compile {type(node).__name__}")
 
 
-def compile_expression(node: ExpressionNode, df: DataFrame) -> Column:
-    """Public entry: compile an AST against a DataFrame's schema."""
-    col, _ = compile_expression_with_kind(node, df)
-    return col
-
-
 def compile_expression_with_kind(node: ExpressionNode,
                                  df: DataFrame) -> tuple[Column, str]:
-    """Like compile_expression but also returns the result kind, so the
-    projection layer can re-attach the uint64 marker (kind == UINT) to
-    derived columns."""
+    """Compile an AST against a DataFrame's schema and return the result
+    kind too, so the projection layer can re-attach the uint64 marker
+    (kind == UINT) to derived columns."""
     schema = {f.name: f for f in df.schema.fields}
     return _compile(node, schema)
 

@@ -11,6 +11,16 @@ one lazy Catalyst plan, so filter pushdown / column pruning / filter merging
 happen across clause boundaries for free (reference has to hand-roll these,
 ``query_planner.cpp``). Nothing here materializes.
 
+A second executor runs the same clause list where the result lands on the
+driver anyway: ``Library.read`` with pandas/arrow/polars output hands the
+pyarrow scan of the pruned files to ``arrowquery.run``, which evaluates
+date_range, filter, project, groupby and resample (sum/mean/min/max/count/
+first/last) with ``pyarrow.compute`` and no Spark job. It declines — and
+the plan built here runs instead — for head/tail/row_range/concat clauses,
+uint64 or small-unsigned columns, any pipeline these kernels reject with an
+error, aggregators without an exact Arrow kernel, files over the driver
+read cap and every fallback of the driver scan (see arrowquery.py).
+
 Usage (same shape as the reference)::
 
     q = QueryBuilder()
@@ -29,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from arcticdb_spark.expr import (ColumnRef, ExpressionError, ExpressionNode,
-                                 compile_expression, compile_predicate, where)
+                                 compile_predicate, where)
 from arcticdb_spark.operators.concat import concat as _concat
 from arcticdb_spark.operators.resample import (compile_agg, normalize_agg_spec,
                                                resample as _resample)

@@ -1,10 +1,12 @@
 """Static guards over the package source (AST only, no Spark session).
 
-* Every top-level function in ``arcticdb_spark/extensions`` and
-  ``arcticdb_spark/plans`` has a caller: its name appears as an ``ast.Name``
-  or ``ast.Attribute`` somewhere in the package, the entry module, the
-  bench, ``tools/``, ``perfbench/`` or ``tests/``, outside its own
-  definition. Strings and comments do not count.
+* Every top-level function in ``arcticdb_spark/extensions``,
+  ``arcticdb_spark/plans``, ``arcticdb_spark/operators`` and the modules
+  ``expr``, ``query``, ``arrowread``, ``arrowwrite`` and ``arrowquery``
+  has a caller: its name appears as an ``ast.Name`` or ``ast.Attribute``
+  somewhere in the package, the entry module, the bench, ``tools/``,
+  ``perfbench/`` or ``tests/``, outside its own definition. Strings,
+  comments and imports do not count.
 * Nothing in the package calls ``threading.local()``: per-thread hidden
   state outlives the call that filled it (a pool thread pins whatever it
   last stored), so state is passed explicitly instead.
@@ -48,9 +50,14 @@ def _references(path: Path):
                 yield node.attr, owner
 
 
+SCANNED = (PKG / "extensions", PKG / "plans", PKG / "operators",
+           PKG / "expr.py", PKG / "query.py", PKG / "arrowread.py",
+           PKG / "arrowwrite.py", PKG / "arrowquery.py")
+
+
 def test_extension_and_plan_helpers_have_callers():
     defined = []   # (module path, function name)
-    for path in _py_files(PKG / "extensions", PKG / "plans"):
+    for path in _py_files(*SCANNED):
         for top in _parse(path).body:
             if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 defined.append((path, top.name))

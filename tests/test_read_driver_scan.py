@@ -1,8 +1,9 @@
 """Plain pandas/arrow reads are served by the driver-side pyarrow scan
 (``Library._scan_files_arrow``). Differential check: for every symbol
 shape and read option, the driver scan's output equals the Spark
-collector's output fed through the same finisher, and the plain reads run
-no Spark job while a QueryBuilder read still does."""
+collector's output fed through the same finisher, and the plain reads (and
+a filter QueryBuilder read) run no Spark job while a head QueryBuilder
+read still does."""
 
 import numpy as np
 import pandas as pd
@@ -178,25 +179,29 @@ def test_plain_reads_run_no_spark_job(spark, lib):
     m = lib._resolve_version("dt", None)
     lo = pd.Timestamp(m.files[1].ts_min, unit="ns")
     syms = ["dt", "tz", "uints", "strs"]
+    q = QueryBuilder()
+    q = q[q["v"] > 0]
     reads = {
         "plain": lambda: lib.read("dt", output_format="pandas"),
         "date_range": lambda: lib.read("dt", date_range=(lo, None),
                                        output_format="pandas"),
         "as_of": lambda: lib.read("dt", as_of=0, output_format="pandas"),
         "read_batch": lambda: lib.read_batch(syms, output_format="pandas"),
+        "filter": lambda: lib.read("dt", query_builder=q,
+                                   output_format="pandas"),
     }
     for name, fn in reads.items():
         fn()   # first call may warm caches
         assert _jobs_run(spark, fn) == 0, name
-    q = QueryBuilder()
-    q = q[q["v"] > 0]
+    head = QueryBuilder().head(3)
     assert _jobs_run(spark, lambda: lib.read(
-        "dt", query_builder=q, output_format="pandas")) >= 1
+        "dt", query_builder=head, output_format="pandas")) >= 1
 
 
 def test_read_batch_reads_driver_scans_in_turn(lib, monkeypatch):
     """A batch of driver-scan reads runs on the calling thread, item for
-    item equal to single reads; a QueryBuilder batch still fans out over
+    item equal to single reads, and so does a batch of filter QueryBuilder
+    reads; a batch the driver declines (a head clause) still fans out over
     the pool."""
     syms = ["dt", "tz", "uints", "strs"]
     want = [lib.read(s, output_format="pandas") for s in syms]
@@ -214,5 +219,13 @@ def test_read_batch_reads_driver_scans_in_turn(lib, monkeypatch):
         _assert_same(g, w)
     q = QueryBuilder()
     q = q[q["v"] > 0]
-    lib.read_batch(["dt", "tz"], query_builder=q, output_format="pandas")
+    want = [lib.read(s, query_builder=q, output_format="pandas")
+            for s in ("dt", "tz")]
+    got = lib.read_batch(["dt", "tz"], query_builder=q,
+                         output_format="pandas")
+    assert pooled == []
+    for g, w in zip(got, want):
+        _assert_same(g, w)
+    lib.read_batch(["dt", "tz"], query_builder=QueryBuilder().head(3),
+                   output_format="pandas")
     assert pooled == [2]
