@@ -32,16 +32,6 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 
-def local_path(path: str) -> str | None:
-    """The filesystem path of a local data file, or None for a path on
-    another scheme (object stores go through Spark's readers)."""
-    if path.startswith("file://"):
-        return path[len("file://"):]
-    if path.startswith("file:"):
-        return path[len("file:"):]
-    return None if "://" in path else path
-
-
 def arrow_type(dtype, large_types: bool) -> "pa.DataType":
     """The arrow type Spark's ``toArrow()`` gives a column of ``dtype``
     (``large_types``: the session's ``arrowUseLargeVarTypes``)."""

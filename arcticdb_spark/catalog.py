@@ -396,8 +396,9 @@ class VersionManifest:
 # — each Library holds an implementation of that protocol (atomic PUT +
 # conditional-PUT CAS); S3ObjectFileSystem gives the reference's serverless
 # object-store layout, LocalFileSystem covers posix/NFS. Data files (parquet)
-# are written by Spark and can live on a different root (data_root) so
-# object-store metadata + locally-mounted data compose.
+# live on a local or mounted filesystem path (data_root, which may differ
+# from the metadata root), read and written by both pyarrow on the driver
+# and Spark, so object-store metadata + locally-mounted data compose.
 from arcticdb_spark.sources.filesystem import (AzureObjectFileSystem,
                                                GCSObjectFileSystem,
                                                LocalFileSystem,
@@ -497,6 +498,20 @@ class StageResult:
     between writer processes and the finalizing coordinator."""
     symbol: str
     staged_segments: list
+
+
+@dataclass
+class StagedFile:
+    """What finalize and incomplete reads know of one staged part file,
+    from one footer open (``Library._staged_records``): its chunk (the
+    ``stage()`` call's directory) and that chunk's sidecar, its Spark
+    read schema, its row count and its footer metadata (index min/max)."""
+    path: str
+    chunk: str
+    side: dict
+    schema: T.StructType
+    rows: int
+    meta: "pq.FileMetaData"
 
 
 class MissingKeysInStageResultsError(ArcticException):
@@ -1058,7 +1073,12 @@ def _renumber(files: list[FileEntry]) -> list[FileEntry]:
 def _footer_stats(path: str, index_column: str | None):
     """Row count + index min/max from the Parquet footer only (no data IO)."""
     md = pq.ParquetFile(path).metadata
-    rows = md.num_rows
+    return (md.num_rows, *_index_span(md, index_column))
+
+
+def _index_span(md: "pq.FileMetaData", index_column: str | None):
+    """(min, max) of ``index_column`` over the row-group statistics of a
+    parsed footer, as ns; (None, None) without an index or statistics."""
     ts_min = ts_max = None
     if index_column:
         idx = None
@@ -1078,8 +1098,7 @@ def _footer_stats(path: str, index_column: str | None):
                 mx = _to_ns(mx)
                 ts_min = mn if ts_min is None else min(ts_min, mn)
                 ts_max = mx if ts_max is None else max(ts_max, mx)
-    return rows, ts_min, ts_max
-
+    return ts_min, ts_max
 
 
 def _file_entries(paths: list, index_column: str | None,
@@ -1290,9 +1309,16 @@ class Library:
         self.name = name
         self._fs = fs or LocalFileSystem()
         self.root = self._fs.join(root, name)
-        # data (parquet) root: Spark/pyarrow-visible path. Defaults to the
-        # metadata root for the local backend; an object-store metadata fs
-        # needs an explicit data_root (e.g. a mounted bucket or s3a:// URI).
+        # data (parquet) root: a local or mounted filesystem path, which the
+        # driver's pyarrow reads and writes as well as Spark. Defaults to
+        # the metadata root for the local backend; an object-store metadata
+        # fs needs an explicit data_root (e.g. a mounted bucket). A URI
+        # would make a local directory named after its scheme and fail at
+        # the first write, so it is refused here.
+        if data_root is not None and "://" in data_root:
+            raise ArcticException(
+                f"data_root {data_root!r} is a URI; data files live on a "
+                "local or mounted filesystem path")
         if data_root is not None:
             self.data_root = os.path.join(data_root, name)
         elif isinstance(self._fs, LocalFileSystem):
@@ -2835,13 +2861,11 @@ class Library:
 
         - a file is on another schema epoch (``_foreign_epoch``; those
           scans cast and backfill per epoch, see ``_scan_files``);
-        - a file is not on a local path (object stores read through Spark);
         - a selected dictionary-coded column's sidecar is over the driver
           read cap (``_dict_sidecar_over_cap``); smaller sidecars decode
           through the driver-side ``_dict_map``."""
         from arcticdb_spark.expr import UINT64_META, UNSIGNED_META
-        paths = [ar.local_path(fe.path) for fe in files]
-        if None in paths or self._foreign_epoch(m, files):
+        if self._foreign_epoch(m, files):
             return None
         mschema = T.StructType.fromJson(json.loads(m.schema_json))
         fields = {f.name: f for f in mschema.fields}
@@ -2877,7 +2901,7 @@ class Library:
             date_range = tuple(None if b is None else b // 1000
                                for b in date_range)
         tbl = ar.read_files(
-            [(p, fe.row_start) for p, fe in zip(paths, files)], want,
+            [(fe.path, fe.row_start) for fe in files], want,
             ROW_ID, idx, date_range, rows)
 
         out, sfields = tbl.select([]), []
@@ -2921,14 +2945,11 @@ class Library:
         return ar.LocalFrame(self.spark, T.StructType(sfields), out)
 
     @staticmethod
-    def _driver_paths(files: list) -> list | None:
-        """The local paths of ``files``, or None when one is not local or
-        together they hold more than ``_DRIVER_READ_BYTES_MAX`` bytes."""
-        paths = [ar.local_path(fe.path) for fe in files]
-        if None in paths or sum(map(os.path.getsize, paths)) \
-                > _DRIVER_READ_BYTES_MAX:
-            return None
-        return paths
+    def _over_driver_cap(files: list) -> bool:
+        """True when ``files`` together hold more than
+        ``_DRIVER_READ_BYTES_MAX`` bytes."""
+        return (sum(os.path.getsize(fe.path) for fe in files)
+                > _DRIVER_READ_BYTES_MAX)
 
     @staticmethod
     def _foreign_epoch(m: "VersionManifest", files: list) -> bool:
@@ -2951,19 +2972,18 @@ class Library:
         pick the pieces to keep as (table, sizes) pairs and write each with
         ``arrowwrite.write_slices``, one file and row group per slice.
         Returns each piece's FileEntries in row order, or None — the caller
-        then runs its Spark path — when a file is not on a local path or is
-        on another schema epoch (``_foreign_epoch``), a stored column's type
-        is outside arrowwrite's whitelist (``arrowwrite.physical_type``), or
-        the files hold more than ``_DRIVER_READ_BYTES_MAX`` bytes."""
+        then runs its Spark path — when a file is on another schema epoch
+        (``_foreign_epoch``), a stored column's type is outside
+        arrowwrite's whitelist (``arrowwrite.physical_type``), or the files
+        hold more than ``_DRIVER_READ_BYTES_MAX`` bytes."""
         files = sorted(files, key=lambda fe: fe.row_start)
-        paths = self._driver_paths(files)
-        if paths is None or self._foreign_epoch(m, files):
+        if self._over_driver_cap(files) or self._foreign_epoch(m, files):
             return None
         phys = self._phys_schema(m.schema_json)
         want = {f.name: aw.physical_type(f.dataType) for f in phys.fields}
         if not want or None in want.values():
             return None
-        tbl = ar.read_files(list(zip(paths, (fe.row_start for fe in files))),
+        tbl = ar.read_files([(fe.path, fe.row_start) for fe in files],
                             want, ROW_ID, None, None, None)
         schema_json = phys.json()
         out = []
@@ -3857,9 +3877,9 @@ class Library:
         """Range surgery (``version_core.cpp:587``): delete the index range
         covered by ``df`` (or the given range), splice the new rows in.
         Only files overlapping the range are rewritten: on the driver with
-        pyarrow (``_splice``), or with Spark when a file is non-local, on
-        another schema epoch or of a type arrowwrite does not write, or the
-        files pass the driver read cap. A pandas frame's new rows and index
+        pyarrow (``_splice``), or with Spark when a file is on another
+        schema epoch or of a type arrowwrite does not write, or the files
+        pass the driver read cap. A pandas frame's new rows and index
         bounds cost no Spark job either.
 
         ``upsert=True`` creates the symbol when it doesn't exist (reference
@@ -4037,9 +4057,9 @@ class Library:
                              ) -> VersionManifest:
         """(``library.py:2750``) — like update with no new rows: the files
         overlapping the range are rewritten on the driver with pyarrow
-        (``_splice``), or with Spark when a file is non-local, on another
-        schema epoch or of a type arrowwrite does not write, or the files
-        pass the driver read cap. The symbol must be ASCENDING (reference
+        (``_splice``), or with Spark when a file is on another schema
+        epoch or of a type arrowwrite does not write, or the files pass
+        the driver read cap. The symbol must be ASCENDING (reference
         UnsortedDataException, as for update).
         ``prune_previous_versions`` tombstones the pre-delete versions
         (reference test_deletion.py
@@ -4178,16 +4198,23 @@ class Library:
         ``with_row_ids`` included) reads the pruned files on the driver
         with pyarrow and runs no Spark job (``_scan_files_arrow``). It
         falls back to the Spark scan when a file is on another schema
-        epoch than the manifest, a file is not on a local path, or a
-        selected dictionary column's sidecar is too large to decode on the
-        driver. With a ``query_builder`` the clauses then run on the
-        scanned table (``arrowquery.run``: filter, project, groupby and
-        resample with sum/mean/min/max/count/first/last) unless the pruned
-        files exceed ``_DRIVER_READ_BYTES_MAX`` bytes, ``with_row_ids`` is
-        set or ``arrowquery`` declines (head/tail/row_range clauses,
-        uint64 columns, pipelines that raise); those run on Spark, as do
-        "spark" / "spark-ns" output, ``lazy`` and ``incomplete`` reads.
-        Both paths feed the same output finisher."""
+        epoch than the manifest or a selected dictionary column's sidecar
+        is too large to decode on the driver. With a ``query_builder`` the
+        clauses then run on the scanned table (``arrowquery.run``: filter,
+        project, groupby and resample with sum/mean/min/max/count/first/
+        last) unless the pruned files exceed ``_DRIVER_READ_BYTES_MAX``
+        bytes, ``with_row_ids`` is set or ``arrowquery`` declines
+        (head/tail/row_range clauses, uint64 columns, pipelines that
+        raise); those run on Spark, as do "spark" / "spark-ns" output,
+        ``lazy`` and ``incomplete`` reads. Both paths feed the same output
+        finisher.
+
+        ``incomplete=True`` unions the committed version with the staged
+        chunks, read like ``finalize_staged_data`` reads them: each
+        chunk's sidecar and each staged footer are read once on the
+        driver, and the files are scanned grouped by schema and cast to
+        one promoted schema (float32 and float64 chunks read as float64),
+        with no Spark job to infer or merge the schemas."""
         import pandas as pd
         output_format = self._resolve_output_format(output_format)
         if date_range is not None and row_range is not None:
@@ -4445,7 +4472,7 @@ class Library:
                     range_positions=orig_pos, sorted_flag=m.sorted)
         elif (output_format in ("pandas", "arrow", "polars")
                 and not with_row_ids and aq.eligible(query_builder)
-                and self._driver_paths(files) is not None):
+                and not self._over_driver_cap(files)):
             # the same for a QueryBuilder read: its clauses run on the
             # scanned table (arrowquery.py) unless the scan or they decline
             local = self._scan_files_arrow(symbol, m, files, None, None,
@@ -4491,7 +4518,7 @@ class Library:
 
         # scan with the manifest's schema, grouped by schema epoch
         # (_scan_files): files written before a dynamic-schema widening are
-        # cast per group — no mergeSchema footer sweep, no per-file branching
+        # cast per group — no schema-merging footer sweep, no per-file branching
         # (reference reduce_and_fix_columns, version_core.cpp:2971). EMPTY
         # (void) columns are never physically stored: strip them from the
         # reader schema and re-attach as NULL literals below.
@@ -4613,10 +4640,11 @@ class Library:
             # the library's default output format is
             base = self.read(symbol, as_of=as_of, output_format="spark")
         if seg_files:
-            inc = (self.spark.read.option("mergeSchema", "true")
-                   .parquet(*seg_files)
-                   .drop("__stage_seq__", "__stage_pos__"))
-            sinfo = self._staged_index_info(seg_files) or {}
+            # the same staged records and schema-group union as finalize
+            recs = self._staged_records(seg_files)
+            inc = self._read_staged(recs).drop("__stage_seq__",
+                                               "__stage_pos__")
+            sinfo = self._staged_index_info(recs)
             # staged uint64 bit-pattern columns: marked like committed
             # reads, so the union keeps unsigned semantics and pandas
             # output restores dtype (committed side is marked by read())
@@ -5189,40 +5217,6 @@ class Library:
         aw.write_slices(tbl, out, n, schema.json())
         return True
 
-    def _read_staged_promoting(self, seg_files: list[str]) -> DataFrame:
-        """Dynamic-schema staged union with numeric PROMOTION (reference
-        compact under dynamic schema widens types like append does,
-        test_query_builder_sparse_dynamic_schema_type_change): group the
-        segments by physical schema, fold the groups through the same
-        promotion table as append's dynamic widening (_merge_schema /
-        promote_types), cast each group to the merged schema, and
-        unionByName with NULL backfill for added columns. Spark's
-        mergeSchema alone cannot do this — it rejects FLOAT vs DOUBLE."""
-        from pyspark.sql import types as T
-        groups: dict[str, list[str]] = {}
-        schemas: dict[str, T.StructType] = {}
-        for f in seg_files:
-            sch = self.spark.read.parquet(f).schema   # footer-only, lazy
-            key = sch.json()
-            groups.setdefault(key, []).append(f)
-            schemas[key] = sch
-        keys = list(groups)
-        merged_json = keys[0]
-        for k in keys[1:]:
-            merged_json = self._merge_schema(merged_json, schemas[k])
-        merged = T.StructType.fromJson(json.loads(merged_json))
-        out = None
-        for k in keys:
-            part = self.spark.read.schema(schemas[k]).parquet(*groups[k])
-            have = {f.name for f in schemas[k].fields}
-            part = part.select(*[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in have else
-                F.lit(None).cast(f.dataType).alias(f.name)
-                for f in merged.fields])
-            out = part if out is None else out.unionByName(part)
-        return out
-
     def _staged_segment_files(self, symbol: str) -> list[str]:
         stg = self._staging_dir(symbol)
         if not os.path.isdir(stg):
@@ -5235,8 +5229,68 @@ class Library:
                            if fn.endswith(".parquet"))
         return out
 
+    def _staged_records(self, seg_files: list[str]) -> list[StagedFile]:
+        """One ``StagedFile`` per staged file, in ``seg_files`` order: each
+        chunk's ``_asdb_staged_meta.json`` sidecar is read once and each
+        file's footer opened once. The read schema is the Spark footer key
+        (``org.apache.spark.sql.parquet.row.metadata``, which every chunk
+        writer here writes) with every field nullable, as Spark's
+        file-source read makes it; a file without the key takes Spark's
+        own inference."""
+        sides: dict[str, dict] = {}
+        out = []
+        for f in seg_files:
+            d = os.path.dirname(f)
+            if d not in sides:
+                try:
+                    with open(os.path.join(d, "_asdb_staged_meta.json")) as fh:
+                        sides[d] = json.load(fh)
+                except FileNotFoundError:
+                    sides[d] = {}
+            with pq.ParquetFile(f) as pf:
+                md = pf.metadata
+            raw = (md.metadata or {}).get(
+                b"org.apache.spark.sql.parquet.row.metadata")
+            sch = (T.StructType.fromJson(json.loads(raw)) if raw is not None
+                   else self.spark.read.parquet(f).schema)
+            sch = T.StructType([T.StructField(x.name, x.dataType, True,
+                                              x.metadata)
+                                for x in sch.fields])
+            out.append(StagedFile(f, d, sides[d], sch, md.num_rows, md))
+        return out
+
+    def _read_staged(self, recs: list[StagedFile]) -> DataFrame:
+        """The staged files of ``recs`` as one frame, grouped by schema the
+        way ``_scan_files`` groups schema epochs: the group schemas fold
+        through ``_merge_schema`` (dynamic schema's promotion table — a
+        float32 chunk and a float64 chunk read as float64), each group is
+        scanned under its own schema, cast to the merged one with absent
+        columns NULL, and the groups are unioned by name. The schemas come
+        from the records, so no Spark job infers or merges them."""
+        groups: dict[str, list[StagedFile]] = {}
+        for r in recs:
+            groups.setdefault(r.schema.json(), []).append(r)
+        keys = list(groups)
+        merged_json = keys[0]
+        for k in keys[1:]:
+            merged_json = self._merge_schema(merged_json, groups[k][0].schema)
+        merged = T.StructType.fromJson(json.loads(merged_json))
+        out = None
+        for k, rs in groups.items():
+            part = self.spark.read.schema(rs[0].schema).parquet(
+                *[r.path for r in rs])
+            if k != merged_json:
+                have = set(rs[0].schema.names)
+                part = part.select(*[
+                    F.col(f.name).cast(f.dataType).alias(f.name)
+                    if f.name in have else
+                    F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in merged.fields])
+            out = part if out is None else out.unionByName(part)
+        return out
+
     @staticmethod
-    def _staged_index_info(seg_files: list[str]) -> dict | None:
+    def _staged_index_info(recs: list[StagedFile]) -> dict:
         """Union of the chunk sidecars written by ``stage()`` (index column
         name + ns flag for a demoted datetime index; uint64 bit-pattern
         column names, unioned across chunks)."""
@@ -5245,21 +5299,18 @@ class Library:
         su: set = set()
         fakes: list[bool] = []
         tzs: dict = {}
-        for d in sorted({os.path.dirname(f) for f in seg_files}):
-            p = os.path.join(d, "_asdb_staged_meta.json")
-            if os.path.exists(p):
-                with open(p) as fh:
-                    data = json.load(fh)
-                u64 |= set(data.pop("uint64", []))
-                su |= set(data.pop("unsigned", []))
-                if "fake_name" in data:
-                    fakes.append(bool(data.pop("fake_name")))
-                for c, tz in (data.pop("tzs", None) or {}).items():
-                    # first chunk's zone wins on disagreement (values are
-                    # stored UTC either way; only the display zone varies)
-                    tzs.setdefault(c, tz)
-                data.pop("sorted", None)   # finalize-time check only
-                out.update(data)
+        for _, data in sorted({r.chunk: r.side for r in recs}.items()):
+            data = dict(data)
+            u64 |= set(data.pop("uint64", []))
+            su |= set(data.pop("unsigned", []))
+            if "fake_name" in data:
+                fakes.append(bool(data.pop("fake_name")))
+            for c, tz in (data.pop("tzs", None) or {}).items():
+                # first chunk's zone wins on disagreement (values are
+                # stored UTC either way; only the display zone varies)
+                tzs.setdefault(c, tz)
+            data.pop("sorted", None)   # finalize-time check only
+            out.update(data)
         if u64:
             out["uint64"] = sorted(u64)
         if su:
@@ -5269,89 +5320,33 @@ class Library:
             out["fake_name"] = all(fakes)
         if tzs:
             out["tzs"] = tzs
-        return out or None
+        return out
 
     @staticmethod
-    def _validate_staged_static_schemas(seg_files: list[str]) -> None:
-        """Static-schema finalize: every staged segment must carry the SAME
-        column set and types (reference SchemaException E_DESCRIPTOR_
-        MISMATCH for incompatible staged segments; dynamic_schema lifts
-        this). Footer-only check — no data read."""
-        import pyarrow.parquet as pq
-        ref_schema = None
-        ref_file = None
-        for f in seg_files:
-            sch = {fld.name: str(fld.type)
-                   for fld in pq.ParquetFile(f).schema_arrow
-                   if fld.name not in ("__stage_seq__", "__stage_pos__")}
-            if ref_schema is None:
-                ref_schema, ref_file = sch, f
-            elif sch != ref_schema:
-                drift = sorted(set(sch.items()) ^ set(ref_schema.items()))
+    def _check_staged(recs: list[StagedFile], static: bool,
+                      u64_cols: set) -> None:
+        """Reject staged files that cannot finalize together. Static
+        schema: every file carries the same column names and types (the
+        order helpers aside; reference SchemaException
+        E_DESCRIPTOR_MISMATCH, which dynamic_schema lifts). uint64: every
+        chunk whose files hold a uint64-claimed column claims it too, or a
+        signed-long chunk would alias bit patterns into the column (same
+        rule as append's signed<->uint64 flip rejection)."""
+        ref = None
+        for r in recs if static else ():
+            sch = {f.name: f.dataType.simpleString() for f in r.schema.fields
+                   if f.name not in ("__stage_seq__", "__stage_pos__")}
+            if ref is None:
+                ref = sch
+            elif sch != ref:
+                drift = sorted(set(sch.items()) ^ set(ref.items()))
                 raise SchemaException(
                     "E_DESCRIPTOR_MISMATCH: staged segments have "
                     f"incompatible schemas (enable dynamic_schema): "
                     f"{drift[:6]}")
-
-    @staticmethod
-    def _staged_footer_schema(seg_files: list[str]):
-        """Union of the staged segments' Spark footer schemas
-        (``org.apache.spark.sql.parquet.row.metadata``), merged driver-side
-        in file order: first-seen field order, later files append fields
-        they alone carry (e.g. stream-staged chunks lack the
-        ``__stage_seq__``/``__stage_pos__`` helpers). Every field is
-        nullable — exactly what Spark's file-source read schema forces —
-        so a file missing a column NULL-fills like the mergeSchema union
-        did. Returns None (caller falls back to the mergeSchema read)
-        when any file lacks the key or same-name fields disagree in type:
-        every chunk writer here (stage()'s Spark and pyarrow paths, the
-        structured-streaming sink) writes the key, so None is the
-        foreign-file safety valve, not an expected path."""
-        import pyarrow.parquet as pq
-        key = b"org.apache.spark.sql.parquet.row.metadata"
-        fields: dict[str, T.StructField] = {}
-        order: list[str] = []
-        for f in seg_files:
-            try:
-                md = pq.ParquetFile(f).metadata.metadata or {}
-                raw = md.get(key)
-                if raw is None:
-                    return None
-                sch = T.StructType.fromJson(json.loads(raw.decode("utf-8")))
-            except Exception:
-                return None
-            for fld in sch.fields:
-                prev = fields.get(fld.name)
-                if prev is None:
-                    fields[fld.name] = T.StructField(fld.name, fld.dataType,
-                                                     True)
-                    order.append(fld.name)
-                elif prev.dataType != fld.dataType:
-                    return None
-        return T.StructType([fields[n] for n in order])
-
-    @staticmethod
-    def _staged_uint64_check(seg_files: list[str], u64_cols: set) -> None:
-        """Every chunk whose segments physically contain a uint64-claimed
-        column must itself claim it — otherwise a signed-long chunk would
-        silently alias bit patterns into the finalized column (same rule
-        as append's signed<->uint64 flip rejection)."""
-        if not u64_cols:
-            return
-        import pyarrow.parquet as pq
-        by_dir: dict[str, list[str]] = {}
-        for f in seg_files:
-            by_dir.setdefault(os.path.dirname(f), []).append(f)
-        for d, fs in by_dir.items():
-            p = os.path.join(d, "_asdb_staged_meta.json")
-            claimed: set = set()
-            if os.path.exists(p):
-                with open(p) as fh:
-                    claimed = set(json.load(fh).get("uint64", []))
-            names = set()
-            for f in fs:
-                names |= set(pq.ParquetFile(f).schema_arrow.names)
-            bad = (u64_cols & names) - claimed
+        for r in recs:
+            bad = ((u64_cols & set(r.schema.names))
+                   - set(r.side.get("uint64", [])))
             if bad:
                 raise SchemaException(
                     f"staged chunks mix uint64 and signed int64 in columns "
@@ -5378,7 +5373,17 @@ class Library:
         (library.py:1747) — either spelling works. ``mode`` accepts the
         StagedDataFinalizeMethod enum or a case-insensitive string; any
         other value raises (reference test_arctic.py:366
-        test_staged_data_bad_mode)."""
+        test_staged_data_bad_mode).
+
+        How the staged chunks are read: each chunk's sidecar and each
+        staged file's footer are read once on the driver
+        (``_staged_records``), and the schema, uint64, sortedness and
+        overlap checks and the row count all come from those records. The
+        files are then scanned grouped by schema, each group cast to the
+        merged schema (numeric types promoted under dynamic schema, absent
+        columns NULL) and unioned (``_read_staged``) with no Spark job to
+        infer or merge schemas; the merge sort and the write that follow
+        run on Spark."""
         mode = _normalize_finalize_mode(mode)
         if staged_data is None:
             staged_data = stage_results
@@ -5406,32 +5411,18 @@ class Library:
                 f"E_NO_STAGED_SEGMENTS Finalizing staged data is not "
                 f"allowed with empty staging area (symbol {symbol!r})")
         try:
-            if not self.dynamic_schema:
-                # static schema: chunks with drifted column sets/types are
-                # rejected like the reference's E_DESCRIPTOR_MISMATCH
-                # (hypothesis test_sort_merge.py assert_staged_columns_are_
-                # incompatible) — BEFORE the read, so a type drift raises
-                # SchemaException instead of Spark's CANNOT_MERGE_SCHEMAS
-                self._validate_staged_static_schemas(seg_files)
-                merged = self._staged_footer_schema(seg_files)
-                if merged is not None:
-                    # the Spark footer keys give the exact union schema
-                    # driver-side — skips mergeSchema's distributed
-                    # footer-merge job (one whole Spark job of pure
-                    # metadata per finalize, guide §5)
-                    df = self.spark.read.schema(merged).parquet(*seg_files)
-                else:
-                    df = self.spark.read.option("mergeSchema",
-                                                "true").parquet(*seg_files)
-            else:
-                # dynamic schema: Spark's mergeSchema only unions ADDED
-                # columns, it cannot promote numeric types (a float32
-                # chunk + float64 chunk fails) — widen through the
-                # engine's promotion table instead
-                df = self._read_staged_promoting(seg_files)
-            sinfo = self._staged_index_info(seg_files) or {}
+            # one record per staged file (sidecar + footer, each read
+            # once); every check below and the read itself use them.
+            # Static schema rejects drifted column sets/types like the
+            # reference's E_DESCRIPTOR_MISMATCH (hypothesis
+            # test_sort_merge.py assert_staged_columns_are_incompatible)
+            # BEFORE the read; dynamic schema widens through the engine's
+            # promotion table in _read_staged
+            recs = self._staged_records(seg_files)
+            sinfo = self._staged_index_info(recs)
             u64_cols = set(sinfo.get("uint64") or [])
-            self._staged_uint64_check(seg_files, u64_cols)
+            self._check_staged(recs, not self.dynamic_schema, u64_cols)
+            df = self._read_staged(recs)
             explicit_idx = index_column or sinfo.get("index_column")
             if sinfo.get("no_index") and not explicit_idx:
                 # pandas rowcount/named-index chunks: never sniff a
@@ -5452,16 +5443,11 @@ class Library:
                 # compact E_UNSORTED_DATA,
                 # test_finalize_staged_data.py:253-281) — the chunk's
                 # sortedness was recorded at stage time
-                for d in sorted({os.path.dirname(f) for f in seg_files}):
-                    p = os.path.join(d, "_asdb_staged_meta.json")
-                    if os.path.exists(p):
-                        with open(p) as fh:
-                            if json.load(fh).get("sorted") in (
-                                    "DESCENDING", "UNSORTED"):
-                                raise UnsortedDataException(
-                                    "E_UNSORTED_DATA a staged segment has "
-                                    "an unsorted datetime index; use "
-                                    "sort_and_finalize_staged_data")
+                if any(r.side.get("sorted") in ("DESCENDING", "UNSORTED")
+                       for r in recs):
+                    raise UnsortedDataException(
+                        "E_UNSORTED_DATA a staged segment has an unsorted "
+                        "datetime index; use sort_and_finalize_staged_data")
             if sort is not True and validate_index and idx is not None:
                 # plain finalize requires the staged segments to be
                 # ordered and non-overlapping among themselves (reference
@@ -5475,11 +5461,11 @@ class Library:
                 # Segment boundaries may touch (equal timestamps), like
                 # append.
                 by_chunk: dict[str, list] = {}
-                for f in seg_files:
-                    by_chunk.setdefault(os.path.dirname(f), []).append(f)
+                for r in recs:
+                    by_chunk.setdefault(r.chunk, []).append(r)
                 spans = []
-                for files in by_chunk.values():
-                    stats = [_footer_stats(f, idx)[1:] for f in files]
+                for rs in by_chunk.values():
+                    stats = [_index_span(r.meta, idx) for r in rs]
                     mins = [s[0] for s in stats if s[0] is not None]
                     maxs = [s[1] for s in stats if s[1] is not None]
                     if mins and maxs:
@@ -5503,7 +5489,7 @@ class Library:
                     index_ns = True
             if self.dynamic_schema:
                 # dynamic schema: cells of a column a chunk did not store
-                # arrive as NULLs from the mergeSchema union; fill int/bool
+                # arrive as NULLs from the staged union; fill int/bool
                 # with the type default (0/False) BEFORE materializing, so
                 # finalized reads match the reference's non-nullable layout
                 # (merge_and_sort_segment_list 0-fills int columns). Int
@@ -5528,7 +5514,7 @@ class Library:
             # the helpers are dropped before the version materializes
             # segment_row_size contract for the finalized version too:
             # total staged rows from footers only (no data IO)
-            staged_rows = sum(_footer_stats(f, None)[0] for f in seg_files)
+            staged_rows = sum(r.rows for r in recs)
             helpers = [c for c in ("__stage_seq__", "__stage_pos__")
                        if c in df.columns]
             sort = sort is not False   # None/True both merge index-ordered
@@ -6930,9 +6916,9 @@ class Library:
         file per slice; ``end`` bounds the rows when a file straddles the
         group boundary (inline append-compaction cuts the appended frame
         mid-file). Rows are rewritten on the driver with pyarrow
-        (``_rewrite_arrow``), or with Spark when a file is non-local, on
-        another schema epoch or of a type arrowwrite does not write, or the
-        group passes the driver read cap. Spark casts heterogeneous epochs
+        (``_rewrite_arrow``), or with Spark when a file is on another
+        schema epoch or of a type arrowwrite does not write, or the group
+        passes the driver read cap. Spark casts heterogeneous epochs
         to the manifest schema (_scan_files; the reference equally
         re-encodes processed segments to the promoted descriptor,
         test_compact_data.py three_slices case)."""
@@ -6980,8 +6966,8 @@ class Library:
         (``clause_compact_data.cpp``): slices already within ±33% of the
         target are untouched; fragmented/oversized runs are merged/split to
         exact ReslicingInfo sizes, on the driver with pyarrow or with Spark
-        under ``_rewrite_group``'s fallbacks (a non-local file, another
-        schema epoch, a type arrowwrite does not write, the driver read
+        under ``_rewrite_group``'s fallbacks (a file on another schema
+        epoch, a type arrowwrite does not write, the driver read
         cap). An already-compact symbol is returned unchanged (no new
         version)."""
         self._validate_rows_per_segment(target_rows_per_file)
@@ -7162,27 +7148,25 @@ class Library:
                                  exception_string=str(e), error_category=cat,
                                  version_request_type=vt,
                                  version_request_data=vd)
-        if self._batch_reads_on_driver(symbols, kw):
-            # every read is a driver-side pyarrow scan (no Spark job to
-            # overlap): pool threads would only contend for the GIL and
-            # open a py4j connection each, so read the symbols in turn
+        qbs = [kw.get("query_builder")] + [
+            s.query_builder for s in symbols if isinstance(s, ReadRequest)]
+        if not kw.get("incomplete") and self._batch_reads_on_driver(
+                kw.get("output_format"), qbs):
             return [safe(s) for s in symbols]
         return self._pmap(safe, symbols)
 
-    def _batch_reads_on_driver(self, symbols: list, kw: dict) -> bool:
-        """True when each ``read_batch`` item takes ``read``'s driver scan:
-        a pandas/arrow/polars output, no query builder or one that
-        ``arrowquery.eligible`` accepts (clause kinds and aggregator names
-        only), not an incomplete read, and a local data root (the scan's
-        and the executor's fallbacks to Spark remain possible per symbol
-        and then run serially)."""
-        qbs = [kw.get("query_builder")] + [
-            s.query_builder for s in symbols if isinstance(s, ReadRequest)]
-        return (self._resolve_output_format(kw.get("output_format"))
+    def _batch_reads_on_driver(self, output_format, qbs: list) -> bool:
+        """True when each read of a batch takes ``read``'s driver scan: a
+        pandas/arrow/polars ``output_format`` and, in ``qbs``, no query
+        builder or ones that ``arrowquery.eligible`` accepts (clause kinds
+        and aggregator names only). Such a batch reads its items in turn
+        on the calling thread: with no Spark job to overlap, pool threads
+        would only contend for the GIL and open a py4j connection each
+        (the scan's and the executor's fallbacks to Spark remain possible
+        per item and then run serially)."""
+        return (self._resolve_output_format(output_format)
                 in ("pandas", "arrow", "polars")
-                and all(q is None or aq.eligible(q) for q in qbs)
-                and not kw.get("incomplete")
-                and ar.local_path(self.data_root) is not None)
+                and all(q is None or aq.eligible(q) for q in qbs))
 
     @staticmethod
     def _payload(p) -> tuple:
@@ -7345,10 +7329,11 @@ class Library:
                    row_ranges: list | None = None,
                    columns: list | None = None,
                    query_builder=None, **kwargs) -> dict:
-        """v1 ``_store.py`` batch_read: parallel reads keyed by SYMBOL
-        (a dict of VersionedItem with pandas ``data``, unlike the v2
-        ``read_batch`` list). Duplicate symbols are rejected (dict
-        result)."""
+        """v1 ``_store.py`` batch_read: reads keyed by SYMBOL (a dict of
+        VersionedItem with pandas ``data``, unlike the v2 ``read_batch``
+        list). Duplicate symbols are rejected (dict result). Like
+        ``read_batch``, the reads run in turn on the calling thread when
+        each takes the driver scan, and over the thread pool otherwise."""
         if len(set(symbols)) != len(symbols):
             raise ArcticException("batch_read: duplicate symbols")
         n = len(symbols)
@@ -7378,8 +7363,11 @@ class Library:
             return s, VersionedItem(symbol=s, library=self.name, data=data,
                                     version=m.version, metadata=m.metadata,
                                     timestamp=m.created_ns)
-        return dict(self._pmap(one, list(zip(symbols, as_ofs, date_ranges,
-                                             row_ranges, columns, qbs))))
+        items = list(zip(symbols, as_ofs, date_ranges, row_ranges, columns,
+                         qbs))
+        if self._batch_reads_on_driver("pandas", qbs):
+            return dict(one(t) for t in items)
+        return dict(self._pmap(one, items))
 
     @_kwargs_contract("batch_read_metadata", _VALID_READ_KWARGS)
     def batch_read_metadata(self, symbols: list, as_ofs: list | None = None,

@@ -686,11 +686,6 @@ def jaccard_near_dup_pairs(df: DataFrame, text_col: str = "text",
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
-# legacy row-count alias kept for callers that sized against it; the actual
-# gate in embedding_near_dup_pairs is byte-based (_BCAST_BYTES_MAX)
-_BCAST_VECS_MAX = 2_000_000
-
-
 def _collect_matrix(base: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """(ids_sorted, row-normalized matrix sorted by id) via ``toArrow()``
     — one Arrow batch transfer into flat buffers instead of a Row-object
@@ -1320,9 +1315,15 @@ def near_dup_clusters(pairs: DataFrame, id_a: str = "id_a",
           edges=n_edges, budget=driver_edges_max)
     edges = p2.unionByName(p2.select(F.col("b").alias("a"),
                                      F.col("a").alias("b")))
+    # every round's labels are localCheckpoint'ed eagerly: the next round
+    # joins them twice (directly and through prop), so without the cut
+    # the plan grows ~2.3x per round. At most two rounds' labels (current
+    # + next) hold blocks at once; the superseded one is dropped by hand,
+    # the returned one when Spark's ContextCleaner collects its RDD.
     labels = (edges.groupBy("a").agg(F.min("b").alias("nbr"))
               .select(F.col("a").alias("id"),
-                      F.least("a", "nbr").alias("cluster"))).persist()
+                      F.least("a", "nbr").alias("cluster"))
+              ).localCheckpoint(eager=True)
     changed = 1
     for _ in range(max_iter):
         # propagate: my label = min(my label, labels of my neighbors)
@@ -1331,22 +1332,27 @@ def near_dup_clusters(pairs: DataFrame, id_a: str = "id_a",
                 .groupBy("a").agg(F.min("nbr_cluster").alias("nbr_min")))
         nxt = (labels.join(prop.withColumnRenamed("a", "id"), "id", "left")
                .select("id", F.least("cluster", F.coalesce("nbr_min", "cluster"))
-                             .alias("cluster"))).persist()
-        # full (un-limited) count: decides convergence AND fully populates
-        # nxt's cache before the previous round's labels are released
+                             .alias("cluster"))).localCheckpoint(eager=True)
         changed = (labels.withColumnRenamed("cluster", "old")
                    .join(nxt, "id")
                    .filter(F.col("old") != F.col("cluster")).count())
-        labels.unpersist()          # superseded — only two label tables
-        labels = nxt                # (current + next) are ever cached
+        _drop_checkpoint(labels)
+        labels = nxt
         if changed == 0:
             break
-    _PERSISTED.append(labels)       # released by the caller's unpersist_all()
     if changed != 0:
+        _drop_checkpoint(labels)
         raise RuntimeError(
             f"near_dup_clusters did not converge in {max_iter} rounds "
             f"(a component has diameter > {max_iter}); raise max_iter")
     return labels
+
+
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` frame: its plan is a
+    LogicalRDD over the checkpointed RDD, which ``DataFrame.unpersist``
+    does not reach."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def dedup_by_pairs(df: DataFrame, pairs: DataFrame,

@@ -71,14 +71,16 @@ class LocalFileSystem:
     def write_json_atomic(self, path: str, obj) -> None:
         tmp = f"{path}.tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            json.dump(obj, f)
+            # json.dumps takes the C encoder; json.dump always iterates in
+            # pure Python, several times slower on a manifest
+            f.write(json.dumps(obj))
         os.replace(tmp, path)
 
     def write_json_if_absent(self, path: str, obj) -> bool:
         """Create-if-absent CAS; returns False if another writer won."""
         tmp = f"{path}.tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            json.dump(obj, f)
+            f.write(json.dumps(obj))
         try:
             os.link(tmp, path)
             return True

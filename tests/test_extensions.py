@@ -390,6 +390,29 @@ def test_near_dup_clusters_long_chain_converges_or_raises(spark):
     xdedup.unpersist_all()
 
 
+
+def test_near_dup_clusters_plan_stays_flat_across_rounds(spark, monkeypatch):
+    """The distributed fallback cuts lineage every round: the plan it
+    checkpoints at round 10 is within 2x of round 2's (uncut, each round
+    joins the previous labels twice and the plan grew ~2.3x per round)."""
+    chain = spark.createDataFrame([(i, i + 1) for i in range(12)],
+                                  "id_a long, id_b long")
+    frame_cls = type(chain)
+    sizes = []
+    real = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        sizes.append(len(self._jdf.queryExecution().analyzed().toString()))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    labels = xdedup.near_dup_clusters(chain, driver_edges_max=0).toPandas()
+    assert set(labels["cluster"]) == {0}
+    # sizes[0] is the initial labels, sizes[k] round k's
+    assert len(sizes) > 10
+    assert sizes[10] <= 2 * sizes[2], sizes
+    xdedup.unpersist_all()
+
 class TestSampling:
     """Deterministic content-addressed sampling (extensions/sampling.py)."""
 

@@ -3,6 +3,8 @@ test_arctic_library_management.py: creation/deletion semantics, the
 get_library contract, options()/enterprise_options(), and
 modify_library_option persistence."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -108,3 +110,17 @@ def test_separation_between_libraries(spark, tmp_path):
     ac["lib1"].delete("sym")
     assert not ac["lib1"].has_symbol("sym")
     assert ac["lib2"].has_symbol("sym")
+
+
+def test_uri_data_root_is_refused(spark, tmp_path, monkeypatch):
+    """Data files live on a local or mounted path: a URI data_root raises
+    before anything is created (it used to make a local directory named
+    after the scheme and fail at the first write)."""
+    from arcticdb_spark.exceptions import ArcticException
+    meta = tmp_path / "meta"
+    ac = Arctic(str(meta), spark, data_root="s3a://b/p")
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ArcticException, match="data_root"):
+        ac.create_library("lib")
+    assert os.listdir(meta) == []
+    assert sorted(os.listdir(tmp_path)) == ["meta"]

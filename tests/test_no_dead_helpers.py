@@ -7,6 +7,9 @@
   somewhere in the package, the entry module, the bench, ``tools/``,
   ``perfbench/`` or ``tests/``, outside its own definition. Strings,
   comments and imports do not count.
+* Every module-level UPPER_CASE constant anywhere in the package is read
+  somewhere in that same scope: a load of its name as an ``ast.Name`` or
+  ``ast.Attribute`` (the assignment itself does not count).
 * Nothing in the package calls ``threading.local()``: per-thread hidden
   state outlives the call that filled it (a pool thread pins whatever it
   last stored), so state is passed explicitly instead.
@@ -15,6 +18,7 @@
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -63,8 +67,7 @@ def test_extension_and_plan_helpers_have_callers():
                 defined.append((path, top.name))
     assert defined
 
-    scope = _py_files(PKG, ROOT / "__spark_entry__.py", ROOT / "bench.py",
-                      ROOT / "tools", ROOT / "perfbench", ROOT / "tests")
+    scope = _scope()
     # name -> set of (file, enclosing def) places it is referenced from
     refs: dict[str, set] = {}
     for path in scope:
@@ -75,6 +78,36 @@ def test_extension_and_plan_helpers_have_callers():
             for path, name in defined
             if not (refs.get(name, set()) - {(path, name)})]
     assert not dead, f"functions with no caller: {dead}"
+
+
+def _scope() -> list[Path]:
+    return _py_files(PKG, ROOT / "__spark_entry__.py", ROOT / "bench.py",
+                     ROOT / "tools", ROOT / "perfbench", ROOT / "tests")
+
+
+def test_package_constants_are_read():
+    const = re.compile(r"^_?[A-Z][A-Z0-9_]*$")
+    defined = []   # (module path, constant name)
+    for path in _py_files(PKG):
+        for top in _parse(path).body:
+            targets = (top.targets if isinstance(top, ast.Assign) else
+                       [top.target] if isinstance(top, ast.AnnAssign) else [])
+            defined.extend((path, t.id) for t in targets
+                           if isinstance(t, ast.Name) and const.match(t.id))
+    assert defined
+
+    reads = set()
+    for path in _scope():
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                reads.add(node.id)
+            elif (isinstance(node, ast.Attribute)
+                  and isinstance(node.ctx, ast.Load)):
+                reads.add(node.attr)
+
+    unread = [f"{path.relative_to(ROOT)}::{name}"
+              for path, name in defined if name not in reads]
+    assert not unread, f"constants nothing reads: {unread}"
 
 
 def test_package_uses_no_thread_locals():

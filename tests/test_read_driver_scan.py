@@ -200,7 +200,8 @@ def test_plain_reads_run_no_spark_job(spark, lib):
 
 def test_read_batch_reads_driver_scans_in_turn(lib, monkeypatch):
     """A batch of driver-scan reads runs on the calling thread, item for
-    item equal to single reads, and so does a batch of filter QueryBuilder
+    item equal to single reads, through ``read_batch`` and the v1
+    ``batch_read`` alike, and so does a batch of filter QueryBuilder
     reads; a batch the driver declines (a head clause) still fans out over
     the pool."""
     syms = ["dt", "tz", "uints", "strs"]
@@ -217,6 +218,11 @@ def test_read_batch_reads_driver_scans_in_turn(lib, monkeypatch):
     assert pooled == []
     for g, w in zip(got, want):
         _assert_same(g, w)
+    # the v1 batch_read (pandas data keyed by symbol) follows the same rule
+    got = lib.batch_read(syms)
+    assert pooled == []
+    for s, w in zip(syms, want):
+        _assert_same(got[s].data, w)
     q = QueryBuilder()
     q = q[q["v"] > 0]
     want = [lib.read(s, query_builder=q, output_format="pandas")
