@@ -4666,6 +4666,7 @@ class Library:
                 df = base.unionByName(inc, allowMissingColumns=True)
             else:
                 df = inc
+                norm_meta = self._staged_norm_meta(idx, sinfo) or None
         else:
             df = base
         if date_range is not None:
@@ -5323,6 +5324,21 @@ class Library:
         return out
 
     @staticmethod
+    def _staged_norm_meta(idx: str | None, sinfo: dict) -> dict:
+        """The pandas-output half of a staged-only symbol's norm_meta, from
+        the chunk sidecars (``_staged_index_info``): display time zones,
+        and a pandas-staged datetime index restored as a DatetimeIndex
+        like a direct write would. Shared by finalize and
+        ``read(incomplete=True)`` so both present the chunks alike."""
+        out: dict = {}
+        if sinfo.get("tzs"):
+            out["tzs"] = sinfo["tzs"]
+        if idx and sinfo.get("index_type") == "datetime":
+            out.update(index_type="datetime", physical=idx,
+                       fake_name=bool(sinfo.get("fake_name")))
+        return out
+
+    @staticmethod
     def _check_staged(recs: list[StagedFile], static: bool,
                       u64_cols: set) -> None:
         """Reject staged files that cannot finalize together. Static
@@ -5596,14 +5612,7 @@ class Library:
                     nm_out["uint64"] = sorted(u64_cols)
                 if sinfo.get("unsigned"):
                     nm_out["unsigned"] = list(sinfo["unsigned"])
-                if sinfo.get("tzs"):
-                    nm_out["tzs"] = sinfo["tzs"]
-                if idx and sinfo.get("index_type") == "datetime":
-                    # pandas-staged chunks: restore the DatetimeIndex on
-                    # pandas output like a direct write would
-                    nm_out["index_type"] = "datetime"
-                    nm_out["physical"] = idx
-                    nm_out["fake_name"] = bool(sinfo.get("fake_name"))
+                nm_out.update(self._staged_norm_meta(idx, sinfo))
                 m = VersionManifest(symbol, self._next_version(symbol),
                                     time.time_ns(), idx, df.schema.json(),
                                     files, metadata,

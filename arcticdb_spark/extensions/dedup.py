@@ -2,7 +2,11 @@
 
 Every stage is built from JVM-side column expressions (md5 / array ops /
 joins) — no Python in the hot path — and every shuffle is on a key designed
-to stay small:
+to stay small. The large expression trees (token/shingle arrays, md5
+signatures, band keys, in-group pair generation) are written as SQL text
+and parsed in one call each: built from ``pyspark.sql.functions`` node by
+node they cost one to several py4j round trips per node (1,636 for the
+MinHash band table alone), more than the query's own work at small scale.
 
 * **exact_dedup** — hash-groupBy on a normalized fingerprint. One shuffle on
   a 32-char key; at 100 TB combine map-side, or pre-bucket by fingerprint.
@@ -16,8 +20,10 @@ to stay small:
   valid uniform min-hash.
 * **SimHash** — 64-bit (here 32-bit for portable integer math) weighted
   bit-vote over token hashes; near-dups = same value in any rotated band.
-* **n-gram Jaccard** — exact verify step on LSH candidates (array_intersect /
-  array_union on token-set arrays).
+* **n-gram Jaccard** — exact verify step on LSH candidates: one lazy plan
+  (candidates -> shingle-hash sets of the candidate ids -> two equi-joins
+  -> size-bound filter -> array_intersect), whose join strategy AQE picks
+  at runtime from the measured sizes; no driver-side gate job.
 * **embedding near-dup** — cosine over the embedding column; see
   similarity.py for the ANN path.
 """
@@ -29,7 +35,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from arcticdb_spark.extensions.text import fingerprint, tokens
+from arcticdb_spark.extensions.text import (fingerprint, let_sql,
+                                            sql_apply, sql_ident, sql_str,
+                                            tokens_sql)
 from arcticdb_spark.extensions.text import quality_score as _quality_score
 
 # Persisted intermediates of the dedup and similarity operators, registered
@@ -93,7 +101,7 @@ def keep_best_per_dup_group(df: DataFrame, text_col: str = "text",
     the shuffle and each group moves at most one row per map partition
     (a per-group sort via a row_number window would shuffle every duplicate
     row). At 100 TB this is the same cost class as exact_dedup itself."""
-    q = quality if quality is not None else _quality_score(F.col(text_col))
+    q = quality if quality is not None else _quality_score(sql_ident(text_col))
     n_chars = F.length(F.col(text_col)).cast("long")
     # maximize (quality, n_chars, -id): struct comparison is field-by-field
     rank = F.struct(q.alias("q"), n_chars.alias("nc"),
@@ -268,32 +276,33 @@ def segment_dedup(df: DataFrame, text_col: str = "text",
     if (delimiter is None) == (window is None):
         raise ValueError("segment_dedup: exactly one of delimiter= or "
                          "window= is required")
+    text = sql_ident(text_col)
     if delimiter is not None:
-        segs = F.filter(F.split(F.trim(F.col(text_col)), delimiter),
-                        lambda s: F.length(s) > 0)
+        segs = (f"filter(split(trim({text}), {sql_str(delimiter)}), "
+                f"__s -> length(__s) > 0)")
     else:
-        toks = tokens(F.col(text_col))
-        n_seg = F.ceil(F.size(toks) / F.lit(window)).cast("int")
+        w = int(window)
         # sequence(0, -1) would yield [0, -1] (descending step), so guard
-        # the empty-document case explicitly
-        segs = F.when(F.size(toks) == 0, F.array().cast("array<string>")) \
-                .otherwise(F.transform(
-                    F.sequence(F.lit(0), n_seg - 1),
-                    lambda i: F.array_join(
-                        F.slice(toks, i * window + 1, window), " ")))
-    base = df.select(F.col(id_col), segs.alias("__segs__"))
+        # the empty-document case explicitly; the token array is bound
+        # once, not re-split per segment
+        segs = let_sql("__k", tokens_sql(text), (
+            f"CASE WHEN size(__k) = 0 THEN CAST(array() AS ARRAY<STRING>) "
+            f"ELSE transform(sequence(0, CAST(ceil(size(__k) / {w}) AS INT) "
+            f"- 1), __i -> array_join(slice(__k, __i * {w} + 1, {w}), ' ')) "
+            f"END"))
+    ident = sql_ident(id_col)
     # lazy persist: the gate count below fills the cache while computing
     # the dup table in the SAME job (an eager materialize here was a whole
     # extra pass over the exploded segments)
     exploded = _persist(
-        base.select(id_col, F.posexplode_outer("__segs__")
-                            .alias("pos", "seg"))
-            .withColumn("__fp__", F.md5(F.col("seg"))))
+        df.selectExpr(ident, segs + " AS __segs__")
+          .selectExpr(ident, "posexplode_outer(__segs__) AS (pos, seg)")
+          .selectExpr("*", "md5(seg) AS __fp__"))
     dup = _persist(
-        exploded.filter(F.col("seg").isNotNull())
+        exploded.where("seg IS NOT NULL")
                 .groupBy("__fp__")
-                .agg(F.count_distinct(F.col(id_col)).alias("__nd__"))
-                .filter(F.col("__nd__") >= min_docs)
+                .agg(F.expr(f"count(DISTINCT {ident}) AS __nd__"))
+                .where(f"__nd__ >= {int(min_docs)}")
                 .select("__fp__"))
     n_dup = dup.count()
     broadcast = n_dup <= dup_broadcast_rows_max
@@ -301,45 +310,40 @@ def segment_dedup(df: DataFrame, text_col: str = "text",
           n_dup_segments=n_dup, budget_rows=dup_broadcast_rows_max,
           min_docs=min_docs)
     rhs = F.broadcast(dup) if broadcast else dup
-    marked = (exploded.join(rhs.withColumn("__dup__", F.lit(True)),
+    marked = (exploded.join(rhs.selectExpr("__fp__", "true AS __dup__"),
                             "__fp__", "left")
                       .withColumn("__dup__",
-                                  F.coalesce(F.col("__dup__"),
-                                             F.lit(False))))
-    keep_struct = F.when(
-        F.col("seg").isNotNull() & ~F.col("__dup__"),
-        F.struct(F.col("pos"), F.col("seg")))
-    out = (marked.groupBy(id_col)
-                 .agg(F.count(F.col("seg")).alias("n_segments"),
-                      F.count(F.when(F.col("__dup__"), 1))
-                       .alias("n_removed"),
-                      F.sort_array(F.collect_list(keep_struct))
-                       .alias("__kept__"))
-                 .select(id_col, "n_segments", "n_removed",
-                         F.array_join(F.transform("__kept__",
-                                                  lambda s: s["seg"]), " ")
-                          .alias(text_col)))
-    return out
+                                  F.expr("coalesce(__dup__, false)")))
+    return (marked.groupBy(id_col)
+                  .agg(F.expr("count(seg) AS n_segments"),
+                       F.expr("count(CASE WHEN __dup__ THEN 1 END) "
+                              "AS n_removed"),
+                       F.expr("sort_array(collect_list(CASE WHEN seg IS NOT "
+                              "NULL AND NOT __dup__ THEN struct(pos, seg) "
+                              "END)) AS __kept__"))
+                  .select(id_col, "n_segments", "n_removed",
+                          F.expr("array_join(transform(__kept__, __s -> "
+                                 "__s.seg), ' ')").alias(text_col)))
 
 
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
-    """k-token shingles from an ALREADY-MATERIALIZED token-array column;
-    documents shorter than k tokens get a single shingle of all tokens.
-    Like :func:`ngrams_from_tokens`, the positional transform references the
-    token array inside its lambda, so a raw tokenize expression here would
-    be re-evaluated O(tokens) times per document."""
-    n = F.size(toks)
-    full = F.array_join(toks, " ")
-    sh = F.transform(F.sequence(F.lit(1), n - (k - 1)),
-                     lambda i: F.array_join(F.slice(toks, i, k), " "))
-    return F.when(n >= k, sh).otherwise(F.array(full))
+def shingles_sql(toks: str, k: int = 3) -> str:
+    """SQL text of the k-token shingles of an ALREADY-MATERIALIZED
+    token-array column ``toks``; documents shorter than k tokens get a
+    single shingle of all tokens. Like :func:`ngrams_from_tokens`, the
+    positional transform references the token array inside its lambda, so
+    a raw tokenize expression here would be re-evaluated O(tokens) times
+    per document."""
+    k = int(k)
+    return (f"CASE WHEN size({toks}) >= {k} THEN transform(sequence(1, "
+            f"size({toks}) - {k - 1}), __i -> array_join(slice({toks}, __i, "
+            f"{k}), ' ')) ELSE array(array_join({toks}, ' ')) END")
 
 
-def _scan_partitions_estimate(df: DataFrame) -> int | None:
+def _scan_partitions_estimate(df: DataFrame, par: int) -> int | None:
     """Exact scan-partition count for the few-local-files case, from file
     sizes + Spark's split-packing math (FilePartition.getFilePartitions):
     ``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
@@ -378,7 +382,7 @@ def _scan_partitions_estimate(df: DataFrame) -> int | None:
             return None
         sizes.append(os.path.getsize(p))
     total = sum(sizes) + len(sizes) * opencost
-    par = max(1, df.sparkSession.sparkContext.defaultParallelism)
+    par = max(1, par)
     max_split = min(mpb, max(opencost, total // par))
     chunks = []
     for size in sizes:
@@ -405,7 +409,7 @@ def _spread(df: DataFrame) -> DataFrame:
     """Single-file parquet scans arrive as 1 partition — spread the heavy
     hash computation across cores before the narrow map."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    est = _scan_partitions_estimate(df)
+    est = _scan_partitions_estimate(df, target)
     nparts = est if est is not None else df.rdd.getNumPartitions()
     if nparts < max(2, target // 2):
         return df.repartition(target)
@@ -431,50 +435,44 @@ def _minhash_band_table_canonical(df: DataFrame, text_col: str,
     key = ``"b{b}:" || md5(concat_ws("|", positions of band b))``."""
     rows = num_hashes // bands
     n_seeds = -(-num_hashes // 4)
+    text = sql_ident(text_col)
     # ONE array traversal computes all digests (n_seeds md5 per shingle,
     # concatenated to one hex string); separate per-position lambdas would
-    # re-run md5 per signature position (no CSE across HOF lambdas).
-    digests = F.transform(
-        shingles_from_tokens(F.col("__toks__"), k),
-        lambda s: F.concat(*[F.md5(F.concat(F.lit(f"h{j}:"), s))
-                             for j in range(n_seeds)]))
-    hs_df = (_spread(df.select(F.col(id_col).alias("id"), text_col))
-             .select("id", tokens(F.lower(F.col(text_col))).alias("__toks__"))
-             .select("id", digests.alias("hs")))
+    # re-run md5 per signature position (no CSE across HOF lambdas). The
+    # token array and the digest array are each bound once (let_sql): the
+    # positional shingle transform and every signature position read them.
+    digests = let_sql("__toks__", tokens_sql(f"lower({text})"), (
+        "transform(" + shingles_sql("__toks__", k) + ", __s -> concat("
+        + ", ".join(f"md5(concat('h{j}:', __s))" for j in range(n_seeds))
+        + "))"))
 
     # signature position i = 8-hex-char chunk at offset i*8 of the concat;
     # band keys are built straight from the per-position mins so every
     # position is traversed exactly once
-    def sig_i(i: int):
-        off = i * 8 + 1
-        return F.array_min(F.transform(F.col("hs"),
-                                       lambda h: F.substring(h, off, 8)))
+    def sig_i(i: int) -> str:
+        return f"array_min(transform(__hs, __h -> substring(__h, {i * 8 + 1}, 8)))"
 
-    keys = [F.concat(F.lit(f"b{b}:"),
-                     F.md5(F.concat_ws("|", *[sig_i(b * rows + r)
-                                              for r in range(rows)])))
-            for b in range(bands)]
-    # each key becomes a PHYSICAL column first, and the generator explodes
-    # a CONSTANT-size array of (bi, band, ek) structs over those
-    # attributes. Two traps this shape avoids (measured, 70x): a
-    # posexplode over a computed array ATTRIBUTE makes
-    # InferFiltersFromGenerate add ``size(arr) > 0``, which filter
-    # pushdown inlines through every projection down to the scan —
-    # re-evaluating the whole md5 pipeline per input row (a literal-size
-    # array folds the inferred filter away instead); and referencing the
-    # key array after the Generate would duplicate its expression. The
-    # key columns stay a separate Project (CollapseProject never inlines
-    # non-cheap multiply-referenced exprs), so every md5 runs once.
-    kd = hs_df.select("id", *[k.alias(f"__k{b}__")
-                              for b, k in enumerate(keys)])
-    items = F.array(*[
-        F.struct(F.lit(b).alias("bi"),
-                 F.col(f"__k{b}__").alias("band"),
-                 F.array(*[F.col(f"__k{j}__") for j in range(b)])
-                  .alias("ek"))
-        for b in range(bands)])
-    return (kd.select("id", F.explode(items).alias("x"))
-            .select("id", "x.bi", "x.band", "x.ek"))
+    keys = let_sql("__hs", digests, "array(" + ", ".join(
+        f"concat('b{b}:', md5(concat_ws('|', "
+        + ", ".join(sig_i(b * rows + r) for r in range(rows)) + ")))"
+        for b in range(bands)) + ")")
+    # the key array becomes a PHYSICAL column first, and the generator
+    # explodes a CONSTANT-size array of (bi, band, ek) structs over it.
+    # Two traps this shape avoids (measured, 70x): a posexplode over a
+    # computed array ATTRIBUTE makes InferFiltersFromGenerate add
+    # ``size(arr) > 0``, which filter pushdown inlines through every
+    # projection down to the scan — re-evaluating the whole md5 pipeline
+    # per input row (a literal-size array folds the inferred filter away
+    # instead); and a key expression referenced by several structs would
+    # be duplicated. The key column stays a separate Project
+    # (CollapseProject never inlines non-cheap multiply-referenced exprs),
+    # so every md5 runs once.
+    items = "array(" + ", ".join(
+        f"named_struct('bi', {b}, 'band', __ks__[{b}], 'ek', "
+        f"slice(__ks__, 1, {b}))" for b in range(bands)) + ")"
+    return (_spread(df.selectExpr(f"{sql_ident(id_col)} AS id", text))
+            .selectExpr("id", keys + " AS __ks__")
+            .selectExpr("id", f"inline({items})"))
 
 
 def minhash_candidate_recall(s: float, bands: int, rows_per_band: int
@@ -518,30 +516,25 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
     keyed = _minhash_band_table_canonical(df, text_col, id_col,
                                           num_hashes, bands, k)
     grouped = (keyed.groupBy("bi", "band")
-               .agg(F.array_sort(F.collect_list(F.struct("id", "ek")))
+               .agg(F.expr("array_sort(collect_list(struct(id, ek)))")
                      .alias("ms"))
-               .where(F.size("ms") >= 2))
-    arr = F.col("ms")
+               .where("size(ms) >= 2"))
     # ordered pairs from the sorted member array: element i pairs with
     # every later element, so id_a < id_b by construction (identical to
     # the old a.id < b.id join predicate); each member carries its
-    # earlier band keys for the canonical-band filter below
-    pair_structs = F.flatten(F.transform(
-        arr,
-        lambda x, i: F.transform(
-            F.slice(arr, i + F.lit(2), F.size(arr)),
-            lambda y: F.struct(x["id"].alias("id_a"), y["id"].alias("id_b"),
-                               x["ek"].alias("ea"), y["ek"].alias("eb")))))
+    # earlier band keys for the canonical-band filter below.
     # canonical-band emission (r14, guide §2.4): emit a pair only from the
     # FIRST band both members share — an agreeing earlier key means the
     # pair already surfaced in that band's group. Replaces the
     # ``distinct()`` exchange over the pair stream (the stream that goes
     # quadratic on hot bands) with an in-group elementwise key compare.
-    dup_earlier = F.exists(
-        F.zip_with(F.col("p.ea"), F.col("p.eb"), lambda a, b: a == b),
-        lambda v: v)
-    return (grouped.select(F.explode(pair_structs).alias("p"))
-            .filter(~dup_earlier)
+    return (grouped.selectExpr(
+                "explode(flatten(transform(ms, (__x, __i) -> transform("
+                "slice(ms, __i + 2, size(ms)), __y -> named_struct("
+                "'id_a', __x.id, 'id_b', __y.id, 'ea', __x.ek, "
+                "'eb', __y.ek))))) AS p")
+            .where("NOT exists(zip_with(p.ea, p.eb, (__a, __b) -> "
+                   "__a = __b), __v -> __v)")
             .select("p.id_a", "p.id_b"))
 
 
@@ -567,119 +560,71 @@ def clear_gate_log() -> None:
     GATE_LOG.clear()
 
 
-def _shingle_hash_sets(df, cand_ids, text_col, id_col, k,
-                       broadcast_ids: bool = False):
+def _shingle_hash_sets(df, cand_ids, text_col, id_col, k):
     """(id, sorted distinct xxhash64-per-shingle LONG array) for candidate
-    ids only. Hashing runs JVM-side inside codegen; downstream rescoring
-    moves/holds 8 B per shingle instead of its string (~10x smaller
-    broadcast/shuffle) and compares longs instead of strings. Jaccard on
-    the hash sets equals string-set jaccard up to 64-bit collisions inside
-    one candidate pair's union (~hundreds of shingles: P < 1e-14)."""
-    ids = F.broadcast(cand_ids) if broadcast_ids else cand_ids
-    hashes = F.array_sort(F.array_distinct(
-        F.transform(shingles_from_tokens(F.col("__toks__"), k),
-                    lambda s: F.xxhash64(s)))).alias("sh")
-    return (_spread(df.select(F.col(id_col).alias("id"), text_col))
-            .join(ids, "id", "left_semi")
-            .select("id", tokens(F.lower(F.col(text_col))).alias("__toks__"))
-            .select("id", hashes))
+    ids only. Hashing runs JVM-side; downstream rescoring moves/holds 8 B
+    per shingle instead of its string (~10x smaller shuffle) and compares
+    longs instead of strings. Jaccard on the hash sets equals string-set
+    jaccard up to 64-bit collisions inside one candidate pair's union
+    (~hundreds of shingles: P < 1e-14)."""
+    text = sql_ident(text_col)
+    return (_spread(df.selectExpr(f"{sql_ident(id_col)} AS id", text))
+            .join(cand_ids, "id", "left_semi")
+            .selectExpr("id", let_sql(
+                "__toks__", tokens_sql(f"lower({text})"),
+                "array_sort(array_distinct(transform("
+                + shingles_sql("__toks__", k) + ", __s -> xxhash64(__s))))")
+                + " AS sh"))
 
 
-def _jaccard_rescore_broadcast(sets_df, cand):
-    """Rescore candidate id pairs against a driver-collected shingle-hash
-    lookup shipped to tasks as one broadcast — Arrow moves 2 longs per
-    pair, never the sets. Per-pair work is np.intersect1d over sorted
-    int64 arrays (C merge), not Python set ops (measured ~10x on the
-    near-dup-heavy sf1 probe)."""
-    # Arrow transfer into flat buffers (same fix as _collect_matrix,
-    # ADVICE r12): a Row-object collect of {id: list} pays several GB of
-    # Python-object overhead at the 512 MB budget ceiling. The per-id
-    # arrays are zero-copy views over the Arrow values buffer.
-    tbl = sets_df.select("id", "sh").toArrow()
-    ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-    sh = tbl.column("sh").combine_chunks()
-    offs = np.asarray(sh.offsets, dtype=np.int64)
-    vals = np.asarray(sh.values, dtype=np.int64)
-    lookup = {int(ids[i]): vals[offs[i]:offs[i + 1]]
-              for i in range(len(ids))}
-    bc = cand.sparkSession.sparkContext.broadcast(lookup)
-
-    @F.pandas_udf("double")
-    def jac(ia: pd.Series, ib: pd.Series) -> pd.Series:
-        lk = bc.value
-        out = np.zeros(len(ia), dtype="float64")
-        for i, (x, y) in enumerate(zip(ia.to_numpy(), ib.to_numpy())):
-            sa, sb = lk[int(x)], lk[int(y)]
-            inter = np.intersect1d(sa, sb, assume_unique=True).size
-            union = sa.size + sb.size - inter
-            out[i] = inter / union if union else 0.0
-        return pd.Series(out)
-
-    return cand.select(
-        "id_a", "id_b",
-        F.round(jac(F.col("id_a"), F.col("id_b")), 6).alias("jaccard"))
-
-
-def _jaccard_rescore_join(sets_df, cand):
-    """Rescore by re-attaching the (candidate-only) shingle-hash sets with
-    two equi-joins — the scale path when the lookup exceeds the broadcast
-    budget; the joined arrays are 8 B/shingle longs, and the intersect/
-    union stay JVM-side."""
-    j = (cand.join(sets_df.withColumnRenamed("id", "id_a")
-                          .withColumnRenamed("sh", "sh_a"), "id_a")
-             .join(sets_df.withColumnRenamed("id", "id_b")
-                          .withColumnRenamed("sh", "sh_b"), "id_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac_col = F.when(union > 0,
-                     inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
-    return j.select("id_a", "id_b", F.round(jac_col, 6).alias("jaccard"))
+def _jaccard_rescore_join(sets_df, cand, threshold: float):
+    """Candidate pairs with Jaccard >= ``threshold``: re-attach the
+    (candidate-only) shingle-hash sets with two equi-joins, then filter
+    and verify (the string-similarity-join pattern). A pair's Jaccard is
+    at most min(|A|,|B|) / max(|A|,|B|), so pairs whose rounded size ratio
+    is below the threshold are dropped before any ``array_intersect``; the
+    bound is exact (division and 6-dp rounding are monotone), so no
+    qualifying pair is lost. The sets are distinct, so the union is
+    |A| + |B| - |A∩B| — no ``array_union``. AQE picks a broadcast or a
+    shuffle join for each side from the measured set sizes at runtime."""
+    j = (cand.join(sets_df.selectExpr("id AS id_a", "sh AS sh_a"), "id_a")
+             .join(sets_df.selectExpr("id AS id_b", "sh AS sh_b"), "id_b"))
+    t = float(threshold)
+    return (j.where(f"round(least(size(sh_a), size(sh_b)) / "
+                    f"greatest(size(sh_a), size(sh_b)), 6) >= "
+                    f"CAST('{t!r}' AS DOUBLE)")
+             .selectExpr("id_a", "id_b",
+                         "size(array_intersect(sh_a, sh_b)) AS __inter__",
+                         "size(sh_a) + size(sh_b) AS __sizes__")
+             .selectExpr("id_a", "id_b",
+                         "round(CASE WHEN __sizes__ - __inter__ > 0 THEN "
+                         "__inter__ / CAST(__sizes__ - __inter__ AS DOUBLE) "
+                         "ELSE 0.0D END, 6) AS jaccard")
+             .where(f"jaccard >= CAST('{t!r}' AS DOUBLE)"))
 
 
 def jaccard_near_dup_pairs(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", threshold: float = 0.5,
                            num_hashes: int = 16, bands: int = 8,
-                           k: int = 2,
-                           broadcast_bytes_max: int | None = None) -> DataFrame:
+                           k: int = 2) -> DataFrame:
     """LSH candidates verified with exact token-k-gram Jaccard >= threshold.
 
-    Verify plan (the id-pairs + broadcast-set pattern proven by
-    ``embedding_near_dup_pairs``): candidate pairs carry IDS ONLY through
-    the shuffle; shingle sets are computed ONCE, for candidate ids only
-    (left-semi on the id set), materialized, and fed to whichever rescore
-    path the gate picks — the naive form drags two wide array columns
-    through the candidate-pair shuffle. The gate is byte-EXACT: the
-    materialized table's count/size agg (cache-local, no rescan) gives the
-    true int64-hash payload; above ``broadcast_bytes_max`` the rescore
-    re-attaches the sets by equi-join instead of a driver broadcast.
+    ONE lazy plan, no Spark job before the caller's action: candidate
+    pairs carry IDS ONLY through the shuffle; shingle-hash sets are
+    computed for candidate ids only (left-semi on the id set) and
+    re-attached to the pairs by two equi-joins whose strategy AQE picks
+    at runtime (a broadcast while the sets are small, a shuffle join
+    above), then size-filtered and verified JVM-side
+    (:func:`_jaccard_rescore_join`). The candidate and set subplans each
+    feed two consumers; Spark reuses their exchanges instead of computing
+    them twice.
     """
-    if broadcast_bytes_max is None:   # resolve at CALL time
-        broadcast_bytes_max = _BCAST_BYTES_MAX
-    # lazy persists: neither frame feeds a self-join, so the stats agg
-    # below is the single materializing action for BOTH caches (an eager
-    # materialize here was two extra count jobs)
-    cand = _persist(
-        minhash_near_dup_pairs(df, text_col, id_col, num_hashes, bands, k))
+    cand = minhash_near_dup_pairs(df, text_col, id_col, num_hashes, bands, k)
     cand_ids = (cand.select(F.col("id_a").alias("id"))
                 .unionByName(cand.select(F.col("id_b").alias("id")))
                 .distinct())
-    sets_df = _persist(
-        _shingle_hash_sets(df, cand_ids, text_col, id_col, k))
-    # exact broadcast footprint from the persisted sets: 8 B per hash plus
-    # the measured per-entry overhead of the {id: int64 ndarray} lookup
-    # (ndarray header + dict slot ~ 224 B)
-    stats = sets_df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.size("sh")), F.lit(0)).alias("hashes")).first()
-    est_bytes = int(stats["hashes"]) * 8 + int(stats["n"]) * 224
-    _gate("jaccard_rescore", "broadcast" if est_bytes <= broadcast_bytes_max
-          else "join", est_bytes=est_bytes, budget=broadcast_bytes_max,
-          cand_docs=int(stats["n"]))
-    if est_bytes <= broadcast_bytes_max:
-        scored = _jaccard_rescore_broadcast(sets_df, cand)
-    else:
-        scored = _jaccard_rescore_join(sets_df, cand)
-    return scored.filter(F.col("jaccard") >= threshold)
+    sets_df = _shingle_hash_sets(df, cand_ids, text_col, id_col, k)
+    return _jaccard_rescore_join(sets_df, cand, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1056,7 +1001,7 @@ _SIMHASH_BITS = 60
 _EMPTY_U64 = np.empty(0, dtype=np.uint64)
 
 
-def simhash(text: Column, bits: int = _SIMHASH_BITS) -> Column:
+def simhash(text: Column | str, bits: int = _SIMHASH_BITS) -> Column:
     """Per-token md5 -> first 15 hex chars -> 60-bit int; bit-majority vote
     over tokens. 60 bits (not 64) keeps the value inside signed-long range;
     wide hashes matter — a 32-bit simhash over a small vocabulary collides
@@ -1069,10 +1014,9 @@ def simhash(text: Column, bits: int = _SIMHASH_BITS) -> Column:
     throughout, so the value is bit-identical to the pure-SQL formulation
     the DuckDB oracle uses (hex-cast + ``>>`` votes)."""
     assert bits == _SIMHASH_BITS, "bit layout is fixed at 60 (15 hex chars)"
-    toks = F.array_distinct(tokens(F.lower(text)))
-    tok_hash = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"))
-
+    tok_hash = sql_apply(text, lambda t: (
+        f"transform(array_distinct({tokens_sql(f'lower({t})')}), __w -> "
+        f"CAST(conv(substring(md5(__w), 1, 15), 16, 10) AS BIGINT))"))
     return _simhash_vote_udf()(tok_hash)
 
 
@@ -1147,41 +1091,32 @@ def _simhash_hash_pairs(groups: DataFrame, bands: int,
     width = _SIMHASH_BITS // bands
     mask = (1 << width) - 1
 
-    def chunk(col: Column, i) -> Column:
-        return F.shiftright(col, i * width).bitwiseAND(F.lit(mask))
+    def chunk(col: str, i: int) -> str:
+        return f"(shiftright({col}, {i * width}) & {mask})"
 
-    hc = groups.select(
-        "sh",
-        F.posexplode(F.array(*[chunk(F.col("sh"), i)
-                               for i in range(bands)])).alias("bi", "cv"))
+    hc = groups.selectExpr(
+        "sh", "posexplode(array("
+        + ", ".join(chunk("sh", i) for i in range(bands)) + ")) AS (bi, cv)")
     grouped = (hc.groupBy("bi", "cv")
-               .agg(F.array_sort(F.collect_list("sh")).alias("shs"))
-               .where(F.size("shs") >= 2))
-    arr = F.col("shs")
-    pair_structs = F.flatten(F.transform(
-        arr,
-        lambda x, i: F.transform(
-            F.slice(arr, i + F.lit(2), F.size(arr)),
-            lambda y: F.struct(x.alias("sh_a"), y.alias("sh_b")))))
-    sha, shb = F.col("p.sh_a"), F.col("p.sh_b")
+               .agg(F.expr("array_sort(collect_list(sh))").alias("shs"))
+               .where("size(shs) >= 2"))
     # first-shared-chunk filter: band 0 always emits; band b emits only
     # when no chunk j < b agrees (an agreeing earlier chunk means the
-    # same pair already surfaced in that chunk's group)
-    keep = F.when(F.col("bi") == 0, F.lit(True))
-    earlier = None
-    for b in range(1, bands):
-        m = chunk(sha, b - 1) == chunk(shb, b - 1)
-        earlier = m if earlier is None else (earlier | m)
-        keep = keep.when(F.col("bi") == b, ~earlier)
-    # posexplode bounds bi to [0, bands); an out-of-range band emits
-    # nothing (explicitly, rather than through a NULL filter result)
-    keep = keep.otherwise(F.lit(False))
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (grouped.select("bi", F.explode(pair_structs).alias("p"))
-            .filter(keep)
-            .select("p.sh_a", "p.sh_b")
-            .withColumn("hamming", ham)
-            .filter(F.col("hamming") <= max_hamming))
+    # same pair already surfaced in that chunk's group). posexplode
+    # bounds bi to [0, bands); an out-of-range band emits nothing
+    # (explicitly, rather than through a NULL filter result)
+    arms = ["WHEN bi = 0 THEN true"] + [
+        f"WHEN bi = {b} THEN NOT (" + " OR ".join(
+            f"{chunk('p.sh_a', j)} = {chunk('p.sh_b', j)}" for j in range(b))
+        + ")" for b in range(1, bands)]
+    return (grouped.selectExpr(
+                "bi", "explode(flatten(transform(shs, (__x, __i) -> "
+                "transform(slice(shs, __i + 2, size(shs)), __y -> "
+                "named_struct('sh_a', __x, 'sh_b', __y))))) AS p")
+            .where("CASE " + " ".join(arms) + " ELSE false END")
+            .selectExpr("p.sh_a", "p.sh_b",
+                        "bit_count(p.sh_a ^ p.sh_b) AS hamming")
+            .where(f"hamming <= {int(max_hamming)}"))
 
 
 def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
@@ -1201,35 +1136,33 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
     they should be quadratic in distinct hashes, and the final
     ``distinct()`` over the (huge) id-pair stream disappears because the
     hash-level expansion emits each pair exactly once."""
-    h = simhash(F.col(text_col))
-    base = _spread(df.select(F.col(id_col).alias("id"), text_col)) \
+    text = sql_ident(text_col)
+    h = simhash(text)
+    base = _spread(df.selectExpr(f"{sql_ident(id_col)} AS id", text)) \
         .select("id", h.alias("sh"))
     # eager materialize stays here (measured r14): this pair query has four
     # consumers in one action, and the lazy TableCacheQueryStage form costs
     # MORE jobs (10 -> 11) than the count it saves — unlike simhash_dedup,
     # whose first consumer is a single driver collect (lazy there: 13 -> 11)
-    groups = _materialize(base.groupBy("sh").agg(F.collect_list("id").alias("ids")))
+    groups = _materialize(base.groupBy("sh").agg(
+        F.expr("collect_list(id) AS ids")))
     hpairs = _simhash_hash_pairs(groups, bands, max_hamming)
     # cross-hash expansion: each (sh_a < sh_b) pair appears once, and a doc
     # belongs to exactly one hash group, so no id-level dedup is needed
     cross = (hpairs
-             .join(groups.select(F.col("sh").alias("sh_a"),
-                                 F.col("ids").alias("ids_a")), "sh_a")
-             .join(groups.select(F.col("sh").alias("sh_b"),
-                                 F.col("ids").alias("ids_b")), "sh_b")
-             .select(F.explode("ids_a").alias("ia"), F.col("ids_b"), "hamming")
-             .select("ia", F.explode("ids_b").alias("ib"), "hamming")
-             .select(F.least("ia", "ib").alias("id_a"),
-                     F.greatest("ia", "ib").alias("id_b"), "hamming"))
+             .join(groups.selectExpr("sh AS sh_a", "ids AS ids_a"), "sh_a")
+             .join(groups.selectExpr("sh AS sh_b", "ids AS ids_b"), "sh_b")
+             .selectExpr("explode(ids_a) AS ia", "ids_b", "hamming")
+             .selectExpr("ia", "explode(ids_b) AS ib", "hamming")
+             .selectExpr("least(ia, ib) AS id_a", "greatest(ia, ib) AS id_b",
+                         "hamming"))
     # same-hash pairs (hamming 0): ordered combinations within each group,
     # generated JVM-side with array HOFs — no join, no shuffle
-    same = (groups.filter(F.size("ids") > 1)
-            .select(F.explode(F.expr(
-                "flatten(transform(ids, x -> "
-                "transform(filter(ids, y -> y > x), "
-                "y -> struct(x AS id_a, y AS id_b))))")).alias("p"))
-            .select(F.col("p.id_a"), F.col("p.id_b"),
-                    F.lit(0).cast("int").alias("hamming")))
+    same = (groups.where("size(ids) > 1")
+            .selectExpr("explode(flatten(transform(ids, x -> "
+                        "transform(filter(ids, y -> y > x), "
+                        "y -> struct(x AS id_a, y AS id_b))))) AS p")
+            .selectExpr("p.id_a", "p.id_b", "CAST(0 AS INT) AS hamming"))
     return cross.unionByName(same)
 
 
@@ -1376,8 +1309,9 @@ def simhash_dedup(df: DataFrame, text_col: str = "text",
     for a template corpus, regardless of document count), then each hash
     group keeps ids only if its hash is the cluster representative's hash
     group — inside a group only the min id survives."""
-    h = simhash(F.col(text_col))
-    base = _spread(df.select(F.col(id_col).alias("id"), text_col)) \
+    text = sql_ident(text_col)
+    h = simhash(text)
+    base = _spread(df.selectExpr(f"{sql_ident(id_col)} AS id", text)) \
         .select("id", h.alias("sh"))
     # lazy persist (r14): the first consumer is the cluster gate's single
     # Arrow collect (near_dup_clusters); the member/rep joins in the
@@ -1432,7 +1366,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
     Returns one row per training doc: ``n_grams``, ``n_contaminated``
     (grams hitting the benchmark), ``contaminated`` flag.
     """
-    lower_toks = tokens(F.lower(F.col(text_col)))
+    lower_toks = F.expr(tokens_sql(f"lower({sql_ident(text_col)})"))
     bg = (_spread(benchmark.select(text_col))
           .select(lower_toks.alias("__toks__"))
           .select(F.explode(ngrams_from_tokens(F.col("__toks__"), n))
@@ -1472,7 +1406,7 @@ def duplicate_ngram_fraction(df: DataFrame, n: int = 8,
     # gram instance — the per-gram doc count is then a plain count(*)
     # rather than an expensive exact countDistinct expansion
     g2 = (_spread(df.select(*keep, text_col))
-            .select(*keep, tokens(F.lower(F.col(text_col)))
+            .select(*keep, F.expr(tokens_sql(f"lower({sql_ident(text_col)})"))
                             .alias("__toks__"))
             .select(*keep, F.explode(ngrams_from_tokens(F.col("__toks__"), n))
                             .alias("gram"))

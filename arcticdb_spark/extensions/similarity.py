@@ -1,7 +1,7 @@
 """Similarity search over an embedding column (``array<float>``).
 
 * **brute_force_topk** — exact cosine top-k: broadcast the (small) query set,
-  one narrow map computes scores (``F.zip_with`` + ``F.aggregate`` — JVM-side
+  one narrow map computes scores (``zip_with`` + ``aggregate`` — JVM-side
   fold, no Python), then a per-query top-k window. At 100 TB the scan
   dominates; scoring is embarrassingly parallel and shuffle-free until the
   final tiny top-k aggregation.
@@ -18,13 +18,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # DataFrames persisted across an operator call (the kmeans base scan) go to
 # dedup's registry: unpersist_all() here IS dedup's, so calling either
 # releases every cached extension intermediate.
 from arcticdb_spark.extensions.dedup import _persist, unpersist_all  # noqa: F401
+from arcticdb_spark.extensions.text import sql_ident
 
 
 def _seed_rows(corpus: DataFrame, k: int, id_col: str, vec_col: str) -> list:
@@ -43,18 +44,35 @@ def _seed_rows(corpus: DataFrame, k: int, id_col: str, vec_col: str) -> list:
         key=lambda r: r["cid"])
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-                       F.lit(0.0), lambda acc, v: acc + v)
+def _dot(a: str, b: str) -> str:
+    """SQL text of the dot product of array columns ``a`` and ``b`` (SQL
+    text, parsed in one call by the caller — see ``text.sql_apply``)."""
+    return (f"aggregate(zip_with({a}, {b}, (__x, __y) -> CAST(__x AS DOUBLE) "
+            f"* CAST(__y AS DOUBLE)), 0.0D, (__acc, __v) -> __acc + __v)")
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-                              F.lit(0.0), lambda acc, v: acc + v))
+def _norm(a: str) -> str:
+    return (f"sqrt(aggregate(transform({a}, __x -> CAST(__x AS DOUBLE) * "
+            f"CAST(__x AS DOUBLE)), 0.0D, (__acc, __v) -> __acc + __v))")
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _cosine(a: str, b: str) -> str:
+    return f"{_dot(a, b)} / ({_norm(a)} * {_norm(b)})"
+
+
+def _id_vec(df: DataFrame, id_col: str, vec_col: str, ids: str,
+           vecs: str) -> DataFrame:
+    """``df``'s id and vector columns renamed to ``ids`` / ``vecs``."""
+    return df.selectExpr(f"{sql_ident(id_col)} AS {ids}",
+                         f"{sql_ident(vec_col)} AS {vecs}")
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best-scored rows per query (score desc, then vec_id),
+    numbered ``rank`` 1..k."""
+    return (scored.selectExpr("*", "row_number() OVER (PARTITION BY query_id "
+                                   "ORDER BY score DESC, vec_id) AS rank")
+                  .where(f"rank <= {int(k)}"))
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -65,16 +83,13 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     ``queries`` must be small (it is broadcast); self-matches are excluded.
     Output: query_id, vec_id, score (rounded 6dp), rank 1..k.
     """
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qvec"))
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec"))
-    joined = c.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
-    score = (cosine(F.col("qvec"), F.col("cvec")) if metric == "cosine"
-             else _dot(F.col("qvec"), F.col("cvec")))
-    scored = joined.select("query_id", "vec_id", F.round(score, 6).alias("score"))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+    q = _id_vec(queries, id_col, vec_col, "query_id", "qvec")
+    c = _id_vec(corpus, id_col, vec_col, "vec_id", "cvec")
+    joined = c.join(F.broadcast(q), F.expr("query_id <> vec_id"))
+    score = (_cosine("qvec", "cvec") if metric == "cosine"
+             else _dot("qvec", "cvec"))
+    return _top_k(joined.selectExpr("query_id", "vec_id",
+                                    f"round({score}, 6) AS score"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -135,11 +150,12 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     stays one row per (vector, table), so the big-side explode factor is
     exactly n_tables regardless of probing."""
     planes = [_planes(dim, n_planes, seed=1000 + t) for t in range(n_tables)]
-    cb = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec"),
-                       F.explode(_bucket_udf(planes)(F.col(vec_col))).alias("bucket"))
-    qb = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-                        F.explode(_bucket_udf(planes, probe=probe)(F.col(vec_col)))
-                         .alias("bucket"))
+    cb = (_id_vec(corpus, id_col, vec_col, "vec_id", "cvec")
+          .withColumn("bucket", F.explode(
+              _bucket_udf(planes)(F.expr("cvec")))))
+    qb = (_id_vec(queries, id_col, vec_col, "query_id", "qvec")
+          .withColumn("bucket", F.explode(
+              _bucket_udf(planes, probe=probe)(F.expr("qvec")))))
     # score BEFORE deduplicating: a (query, vector) pair colliding in
     # several tables scores identically each time, and the dedup shuffle
     # then moves (query_id, vec_id, score) triples instead of two
@@ -149,14 +165,12 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # (query_id, vec_id) clustering requirement AND the window's, so the
     # scored stream crosses the network once instead of twice
     scored = (cb.join(F.broadcast(qb), "bucket")
-                .filter(F.col("query_id") != F.col("vec_id"))
-                .select("query_id", "vec_id",
-                        F.round(cosine(F.col("qvec"), F.col("cvec")), 6)
-                         .alias("score"))
+                .where("query_id <> vec_id")
+                .selectExpr("query_id", "vec_id",
+                            f"round({_cosine('qvec', 'cvec')}, 6) AS score")
                 .repartition("query_id")
                 .dropDuplicates(["query_id", "vec_id"]))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -241,26 +255,26 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # (boundary vectors are reachable from adjacent cells). Index size and
     # query-side candidates scale by n_assign within the same nprobe; at
     # scale this is a storage/recall tradeoff, not a shuffle change.
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec"),
-                      F.explode(F.slice(centroid_order(F.col(vec_col)),
-                                        1, n_assign)).alias("list_id"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-                       F.explode(F.slice(centroid_order(F.col(vec_col)), 1, nprobe))
-                        .alias("list_id"))
-    j = c.join(F.broadcast(q), "list_id").filter(F.col("query_id") != F.col("vec_id"))
+    c = (_id_vec(corpus, id_col, vec_col, "vec_id", "cvec")
+         .withColumn("list_id", centroid_order(F.expr("cvec")))
+         .selectExpr("vec_id", "cvec",
+                     f"explode(slice(list_id, 1, {int(n_assign)})) AS list_id"))
+    q = (_id_vec(queries, id_col, vec_col, "query_id", "qvec")
+         .withColumn("list_id", centroid_order(F.expr("qvec")))
+         .selectExpr("query_id", "qvec",
+                     f"explode(slice(list_id, 1, {int(nprobe)})) AS list_id"))
+    j = c.join(F.broadcast(q), "list_id").where("query_id <> vec_id")
     # a (query, vector) pair can meet in up to n_assign probed lists:
     # score first (identical in every list), THEN dedup — the shuffle
     # moves score triples instead of two dim-float vectors per row.
     # ONE exchange serves both the dedup and the top-k window (r14, guide
     # §2.4): hash-partitioning on query_id alone satisfies the dedup's
     # (query_id, vec_id) clustering requirement AND the window's
-    scored = (j.select("query_id", "vec_id",
-                       F.round(cosine(F.col("qvec"), F.col("cvec")), 6)
-                        .alias("score"))
+    scored = (j.selectExpr("query_id", "vec_id",
+                           f"round({_cosine('qvec', 'cvec')}, 6) AS score")
                .repartition("query_id")
                .dropDuplicates(["query_id", "vec_id"]))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(scored, k)
 
 
 def centroid_assign(corpus: DataFrame, k: int = 8,

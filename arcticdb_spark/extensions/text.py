@@ -1,9 +1,11 @@
 """Text analysis for large-scale training-data pipelines.
 
-All operators are pure ``pyspark.sql.functions`` column expressions — no
-Python UDFs anywhere, so they run inside whole-stage codegen and scale
-linearly with executors (the hot path for a 100 TB documents table is a
-single parquet scan + map, zero shuffles).
+All operators are pure Spark SQL column expressions — no Python UDFs
+anywhere, so they run JVM-side and scale linearly with executors (the hot
+path for a 100 TB documents table is a single parquet scan + map, zero
+shuffles). The scoring kernels (tokens, word statistics, quality score,
+language vote) are written as SQL text and parsed in one call
+(:func:`sql_apply`), not built node by node from py4j calls.
 
 Patterns deliberately use only regex constructs with identical semantics in
 Spark (Java regex) and DuckDB (RE2) so results are oracle-checkable.
@@ -26,58 +28,123 @@ _LANG_MARKERS = {
 _EN_STOPWORDS = _LANG_MARKERS["en"] + ["a", "an", "it", "on", "as", "at", "by"]
 
 
-def tokens(text: Column) -> Column:
+def sql_ident(name: str) -> str:
+    """A column name as SQL text: each dot-separated part backquoted, so
+    ``"a.b"`` names field ``b`` of struct ``a`` like ``F.col`` does."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in name.split("."))
+
+
+def sql_apply(arg: Column | str, body) -> Column:
+    """``body(t)`` — a function from the SQL text of the input to the SQL
+    text of the result — as ONE parsed expression. A str ``arg`` is SQL
+    text already (a column name or an expression, as ``F.expr`` takes it)
+    and is substituted directly. A Column carries no SQL text of its own,
+    so it is bound through a one-element ``transform`` whose lambda is the
+    parsed body.
+
+    Why SQL text: every ``pyspark.sql.functions`` call is one to several
+    py4j round trips, so a kernel built node by node from Column calls
+    paid hundreds of round trips (``quality_score`` 552,
+    ``lang_id`` 552) before its plan even existed; parsed SQL text is a
+    handful of calls however large the expression."""
+    if isinstance(arg, str):
+        return F.expr(body(arg))
+    lam = F.expr("__t -> " + body("__t"))
+    return F.call_function("transform", F.array(arg), lam)[0]
+
+
+def let_sql(var: str, value: str, body: str) -> str:
+    """SQL text of ``body`` with lambda variable ``var`` bound to
+    ``value``, evaluated once per row (a one-element ``transform``): the
+    SQL-text form of a shared subexpression such as a token array."""
+    return f"transform(array({value}), {var} -> {body})[0]"
+
+
+def sql_str(s: str) -> str:
+    """A Python string as a Spark SQL string literal (backslash-escaped
+    for the parser's default escape processing)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _words_sql(words: list[str]) -> str:
+    return "array(" + ", ".join(sql_str(w) for w in words) + ")"
+
+
+def tokens_sql(t: str) -> str:
+    """Whitespace tokenization of SQL text ``t``; empty string -> empty
+    array (not [''])."""
+    return (f"CASE WHEN length(trim({t})) = 0 THEN CAST(array() AS "
+            f"ARRAY<STRING>) ELSE split(trim({t}), '\\\\s+') END")
+
+
+def tokens(text: Column | str) -> Column:
     """Whitespace tokenization; empty string -> empty array (not [''])."""
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")) \
-            .otherwise(F.split(t, r"\s+"))
+    return sql_apply(text, tokens_sql)
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text)).cast("long")
+def token_count(text: Column | str) -> Column:
+    return sql_apply(text, lambda t: f"CAST(size({tokens_sql(t)}) AS BIGINT)")
 
 
-def word_stat_columns(text: Column) -> dict[str, Column]:
+def _word_stats_sql(t: str, toks: str) -> dict[str, str]:
+    """The word statistics of text ``t`` whose token array is ``toks``."""
+    n_chars = f"CAST(length({t}) AS BIGINT)"
+    n_tokens = f"CAST(size({toks}) AS BIGINT)"
+    n_punct = f"CAST(length(regexp_replace({t}, '[^.,!?;:]', '')) AS BIGINT)"
+    n_stop = (f"CAST(size(filter({toks}, __w -> array_contains("
+              f"{_words_sql(_EN_STOPWORDS)}, lower(__w)))) AS BIGINT)")
+    return {
+        "n_chars": n_chars, "n_tokens": n_tokens, "n_punct": n_punct,
+        "punct_ratio": (f"CASE WHEN {n_chars} > 0 THEN round({n_punct} / "
+                        f"CAST({n_chars} AS DOUBLE), 6) ELSE 0.0D END"),
+        "stopword_ratio": (f"CASE WHEN {n_tokens} > 0 THEN round({n_stop} / "
+                           f"CAST({n_tokens} AS DOUBLE), 6) ELSE 0.0D END"),
+        "mean_word_len": (f"CASE WHEN {n_tokens} > 0 THEN round(({n_chars} - "
+                          f"({n_tokens} - 1)) / CAST({n_tokens} AS DOUBLE), "
+                          f"6) END")}
+
+
+def word_stat_columns(text: Column | str) -> dict[str, Column]:
     """Quality-scoring features: length / punctuation / stopword ratios,
     mean word length — the usual pre-training quality filters."""
-    toks = tokens(text)
-    n_chars = F.length(text).cast("long")
-    n_tokens = F.size(toks).cast("long")
-    n_punct = F.length(F.regexp_replace(text, r"[^.,!?;:]", "")).cast("long")
-    stop_arr = F.array(*[F.lit(w) for w in _EN_STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, F.lower(t)))).cast("long")
-    mean_word_len = F.when(n_tokens > 0,
-                           F.round((n_chars - (n_tokens - 1)) / n_tokens.cast("double"), 6))
-    punct_ratio = F.when(n_chars > 0, F.round(n_punct / n_chars.cast("double"), 6)).otherwise(F.lit(0.0))
-    stop_ratio = F.when(n_tokens > 0, F.round(n_stop / n_tokens.cast("double"), 6)).otherwise(F.lit(0.0))
-    return {"n_chars": n_chars, "n_tokens": n_tokens, "n_punct": n_punct,
-            "punct_ratio": punct_ratio, "stopword_ratio": stop_ratio,
-            "mean_word_len": mean_word_len}
+    def stat(name):
+        return lambda t: _word_stats_sql(t, tokens_sql(t))[name]
+    return {name: sql_apply(text, stat(name))
+            for name in ("n_chars", "n_tokens", "n_punct", "punct_ratio",
+                         "stopword_ratio", "mean_word_len")}
 
 
-def quality_score(text: Column) -> Column:
+def _quality_sql(t: str) -> str:
+    s = _word_stats_sql(t, "__k")
+    return let_sql("__k", tokens_sql(t), (
+        f"round((CASE WHEN {s['n_tokens']} >= 5 AND {s['n_chars']} >= 20 "
+        f"THEN 0.4D ELSE 0.0D END) + (CASE WHEN {s['stopword_ratio']} >= "
+        f"0.05D THEN 0.3D ELSE 0.0D END) + (CASE WHEN {s['punct_ratio']} "
+        f"<= 0.1D THEN 0.3D ELSE 0.0D END), 1)"))
+
+
+def quality_score(text: Column | str) -> Column:
     """Composite 0-1 quality heuristic (length + stopword presence - punct
     excess), deterministic and SQL-expressible."""
-    s = word_stat_columns(text)
-    len_ok = F.when((s["n_tokens"] >= 5) & (s["n_chars"] >= 20), F.lit(0.4)).otherwise(F.lit(0.0))
-    stop_ok = F.when(s["stopword_ratio"] >= 0.05, F.lit(0.3)).otherwise(F.lit(0.0))
-    punct_ok = F.when(s["punct_ratio"] <= 0.1, F.lit(0.3)).otherwise(F.lit(0.0))
-    return F.round(len_ok + stop_ok + punct_ok, 1)
+    return sql_apply(text, _quality_sql)
 
 
-def lang_id(text: Column) -> Column:
+def _lang_id_sql(t: str) -> str:
+    # per-language marker hits as one array __v over the token array __k,
+    # each bound once; __v[i] follows _LANG_MARKERS' order
+    hits = ", ".join(f"size(filter(__k, __w -> array_contains("
+                     f"{_words_sql(m)}, __w)))" for m in _LANG_MARKERS.values())
+    arms = " ".join(f"WHEN array_max(__v) > 0 AND __v[{i}] = array_max(__v) "
+                    f"THEN '{lang}'" for i, lang in enumerate(_LANG_MARKERS))
+    return let_sql("__k", tokens_sql(f"lower({t})"),
+                   let_sql("__v", f"array({hits})",
+                           f"CASE {arms} ELSE 'unk' END"))
+
+
+def lang_id(text: Column | str) -> Column:
     """Stopword-vote language heuristic: count marker-word hits per language,
     pick the argmax (ties -> precedence en>de>fr>es; 'unk' if zero hits)."""
-    toks_l = tokens(F.lower(text))
-    scores = []
-    for lang, markers in _LANG_MARKERS.items():
-        arr = F.array(*[F.lit(w) for w in markers])
-        scores.append((lang, F.size(F.filter(toks_l, lambda t: F.array_contains(arr, t)))))
-    best = F.greatest(*[s for _, s in scores])
-    out = F.lit("unk")
-    for lang, s in reversed(scores):
-        out = F.when((best > 0) & (s == best), F.lit(lang)).otherwise(out)
-    return out
+    return sql_apply(text, _lang_id_sql)
 
 
 def _load_fasttext_model():
@@ -129,7 +196,7 @@ def detect_language(df: DataFrame, text_col: str = "text",
                 "package and ARCTICDB_SPARK_FASTTEXT_MODEL set to a model "
                 "file (e.g. lid.176.ftz)")
     if use_model is None:
-        return df.withColumn(out_col, lang_id(F.col(text_col)))
+        return df.withColumn(out_col, lang_id(sql_ident(text_col)))
     return _detect_language_model(df, text_col, out_col, loader)
 
 
@@ -166,14 +233,14 @@ def fingerprint(text: Column) -> Column:
 
 
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
+    c = sql_ident(text_col)
     stats = word_stat_columns(c)
     out = df
     for name, expr in stats.items():
         out = out.withColumn(name, expr)
     return (out.withColumn("quality", quality_score(c))
                .withColumn("lang_pred", lang_id(c))
-               .withColumn("fingerprint", fingerprint(c)))
+               .withColumn("fingerprint", fingerprint(F.col(text_col))))
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text",
@@ -193,7 +260,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
     """
     keep = [id_col, *carry_cols]
     toks = df.select(*keep,
-                     F.explode(tokens(F.lower(F.col(text_col))))
+                     F.explode(tokens(f"lower({sql_ident(text_col)})"))
                       .alias("tok"))
     cnt = toks.groupBy(*keep, "tok").agg(F.count(F.lit(1)).alias("c"))
     per = (cnt.groupBy(*keep)
@@ -228,7 +295,7 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
     The corpus total is a single scalar driver agg (O(1) result)."""
     from arcticdb_spark.extensions.dedup import _persist  # noqa: PLC0415
     toks = _persist(df.select(F.col(id_col),
-                              F.explode(tokens(F.lower(F.col(text_col))))
+                              F.explode(tokens(f"lower({sql_ident(text_col)})"))
                                .alias("tok")))
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__n__"))
     if vocab_broadcast_rows_max > 0:
@@ -274,7 +341,7 @@ def pack_chunks(df: DataFrame, chunk_tokens: int, text_col: str = "text",
     """
     from arcticdb_spark.plans.rowid import prefix_sum
     keep = [id_col, *carry_cols]
-    base = df.select(*keep, token_count(F.col(text_col)).alias("n_tokens"))
+    base = df.select(*keep, token_count(sql_ident(text_col)).alias("n_tokens"))
     ps = prefix_sum(base, "n_tokens", [id_col], out_col="__cum__")
     start = (F.col("__cum__") - F.col("n_tokens")).cast("long")
     last_tok = F.when(F.col("n_tokens") > 0, F.col("__cum__") - 1) \
@@ -341,7 +408,7 @@ def heavy_hitters(df: DataFrame, text_col: str = "text", k: int = 50,
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
-    toks = df.select(F.explode(tokens(F.lower(F.col(text_col))))
+    toks = df.select(F.explode(tokens(f"lower({sql_ident(text_col)})"))
                       .alias("tok"))
     from arcticdb_spark.extensions.dedup import _gate, _persist  # noqa: PLC0415
     toks = _persist(toks)
@@ -415,7 +482,7 @@ def bigram_logprob(df: DataFrame, text_col: str = "text",
     counts derived from the bigram table (second tiny agg, not a second
     corpus pass) -> broadcast-gated join-back -> per-doc mean."""
     from arcticdb_spark.extensions.dedup import _gate, _persist  # noqa: PLC0415
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(f"lower({sql_ident(text_col)})")
     n = F.size(toks)
     pairs = F.when(n >= 2, F.arrays_zip(
         F.slice(toks, 1, n - 1).alias("a"),

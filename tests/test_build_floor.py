@@ -1,0 +1,148 @@
+"""The fixed per-call cost of building the corpus pipelines: py4j round
+trips while the kernels' expressions are built, Spark jobs started before
+the caller's action, and the Python worker daemon that keeps a UDF task
+from re-reading pyspark.zip."""
+
+from __future__ import annotations
+
+import gc
+import os
+import sys
+import threading
+import zipfile
+
+import pandas as pd
+import pytest
+from py4j.clientserver import ClientServerConnection
+from pyspark.sql import functions as F
+
+from arcticdb_spark import pydaemon
+from arcticdb_spark.extensions import dedup as xdedup
+from arcticdb_spark.extensions import text as xtext
+
+
+def _py4j_calls(monkeypatch, fn) -> int:
+    """py4j commands the calling thread sends while ``fn`` runs. GC is off
+    so no finalizer's detach command lands in the count."""
+    calls = [0]
+    send = ClientServerConnection.send_command
+    me = threading.current_thread()
+
+    def counting(self, command, *a, **k):
+        if threading.current_thread() is me:
+            calls[0] += 1
+        return send(self, command, *a, **k)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    gc.disable()
+    try:
+        fn()
+    finally:
+        gc.enable()
+        monkeypatch.undo()
+    return calls[0]
+
+
+@pytest.mark.parametrize("kernel", ["band_table", "simhash", "quality_score",
+                                    "lang_id"])
+def test_kernel_build_makes_few_py4j_calls(spark, documents, monkeypatch,
+                                           kernel):
+    # built from Column calls node by node these took 1,636 (band table),
+    # 150 (simhash) and 552 (quality_score, lang_id) round trips
+    text = F.col("text")
+    build = {
+        "band_table": lambda: xdedup._minhash_band_table_canonical(
+            documents, "text", "doc_id", 16, 4, 3),
+        "simhash": lambda: xdedup.simhash(xtext.sql_ident("text")),
+        "quality_score": lambda: xtext.quality_score(text),
+        "lang_id": lambda: xtext.lang_id(text),
+    }[kernel]
+    build()   # first build resolves py4j classes and methods
+    assert _py4j_calls(monkeypatch, build) <= 40
+
+
+def _jobs_started(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"build-floor-{id(fn)}"
+    sc.setJobGroup(group, "jobs started while building")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_jaccard_build_starts_no_job(spark, documents):
+    out = {}
+    jobs = _jobs_started(spark, lambda: out.setdefault(
+        "df", xdedup.jaccard_near_dup_pairs(documents, threshold=0.5,
+                                            num_hashes=16, bands=4, k=3)))
+    assert jobs == 0
+    assert out["df"].count() >= 0
+    xdedup.unpersist_all()
+
+
+def _zip(path, names):
+    with zipfile.ZipFile(path, "w") as z:
+        for n in names:
+            z.writestr(n, f"X = {n!r}\n")
+
+
+def test_pydaemon_rereads_only_changed_archives(tmp_path, monkeypatch):
+    import zipimport
+    reads = []
+    monkeypatch.setattr(pydaemon, "_read_directory",
+                        lambda imp: reads.append(imp.archive))
+    a, b = str(tmp_path / "a.zip"), str(tmp_path / "b.zip")
+    _zip(a, ["m1.py"])
+    _zip(b, ["m2.py"])
+    imp_a = zipimport.zipimporter(a)
+    pydaemon._invalidate_if_changed(imp_a)     # first call always reads
+    assert reads == [a]
+    pydaemon._invalidate_if_changed(imp_a)     # unchanged: no re-read
+    assert reads == [a]
+    _zip(a, ["m1.py", "m3.py"])                # rewritten: size differs
+    st = os.stat(a)
+    os.utime(a, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    pydaemon._invalidate_if_changed(imp_a)
+    assert reads == [a, a]
+    imp_b = zipimport.zipimporter(b)           # a new archive is read
+    pydaemon._invalidate_if_changed(imp_b)
+    assert reads == [a, a, b]
+    pydaemon._invalidate_if_changed(imp_a)
+    pydaemon._invalidate_if_changed(imp_b)
+    assert reads == [a, a, b]
+
+
+def test_pydaemon_reread_sees_new_entries(tmp_path):
+    import zipimport
+    a = str(tmp_path / "a.zip")
+    _zip(a, ["m1.py"])
+    imp = zipimport.zipimporter(a)
+    pydaemon._invalidate_if_changed(imp)
+    _zip(a, ["m1.py", "m2.py"])
+    pydaemon._invalidate_if_changed(imp)
+    assert "m2.py" in imp._files
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12),
+                    reason="the daemon patches nothing on 3.12+")
+def test_pandas_udf_runs_under_pydaemon(spark):
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == "arcticdb_spark.pydaemon"
+
+    @F.pandas_udf("string")
+    def invalidator(s: pd.Series) -> pd.Series:
+        import zipimport
+        return pd.Series(
+            [zipimport.zipimporter.invalidate_caches.__name__] * len(s))
+
+    @F.pandas_udf("long")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    df = spark.range(1000).repartition(4)
+    names = {r[0] for r in df.select(invalidator("id")).distinct().collect()}
+    assert names == {"_invalidate_if_changed"}
+    got = df.select(plus_one("id").alias("x")).agg(F.sum("x")).first()[0]
+    assert got == sum(range(1, 1001))

@@ -679,18 +679,45 @@ class TestMediaFrames:
         assert all(r["total_bytes"] > 0 for r in out.values())
 
 
-def test_jaccard_byte_gate_routes_to_join(spark, monkeypatch):
-    # the broadcast gate is byte-aware: an estimated lookup above the
-    # budget must take the equi-join rescore, never the collected lookup
-    def boom(*a, **k):
-        raise AssertionError("broadcast rescore used despite byte gate")
-    monkeypatch.setattr(xdedup, "_jaccard_rescore_broadcast", boom)
-    out = xdedup.jaccard_near_dup_pairs(_docs(spark), threshold=0.5,
-                                        num_hashes=16, bands=16, k=2,
-                                        broadcast_bytes_max=0).toPandas()
-    pairs = {(a, b): j for a, b, j in zip(out.id_a, out.id_b, out.jaccard)}
-    assert pairs[(0, 1)] == 1.0          # same answers through the join path
-    assert (0, 3) in pairs and pairs[(0, 3)] > 0.5
+def _brute_force_jaccard(pdf, k, threshold):
+    """Every pair's k-token-shingle Jaccard in plain Python, with the
+    operator's tokenization (trim, lowercase, split on whitespace; a doc
+    shorter than k tokens is one shingle of all its tokens)."""
+    import itertools
+    import re
+
+    def shingles(text):
+        t = text.lower().strip(" ")
+        toks = re.split(r"[ \t\n\x0b\f\r]+", t) if t else []
+        if len(toks) < k:
+            return {" ".join(toks)}
+        return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+    sets = {int(i): shingles(t) for i, t in zip(pdf.doc_id, pdf.text)}
+    out = {}
+    for a, b in itertools.combinations(sorted(sets), 2):
+        inter = len(sets[a] & sets[b])
+        score = round(inter / (len(sets[a]) + len(sets[b]) - inter), 6)
+        if score >= threshold:
+            out[(a, b)] = score
+    return out
+
+
+@pytest.mark.parametrize("k,threshold", [(2, 0.5), (3, 0.5), (2, 0.3)])
+def test_jaccard_matches_brute_force(spark, k, threshold):
+    # the size-bound prefilter and |A|+|B|-|A∩B| union must keep exactly
+    # the pairs, and the scores, of an all-pairs Jaccard (16 one-row bands
+    # make every pair sharing any shingle a candidate)
+    docs = _docs(spark)
+    out = xdedup.jaccard_near_dup_pairs(docs, threshold=threshold,
+                                        num_hashes=16, bands=16,
+                                        k=k).toPandas()
+    got = {(int(a), int(b)): j for a, b, j in
+           zip(out.id_a, out.id_b, out.jaccard)}
+    want = _brute_force_jaccard(docs.toPandas(), k, threshold)
+    assert want and got.keys() == want.keys()
+    for pair, score in want.items():
+        assert got[pair] == pytest.approx(score, abs=1e-6), pair
 
 
 def test_embedding_byte_gate_routes_to_join(spark, monkeypatch):
@@ -710,40 +737,6 @@ def test_embedding_byte_gate_routes_to_join(spark, monkeypatch):
                                           exact_below=0, n_rows=6).toPandas()
     got = {(a, b) for a, b in zip(out.id_a, out.id_b)}
     assert (0, 1) in got
-
-
-def test_jaccard_byte_gate_boundary_routing(spark, monkeypatch):
-    """The broadcast gate compares the MEASURED lookup size (8 B per
-    shingle hash + per-entry ndarray/dict overhead) against the budget: a
-    corpus measured just under the gate broadcasts, one byte over routes
-    to the equi-join."""
-    docs = [(i, f"alpha beta gamma delta epsilon zeta{i % 3}")
-            for i in range(12)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    # replicate the gate's agg over the candidate shingle-hash sets
-    cand = xdedup.minhash_near_dup_pairs(df, num_hashes=16, bands=8, k=2)
-    cp = cand.toPandas()
-    cand_id_set = set(cp.id_a) | set(cp.id_b)
-    cand_ids_df = df.sparkSession.createDataFrame(
-        [(int(i),) for i in cand_id_set], "id long")
-    sets = xdedup._shingle_hash_sets(df, cand_ids_df, "text",
-                                     "doc_id", 2).toPandas()
-    est = int(sets["sh"].map(len).sum()) * 8 + len(sets) * 224
-
-    calls = []
-    real_bcast = xdedup._jaccard_rescore_broadcast
-    real_join = xdedup._jaccard_rescore_join
-    monkeypatch.setattr(xdedup, "_jaccard_rescore_broadcast",
-                        lambda *a, **k: calls.append("bcast")
-                        or real_bcast(*a, **k))
-    monkeypatch.setattr(xdedup, "_jaccard_rescore_join",
-                        lambda *a, **k: calls.append("join")
-                        or real_join(*a, **k))
-    xdedup.jaccard_near_dup_pairs(df, num_hashes=16, bands=8, k=2,
-                                  broadcast_bytes_max=est).count()
-    xdedup.jaccard_near_dup_pairs(df, num_hashes=16, bands=8, k=2,
-                                  broadcast_bytes_max=est - 1).count()
-    assert calls == ["bcast", "join"]
 
 
 def test_shuffle_deterministic(spark):

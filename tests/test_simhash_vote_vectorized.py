@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from arcticdb_spark.extensions import dedup as D
+from arcticdb_spark.extensions.text import tokens
 
 
 def _reference(hs_lists, bits=D._SIMHASH_BITS):
@@ -47,7 +48,7 @@ def test_simhash_column_matches_reference(spark):
                        D.simhash(F.col("text")).alias("sh")).collect()}
     toks = {r["doc_id"]: r["h"] for r in docs.select(
         "doc_id",
-        F.transform(F.array_distinct(D.tokens(F.lower(F.col("text")))),
+        F.transform(F.array_distinct(tokens(F.lower(F.col("text")))),
                     lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10)
                     .cast("long")).alias("h")).collect()}
     for d, hs in toks.items():

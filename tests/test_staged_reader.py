@@ -77,10 +77,11 @@ def test_incomplete_read_promotes_like_finalize(spark, tmp_path):
     lib.finalize_staged_data("sym")
     done = lib.read("sym", output_format="pandas")
     assert done["v"].dtype == np.float64
-    # an incomplete read's pandas output keeps the index as a column
-    live = live.sort_values("ts")
-    assert list(live["ts"]) == list(done.index)
-    np.testing.assert_array_equal(live["v"].to_numpy(), done["v"].to_numpy())
+    # a staged-only incomplete read restores the DatetimeIndex from the
+    # chunk sidecars, like finalize
+    assert isinstance(live.index, pd.DatetimeIndex)
+    assert live.index.name == done.index.name == "ts"
+    pd.testing.assert_frame_equal(live.sort_index(), done)
 
 
 def test_incomplete_spark_read_starts_no_job(spark, tmp_lib):

@@ -143,21 +143,19 @@ def probe_sf1_gates(spark) -> list[str]:
               "Every broadcast/driver-collect sits behind one of these "
               "gates with a distributed fallback; the probe records the "
               "side that fired at this size (routing boundary tests: "
-              "test_jaccard_byte_gate_boundary_routing, "
               "test_embedding_byte_gate_routes_to_join, "
               "test_near_dup_clusters_long_chain_converges_or_raises)."]
     return lines
 
 
 def probe_forced_join_gates(spark) -> list[str]:
-    """End-to-end exercise of BOTH sides of the two byte-gated rescore
-    paths at the sf1 probe size (VERDICT r6 item 7): run jaccard and
-    embedding near-dup with the default budget (broadcast side) and with
+    """End-to-end exercise of BOTH sides of the byte-gated embedding
+    rescore at the sf1 probe size (VERDICT r6 item 7): run embedding
+    near-dup with the default budget (broadcast side) and with
     ``broadcast_bytes_max=1`` (forcing the distributed equi-join side),
     assert the two sides return IDENTICAL pair counts, and record
-    wall-clock + the gate decision for each. This is the missing
-    end-to-end evidence that the join fallback is correct and usable at
-    the size where the gate actually flips."""
+    wall-clock + the gate decision for each. Jaccard near-dup has no gate
+    (one plan, AQE picks its joins) and runs once for its wall-clock."""
     import time as _t
 
     from pyspark.sql import functions as F
@@ -191,10 +189,8 @@ def probe_forced_join_gates(spark) -> list[str]:
              "|---|---|---|---|---|"]
     results = {}
     runs = [
-        ("jaccard_rescore", "broadcast",
+        ("jaccard_verify", "one plan (AQE join)",
          lambda: xd.jaccard_near_dup_pairs(dup).count()),
-        ("jaccard_rescore", "join (forced)",
-         lambda: xd.jaccard_near_dup_pairs(dup, broadcast_bytes_max=1).count()),
         ("embedding_rescore", "broadcast (LSH opt-in)",
          lambda: xd.embedding_near_dup_pairs(
              emb10, n_rows=n_vecs, exact_below=0,

@@ -14,7 +14,6 @@ SCALING.md section:
    gated operator is re-run with the budget forced BELOW its measured sf1
    footprint — the scale path runs on the exact same sf1 inputs and the
    results are asserted VALUE-IDENTICAL to the default path:
-     * jaccard_rescore   broadcast vs join      (broadcast_bytes_max=1)
      * embedding_rescore broadcast vs join      (broadcast_bytes_max=1)
      * cluster_solver    union-find vs propagation (driver_edges_max=0)
 
@@ -95,30 +94,7 @@ def flip_checks(spark) -> dict:
     docs = load_table(spark, SF1, "documents")
     emb = load_table(spark, SF1, "embeddings")
 
-    # 1) jaccard_rescore: broadcast (default) vs join (budget=1 byte)
-    _cleanup(spark)
-    xdedup.clear_gate_log()
-    a = _rows(xdedup.jaccard_near_dup_pairs(
-        docs, threshold=0.5, num_hashes=16, bands=4, k=3),
-        [("id_a", 0), ("id_b", 0), ("jaccard", 1)])
-    g_def = [g for g in xdedup.GATE_LOG if g["gate"] == "jaccard_rescore"]
-    _cleanup(spark)
-    xdedup.clear_gate_log()
-    b = _rows(xdedup.jaccard_near_dup_pairs(
-        docs, threshold=0.5, num_hashes=16, bands=4, k=3,
-        broadcast_bytes_max=1),
-        [("id_a", 0), ("id_b", 0), ("jaccard", 1)])
-    g_forced = [g for g in xdedup.GATE_LOG if g["gate"] == "jaccard_rescore"]
-    assert g_def[0]["path"] == "broadcast" and g_forced[0]["path"] == "join", \
-        (g_def, g_forced)
-    assert a == b, f"jaccard flip mismatch: {len(a)} vs {len(b)} rows"
-    res["jaccard_rescore"] = {"default": g_def[0], "forced": g_forced[0],
-                              "pairs": len(a), "identical": True}
-    print(f"jaccard_rescore flip: broadcast==join on {len(a)} pairs "
-          f"(est_bytes={g_def[0]['est_bytes']}, budget={g_def[0]['budget']})",
-          flush=True)
-
-    # 2) embedding strategy + rescore flips. The DEFAULT at sf1 is the
+    # 1) embedding strategy + rescore flips. The DEFAULT at sf1 is the
     # exact blocked-GEMM path (byte gate: 10 MB matrix); its output is
     # the oracle truth. The LSH scale path is then forced (exact_below=0)
     # under both rescore budgets: the two LSH variants must be
@@ -188,7 +164,7 @@ def flip_checks(spark) -> dict:
           f"{g_est[0].get('est_boundary_recall')}) — the byte gate prefers "
           "exact for exactly this reason", flush=True)
 
-    # 3) cluster_solver: driver union-find (default) vs min-label propagation
+    # 2) cluster_solver: driver union-find (default) vs min-label propagation
     _cleanup(spark)
     pairs = xdedup.minhash_near_dup_pairs(docs, num_hashes=16, bands=4, k=3)
     xdedup.clear_gate_log()
