@@ -1429,9 +1429,9 @@ def q_segment_dedup(spark, sf):
     >= 2 distinct documents, rebuild each doc from its surviving spans in
     order — the CCNet/RefinedWeb "repeated-line boilerplate" pass at a
     granularity finer than whole-doc dedup. Physical: posexplode ->
-    map-side-combinable count_distinct on the span -> broadcast-gated
-    join-back on a 16 B md5 key -> one id shuffle with sort_array
-    reassembly (no window function)."""
+    map-side-combinable count_distinct on the span -> join-back on a 16 B
+    md5 key (AQE picks broadcast or shuffle) -> one id shuffle with
+    sort_array reassembly (no window function)."""
     d = load_table(spark, sf, "documents")
     return xdedup.segment_dedup(d, window=8, min_docs=2)
 

@@ -246,8 +246,7 @@ def incremental_dedup(new_df: DataFrame, seen_df: DataFrame,
 def segment_dedup(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", *,
                   delimiter: str | None = None, window: int | None = None,
-                  min_docs: int = 2,
-                  dup_broadcast_rows_max: int = 2_000_000) -> DataFrame:
+                  min_docs: int = 2) -> DataFrame:
     """Segment-level exact dedup with document reassembly — the CCNet /
     RefinedWeb "remove boilerplate lines that repeat across pages" pass,
     a finer granularity than whole-document dedup (reference analogue:
@@ -266,13 +265,13 @@ def segment_dedup(df: DataFrame, text_col: str = "text",
     duplicate-segment table is a groupBy on the segment with a
     count_distinct(id) — map-side combinable, output ~ O(#distinct
     boilerplate segments), far smaller than the corpus -> re-attach by an
-    equi-join that BROADCASTS the dup set while it is under
-    ``dup_broadcast_rows_max`` rows (so the exploded side never shuffles),
-    degrading to a shuffle join above -> one groupBy on the id with a
-    sort_array over (pos, segment) structs to reassemble (map-side
-    combinable; no window function, no per-doc sort shuffle beyond the one
-    id shuffle). Segment strings travel the join as md5 fingerprints
-    (16 B) rather than full text."""
+    equi-join -> one groupBy on the id with a sort_array over (pos,
+    segment) structs to reassemble (map-side combinable; no window
+    function, no per-doc sort shuffle beyond the one id shuffle). Segment
+    strings travel the join as md5 fingerprints (16 B) rather than full
+    text. ONE lazy plan, no Spark job before the caller's action: AQE
+    picks a broadcast or a shuffle join from the dup table's measured
+    size at runtime."""
     if (delimiter is None) == (window is None):
         raise ValueError("segment_dedup: exactly one of delimiter= or "
                          "window= is required")
@@ -291,27 +290,19 @@ def segment_dedup(df: DataFrame, text_col: str = "text",
             f"- 1), __i -> array_join(slice(__k, __i * {w} + 1, {w}), ' ')) "
             f"END"))
     ident = sql_ident(id_col)
-    # lazy persist: the gate count below fills the cache while computing
-    # the dup table in the SAME job (an eager materialize here was a whole
-    # extra pass over the exploded segments)
+    # lazy persist: the exploded segments feed the dup table and the
+    # join-back through different exchanges; the first stage that reads
+    # them fills the cache
     exploded = _persist(
         df.selectExpr(ident, segs + " AS __segs__")
           .selectExpr(ident, "posexplode_outer(__segs__) AS (pos, seg)")
           .selectExpr("*", "md5(seg) AS __fp__"))
-    dup = _persist(
-        exploded.where("seg IS NOT NULL")
-                .groupBy("__fp__")
-                .agg(F.expr(f"count(DISTINCT {ident}) AS __nd__"))
-                .where(f"__nd__ >= {int(min_docs)}")
-                .select("__fp__"))
-    n_dup = dup.count()
-    broadcast = n_dup <= dup_broadcast_rows_max
-    _gate("segment_dedup", "broadcast" if broadcast else "join",
-          n_dup_segments=n_dup, budget_rows=dup_broadcast_rows_max,
-          min_docs=min_docs)
-    rhs = F.broadcast(dup) if broadcast else dup
-    marked = (exploded.join(rhs.selectExpr("__fp__", "true AS __dup__"),
-                            "__fp__", "left")
+    dup = (exploded.where("seg IS NOT NULL")
+                   .groupBy("__fp__")
+                   .agg(F.expr(f"count(DISTINCT {ident}) AS __nd__"))
+                   .where(f"__nd__ >= {int(min_docs)}")
+                   .selectExpr("__fp__", "true AS __dup__"))
+    marked = (exploded.join(dup, "__fp__", "left")
                       .withColumn("__dup__",
                                   F.expr("coalesce(__dup__, false)")))
     return (marked.groupBy(id_col)
@@ -353,13 +344,14 @@ def _scan_partitions_estimate(df: DataFrame, par: int) -> int | None:
     ``total <= maxPartitionBytes -> 1`` shortcut said 1 for a 120 MB file
     that really scans as ~30 partitions, adding a repartition Spark did
     not need). Returns None whenever the count cannot be decided cheaply —
-    the caller then falls back to the precise ``.rdd`` probe, which costs
-    a full RDD plan conversion (~100 ms per fresh plan)."""
+    the caller then asks the JVM-side RDD of the plan for its partition
+    count."""
     try:
-        files = df.inputFiles()
+        jfiles = df._jdf.inputFiles()   # len() first: one call when empty
+        if not 0 < len(jfiles) <= 64:
+            return None
+        files = list(jfiles)
     except Exception:
-        return None
-    if not files or len(files) > 64:
         return None
     import os
     from urllib.parse import unquote, urlparse
@@ -408,9 +400,11 @@ def _scan_partitions_estimate(df: DataFrame, par: int) -> int | None:
 def _spread(df: DataFrame) -> DataFrame:
     """Single-file parquet scans arrive as 1 partition — spread the heavy
     hash computation across cores before the narrow map."""
-    target = df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext._jsc.defaultParallelism()
     est = _scan_partitions_estimate(df, target)
-    nparts = est if est is not None else df.rdd.getNumPartitions()
+    # the JVM RDD, not ``df.rdd``: that one wraps the plan in a Python
+    # RDD first (9-51 py4j calls against 2)
+    nparts = est if est is not None else df._jdf.rdd().getNumPartitions()
     if nparts < max(2, target // 2):
         return df.repartition(target)
     return df
@@ -432,25 +426,30 @@ def _minhash_band_table_canonical(df: DataFrame, text_col: str,
     md5 per shingle yields FOUR 32-bit hashes (8-hex-char substrings of
     the digest), signature position i = min over shingles of
     ``substring(md5("h{i//4}:" || shingle), (i%4)*8+1, 8)``, and band b's
-    key = ``"b{b}:" || md5(concat_ws("|", positions of band b))``."""
+    key = ``"b{b}:" || md5(concat_ws("|", positions of band b))``.
+    The digests are BINARY (``unhex`` once per shingle), so a position is
+    an O(1) 4-byte ``substring`` at offset i*4, not a walk over the hex
+    string's UTF-8 chars; unsigned byte order equals lowercase-hex order,
+    so ``lower(hex(array_min(.)))`` is the same 8-char text."""
     rows = num_hashes // bands
     n_seeds = -(-num_hashes // 4)
     text = sql_ident(text_col)
     # ONE array traversal computes all digests (n_seeds md5 per shingle,
-    # concatenated to one hex string); separate per-position lambdas would
-    # re-run md5 per signature position (no CSE across HOF lambdas). The
-    # token array and the digest array are each bound once (let_sql): the
-    # positional shingle transform and every signature position read them.
+    # concatenated); separate per-position lambdas would re-run md5 per
+    # signature position (no CSE across HOF lambdas). The token array and
+    # the digest array are each bound once (let_sql): the positional
+    # shingle transform and every signature position read them.
     digests = let_sql("__toks__", tokens_sql(f"lower({text})"), (
-        "transform(" + shingles_sql("__toks__", k) + ", __s -> concat("
+        "transform(" + shingles_sql("__toks__", k) + ", __s -> unhex(concat("
         + ", ".join(f"md5(concat('h{j}:', __s))" for j in range(n_seeds))
-        + "))"))
+        + ")))"))
 
-    # signature position i = 8-hex-char chunk at offset i*8 of the concat;
+    # signature position i = 4-byte chunk at offset i*4 of the digest;
     # band keys are built straight from the per-position mins so every
     # position is traversed exactly once
     def sig_i(i: int) -> str:
-        return f"array_min(transform(__hs, __h -> substring(__h, {i * 8 + 1}, 8)))"
+        return (f"lower(hex(array_min(transform(__hs, __h -> "
+                f"substring(__h, {i * 4 + 1}, 4)))))")
 
     keys = let_sql("__hs", digests, "array(" + ", ".join(
         f"concat('b{b}:', md5(concat_ws('|', "
@@ -1074,32 +1073,32 @@ def _simhash_hash_pairs(groups: DataFrame, bands: int,
     """Verified near-dup pairs over DISTINCT SimHash values (``sh_a < sh_b``
     + ``hamming``): band each hash into ``bands`` chunks, group per chunk
     key, emit ordered pairs from the sorted member array, verify with
-    popcount (r14, guide §2.4 — one exchange where the former chunk
-    self-join shuffled the chunk table twice; per-chunk reducer
-    concentration is identical). Shared by the pair and cluster APIs so
-    the banding math cannot diverge between them.
+    popcount. Shared by the pair and cluster APIs so the banding math
+    cannot diverge between them.
 
-    Canonical-band emission (r14, guide §2.4): a pair whose hashes agree
-    in several chunks used to be emitted once per shared chunk and
-    deduplicated with a ``distinct()`` — a full extra exchange over the
-    PAIR stream, which is exactly the stream that goes quadratic on hot
-    chunks. Both full hashes are present inside the group, so each pair
-    is now emitted only from its FIRST shared chunk (no earlier chunk
-    j < bi agrees — pure integer shift/mask math, zero extra shuffle
-    bytes), which yields each qualifying pair exactly once with no
-    dedup exchange."""
+    ``groups`` has one row per distinct ``sh``; its other columns ride the
+    chunk groups and come out as ``<col>_a`` / ``<col>_b`` on each pair, so
+    no join re-attaches them. Members sort by the unique ``sh`` alone.
+
+    Canonical-band emission: both full hashes are present inside the
+    group, so each pair is emitted only from its FIRST shared chunk (no
+    earlier chunk j < bi agrees — integer shift/mask math), exactly once,
+    with no ``distinct()`` exchange over the pair stream, the stream that
+    goes quadratic on hot chunks."""
     width = _SIMHASH_BITS // bands
     mask = (1 << width) - 1
+    payload = [c for c in groups.columns if c != "sh"]
 
     def chunk(col: str, i: int) -> str:
         return f"(shiftright({col}, {i * width}) & {mask})"
 
     hc = groups.selectExpr(
-        "sh", "posexplode(array("
-        + ", ".join(chunk("sh", i) for i in range(bands)) + ")) AS (bi, cv)")
+        "struct(" + ", ".join(["sh", *payload]) + ") AS m",
+        "posexplode(array(" + ", ".join(chunk("sh", i) for i in range(bands))
+        + ")) AS (bi, cv)")
     grouped = (hc.groupBy("bi", "cv")
-               .agg(F.expr("array_sort(collect_list(sh))").alias("shs"))
-               .where("size(shs) >= 2"))
+               .agg(F.expr("array_sort(collect_list(m))").alias("ms"))
+               .where("size(ms) >= 2"))
     # first-shared-chunk filter: band 0 always emits; band b emits only
     # when no chunk j < b agrees (an agreeing earlier chunk means the
     # same pair already surfaced in that chunk's group). posexplode
@@ -1107,15 +1106,17 @@ def _simhash_hash_pairs(groups: DataFrame, bands: int,
     # (explicitly, rather than through a NULL filter result)
     arms = ["WHEN bi = 0 THEN true"] + [
         f"WHEN bi = {b} THEN NOT (" + " OR ".join(
-            f"{chunk('p.sh_a', j)} = {chunk('p.sh_b', j)}" for j in range(b))
+            f"{chunk('p.a.sh', j)} = {chunk('p.b.sh', j)}" for j in range(b))
         + ")" for b in range(1, bands)]
     return (grouped.selectExpr(
-                "bi", "explode(flatten(transform(shs, (__x, __i) -> "
-                "transform(slice(shs, __i + 2, size(shs)), __y -> "
-                "named_struct('sh_a', __x, 'sh_b', __y))))) AS p")
+                "bi", "explode(flatten(transform(ms, (__x, __i) -> "
+                "transform(slice(ms, __i + 2, size(ms)), __y -> "
+                "named_struct('a', __x, 'b', __y))))) AS p")
             .where("CASE " + " ".join(arms) + " ELSE false END")
-            .selectExpr("p.sh_a", "p.sh_b",
-                        "bit_count(p.sh_a ^ p.sh_b) AS hamming")
+            .selectExpr("p.a.sh AS sh_a", "p.b.sh AS sh_b",
+                        *(f"p.{s}.{c} AS {c}_{s}" for c in payload
+                          for s in "ab"),
+                        "bit_count(p.a.sh ^ p.b.sh) AS hamming")
             .where(f"hamming <= {int(max_hamming)}"))
 
 
@@ -1124,34 +1125,25 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
                            bands: int = 4) -> DataFrame:
     """Near-dups by SimHash: band the hash into ``bands`` chunks — any pair
     within ``bands-1`` differing bits shares >= 1 exact chunk (pigeonhole),
-    so candidates come from equi-joins, verified by popcount.
+    so candidates come from per-chunk groups, verified by popcount.
 
-    The join runs at the DISTINCT-HASH level: documents with identical
-    hashes collapse to one node first (template-heavy corpora have far
-    fewer hashes than docs — 3812 vs 5000 in the test corpus), the banded
-    self-join + hamming verify touches hash pairs only, and surviving hash
-    pairs expand back to id pairs via the per-hash id lists. This removes
-    the two scale hazards of the per-doc join: skewed chunk buckets go
-    quadratic in DOCS (one 1582-doc bucket = 1.25M pairs in one task) when
-    they should be quadratic in distinct hashes, and the final
-    ``distinct()`` over the (huge) id-pair stream disappears because the
-    hash-level expansion emits each pair exactly once."""
+    The banding runs on DISTINCT hashes (template-heavy corpora have far
+    fewer hashes than docs — 3812 vs 5000 in the test corpus), so a skewed
+    chunk group is quadratic in hashes, not docs; each hash's id list
+    rides its chunk groups, and a surviving hash pair expands to its id
+    pairs exactly once, with no join and no id-level ``distinct()``.
+
+    ONE lazy plan, no Spark job before the caller's action: the per-hash
+    groups feed the chunk groups and the same-hash pairs through one
+    reused exchange."""
     text = sql_ident(text_col)
     h = simhash(text)
     base = _spread(df.selectExpr(f"{sql_ident(id_col)} AS id", text)) \
         .select("id", h.alias("sh"))
-    # eager materialize stays here (measured r14): this pair query has four
-    # consumers in one action, and the lazy TableCacheQueryStage form costs
-    # MORE jobs (10 -> 11) than the count it saves — unlike simhash_dedup,
-    # whose first consumer is a single driver collect (lazy there: 13 -> 11)
-    groups = _materialize(base.groupBy("sh").agg(
-        F.expr("collect_list(id) AS ids")))
-    hpairs = _simhash_hash_pairs(groups, bands, max_hamming)
+    groups = base.groupBy("sh").agg(F.expr("collect_list(id) AS ids"))
     # cross-hash expansion: each (sh_a < sh_b) pair appears once, and a doc
     # belongs to exactly one hash group, so no id-level dedup is needed
-    cross = (hpairs
-             .join(groups.selectExpr("sh AS sh_a", "ids AS ids_a"), "sh_a")
-             .join(groups.selectExpr("sh AS sh_b", "ids AS ids_b"), "sh_b")
+    cross = (_simhash_hash_pairs(groups, bands, max_hamming)
              .selectExpr("explode(ids_a) AS ia", "ids_b", "hamming")
              .selectExpr("ia", "explode(ids_b) AS ib", "hamming")
              .selectExpr("least(ia, ib) AS id_a", "greatest(ia, ib) AS id_b",
@@ -1322,7 +1314,7 @@ def simhash_dedup(df: DataFrame, text_col: str = "text",
     # joins then recompute the signatures of the uncached partitions
     groups = _persist(base.groupBy("sh").agg(F.min("id").alias("min_id"),
                                              F.collect_list("id").alias("ids")))
-    hpairs = _simhash_hash_pairs(groups, bands, max_hamming)
+    hpairs = _simhash_hash_pairs(groups.select("sh"), bands, max_hamming)
     # hash -> cluster-root hash
     hclusters = near_dup_clusters(hpairs, id_a="sh_a", id_b="sh_b")
     # representative id per cluster = min over member hashes' min ids

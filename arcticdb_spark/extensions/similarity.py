@@ -9,9 +9,15 @@
   deterministic broadcast literal; bucket = sign-bit string; candidates =
   equi-join on bucket (with multi-probe via several tables), exact-rescored.
   Recall < 1.0 by construction; the bench compares it against brute force.
-* **ivf_assign / ivf_topk** — IVF-style coarse quantization: k centroid
-  vectors (sampled deterministically), assign by best dot product, search
-  only the nprobe closest lists.
+* **ivf_topk** — IVF-style coarse quantization: k centroid vectors (md5
+  seeds refined by Lloyd rounds on a capped sample, one Spark job while
+  the corpus fits the cap), assign by best dot product, search only the
+  nprobe closest lists.
+
+Every cosine scorer projects each vector's norm ONCE, before the explode
+or join that multiplies the vector into many pairs, and scores a pair as
+``dot / (qn * cn)``: the same double arithmetic as recomputing both norms
+per pair, so the scores are identical, at a third of the folds.
 """
 
 from __future__ import annotations
@@ -56,15 +62,18 @@ def _norm(a: str) -> str:
             f"CAST(__x AS DOUBLE)), 0.0D, (__acc, __v) -> __acc + __v))")
 
 
-def _cosine(a: str, b: str) -> str:
-    return f"{_dot(a, b)} / ({_norm(a)} * {_norm(b)})"
+# cosine of a query/corpus pair from the norms ``_id_vec`` projected once
+# per vector (``qn``, ``cn``)
+_COSINE = f"{_dot('qvec', 'cvec')} / (qn * cn)"
 
 
 def _id_vec(df: DataFrame, id_col: str, vec_col: str, ids: str,
-           vecs: str) -> DataFrame:
-    """``df``'s id and vector columns renamed to ``ids`` / ``vecs``."""
-    return df.selectExpr(f"{sql_ident(id_col)} AS {ids}",
-                         f"{sql_ident(vec_col)} AS {vecs}")
+            vecs: str, norm: str | None = None) -> DataFrame:
+    """``df``'s id and vector columns renamed to ``ids`` / ``vecs``, plus
+    the vector's norm as ``norm`` when one is named."""
+    vec = sql_ident(vec_col)
+    return df.selectExpr(f"{sql_ident(id_col)} AS {ids}", f"{vec} AS {vecs}",
+                         *([f"{_norm(vec)} AS {norm}"] if norm else []))
 
 
 def _top_k(scored: DataFrame, k: int) -> DataFrame:
@@ -83,11 +92,13 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     ``queries`` must be small (it is broadcast); self-matches are excluded.
     Output: query_id, vec_id, score (rounded 6dp), rank 1..k.
     """
-    q = _id_vec(queries, id_col, vec_col, "query_id", "qvec")
-    c = _id_vec(corpus, id_col, vec_col, "vec_id", "cvec")
+    cosine = metric == "cosine"
+    q = _id_vec(queries, id_col, vec_col, "query_id", "qvec",
+                "qn" if cosine else None)
+    c = _id_vec(corpus, id_col, vec_col, "vec_id", "cvec",
+                "cn" if cosine else None)
     joined = c.join(F.broadcast(q), F.expr("query_id <> vec_id"))
-    score = (_cosine("qvec", "cvec") if metric == "cosine"
-             else _dot("qvec", "cvec"))
+    score = _COSINE if cosine else _dot("qvec", "cvec")
     return _top_k(joined.selectExpr("query_id", "vec_id",
                                     f"round({score}, 6) AS score"), k)
 
@@ -150,10 +161,10 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     stays one row per (vector, table), so the big-side explode factor is
     exactly n_tables regardless of probing."""
     planes = [_planes(dim, n_planes, seed=1000 + t) for t in range(n_tables)]
-    cb = (_id_vec(corpus, id_col, vec_col, "vec_id", "cvec")
+    cb = (_id_vec(corpus, id_col, vec_col, "vec_id", "cvec", "cn")
           .withColumn("bucket", F.explode(
               _bucket_udf(planes)(F.expr("cvec")))))
-    qb = (_id_vec(queries, id_col, vec_col, "query_id", "qvec")
+    qb = (_id_vec(queries, id_col, vec_col, "query_id", "qvec", "qn")
           .withColumn("bucket", F.explode(
               _bucket_udf(planes, probe=probe)(F.expr("qvec")))))
     # score BEFORE deduplicating: a (query, vector) pair colliding in
@@ -167,7 +178,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     scored = (cb.join(F.broadcast(qb), "bucket")
                 .where("query_id <> vec_id")
                 .selectExpr("query_id", "vec_id",
-                            f"round({_cosine('qvec', 'cvec')}, 6) AS score")
+                            f"round({_COSINE}, 6) AS score")
                 .repartition("query_id")
                 .dropDuplicates(["query_id", "vec_id"]))
     return _top_k(scored, k)
@@ -177,45 +188,61 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 # IVF (coarse quantization)
 # ---------------------------------------------------------------------------
 
-def _ivf_refine_centroids(corpus: DataFrame, seed_rows: list,
+def _ivf_refine_centroids(corpus: DataFrame, n_lists: int, id_col: str,
                           vec_col: str, iters: int = 2,
-                          id_col: str = "vec_id",
                           train_cap: int = 4096) -> np.ndarray:
-    """Spherical-Lloyd refinement of the md5-seeded IVF list centroids,
-    trained DRIVER-SIDE on a capped deterministic sample — the standard
-    IVF quantizer-training shape (faiss trains coarse quantizers on a
-    sample, never the full corpus). One Spark job collects at most
-    ``train_cap`` vectors (hash-selected by ``xxhash64(id) % m == 0``, so
-    the sample is stable across runs and engines); the Lloyd rounds are
-    then numpy on a <=cap x d matrix — microseconds, no per-round Spark
-    jobs, no persist. At 100 TB the collect is still <=cap x d floats
-    (cap 4096 x dim 64 = 2 MB), while the previous distributed form paid
-    2 full corpus passes + a k x d groupBy per round.
+    """The ``n_lists`` x d IVF list centroids: the md5 seed set of
+    `_seed_rows` refined by ``iters`` spherical-Lloyd rounds, trained
+    DRIVER-SIDE on a capped deterministic sample — the standard IVF
+    quantizer-training shape (faiss trains coarse quantizers on a sample,
+    never the full corpus). The Lloyd rounds are numpy on a <=cap x d
+    matrix — microseconds, no per-round Spark jobs, no persist.
 
-    Semantics match the prior distributed version: max-cosine assignment
-    with cosines rounded 6dp before the argmax (ties -> lowest list id),
-    member means rounded 9dp, a list that loses all members keeps its
-    previous centroid. Cosine is scale invariant, so means need no
-    re-normalization. Returns the k x d centroid matrix.
+    ONE training read: ``(id, md5(id), vec)`` limited to ``train_cap + 1``
+    rows. When the corpus fits the cap, that read is the whole corpus: the
+    seeds (the ``n_lists`` smallest ``(md5, id)``, as `_seed_rows` orders
+    them) and the training matrix both come from it, so the build starts
+    one Spark job. Only when it overflows do the seed TakeOrdered, a count
+    and the hash-sample collect run (``xxhash64(id) % m == 0`` with
+    m = n // cap + 1, so the sample is stable across runs and engines).
+    At 100 TB the reads are still <=cap x d floats (cap 4096 x dim 64 =
+    2 MB). Training rows are taken in id order, whatever order the scan
+    delivers them in.
+
+    Semantics: max-cosine assignment with cosines rounded 6dp before the
+    argmax (ties -> lowest list id), member means rounded 9dp, a list that
+    loses all members keeps its previous centroid. Cosine is scale
+    invariant, so means need no re-normalization.
 
     Why refine at all: the raw seed set is content-spread but still k
     corpus POINTS; on a near-unclustered corpus its Voronoi cells are
     lopsided and recall@nprobe suffers (round-6 honest measurement:
     0.70@nprobe=6). Two Lloyd rounds hold measured recall@5 at 0.925 on
     the driver embeddings across sf0.001-0.1."""
-    M = np.stack([np.asarray(r["cv"], dtype="float64") for r in seed_rows])
-    if iters <= 0:
-        return M
-    n = corpus.count()
-    tr = corpus
-    if n > train_cap:
-        m = int(n // train_cap) + 1
-        tr = corpus.filter(
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(m)) == 0)
-    V = np.stack([np.asarray(r["v"], dtype="float64") for r in
-                  tr.select(F.transform(F.col(vec_col),
-                                        lambda x: x.cast("double"))
-                            .alias("v")).collect()])
+    ident = sql_ident(id_col)
+    vec = f"transform({sql_ident(vec_col)}, __x -> CAST(__x AS DOUBLE))"
+    tbl = (corpus.selectExpr(f"{ident} AS cid",
+                             f"md5(CAST({ident} AS STRING)) AS h",
+                             f"{vec} AS v")
+                 .limit(train_cap + 1).toArrow())
+    if tbl.num_rows <= train_cap:
+        ids = tbl.column("cid").to_pylist()
+        hs = tbl.column("h").to_pylist()
+        V = np.stack(tbl.column("v").to_numpy(zero_copy_only=False))
+        seeds = sorted(range(len(ids)), key=lambda i: (hs[i], ids[i]))
+        M = V[sorted(seeds[:n_lists], key=ids.__getitem__)]
+    else:
+        M = np.stack([np.asarray(r["cv"], dtype="float64") for r in
+                      _seed_rows(corpus, n_lists, id_col, vec_col)])
+        if iters <= 0:
+            return M
+        m = int(corpus.count() // train_cap) + 1
+        tbl = (corpus.where(f"pmod(xxhash64(CAST({ident} AS STRING)), {m}) "
+                            f"= 0")
+                     .selectExpr(f"{ident} AS cid", f"{vec} AS v").toArrow())
+        ids = tbl.column("cid").to_pylist()
+        V = np.stack(tbl.column("v").to_numpy(zero_copy_only=False))
+    V = V[np.argsort(np.asarray(ids), kind="stable")]
     Vn = np.sqrt((V * V).sum(axis=1))
     for _ in range(iters):
         Mn = np.sqrt((M * M).sum(axis=1))
@@ -235,13 +262,13 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
              refine_iters: int = 2, n_assign: int = 2) -> DataFrame:
     """IVF: list centroids = deterministic content-spread sample of corpus
     vectors (min-k by md5(id) — `_seed_rows`) refined with
-    ``refine_iters`` spherical-Lloyd rounds (`_ivf_refine_centroids`);
-    every vector assigned to its best centroid; queries search only nprobe
-    lists."""
-    cent_rows = _seed_rows(corpus, n_lists, id_col, vec_col)
-    cids = np.arange(len(cent_rows), dtype="int64")
-    M = _ivf_refine_centroids(corpus, cent_rows, vec_col,
-                              iters=refine_iters, id_col=id_col).T
+    ``refine_iters`` spherical-Lloyd rounds (`_ivf_refine_centroids`,
+    which reads the seeds and the training sample in one Spark job while
+    the corpus fits its cap); every vector assigned to its best centroid;
+    queries search only nprobe lists."""
+    M = _ivf_refine_centroids(corpus, n_lists, id_col, vec_col,
+                              iters=refine_iters).T
+    cids = np.arange(M.shape[1], dtype="int64")
 
     @F.pandas_udf("array<bigint>")
     def centroid_order(vecs: pd.Series) -> pd.Series:
@@ -255,13 +282,13 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # (boundary vectors are reachable from adjacent cells). Index size and
     # query-side candidates scale by n_assign within the same nprobe; at
     # scale this is a storage/recall tradeoff, not a shuffle change.
-    c = (_id_vec(corpus, id_col, vec_col, "vec_id", "cvec")
+    c = (_id_vec(corpus, id_col, vec_col, "vec_id", "cvec", "cn")
          .withColumn("list_id", centroid_order(F.expr("cvec")))
-         .selectExpr("vec_id", "cvec",
+         .selectExpr("vec_id", "cvec", "cn",
                      f"explode(slice(list_id, 1, {int(n_assign)})) AS list_id"))
-    q = (_id_vec(queries, id_col, vec_col, "query_id", "qvec")
+    q = (_id_vec(queries, id_col, vec_col, "query_id", "qvec", "qn")
          .withColumn("list_id", centroid_order(F.expr("qvec")))
-         .selectExpr("query_id", "qvec",
+         .selectExpr("query_id", "qvec", "qn",
                      f"explode(slice(list_id, 1, {int(nprobe)})) AS list_id"))
     j = c.join(F.broadcast(q), "list_id").where("query_id <> vec_id")
     # a (query, vector) pair can meet in up to n_assign probed lists:
@@ -271,7 +298,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # §2.4): hash-partitioning on query_id alone satisfies the dedup's
     # (query_id, vec_id) clustering requirement AND the window's
     scored = (j.selectExpr("query_id", "vec_id",
-                           f"round({_cosine('qvec', 'cvec')}, 6) AS score")
+                           f"round({_COSINE}, 6) AS score")
                .repartition("query_id")
                .dropDuplicates(["query_id", "vec_id"]))
     return _top_k(scored, k)

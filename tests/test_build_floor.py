@@ -82,6 +82,50 @@ def test_jaccard_build_starts_no_job(spark, documents):
     xdedup.unpersist_all()
 
 
+@pytest.mark.parametrize("kernel", ["simhash_pairs", "segment_dedup"])
+def test_kernel_build_starts_no_job(spark, documents, kernel):
+    # at the parent the simhash groups were materialized (5 jobs) and
+    # segment_dedup counted its duplicate table for a broadcast gate (6)
+    build = {
+        "simhash_pairs": lambda: xdedup.simhash_near_dup_pairs(
+            documents, max_hamming=6, bands=4),
+        "segment_dedup": lambda: xdedup.segment_dedup(documents, window=8),
+    }[kernel]
+    out = {}
+    jobs = _jobs_started(spark, lambda: out.setdefault("df", build()))
+    assert jobs == 0
+    assert out["df"].count() >= 0
+    xdedup.unpersist_all()
+
+
+def test_ivf_build_within_train_cap_starts_one_job(spark):
+    # the md5 seeds, a count and the training sample were three reads
+    from arcticdb_spark.extensions import similarity as xsim
+    e = spark.range(600).selectExpr(
+        "id AS vec_id",
+        "transform(sequence(1, 16), i -> CAST(sin((id + 1) * i) AS FLOAT)) "
+        "AS embedding")
+    q = e.filter("vec_id < 4")
+    out = {}
+    jobs = _jobs_started(spark, lambda: out.setdefault(
+        "df", xsim.ivf_topk(e, q, k=5, n_lists=16, nprobe=6)))
+    assert jobs <= 1
+    assert out["df"].count() == 20
+
+
+def test_spread_without_input_files_makes_few_py4j_calls(spark, monkeypatch):
+    # ``df.rdd`` wrapped the plan in a Python RDD first: 9 round trips
+    # after a warm-up call, 51 on a session's first
+    target = spark.sparkContext.defaultParallelism
+    xdedup._spread(spark.range(100))
+    df = spark.range(100, numPartitions=target)
+    assert _py4j_calls(monkeypatch, lambda: xdedup._spread(df)) <= 5
+    # the same repartition decision as before
+    assert xdedup._spread(df) is df
+    one = xdedup._spread(spark.range(100, numPartitions=1))
+    assert one.rdd.getNumPartitions() == target
+
+
 def _zip(path, names):
     with zipfile.ZipFile(path, "w") as z:
         for n in names:

@@ -61,6 +61,39 @@ def test_simhash_hamming(spark):
     assert (0, 1) in got and (0, 2) in got and (1, 2) in got
 
 
+@pytest.mark.parametrize("max_hamming,bands", [(0, 4), (3, 4), (12, 4),
+                                                (60, 5)])
+def test_simhash_pairs_match_all_pairs_popcount(spark, max_hamming, bands):
+    """Every pair within ``max_hamming`` bits that shares an exact chunk,
+    once, with its hamming distance: an all-pairs reference over the
+    kernel's own hashes."""
+    from itertools import combinations
+    df = _docs(spark).unionByName(spark.createDataFrame([
+        (6, "the quick brown fox jumps over the lazy cat"),
+        (7, "the quick brown cat jumps over the lazy fox"),
+        (8, "a slow red fox walks under the busy dog"),
+        (9, "completely different text about spark engines and code"),
+    ], "doc_id long, text string"))
+    sh = {r.doc_id: r.sh for r in
+          df.select("doc_id", xdedup.simhash("text").alias("sh")).collect()}
+    width = 60 // bands
+    mask = (1 << width) - 1
+    want = []
+    for a, b in combinations(sorted(sh), 2):
+        x, y = sh[a], sh[b]
+        ham = bin(x ^ y).count("1")
+        shares = any((x >> (i * width)) & mask == (y >> (i * width)) & mask
+                     for i in range(bands))
+        if ham <= max_hamming and shares:
+            want.append((a, b, ham))
+    got = [tuple(r) for r in xdedup.simhash_near_dup_pairs(
+        df, max_hamming=max_hamming, bands=bands)
+        .select("id_a", "id_b", "hamming").collect()]
+    assert sorted(got) == want
+    # the wide cases reach pairs across distinct hashes too
+    assert any(h > 0 for _, _, h in want) == (max_hamming >= 12)
+
+
 def test_text_stats_and_langid(spark):
     df = spark.createDataFrame([
         (0, "the cat and the dog, in the house."),

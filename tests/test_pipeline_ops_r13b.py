@@ -2,7 +2,9 @@
 reassembly, provably-exact heavy hitters, corpus-bigram LM scoring.
 
 Gate discipline as everywhere: each operator's physical strategies are
-forced across their flips on the same inputs and must be value-identical."""
+forced across their flips on the same inputs and must be value-identical
+(segment_dedup has no gate of its own: AQE picks its join, and both
+joins are forced by the broadcast threshold)."""
 
 import math
 
@@ -66,14 +68,25 @@ def test_segment_dedup_delimiter(spark):
     assert out[3].n_removed == 0
 
 
-def test_segment_dedup_gate_flip(seg_corpus):
-    xd.clear_gate_log()
-    a = _rows(xd.segment_dedup(seg_corpus, window=5))
-    b = _rows(xd.segment_dedup(seg_corpus, window=5,
-                               dup_broadcast_rows_max=0))
+def _rows_and_plan(df):
+    rows = _rows(df)
+    return rows, df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_segment_dedup_same_rows_broadcast_or_shuffle_join(spark, seg_corpus):
+    # AQE picks the dup-table join at runtime; both choices agree
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    a, plan_a = _rows_and_plan(xd.segment_dedup(seg_corpus, window=5))
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        b, plan_b = _rows_and_plan(xd.segment_dedup(seg_corpus, window=5))
+    finally:
+        spark.conf.set(key, prev)
+        xd.unpersist_all()
     assert a == b
-    paths = [g["path"] for g in xd.GATE_LOG if g["gate"] == "segment_dedup"]
-    assert paths == ["broadcast", "join"]
+    assert "BroadcastHashJoin" in plan_a
+    assert "BroadcastHashJoin" not in plan_b
 
 
 def test_segment_dedup_min_docs(seg_corpus):
