@@ -17,8 +17,9 @@ identical input from either collector.
 
 QueryBuilder reads run their clauses on the same ``LocalFrame``
 (``arrowquery.run``). ``read_files`` also feeds the driver-side rewrites
-of update, delete_data_in_range and compaction
-(``Library._rewrite_arrow``), which read under the physical types and
+of update, delete_data_in_range, compaction and sort_index
+(``Library._rewrite_arrow``) and the staged finalize
+(``Library._finalize_arrow``), which read under the physical types and
 write back through arrowwrite.
 """
 
@@ -42,16 +43,18 @@ def arrow_type(dtype, large_types: bool) -> "pa.DataType":
 
 def read_files(files: list, want: dict, row_id: str, idx: str | None,
                date_range: tuple | None, rows: tuple | None) -> "pa.Table":
-    """Read ``files`` — (path, row_start) pairs in row order — into one
-    table of a ``row_id`` column (row_start + position in file) followed
-    by the ``want`` {name: arrow type} columns, cast to those types; a
-    column a file lacks reads as NULL, like Spark's parquet reader.
+    """Read ``files`` — (path, row_start) pairs in row order, or (path,
+    row_start, footer) triples whose parsed ``pq.FileMetaData`` the read
+    reuses instead of parsing the footer again — into one table of a
+    ``row_id`` column (row_start + position in file) followed by the
+    ``want`` {name: arrow type} columns, cast to those types; a column a
+    file lacks reads as NULL, like Spark's parquet reader.
     ``date_range`` keeps rows whose ``idx`` value (as int64) lies in the
     inclusive [lo, hi] pair (either bound may be None), ``rows`` those
     whose row id lies in [start, end)."""
     parts = []
-    for path, row_start in files:
-        with pq.ParquetFile(path) as pf:
+    for path, row_start, *footer in files:
+        with pq.ParquetFile(path, metadata=(footer or [None])[0]) as pf:
             have = set(pf.schema_arrow.names)
             t = pf.read(columns=[c for c in want if c in have])
         n = t.num_rows

@@ -46,13 +46,15 @@ writer unchanged:
   into consecutive ``rows_per_file`` ranges — the Spark writer slices both
   exactly too, numbering the rows by index order or by input position.
   Multi-file layouts whose boundaries Spark derives from sampling
-  (repartitionByRange quantiles, the staged finalize) are NOT replicated —
-  those fall back.
+  (repartitionByRange quantiles) are NOT replicated — those fall back.
 
-The library's driver-side rewrites (update / delete_data_in_range splices
-and compaction, ``Library._rewrite_arrow``) write through
-:func:`write_slices` as well, for stored columns whose Spark type
-:func:`physical_type` maps.
+The library's driver-side rewrites (update / delete_data_in_range splices,
+compaction and sort_index, ``Library._rewrite_arrow``) and the staged
+finalize (``Library._finalize_arrow``) write through :func:`write_slices`
+as well, for stored columns whose Spark type :func:`physical_type` maps.
+They cut exact ``rows_per_file`` slices where their Spark fallbacks
+sample range boundaries, so above ``rows_per_file`` rows the two paths
+hold the same rows in differently sized files.
 
 Explicit source: the library's normalizer returns the normalized pandas
 frame next to the Spark frame it built, and the write entry points hand

@@ -60,6 +60,9 @@ _DICT_COLLECT_ROWS_MAX = 2_000_000
 # its lookup from a persisted parquet scan and update/delete/compaction
 # rewrite their files with Spark jobs instead of driver-side pyarrow
 _DRIVER_READ_BYTES_MAX = 64 << 20
+# stage()'s per-row order helpers (stage time, row in chunk), finalize's
+# sort keys after the index
+_STAGE_HELPERS = ("__stage_seq__", "__stage_pos__")
 # local-relation decode lookup cap: LocalRelation data is embedded in
 # every consuming plan, so only small dictionaries skip the scan-backed
 # persisted lookup (a 100k-entry local relation re-shipped per query cost
@@ -1992,15 +1995,12 @@ class Library:
     # ---- write paths ----
     def _write_data_files(self, symbol: str, df: DataFrame,
                           index_column: str | None, sort: bool = True,
-                          tiebreak_cols: list[str] | None = None,
                           rows_hint: int | None = None,
                           exact_slices: bool = True,
                           src: tuple | None = None
                           ) -> list[FileEntry]:
         """Materialize df as Parquet under data/<uuid>/, ts-sorted, and return
-        footer-derived FileEntries in index order. ``tiebreak_cols`` extend
-        the within-partition sort (MultiIndex levels >= 1) so roundtrips are
-        deterministic under equal timestamps.
+        footer-derived FileEntries in index order.
 
         ``rows_hint`` (known for free on pandas inputs) enforces the
         reference's segment_row_size contract: no slice exceeds
@@ -2017,7 +2017,7 @@ class Library:
         # reproducible driver-side skips the Spark job entirely (guide §5 —
         # a driver-resident frame gains nothing from a cluster round-trip);
         # every ineligible case returns None and takes the Spark writer
-        if rows_hint is not None and not tiebreak_cols:
+        if rows_hint is not None:
             entries = self._arrow_write_data_files(
                 df, src, out_dir, index_column, sort, rows_hint,
                 exact_slices)
@@ -2032,8 +2032,7 @@ class Library:
             # away and the void columns NULL-backfill as usual)
             df = df.select(F.lit(0).cast("tinyint").alias("__void_fill__"))
         sliced_write = False
-        keys = ([index_column, *(tiebreak_cols or [])]
-                if index_column and sort else [])
+        keys = [index_column] if index_column and sort else []
         exact = (rows_hint is not None and exact_slices
                  and rows_hint > self.rows_per_file)
         if keys or exact:
@@ -2042,10 +2041,8 @@ class Library:
             # pipeline slices the frame as-is; test_append_compact_data.py
             # test_multiindex pins original-order roundtrips). The id is
             # computed BEFORE any exchange, so it reflects the incoming
-            # partition-major row order; explicit tiebreak_cols (the
-            # sort_index repair contract, which sorts by all MultiIndex
-            # levels like pandas sort_index) still take precedence; an
-            # order-preserving write orders by the id alone.
+            # partition-major row order; an order-preserving write orders
+            # by the id alone.
             df = df.withColumn("__ipos__", F.monotonically_increasing_id())
         if exact:
             # EXACT segment_row_size slicing (reference contract: the
@@ -3053,10 +3050,11 @@ class Library:
         return self._scan_files(m, files if files is not None else m.files,
                                 self._phys_schema(m.schema_json))
 
-    def _detect_index(self, df: DataFrame, index_column) -> str | None:
+    @staticmethod
+    def _detect_index(schema: T.StructType, index_column) -> str | None:
         if index_column is not None:
             return index_column
-        for f0 in df.schema.fields:
+        for f0 in schema.fields:
             if f0.dataType.typeName().startswith("timestamp"):
                 return f0.name
         return None
@@ -3205,7 +3203,7 @@ class Library:
             # "first timestamp column = index".
             idx = None
         else:
-            idx = self._detect_index(sdf, index_column)
+            idx = self._detect_index(sdf.schema, index_column)
             if idx is not None and (_is_ts_type(sdf, idx)
                                     or _is_long_type(sdf, idx)):
                 # Spark/Arrow-frame input: the index is stored as exact
@@ -4642,8 +4640,7 @@ class Library:
         if seg_files:
             # the same staged records and schema-group union as finalize
             recs = self._staged_records(seg_files)
-            inc = self._read_staged(recs).drop("__stage_seq__",
-                                               "__stage_pos__")
+            inc = self._read_staged(recs).drop(*_STAGE_HELPERS)
             sinfo = self._staged_index_info(recs)
             # staged uint64 bit-pattern columns: marked like committed
             # reads, so the union keeps unsigned semantics and pandas
@@ -4652,7 +4649,7 @@ class Library:
                 inc, {"uint64": sinfo.get("uint64"),
                       "unsigned": sinfo.get("unsigned")})
             if idx is None and not sinfo.get("no_index"):
-                idx = self._detect_index(inc, sinfo.get("index_column"))
+                idx = self._detect_index(inc.schema, sinfo.get("index_column"))
             if idx is not None and _is_long_type(inc, idx) \
                     and (sinfo.get("index_ns") or (base is not None
                                                    and _is_ts_type(base, idx))):
@@ -5260,14 +5257,12 @@ class Library:
             out.append(StagedFile(f, d, sides[d], sch, md.num_rows, md))
         return out
 
-    def _read_staged(self, recs: list[StagedFile]) -> DataFrame:
-        """The staged files of ``recs`` as one frame, grouped by schema the
-        way ``_scan_files`` groups schema epochs: the group schemas fold
-        through ``_merge_schema`` (dynamic schema's promotion table — a
-        float32 chunk and a float64 chunk read as float64), each group is
-        scanned under its own schema, cast to the merged one with absent
-        columns NULL, and the groups are unioned by name. The schemas come
-        from the records, so no Spark job infers or merges them."""
+    def _staged_schema(self, recs: list[StagedFile]
+                       ) -> "tuple[list[list[StagedFile]], T.StructType]":
+        """``recs`` grouped by schema and the merged schema the groups fold
+        to through ``_merge_schema`` (dynamic schema's promotion table: a
+        float32 and a float64 chunk read as float64), from the records
+        alone — no Spark job infers or merges them."""
         groups: dict[str, list[StagedFile]] = {}
         for r in recs:
             groups.setdefault(r.schema.json(), []).append(r)
@@ -5275,12 +5270,20 @@ class Library:
         merged_json = keys[0]
         for k in keys[1:]:
             merged_json = self._merge_schema(merged_json, groups[k][0].schema)
-        merged = T.StructType.fromJson(json.loads(merged_json))
+        return (list(groups.values()),
+                T.StructType.fromJson(json.loads(merged_json)))
+
+    def _read_staged(self, recs: list[StagedFile]) -> DataFrame:
+        """The staged files of ``recs`` as one frame: each
+        ``_staged_schema`` group is scanned under its own schema, cast to
+        the merged one with absent columns NULL, and the groups are
+        unioned by name."""
+        groups, merged = self._staged_schema(recs)
         out = None
-        for k, rs in groups.items():
+        for rs in groups:
             part = self.spark.read.schema(rs[0].schema).parquet(
                 *[r.path for r in rs])
-            if k != merged_json:
+            if rs[0].schema.json() != merged.json():
                 have = set(rs[0].schema.names)
                 part = part.select(*[
                     F.col(f.name).cast(f.dataType).alias(f.name)
@@ -5351,7 +5354,7 @@ class Library:
         ref = None
         for r in recs if static else ():
             sch = {f.name: f.dataType.simpleString() for f in r.schema.fields
-                   if f.name not in ("__stage_seq__", "__stage_pos__")}
+                   if f.name not in _STAGE_HELPERS}
             if ref is None:
                 ref = sch
             elif sch != ref:
@@ -5377,7 +5380,7 @@ class Library:
                              delete_staged_data_on_failure: bool = False,
                              stage_results=None) -> VersionManifest:
         """Compact staged chunks into one new version; ``sort=True`` is
-        sort_and_finalize_staged_data (k-way merge == one Spark range shuffle).
+        sort_and_finalize_staged_data (the k-way merge of the chunks).
 
         ``staged_data``: optional list of ``StageResult`` tokens — finalize
         exactly those segments and leave the rest staged (reference
@@ -5395,11 +5398,14 @@ class Library:
         staged file's footer are read once on the driver
         (``_staged_records``), and the schema, uint64, sortedness and
         overlap checks and the row count all come from those records. The
-        files are then scanned grouped by schema, each group cast to the
-        merged schema (numeric types promoted under dynamic schema, absent
-        columns NULL) and unioned (``_read_staged``) with no Spark job to
-        infer or merge schemas; the merge sort and the write that follow
-        run on Spark."""
+        files are read under the merged schema (``_staged_schema``),
+        stable-sorted on (index, stage time, row in chunk) — on the last two
+        alone, arrival order, for ``sort=False`` — and written in
+        ``rows_per_file`` slices on the driver with pyarrow
+        (``_finalize_arrow``, no Spark job). Where it declines (stream
+        chunks, dictionary columns, types arrowwrite does not write, files
+        over ``_DRIVER_READ_BYTES_MAX``) Spark runs the same read, sort and
+        write (``_finalize_spark``)."""
         mode = _normalize_finalize_mode(mode)
         if staged_data is None:
             staged_data = stage_results
@@ -5438,14 +5444,14 @@ class Library:
             sinfo = self._staged_index_info(recs)
             u64_cols = set(sinfo.get("uint64") or [])
             self._check_staged(recs, not self.dynamic_schema, u64_cols)
-            df = self._read_staged(recs)
+            merged = self._staged_schema(recs)[1]
             explicit_idx = index_column or sinfo.get("index_column")
             if sinfo.get("no_index") and not explicit_idx:
                 # pandas rowcount/named-index chunks: never sniff a
                 # timestamp DATA column as the index
                 idx = None
             else:
-                idx = self._detect_index(df, explicit_idx)
+                idx = self._detect_index(merged, explicit_idx)
             # sort is tri-state: None (default) = the reference's plain
             # finalize — staged segments must be internally sorted and
             # (under validate_index) ordered/non-overlapping, and the
@@ -5493,89 +5499,32 @@ class Library:
                             "E_UNSORTED_DATA staged segments overlap; pass "
                             "validate_index=False to concatenate as-is or "
                             "use sort_and_finalize_staged_data")
-            index_ns = False
-            if idx is not None and idx in df.columns:
-                if _is_ts_type(df, idx):
-                    # canonical physical form: exact LONG ns (stream_stage
-                    # chunks arrive as µs timestamps)
-                    df = self._index_to_ns_long(df, idx)
-                    index_ns = True
-                elif _is_long_type(df, idx) and (sinfo.get("index_ns")
-                                                 or index_column is not None):
-                    index_ns = True
-            if self.dynamic_schema:
-                # dynamic schema: cells of a column a chunk did not store
-                # arrive as NULLs from the staged union; fill int/bool
-                # with the type default (0/False) BEFORE materializing, so
-                # finalized reads match the reference's non-nullable layout
-                # (merge_and_sort_segment_list 0-fills int columns). Int
-                # chunks themselves are non-nullable, so a NULL here can
-                # only mean column-absent; the index column is exempt.
-                from pyspark.sql import types as T
-                fills = [c for f in df.schema.fields
-                         for c in [f.name]
-                         if c != idx
-                         and c not in ("__stage_seq__", "__stage_pos__")
-                         and isinstance(
-                             f.dataType, (T.ByteType, T.ShortType,
-                                          T.IntegerType, T.LongType,
-                                          T.BooleanType))]
-                for c in fills:
-                    df = df.withColumn(c, F.coalesce(
-                        F.col(c), _default_backfill_lit(df.schema[c].dataType)))
-            # STABLE merge: the k-way sort tiebreaks on the per-row stage
-            # helpers, so within equal timestamps each chunk's row order
-            # survives the finalize (reference compact preserves
-            # within-segment order — test_sort.py test_stage_finalize);
-            # the helpers are dropped before the version materializes
-            # segment_row_size contract for the finalized version too:
-            # total staged rows from footers only (no data IO)
-            staged_rows = sum(r.rows for r in recs)
-            helpers = [c for c in ("__stage_seq__", "__stage_pos__")
-                       if c in df.columns]
-            sort = sort is not False   # None/True both merge index-ordered
-            rows_hint: int | None = staged_rows
-            if helpers:
-                if sort and idx is not None:
-                    n_parts = max(1, -(-staged_rows // self.rows_per_file))
-                    if n_parts == 1:
-                        # sub-segment staged total (known exactly from the
-                        # footers): the finalized version is ONE slice, so
-                        # a single-task sort replaces the range exchange
-                        # AND its boundary-sampling job; above one segment
-                        # the sampled range shuffle stands (scale path
-                        # unchanged)
-                        df = df.coalesce(1).sortWithinPartitions(
-                            idx, *helpers)
-                    else:
-                        df = (df.repartitionByRange(n_parts, F.col(idx))
-                                .sortWithinPartitions(idx, *helpers))
-                    # the partitioning is final here, so the writer must
-                    # not coalesce again: under AQE a same-count coalesce
-                    # on an explicit-count range exchange PERMUTES the
-                    # partition order, and this sort=False write derives
-                    # global row order from part-file listing order
-                    rows_hint = None
-                    sort = False   # already range-sorted (stably)
-                df = df.drop(*helpers)
-            df = self._encode_dict_columns(symbol, df)
+            itype = merged[idx].dataType if idx in merged.names else None
+            # a stream chunk's µs timestamp index is stored as LONG ns
+            index_ns = itype is not None and (
+                itype.typeName().startswith("timestamp")
+                or (isinstance(itype, T.LongType)
+                    and bool(sinfo.get("index_ns")
+                             or index_column is not None)))
+            prev = None
             if mode == "append" and self.has_symbol(symbol):
                 prev = self._load_manifest(symbol,
                                            self._load_ref(symbol)["latest"])
-                df = self._align_index_phys(df, idx, prev)
-                index_ns = bool((prev.norm_meta or {}).get("index_ns"))
+            got = self._finalize_arrow(symbol, recs, idx, sort, prev)
+            if isinstance(got, str):
+                got = self._finalize_spark(symbol, recs, idx, sort, prev)
+            out_schema, write = got
+            if prev is not None:
                 # same schema rules as append(): dynamic widens, static
                 # rejects name/type drift (staged chunks are arbitrary
                 # writer output)
                 if self.dynamic_schema:
-                    schema_json = self._merge_schema(prev.schema_json, df.schema)
+                    schema_json = self._merge_schema(prev.schema_json,
+                                                     out_schema)
                 else:
                     schema_json = self._validate_static_schema(
-                        prev.schema_json, df.schema, "finalize_staged_data")
-                new_files = self._write_data_files(symbol, df, idx,
-                                                   sort=sort,
-                                                   rows_hint=rows_hint,
-                                                   exact_slices=False)
+                        prev.schema_json, out_schema, "finalize_staged_data")
+                new_files = write()
                 overlap = False
                 if idx and prev.ts_max is not None and new_files:
                     mins = [f.ts_min for f in new_files if f.ts_min is not None]
@@ -5597,14 +5546,12 @@ class Library:
                     norm_meta=self._uint64_meta_for(
                         prev, {"uint64": sorted(u64_cols),
                                "unsigned": sinfo.get("unsigned") or []},
-                        df.schema, "finalize_staged_data"),
+                        out_schema, "finalize_staged_data"),
                     base_version=prev.version)
             else:
                 # mode="append" on a missing symbol behaves like write
                 # (reference test_sort_merge.py test_append_to_missing_symbol)
-                files = self._write_data_files(symbol, df, idx, sort=sort,
-                                               rows_hint=rows_hint,
-                                               exact_slices=False)
+                files = write()
                 nm_out: dict = {}
                 if index_ns:
                     nm_out["index_ns"] = True
@@ -5614,7 +5561,7 @@ class Library:
                     nm_out["unsigned"] = list(sinfo["unsigned"])
                 nm_out.update(self._staged_norm_meta(idx, sinfo))
                 m = VersionManifest(symbol, self._next_version(symbol),
-                                    time.time_ns(), idx, df.schema.json(),
+                                    time.time_ns(), idx, out_schema.json(),
                                     files, metadata,
                                     norm_meta=(nm_out or None))
         except Exception:
@@ -5626,6 +5573,125 @@ class Library:
         if self._resolve_prune(prune_previous_versions):
             self.prune_previous_versions(symbol)
         return m
+
+    def _staged_fills(self, schema: T.StructType, idx: str | None) -> list:
+        """Dynamic schema: the int/bool columns whose NULLs (cells of a
+        column a chunk did not store; int chunks are non-nullable) finalize
+        fills with 0/False, the reference's non-nullable layout
+        (merge_and_sort_segment_list 0-fills int columns)."""
+        ints = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+                T.BooleanType)
+        return [f.name for f in schema.fields if self.dynamic_schema
+                and f.name != idx and f.name not in _STAGE_HELPERS
+                and isinstance(f.dataType, ints)]
+
+    def _finalize_arrow(self, symbol: str, recs: list[StagedFile],
+                        idx: str | None, sort: bool | None,
+                        prev: "VersionManifest | None"):
+        """Finalize's driver executor: read the staged files with pyarrow
+        under the ``_staged_schema`` merge, fill ``_staged_fills``,
+        stable-sort on (index, ``_STAGE_HELPERS``) — on the helpers alone,
+        arrival order, for ``sort=False`` or no index — and drop the
+        helpers. Returns the Spark schema and a writer of
+        ``rows_per_file`` slices, or why it declines (the caller then runs
+        ``_finalize_spark``)."""
+        groups, merged = self._staged_schema(recs)
+        types = {f.name: f.dataType for f in merged.fields}
+        want = {c: aw.physical_type(d) for c, d in types.items()}
+        itype = types.get(idx)
+        data = [f for f in merged.fields if f.name not in _STAGE_HELPERS]
+        if any(aw.ROW_METADATA_KEY not in (r.meta.metadata or {})
+               for r in recs):
+            return "a staged file has no Spark footer key"
+        if any(h not in r.schema.names for r in recs for h in _STAGE_HELPERS):
+            return "a staged chunk lacks the order helpers"
+        if idx is not None and itype is None:
+            return "the index column is not stored"
+        if itype is not None and itype.typeName().startswith("timestamp"):
+            return "the index column is timestamp-typed"
+        if isinstance(itype, (T.FloatType, T.DoubleType)):
+            return "a float index sorts NaN unlike Spark"
+        if self.dictionary_columns:
+            return "dictionary_columns are set"
+        if not data or None in want.values() or any(
+                aw.physical_type(f.dataType) is None
+                for rs in groups for f in rs[0].schema):
+            return "a staged type is outside arrowwrite.physical_type"
+        if (prev is not None and isinstance(itype, T.LongType)
+                and not (prev.norm_meta or {}).get("index_ns")
+                and _is_ts_type_json(prev.schema_json, idx)):
+            return "the target's legacy µs index needs _align_index_phys"
+        if self._over_driver_cap(recs):
+            return "the staged files exceed _DRIVER_READ_BYTES_MAX"
+        parts = []
+        for rs in groups:
+            have = {f.name: aw.physical_type(f.dataType) for f in rs[0].schema}
+            t = ar.read_files([(r.path, 0, r.meta) for r in rs], have, ROW_ID,
+                              None, None, None)
+            # unsafe casts round int64 -> float64 like Spark's cast (the
+            # safe default raises where a value does not fit exactly)
+            parts.append(pa.table({
+                c: t.column(c).cast(typ, safe=False) if c in have
+                else pa.nulls(t.num_rows, typ) for c, typ in want.items()}))
+        tbl = pa.concat_tables(parts)
+        keys = [idx] if sort is not False and idx is not None else []
+        tbl = tbl.take(pc.sort_indices(
+            tbl, [(k, "ascending") for k in (*keys, *_STAGE_HELPERS)],
+            null_placement="at_start")).drop_columns(list(_STAGE_HELPERS))
+        fills = self._staged_fills(merged, idx)
+        for c in fills:
+            tbl = tbl.set_column(tbl.column_names.index(c), c, pc.fill_null(
+                tbl.column(c),
+                False if isinstance(types[c], T.BooleanType) else 0))
+        # filled columns come out non-nullable and metadata-free, as from
+        # Spark's coalesce
+        schema = T.StructType([T.StructField(f.name, f.dataType, False)
+                               if f.name in fills else f for f in data])
+        sj = schema.json()
+        out_dir = os.path.join(self._data_sym_dir(symbol), "data",
+                               uuid.uuid4().hex)
+        return schema, lambda: _renumber(_file_entries(
+            aw.write_slices(tbl, out_dir, self.rows_per_file, sj), idx, sj))
+
+    def _finalize_spark(self, symbol: str, recs: list[StagedFile],
+                        idx: str | None, sort: bool | None,
+                        prev: "VersionManifest | None"):
+        """``_finalize_arrow``'s Spark twin: the same read, fill and order
+        as a plan over ``_read_staged``, written by ``_write_data_files``.
+        Row order comes from the sort keys, never from how Spark packs
+        files into partitions."""
+        df = self._read_staged(recs)
+        if idx is not None and _is_ts_type(df, idx):
+            df = self._index_to_ns_long(df, idx)
+        for c in self._staged_fills(df.schema, idx):
+            df = df.withColumn(c, F.coalesce(
+                F.col(c), _default_backfill_lit(df.schema[c].dataType)))
+        # segment_row_size contract: total staged rows from footers only
+        rows: int | None = sum(r.rows for r in recs)
+        sort = sort is not False and idx is not None
+        helpers = [c for c in _STAGE_HELPERS if c in df.columns]
+        if helpers:
+            # the helpers break index ties (reference compact keeps each
+            # segment's row order — test_sort.py test_stage_finalize) and
+            # alone give arrival order
+            keys = [idx, *helpers] if sort else helpers
+            n_parts = max(1, -(-rows // self.rows_per_file))
+            if n_parts == 1:   # one slice: a single-task sort, no exchange
+                df = df.coalesce(1).sortWithinPartitions(*keys)
+            else:
+                df = (df.repartitionByRange(n_parts, *keys[:1 if sort else 2])
+                        .sortWithinPartitions(*keys))
+            # the partitioning is final, so the writer must not coalesce
+            # again: under AQE a same-count coalesce on an explicit-count
+            # range exchange PERMUTES the partition order, and this
+            # sort=False write takes row order from part-file listing order
+            rows, sort = None, False
+            df = df.drop(*helpers)
+        df = self._encode_dict_columns(symbol, df)
+        if prev is not None:
+            df = self._align_index_phys(df, idx, prev)
+        return df.schema, lambda: self._write_data_files(
+            symbol, df, idx, sort=sort, rows_hint=rows, exact_slices=False)
 
     def _remove_segment_files(self, symbol: str, seg_files: list[str]) -> None:
         """Delete consumed staged segments; drop chunk dirs that emptied."""
@@ -5650,7 +5716,7 @@ class Library:
                                       delete_staged_data_on_failure: bool = False,
                                       stage_results=None) -> VersionManifest:
         """Reference ``library.py:1873``: k-way merge of unsorted staged
-        chunks == one Spark range shuffle + per-partition sort."""
+        chunks (``finalize_staged_data(sort=True)``)."""
         return self.finalize_staged_data(
             symbol, mode=mode, metadata=metadata, sort=True,
             staged_data=staged_data if staged_data is not None
@@ -5684,7 +5750,10 @@ class Library:
         ``version_store.sort_index``, pinned by test_append.py
         test_append_out_of_order_and_sort / test_sort_index): the repair
         path for symbols built from out-of-order ``validate_index=False``
-        appends. Idempotent; one Spark range shuffle of the data.
+        appends. Idempotent. It stable-sorts on (index, MultiIndex levels
+        >= 1, row id): on the driver through ``_rewrite_arrow``, or, where
+        that declines or a key is a float (pyarrow sorts NaN first), with a
+        Spark range shuffle.
 
         ``dynamic_schema`` is accepted for signature parity (schema already
         lives in the manifest here)."""
@@ -5696,15 +5765,28 @@ class Library:
         if idx is None:
             raise ArcticException(
                 f"{symbol!r} has no datetime index to sort by")
-        # PHYSICAL read, not read(): the public read's µs index view would
-        # truncate an ns-physical index on the rewrite (and sub-µs order is
-        # exactly what an out-of-order tick repair must preserve)
-        df = self._read_physical(prev)
         nm = prev.norm_meta or {}
         tiebreak = (nm["physical"][1:]
-                    if nm.get("index_type") == "multiindex" else None)
-        files = self._write_data_files(symbol, df, idx, sort=True,
-                                       tiebreak_cols=tiebreak)
+                    if nm.get("index_type") == "multiindex" else [])
+        keys = [idx, *tiebreak, ROW_ID]
+        phys = self._phys_schema(prev.schema_json)
+        floats = any(isinstance(f.dataType, (T.FloatType, T.DoubleType))
+                     for f in phys.fields if f.name in keys)
+        pieces = None if floats else self._rewrite_arrow(
+            prev, prev.files, lambda t: [(t.take(pc.sort_indices(
+                t, [(k, "ascending") for k in keys],
+                null_placement="at_start")), self.rows_per_file)])
+        if pieces is not None:
+            files = _renumber(pieces[0])
+        else:
+            # PHYSICAL read, not read(): the public read's µs index view
+            # would truncate an ns index (sub-µs order is what an
+            # out-of-order tick repair must preserve). The writer keeps
+            # the range partitions' order.
+            df = self._scan_files(prev, prev.files, phys, need_row_id=True)
+            files = self._write_data_files(
+                symbol, df.repartitionByRange(idx)
+                .sortWithinPartitions(*keys).drop(ROW_ID), idx, sort=False)
         m = VersionManifest(symbol, self._next_version(symbol), time.time_ns(),
                             idx, prev.schema_json, files, prev.metadata,
                             sorted="ASCENDING", norm_meta=prev.norm_meta)

@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 
 from arcticdb_spark import arrowwrite as aw
-from arcticdb_spark.catalog import Arctic
+from arcticdb_spark.catalog import Arctic, Library
 
 
 @pytest.fixture()
@@ -47,10 +47,11 @@ def _roundtrip(spark, tmp_path, sub, pdf, rows_per_file=1500):
 
 def test_fast_path_equivalence(spark, tmp_path, counting, monkeypatch):
     """write/append/stage+finalize round-trip byte-identically through the
-    Spark writer (source_table declines every frame) and the pyarrow
-    writer: same values, same per-file rows/offsets/ts bounds, same
-    manifest schema. Order-preserving writes (rowcount index, UNSORTED
-    index) slice exactly at rows_per_file on both."""
+    Spark writer (source_table and the driver finalize decline every
+    frame) and the pyarrow writer: same values, same per-file
+    rows/offsets/ts bounds, same manifest schema. Order-preserving writes
+    (rowcount index, UNSORTED index) slice exactly at rows_per_file on
+    both."""
     pdf = _frame()
     tail = _frame(800, 1).set_index(
         pd.date_range("2024-02-01", periods=800, freq="s"))
@@ -62,6 +63,8 @@ def test_fast_path_equivalence(spark, tmp_path, counting, monkeypatch):
         with monkeypatch.context() as mp:
             if mode == "spark":
                 mp.setattr(aw, "source_table", lambda df, src: None)
+                mp.setattr(Library, "_finalize_arrow",
+                           lambda *a, **k: "Spark writer arm")
             lib = _roundtrip(spark, tmp_path, f"m{mode}", pdf)
             lib.append("s", tail)
             lib.stage("st", pdf.iloc[::2])

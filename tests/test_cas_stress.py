@@ -28,6 +28,7 @@ import json
 import os
 import sys
 from concurrent.futures import ProcessPoolExecutor
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -36,7 +37,7 @@ import pytest
 pytestmark = pytest.mark.slow
 
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 N_WORKERS = 6
 OPS_PER_WORKER = 12

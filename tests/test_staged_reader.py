@@ -4,6 +4,7 @@ each staged footer and each chunk sidecar once, and ``read(incomplete=True)``
 unions the chunks under the same promoted schema without a Spark job."""
 import builtins
 import os
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -23,7 +24,9 @@ def _chunk(day: int, dtype="float64", n: int = 4) -> pd.DataFrame:
 def _jobs_run(spark, fn):
     """Spark jobs started by ``fn`` on this thread (its own job group)."""
     sc = spark.sparkContext
-    group = f"staged-reader-{id(fn)}"
+    # unique per call: the id of a freed lambda is reused by later ones,
+    # and a reused group name would count an earlier call's jobs too
+    group = f"staged-reader-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "staged reader job count")
     try:
         fn()
@@ -43,11 +46,14 @@ def test_finalize_opens_each_staged_footer_and_sidecar_once(
     sidecars = sorted({os.path.join(os.path.dirname(s),
                                     "_asdb_staged_meta.json") for s in segs})
     assert len(sidecars) == 3 and all(map(os.path.exists, sidecars))
-    footers, reads = [], []
+    footers, data_opens, reads = [], [], []
 
     class CountingParquetFile(pq.ParquetFile):
+        # an open handed a parsed footer (``metadata=``) reads data pages
+        # only; any other open parses the footer
         def __init__(self, source, *args, **kwargs):
-            footers.append(str(source))
+            (data_opens if kwargs.get("metadata") is not None
+             else footers).append(str(source))
             super().__init__(source, *args, **kwargs)
 
     real_open = builtins.open
@@ -61,6 +67,8 @@ def test_finalize_opens_each_staged_footer_and_sidecar_once(
     finalize(tmp_lib)
     monkeypatch.undo()
     assert {s: footers.count(s) for s in segs} == {s: 1 for s in segs}
+    # the driver finalize reads each file's data once, on its parsed footer
+    assert {s: data_opens.count(s) for s in segs} == {s: 1 for s in segs}
     assert {p: reads.count(p) for p in sidecars} == {p: 1 for p in sidecars}
     out = tmp_lib.read("sym", output_format="pandas")
     pd.testing.assert_frame_equal(
