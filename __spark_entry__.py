@@ -20,9 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import sys as _sys
+from pathlib import Path as _Path
 
-if "/root/repo" not in _sys.path:
-    _sys.path.insert(0, "/root/repo")
+# this checkout's package, whichever directory it was copied to
+_REPO = str(_Path(__file__).resolve().parent)
+if _REPO not in _sys.path:
+    _sys.path.insert(0, _REPO)
 
 from arcticdb_spark.query import QueryBuilder, col
 from arcticdb_spark.expr import where

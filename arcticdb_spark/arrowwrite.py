@@ -34,12 +34,14 @@ an explicit schema, and write-dedup content hashes are VALUE-based
 Eligibility is a strict whitelist — anything else falls back to the Spark
 writer unchanged:
 
-* the Spark frame handed to the writer must be the IDENTICAL object the
-  normalizer produced from the pandas frame (no intervening transform —
-  see :func:`source_table`);
-* every column dtype maps 1:1 between the pandas frame and the Spark
-  schema (plain numpy int8/16/32/64, float32/64, bool, and object columns
-  holding only str/None);
+* the library's normalizer (``Library._normalize``) hands the writer a
+  ``Normalized`` record whose arrow table came from
+  :func:`pandas_table`: every column type is one :func:`physical_type`
+  yields (int8/16/32/64, float32/64, bool, string). The record's Spark
+  schema is derived from that table's schema in Python, as Spark's
+  ``createDataFrame`` derives it, so no Spark frame exists unless a
+  transform needs one (dict encoding, void-column drop, index alignment,
+  a range filter) — and a transformed frame goes to the Spark writer;
 * the physical layout must be exactly reproducible driver-side: the
   stable ascending index sort of an already-monotonic frame, or an
   order-preserving (rowcount / UNSORTED / DESCENDING) write, each sliced
@@ -55,18 +57,14 @@ as well, for stored columns whose Spark type :func:`physical_type` maps.
 They cut exact ``rows_per_file`` slices where their Spark fallbacks
 sample range boundaries, so above ``rows_per_file`` rows the two paths
 hold the same rows in differently sized files.
-
-Explicit source: the library's normalizer returns the normalized pandas
-frame next to the Spark frame it built, and the write entry points hand
-that ``(spark_frame, pandas_frame)`` pair to the writer as an argument.
-No state outlives the call, so the pandas frame is released with the
-write that produced it.
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from dataclasses import dataclass
+from typing import Any
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -74,80 +72,101 @@ import pyarrow.parquet as pq
 ROW_METADATA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _type_map():
-    # Spark type -> (arrow type, accepted pandas dtype names). Both the
-    # plain numpy dtype and its nullable extension twin are accepted (the
-    # normalizer's demoted ns index is extension Int64 so NaT can be NA);
-    # pa.Array.from_pandas converts either, mask -> null.
+def _types():
+    # Spark type -> the arrow type this writer stores it as
     from pyspark.sql import types as T
     return {
-        T.LongType: (pa.int64(), ("int64", "Int64")),
-        T.IntegerType: (pa.int32(), ("int32", "Int32")),
-        T.ShortType: (pa.int16(), ("int16", "Int16")),
-        T.ByteType: (pa.int8(), ("int8", "Int8")),
-        T.DoubleType: (pa.float64(), ("float64", "Float64")),
-        T.FloatType: (pa.float32(), ("float32", "Float32")),
-        T.BooleanType: (pa.bool_(), ("bool", "boolean")),
+        T.LongType: pa.int64(),
+        T.IntegerType: pa.int32(),
+        T.ShortType: pa.int16(),
+        T.ByteType: pa.int8(),
+        T.DoubleType: pa.float64(),
+        T.FloatType: pa.float32(),
+        T.BooleanType: pa.bool_(),
+        T.StringType: pa.string(),
     }
 
 
 def physical_type(dtype) -> "pa.DataType | None":
     """The arrow type this writer stores a Spark ``dtype`` column as, or
     None when the type is outside the whitelist."""
+    return _types().get(type(dtype))
+
+
+def pandas_table(pdf) -> "pa.Table | str":
+    """``pdf`` as the arrow table this writer writes, or why it cannot be
+    written here (the caller then builds a Spark frame).
+
+    The table is ``pa.Table.from_pandas`` of the frame, the conversion
+    Spark's own ``createDataFrame`` infers its schema from, so
+    ``from_arrow_schema`` of the table's schema is the Spark frame's
+    schema. Every column type must be one :func:`physical_type` yields
+    (``large_string``, from pyarrow-backed strings, is cast to
+    ``string``)."""
+    if len(pdf.columns) == 0:
+        return "the frame has no columns"
+    try:
+        tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    except (pa.ArrowException, TypeError, ValueError) as e:
+        return f"pyarrow cannot convert the frame ({type(e).__name__})"
+    writable = set(_types().values())
+    for i, f in enumerate(tbl.schema):
+        if pa.types.is_large_string(f.type):
+            tbl = tbl.set_column(i, f.name, tbl.column(i).cast(pa.string()))
+        elif f.type not in writable:
+            return (f"column {f.name!r} is {f.type}, outside "
+                    "arrowwrite.physical_type")
+    return tbl
+
+
+def spark_schema(tbl: "pa.Table", uint64_cols=()) -> Any:
+    """The Spark schema of a :func:`pandas_table` table, derived in Python
+    as Spark's ``createDataFrame`` derives it from the same conversion,
+    with the uint64 marker on the ``uint64_cols`` bit-pattern columns."""
     from pyspark.sql import types as T
-    if isinstance(dtype, T.StringType):
-        return pa.string()
-    m = _type_map().get(type(dtype))
-    return None if m is None else m[0]
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from arcticdb_spark.expr import UINT64_META
+    return T.StructType([
+        T.StructField(f.name, f.dataType, f.nullable, {UINT64_META: True})
+        if f.name in uint64_cols else f
+        for f in from_arrow_schema(tbl.schema).fields])
 
 
-def source_table(df, src) -> "pa.Table | None":
-    """The arrow table to write for the Spark frame ``df``, built from its
-    pandas source, or None to mean "use the Spark writer".
+@dataclass
+class Normalized:
+    """One write input after ``Library._normalize``: the normalized pandas
+    frame (None for Spark, Arrow and ndarray input), its norm meta and its
+    Spark schema. ``table`` is the arrow table this writer writes
+    (:func:`pandas_table`), or None with ``why`` saying why not.
+    ``frame()`` is the Spark frame; for a record with a table it is built
+    on the first call, so a write that needs no transform builds none."""
+    pdf: Any
+    meta: "dict | None"
+    schema: Any
+    table: "pa.Table | None" = None
+    why: "str | None" = None
+    _frame: Any = None
+    _build: Any = None
 
-    ``src`` is the normalizer's ``(spark_frame, pandas_frame)`` pair (the
-    pandas frame is None for Spark, Arrow and ndarray inputs). The pandas
-    frame is used only when ``df`` IS that Spark frame: any transform in
-    between (dict encoding, void-column drop, index alignment, a range
-    filter) could change values, so it falls back. None too when any
-    column falls outside the whitelist."""
-    import pandas as pd
-    from pandas.api.types import infer_dtype
-    from pyspark.sql import types as T
+    @classmethod
+    def of(cls, frame, meta, why: str, pdf=None) -> "Normalized":
+        """A record for an input whose Spark frame is already built."""
+        return cls(pdf, meta, frame.schema, why=why, _frame=frame)
 
-    if src is None or df is not src[0]:
-        return None
-    pdf = src[1]
-    if pdf is None or len(pdf) == 0:
-        return None
-    spark_schema = df.schema
-    names = [f.name for f in spark_schema.fields]
-    if [str(c) for c in pdf.columns] != names:
-        return None
-    tmap = _type_map()
-    arrays, fields = [], []
-    for pos, f in enumerate(spark_schema.fields):
-        col = pdf.iloc[:, pos]
-        dt = col.dtype
-        if isinstance(f.dataType, T.StringType):
-            if isinstance(dt, pd.StringDtype):
-                pass
-            elif dt == object:
-                # str/None only (binary payloads, lists, mixed go to
-                # Spark); "empty" = all-null object column typed string
-                if infer_dtype(col, skipna=True) not in ("string", "empty"):
-                    return None
-            else:
-                return None
-            arr = pa.Array.from_pandas(col, type=pa.string())
-        else:
-            m = tmap.get(type(f.dataType))
-            if m is None or str(dt) not in m[1]:
-                return None
-            arr = pa.Array.from_pandas(col, type=m[0])
-        arrays.append(arr)
-        fields.append(pa.field(f.name, arr.type, nullable=True))
-    return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
+    @property
+    def columns(self) -> list:
+        return self.schema.fieldNames()
+
+    def with_meta(self, **entries) -> "Normalized":
+        """This record with ``entries`` added to its norm meta."""
+        self.meta = {**(self.meta or {}), **entries}
+        return self
+
+    def frame(self):
+        if self._frame is None:
+            self._frame, self._build = self._build(), None
+        return self._frame
 
 
 def write_slices(table: "pa.Table", out_dir: str, sizes,

@@ -1245,6 +1245,11 @@ def _is_ts_type(df: DataFrame, colname: str) -> bool:
         return False
 
 
+def _spark(df) -> DataFrame:
+    """The Spark frame of a write input (a Normalized record or a frame)."""
+    return df.frame() if isinstance(df, aw.Normalized) else df
+
+
 def _demote_ns(pdf, colname, tzs: dict) -> bool:
     """Replace a demoted datetime index column with exact Int64 ns in place
     (NaT -> NA so Spark stores NULL); records the zone in ``tzs`` when
@@ -1530,7 +1535,7 @@ class Library:
         self._dict_map_cache[(symbol, col)] = (sig, mp)
         return mp
 
-    def _encode_dict_columns(self, symbol: str, sdf: DataFrame) -> DataFrame:
+    def _encode_dict_columns(self, symbol: str, sdf):
         """Replace each declared dictionary column (string-typed, present)
         with its int64 content-hash code and append the new (code, value)
         pairs to the sidecar. EXACTNESS CONTRACT: before anything is
@@ -1556,6 +1561,7 @@ class Library:
                 and isinstance(sdf.schema[c].dataType, T.StringType)]
         if not cols:
             return sdf
+        sdf = _spark(sdf)
         u = None
         for c in cols:
             part = (sdf.select(F.lit(c).alias("col"),
@@ -1993,11 +1999,10 @@ class Library:
         return max(tops) + 1
 
     # ---- write paths ----
-    def _write_data_files(self, symbol: str, df: DataFrame,
+    def _write_data_files(self, symbol: str, df,
                           index_column: str | None, sort: bool = True,
                           rows_hint: int | None = None,
-                          exact_slices: bool = True,
-                          src: tuple | None = None
+                          exact_slices: bool = True
                           ) -> list[FileEntry]:
         """Materialize df as Parquet under data/<uuid>/, ts-sorted, and return
         footer-derived FileEntries in index order.
@@ -2008,21 +2013,20 @@ class Library:
         Without a hint Spark's partitioning stands — a Spark-frame write
         is already sized by the cluster's partitioning.
 
-        ``src`` is the ``(spark_frame, pandas_frame)`` pair from
-        ``_normalize``; see ``arrowwrite.source_table`` for when the pandas
-        frame is written directly."""
+        ``df`` is a Spark frame or a ``Normalized`` record from
+        ``_normalize``, written by ``_arrow_write_data_files`` if it can."""
         out_dir = os.path.join(self._data_sym_dir(symbol), "data", uuid.uuid4().hex)
         os.makedirs(os.path.dirname(out_dir), exist_ok=True)
         # pyarrow fast path: a pandas-sourced frame whose layout is exactly
         # reproducible driver-side skips the Spark job entirely (guide §5 —
         # a driver-resident frame gains nothing from a cluster round-trip);
-        # every ineligible case returns None and takes the Spark writer
-        if rows_hint is not None:
+        # every ineligible case returns a reason and takes the Spark writer
+        if rows_hint is not None and isinstance(df, aw.Normalized):
             entries = self._arrow_write_data_files(
-                df, src, out_dir, index_column, sort, rows_hint,
-                exact_slices)
-            if entries is not None:
+                df, out_dir, index_column, sort, rows_hint, exact_slices)
+            if not isinstance(entries, str):
                 return entries
+        df = _spark(df)
         if not df.columns:
             # every column was EMPTY/void (reference supports writing an
             # all-None frame, test_empty_column_type.py): parquet cannot
@@ -2118,36 +2122,35 @@ class Library:
             entries.sort(key=lambda e: (e.ts_min if e.ts_min is not None else 0, e.path))
         return _renumber(entries)
 
-    def _arrow_write_data_files(self, df: DataFrame, src, out_dir: str,
+    def _arrow_write_data_files(self, n: aw.Normalized, out_dir: str,
                                 index_column: str | None, sort: bool,
                                 rows_hint: int, exact_slices: bool
-                                ) -> "list[FileEntry] | None":
-        """pyarrow write fast path for a pandas-sourced frame (see
-        arrowwrite.py for the physical contract). Returns None whenever the
-        Spark writer's layout is not exactly reproducible driver-side —
-        the caller then takes the normal Spark path."""
+                                ) -> "list[FileEntry] | str":
+        """pyarrow write fast path for a pandas-sourced record (see
+        arrowwrite.py for the physical contract). Returns why it declines
+        whenever the Spark writer's layout is not exactly reproducible
+        driver-side — the caller then takes the normal Spark path."""
+        tbl = n.table
+        if tbl is None:
+            return n.why
         if rows_hint > self.rows_per_file and not exact_slices:
             # repartitionByRange samples its boundaries; coalesce places
             # them by partition
-            return None
-        slice_rows = min(self.rows_per_file, rows_hint)
-        tbl = aw.source_table(df, src)
-        if tbl is None or tbl.num_rows != rows_hint:
-            return None
+            return "a sampled multi-file layout"
         if index_column and sort:
             if index_column not in tbl.column_names:
-                return None
+                return "the index column is not stored"
             col = tbl.column(index_column)
             if col.type != pa.int64() or col.null_count:
-                return None
+                return "the index column is not a null-free int64"
             import numpy as np
-            vals = col.to_numpy()
-            if len(vals) > 1 and (np.diff(vals) < 0).any():
+            if (np.diff(col.to_numpy()) < 0).any():
                 # the stable index sort would actually reorder rows; only
                 # the identity case (already-monotonic input, which is what
                 # validate_index admits) is replicated driver-side
-                return None
-        schema_json = df.schema.json()
+                return "the index sort would reorder rows"
+        slice_rows = min(self.rows_per_file, rows_hint)
+        schema_json = n.schema.json()
         return _renumber(_file_entries(
             aw.write_slices(tbl, out_dir, slice_rows, schema_json),
             index_column, schema_json))
@@ -2166,11 +2169,12 @@ class Library:
         return index_column
 
     def _normalize(self, df, index_column: str | None = None
-                   ) -> tuple[DataFrame, Any, dict | None]:
-        """pandas/Spark input -> (Spark frame, normalized pandas frame,
-        normalization metadata). The pandas frame is the exact source of
-        the Spark frame (the pyarrow write fast path writes it directly,
-        arrowwrite.source_table); None for Spark, Arrow and ndarray input.
+                   ) -> aw.Normalized:
+        """Any write input -> an ``arrowwrite.Normalized`` record. A
+        non-empty pandas frame whose columns ``arrowwrite.pandas_table``
+        converts gets its Spark schema in Python, with no py4j call, and
+        its Spark frame only if ``frame()`` is called. Other input builds
+        its Spark frame here, and the record says why in ``why``.
 
         Index demotion follows the reference (_normalization.py:923-959):
         a DatetimeIndex becomes the physical ts column; MultiIndex level 0
@@ -2183,7 +2187,7 @@ class Library:
         index_column: "index_column value should be ignored when writing
         as pandas")."""
         if isinstance(df, DataFrame):
-            return df, None, None
+            return aw.Normalized.of(df, None, "Spark input")
         import numpy as np
         import pandas as pd
         from arcticdb_spark.timeframe import TimeFrame
@@ -2194,10 +2198,7 @@ class Library:
             pdf = pd.DataFrame(
                 dict(zip(df.columns_names, df.columns_values)),
                 index=pd.DatetimeIndex(df.times))
-            sdf, src_pdf, meta = self._normalize(pdf)
-            meta = dict(meta or {})
-            meta["timeframe"] = True
-            return sdf, src_pdf, meta
+            return self._normalize(pdf).with_meta(timeframe=True)
         try:
             import pyarrow as pa
         except ImportError:  # pragma: no cover
@@ -2215,7 +2216,8 @@ class Library:
                     if isinstance(df, pa.RecordBatch) else df)
             try:
                 tbl, ameta = self._normalize_arrow_ns(orig, index_column)
-                return self.spark.createDataFrame(tbl), None, ameta
+                return aw.Normalized.of(self.spark.createDataFrame(tbl),
+                                        ameta, "Arrow input")
             except Exception:
                 # exotic arrow types (dictionary etc.): pandas fallback
                 return self._normalize(orig.to_pandas())
@@ -2225,11 +2227,9 @@ class Library:
             # denormalization restores a Series (unnamed stays unnamed)
             name = df.name
             col = str(name) if name is not None else "__series__"
-            sdf, src_pdf, meta = self._normalize(df.rename(col).to_frame())
-            meta = dict(meta or {})
-            meta["series"] = {"name": None if name is None else str(name),
-                              "col": col}
-            return sdf, src_pdf, meta
+            return self._normalize(df.rename(col).to_frame()).with_meta(
+                series={"name": None if name is None else str(name),
+                        "col": col})
         if isinstance(df, np.ndarray):
             # reference NdArrayNormalizer (_normalization.py:1025-1051):
             # any-dimensional array flattens row-major into one column; the
@@ -2243,9 +2243,10 @@ class Library:
                     pdf, schema=_schema_from_pandas_dtypes(pdf))
             else:
                 sdf = self.spark.createDataFrame(pdf)
-            return sdf, None, {"index_type": "ndarray",
-                               "shape": [int(s) for s in df.shape],
-                               "dtype": str(df.dtype)}
+            return aw.Normalized.of(sdf, {"index_type": "ndarray",
+                                          "shape": [int(s) for s in df.shape],
+                                          "dtype": str(df.dtype)},
+                                    "ndarray input")
         if isinstance(df, pd.DataFrame):
             pdf = df
             # pandas Categorical columns (reference _to_primitive,
@@ -2287,10 +2288,7 @@ class Library:
                         dec = col.astype(object)
                     pdf.isetitem(pos, dec)
                     cat_meta[str(c)] = {"kind": kind, "categories": vals}
-                sdf, src_pdf, meta = self._normalize(pdf)
-                meta = dict(meta or {})
-                meta["categoricals"] = cat_meta
-                return sdf, src_pdf, meta
+                return self._normalize(pdf).with_meta(categoricals=cat_meta)
             # column names must be str or int (reference _check_valid_name,
             # _normalization.py:511 — "bools are a subclass of int, so we
             # need to check for them explicitly"; pinned by test_write.py
@@ -2367,10 +2365,7 @@ class Library:
                             f"column {c!r} mixes strings with other types "
                             f"(pandas inferred {k!r}); normalize it first")
             if renamed is not None:
-                sdf, src_pdf, meta = self._normalize(pdf)
-                meta = dict(meta or {})
-                meta["renamed_cols"] = renamed
-                return sdf, src_pdf, meta
+                return self._normalize(pdf).with_meta(renamed_cols=renamed)
             meta: dict | None = None
             tzs: dict[str, str] = {}
             if isinstance(pdf.index, pd.MultiIndex):
@@ -2523,6 +2518,12 @@ class Library:
                         pos = list(pdf.columns).index(c)
                         pdf.isetitem(pos, pdf.iloc[:, pos]
                                      .to_numpy().astype("int64"))
+            tbl = aw.pandas_table(pdf) if len(pdf) else "the frame is empty"
+            if not isinstance(tbl, str):
+                schema = aw.spark_schema(tbl, (meta or {}).get("uint64", ()))
+                return aw.Normalized(pdf, meta, schema, table=tbl,
+                                     _build=lambda: self.spark.createDataFrame(
+                                         pdf, schema=schema))
             if len(pdf) == 0:
                 # schema inference needs rows; map pandas dtypes explicitly
                 # (reference supports empty writes: test_empty_writes)
@@ -2531,7 +2532,6 @@ class Library:
                     # test_write_no_rows_and_columns): pandas->records
                     # conversion trips on a fieldless frame — build the
                     # zero-column Spark frame directly
-                    from pyspark.sql import types as T
                     sdf = self.spark.createDataFrame([], T.StructType([]))
                 else:
                     sdf = self.spark.createDataFrame(
@@ -2562,7 +2562,7 @@ class Library:
                 # strict int->f64 promotion, type_utils.cpp:94) needs it to
                 # convert old epochs by unsigned VALUE at read time
                 sdf = _attach_uint64_marker(sdf, {"uint64": meta["uint64"]})
-            return sdf, pdf, meta
+            return aw.Normalized.of(sdf, meta, tbl, pdf)
         raise ArcticUnsupportedDataTypeException(
             f"cannot normalize {type(df).__name__}: write() takes a Spark or "
             "pandas DataFrame; use write_pickle() for arbitrary objects")
@@ -2743,9 +2743,9 @@ class Library:
         return [f.name for f in schema.fields
                 if isinstance(f.dataType, T.NullType)]
 
-    def _drop_void(self, sdf: DataFrame) -> DataFrame:
+    def _drop_void(self, sdf):
         vc = self._void_cols(sdf.schema)
-        return sdf.drop(*vc) if vc else sdf
+        return _spark(sdf).drop(*vc) if vc else sdf
 
     def _scan_files(self, m: "VersionManifest", files: list,
                     phys, need_row_id: bool = False) -> DataFrame:
@@ -3068,20 +3068,21 @@ class Library:
                 idx, F.unix_micros(F.col(idx).cast("timestamp")) * F.lit(1000))
         return sdf
 
-    def _align_index_phys(self, sdf: DataFrame, idx: str | None,
-                          prev: "VersionManifest") -> DataFrame:
+    def _align_index_phys(self, sdf, idx: str | None,
+                          prev: "VersionManifest"):
         """Make an incoming frame's index column match the stored symbol's
         PHYSICAL index representation (LONG ns vs µs timestamp) before
-        schema validation / overlap math on append/update/merge."""
+        schema validation / overlap math on append/update/merge (a
+        Normalized input stays one unless it changes)."""
         if idx is None or idx not in sdf.columns:
             return sdf
         want_ns = bool((prev.norm_meta or {}).get("index_ns"))
         if want_ns and _is_ts_type(sdf, idx):
-            return self._index_to_ns_long(sdf, idx)
+            return self._index_to_ns_long(_spark(sdf), idx)
         if not want_ns and _is_long_type(sdf, idx) \
                 and _is_ts_type_json(prev.schema_json, idx):
             # legacy µs-physical symbol: truncate the incoming ns index
-            return sdf.withColumn(
+            return _spark(sdf).withColumn(
                 idx, F.timestamp_micros(
                     F.expr(f"(`{idx}` - pmod(`{idx}`, 1000)) div 1000")))
         return sdf
@@ -3188,8 +3189,8 @@ class Library:
                 "E_UNSORTED_DATA write requires a monotonically increasing "
                 f"datetime index (input is {sorted_flag}); pass "
                 "validate_index=False to store it as-given")
-        sdf, pdf, norm_meta = self._normalize(df, index_column)
-        src = (sdf, pdf)
+        sdf = self._normalize(df, index_column)
+        norm_meta = sdf.meta
         nm = norm_meta or {}
         if nm.get("index_ns"):
             p = nm["physical"]
@@ -3210,7 +3211,7 @@ class Library:
                 # LONG ns like the pandas path (an explicitly-designated
                 # LONG index column is already ns — the reference's index
                 # type IS int64 ns, types.hpp:73)
-                sdf = self._index_to_ns_long(sdf, idx)
+                sdf = self._index_to_ns_long(sdf.frame(), idx)
                 norm_meta = {**nm, "index_ns": True}
         # equal timestamps keep INPUT row order (the reference never
         # reorders within a ts value — MultiIndex level values do NOT
@@ -3221,8 +3222,7 @@ class Library:
             symbol, self._drop_void(sdf), idx,
             sort=(sorted_flag == "ASCENDING"),
             rows_hint=(len(df) if isinstance(df, (pd.DataFrame, pd.Series))
-                       else None),
-            src=src)
+                       else None))
         dedup_base = None
         if dedup:
             self._content_hashes(files)
@@ -3719,8 +3719,7 @@ class Library:
                 f"{prev.sorted if prev.sorted != 'ASCENDING' else chunk_sorted}"
                 " (pass validate_index=False to append anyway)")
         idx = prev.index_column
-        sdf, pdf, inm = self._normalize(df, idx)
-        src = (sdf, pdf)
+        sdf = self._normalize(df, idx)
         if idx is not None and idx not in sdf.columns:
             # reference StreamDescriptorMismatch naming the index column
             # (hypothesis test_append.py
@@ -3744,7 +3743,8 @@ class Library:
                     f"append to {symbol!r}: E_INCOMPATIBLE_INDEX — the "
                     f"stored index column(s) {missing} are missing from the "
                     f"incoming frame (columns: {sdf.columns})")
-        out_norm_meta = self._uint64_meta_for(prev, inm, sdf.schema, "append")
+        out_norm_meta = self._uint64_meta_for(prev, sdf.meta, sdf.schema,
+                                             "append")
         sdf = self._align_index_phys(sdf, idx, prev)
         sdf = self._encode_dict_columns(symbol, sdf)
         if self.dynamic_schema:
@@ -3757,8 +3757,7 @@ class Library:
             symbol, self._drop_void(sdf), idx,
             sort=(chunk_sorted == "ASCENDING"),
             rows_hint=(len(df) if isinstance(df, (_pd.DataFrame, _pd.Series))
-                       else None),
-            src=src)
+                       else None))
         overlap = False
         if idx and new_files and prev.ts_max is not None:
             mins = [f.ts_min for f in new_files if f.ts_min is not None]
@@ -3930,8 +3929,7 @@ class Library:
             # UnsortedDataException on update of unsorted data)
             raise UnsortedDataException(
                 f"update of {symbol!r}: symbol is {prev.sorted}")
-        sdf, pdf, inm = self._normalize(df, idx)
-        src = (sdf, pdf)
+        sdf = self._normalize(df, idx)
         if idx is not None and idx not in sdf.columns:
             # reference StreamDescriptorMismatch naming the index column
             # (hypothesis test_append.py
@@ -3941,8 +3939,9 @@ class Library:
             raise SchemaException(
                 f"update to {symbol!r}: the stored index column {idx!r} is "
                 f"missing from the incoming frame (columns: {sdf.columns})")
-        out_norm_meta = self._uint64_meta_for(prev, inm, sdf.schema, "update")
-        if pdf is None and not sdf.head(1):  # (pandas input: counted above)
+        out_norm_meta = self._uint64_meta_for(prev, sdf.meta, sdf.schema,
+                                             "update")
+        if sdf.pdf is None and not sdf.frame().head(1):  # pandas: see above
             return prev  # zero-row update: nothing done, no new version
         sdf = self._align_index_phys(sdf, idx, prev)
         sdf = self._encode_dict_columns(symbol, sdf)
@@ -3956,14 +3955,16 @@ class Library:
             # representable ns extremes so the keep/rewrite split and the
             # boundary filter below stay plain int/timestamp comparisons
             lo, hi = _norm_range_ns(date_range)
+            sdf = _spark(sdf)
             sdf = sdf.filter(F.col(idx).between(
                 _idx_bound(sdf, idx, lo), _idx_bound(sdf, idx, hi)))
         else:
-            # the index bounds from the pandas source while the aligned
-            # frame still is its Spark twin (no job); else from Spark
-            mm = ((pdf[idx].min(), pdf[idx].max()) if sdf is src[0]
-                  and pdf is not None and pdf[idx].dtype.kind == "i"
-                  else sdf.agg(F.min(idx), F.max(idx)).first())
+            # the index bounds from the arrow table while the input needs
+            # no transform (no job); else from Spark
+            tbl = sdf.table if isinstance(sdf, aw.Normalized) else None
+            mm = (list(pc.min_max(tbl[idx]).as_py().values())
+                  if tbl is not None and tbl[idx].type == pa.int64()
+                  else _spark(sdf).agg(F.min(idx), F.max(idx)).first())
             if pd.isna(mm[0]):
                 return prev
             lo, hi = pd.Timestamp(mm[0]).value, pd.Timestamp(mm[1]).value
@@ -3971,8 +3972,7 @@ class Library:
         new_entries = self._write_data_files(
             symbol, self._drop_void(sdf), idx,
             rows_hint=(len(df) if isinstance(df, (pd.DataFrame, pd.Series))
-                       else None),
-            src=src)
+                       else None))
         m = VersionManifest(symbol, self._next_version(symbol), time.time_ns(), idx,
                             schema_json, _renumber(below + new_entries + above),
                             metadata,  # per-version, verbatim (None clears;
@@ -4018,13 +4018,13 @@ class Library:
         if idx is None:
             raise ArcticException(
                 "merge_experimental requires a timestamp-indexed symbol")
-        src, _, src_nm = self._normalize(source, idx)
+        src = self._normalize(source, idx)
         # uint64 source columns: bit patterns join/compare exactly against
         # the stored patterns, but a signed<->uint64 flip must not slip
         # through (same rule as append/update)
-        self._uint64_meta_for(prev, src_nm, src.schema, "merge")
+        self._uint64_meta_for(prev, src.meta, src.schema, "merge")
         src = self._align_index_phys(src, idx, prev)
-        src = self._encode_dict_columns(symbol, src)
+        src = _spark(self._encode_dict_columns(symbol, src))
         target = self._read_physical(prev)
         keys = [idx] + [c for c in (on or []) if c != idx]
         if matched == "update":
@@ -5116,7 +5116,7 @@ class Library:
                     "index; pass validate_index=False, sort_on_index=True, "
                     "or sort_columns to resolve")
             index_column = False      # pandas chunks keep their own index
-        sdf, pdf, nmeta = self._normalize(
+        n = self._normalize(
             df, self._resolve_index_column_arg(df, index_column or None))
         # time-prefixed chunk dir: lexicographic listing = stage order, so
         # un-sorted finalize concatenates in arrival order (reference
@@ -5130,13 +5130,13 @@ class Library:
         # equal timestamps — test_sort.py test_stage_finalize); dropped
         # before the finalized version materializes
         seq = time.time_ns()
-        base = self._drop_void(sdf)
-        if not self._arrow_stage_write(base, (sdf, pdf), out, seq):
-            (base
+        base = self._drop_void(n)
+        if self._arrow_stage_write(base, out, seq) is not None:
+            (_spark(base)
              .withColumn("__stage_seq__", F.lit(seq))
              .withColumn("__stage_pos__", F.monotonically_increasing_id())
              .write.mode("overwrite").parquet(out))
-        nm = nmeta or {}
+        nm = n.meta or {}
         side: dict = {}
         if nm.get("index_ns"):
             # sidecar: the demoted index is a LONG ns column, which type
@@ -5189,31 +5189,31 @@ class Library:
                       if fn.endswith(".parquet"))
         return StageResult(symbol, segs)
 
-    def _arrow_stage_write(self, sdf: DataFrame, src, out: str,
-                           seq: int) -> bool:
+    def _arrow_stage_write(self, n, out: str, seq: int) -> str | None:
         """pyarrow fast path for a pandas-sourced staged chunk: one file,
         driver-written, with the ``__stage_seq__``/``__stage_pos__`` order
         helpers appended as int64 columns. ``__stage_pos__`` is 0..n-1 —
         the same ORDER as the Spark path's partition-major
         monotonically_increasing_id (the helpers are stable-sort tiebreak
         keys only and are dropped before any version materializes).
-        Returns False when ineligible; the caller then takes the Spark
-        writer."""
-        tbl = aw.source_table(sdf, src)
-        if tbl is None:
-            return False
+        Returns why it declines, or None once written; on a decline the
+        caller takes the Spark writer."""
+        if not isinstance(n, aw.Normalized):
+            return "a transformed frame"
+        if n.table is None:
+            return n.why
         import numpy as np
-        n = tbl.num_rows
+        rows = n.table.num_rows
+        tbl = n.table.append_column(
+            "__stage_seq__", pa.array(np.full(rows, seq, dtype=np.int64)))
         tbl = tbl.append_column(
-            "__stage_seq__", pa.array(np.full(n, seq, dtype=np.int64)))
-        tbl = tbl.append_column(
-            "__stage_pos__", pa.array(np.arange(n, dtype=np.int64)))
+            "__stage_pos__", pa.array(np.arange(rows, dtype=np.int64)))
         schema = T.StructType(
-            list(sdf.schema.fields)
+            list(n.schema.fields)
             + [T.StructField("__stage_seq__", T.LongType(), False),
                T.StructField("__stage_pos__", T.LongType(), False)])
-        aw.write_slices(tbl, out, n, schema.json())
-        return True
+        aw.write_slices(tbl, out, rows, schema.json())
+        return None
 
     def _staged_segment_files(self, symbol: str) -> list[str]:
         stg = self._staging_dir(symbol)

@@ -30,8 +30,11 @@ MinHash band table alone), more than the query's own work at small scale.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1016,7 +1019,7 @@ def simhash(text: Column | str, bits: int = _SIMHASH_BITS) -> Column:
     tok_hash = sql_apply(text, lambda t: (
         f"transform(array_distinct({tokens_sql(f'lower({t})')}), __w -> "
         f"CAST(conv(substring(md5(__w), 1, 15), 16, 10) AS BIGINT))"))
-    return _simhash_vote_udf()(tok_hash)
+    return _simhash_vote_udf(SparkContext._active_spark_context)(tok_hash)
 
 
 def _simhash_vote_batch(hashes, bits: int = _SIMHASH_BITS) -> np.ndarray:
@@ -1061,7 +1064,11 @@ def _simhash_vote_batch(hashes, bits: int = _SIMHASH_BITS) -> np.ndarray:
     return out
 
 
-def _simhash_vote_udf():
+@functools.lru_cache(maxsize=1)
+def _simhash_vote_udf(sc):
+    """The vote UDF, built once per SparkContext ``sc`` (the cache key):
+    its first application pickles the function and registers it in that
+    context's JVM, so a restarted session builds a new one."""
     @F.pandas_udf("long")
     def vote(hashes: pd.Series) -> pd.Series:
         return pd.Series(_simhash_vote_batch(hashes))

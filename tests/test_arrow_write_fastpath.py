@@ -47,7 +47,7 @@ def _roundtrip(spark, tmp_path, sub, pdf, rows_per_file=1500):
 
 def test_fast_path_equivalence(spark, tmp_path, counting, monkeypatch):
     """write/append/stage+finalize round-trip byte-identically through the
-    Spark writer (source_table and the driver finalize decline every
+    Spark writer (pandas_table and the driver finalize decline every
     frame) and the pyarrow writer: same values, same per-file
     rows/offsets/ts bounds, same manifest schema. Order-preserving writes
     (rowcount index, UNSORTED index) slice exactly at rows_per_file on
@@ -62,7 +62,7 @@ def test_fast_path_equivalence(spark, tmp_path, counting, monkeypatch):
         counting["n"] = 0
         with monkeypatch.context() as mp:
             if mode == "spark":
-                mp.setattr(aw, "source_table", lambda df, src: None)
+                mp.setattr(aw, "pandas_table", lambda pdf: "Spark writer arm")
                 mp.setattr(Library, "_finalize_arrow",
                            lambda *a, **k: "Spark writer arm")
             lib = _roundtrip(spark, tmp_path, f"m{mode}", pdf)

@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 from arcticdb_spark import arrowwrite as aw
 from arcticdb_spark import catalog
 from arcticdb_spark.catalog import Arctic, Library, LibraryOptions
-from tests.test_staged_reader import _jobs_run
+from tests.counters import jobs_run
 
 T0 = pd.Timestamp("2024-01-01")
 
@@ -85,8 +85,8 @@ def _finalize(lib, monkeypatch, sym, path, **kw):
 
     with monkeypatch.context() as mp:
         mp.setattr(Library, "_finalize_arrow", spy)
-        jobs = _jobs_run(lib.spark,
-                         lambda: lib.finalize_staged_data(sym, **kw))
+        jobs = jobs_run(lib.spark,
+                        lambda: lib.finalize_staged_data(sym, **kw))
     return got, jobs
 
 
@@ -302,7 +302,7 @@ def test_sort_index_keeps_row_order_of_ties(spark, tmp_lib, monkeypatch,
     with monkeypatch.context() as mp, _spark_path(spark, path):
         if path != "driver":
             mp.setattr(Library, "_rewrite_arrow", lambda *a, **k: None)
-        jobs = _jobs_run(spark, lambda: tmp_lib.sort_index("sym"))
+        jobs = jobs_run(spark, lambda: tmp_lib.sort_index("sym"))
     assert (jobs == 0) == (path == "driver")
     pd.testing.assert_frame_equal(
         tmp_lib.read("sym", output_format="pandas"),

@@ -19,6 +19,7 @@ from arcticdb_spark import QueryBuilder, arrowquery
 from arcticdb_spark import catalog
 from arcticdb_spark.catalog import Arctic, LibraryOptions
 from arcticdb_spark.expr import where
+from tests.counters import jobs_run
 
 T0 = pd.Timestamp("2024-01-01")
 N = 48
@@ -240,18 +241,6 @@ def test_division_by_zero_is_ieee(lib):
     assert lib.read("div", query_builder=q).count() == 1
 
 
-def _jobs_run(spark, fn):
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    group = f"qb-driver-{id(fn)}"
-    sc.setJobGroup(group, "qb driver job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(st.getJobIdsForGroup(group))
-
-
 def test_driver_reads_run_no_spark_job(spark, lib):
     b = _builders()
     for name in ("resample", "groupby_str", "project"):
@@ -259,7 +248,7 @@ def test_driver_reads_run_no_spark_job(spark, lib):
             return lib.read("ns", query_builder=b[name],
                             output_format="pandas")
         fn()
-        assert _jobs_run(spark, fn) == 0, name
+        assert jobs_run(spark, fn) == 0, name
 
 
 @pytest.mark.parametrize("case", ["uint64", "cap", "epoch", "head"])

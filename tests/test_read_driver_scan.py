@@ -12,6 +12,7 @@ import pytest
 from arcticdb_spark import QueryBuilder
 from arcticdb_spark.catalog import Arctic, Library, LibraryOptions
 from arcticdb_spark.timeframe import TimeFrame
+from tests.counters import jobs_run
 
 T0 = pd.Timestamp("2024-01-01")
 
@@ -159,22 +160,6 @@ def test_date_range_bounds_are_inclusive(lib):
     assert len(out) == f1.rows + f2.rows
 
 
-def _jobs_run(spark, fn):
-    """Spark jobs started by ``fn``: those of a fresh job group on this
-    thread plus the ungrouped ones (read_batch reads on pool threads)."""
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    group = f"driver-scan-{id(fn)}"
-    before = set(st.getJobIdsForGroup(None))
-    sc.setJobGroup(group, "driver scan job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return (len(st.getJobIdsForGroup(group))
-            + len(set(st.getJobIdsForGroup(None)) - before))
-
-
 def test_plain_reads_run_no_spark_job(spark, lib):
     m = lib._resolve_version("dt", None)
     lo = pd.Timestamp(m.files[1].ts_min, unit="ns")
@@ -192,10 +177,11 @@ def test_plain_reads_run_no_spark_job(spark, lib):
     }
     for name, fn in reads.items():
         fn()   # first call may warm caches
-        assert _jobs_run(spark, fn) == 0, name
+        assert jobs_run(spark, fn, ungrouped=True) == 0, name
     head = QueryBuilder().head(3)
-    assert _jobs_run(spark, lambda: lib.read(
-        "dt", query_builder=head, output_format="pandas")) >= 1
+    assert jobs_run(spark, lambda: lib.read(
+        "dt", query_builder=head, output_format="pandas"),
+        ungrouped=True) >= 1
 
 
 def test_read_batch_reads_driver_scans_in_turn(lib, monkeypatch):

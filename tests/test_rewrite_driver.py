@@ -13,6 +13,7 @@ import pytest
 from arcticdb_spark import catalog
 from arcticdb_spark.catalog import (Arctic, Library, LibraryOptions,
                                     UnsortedDataException, UpdatePayload)
+from tests.counters import jobs_run
 
 T0 = pd.Timestamp("2024-01-01").value
 RPF = 4
@@ -221,18 +222,6 @@ def test_update_batch_on_pool_threads(lib, monkeypatch):
                                       model, check_exact=True)
 
 
-def _jobs_run(spark, fn):
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    group = f"rewrite-{id(fn)}"
-    sc.setJobGroup(group, "driver rewrite job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(st.getJobIdsForGroup(group))
-
-
 def test_rewrites_run_no_spark_job(spark, lib):
     frame = _frame(40)
     lib.write("jobs", frame)
@@ -250,7 +239,7 @@ def test_rewrites_run_no_spark_job(spark, lib):
         if name == "compact_data":
             assert lib.is_symbol_fragmented("jobs")
         v = _latest(lib, "jobs").version
-        assert _jobs_run(spark, fn) == 0, name
+        assert jobs_run(spark, fn) == 0, name
         assert _latest(lib, "jobs").version == v + 1, name
     assert not lib.is_symbol_fragmented("jobs")
 

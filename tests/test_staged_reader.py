@@ -4,7 +4,6 @@ each staged footer and each chunk sidecar once, and ``read(incomplete=True)``
 unions the chunks under the same promoted schema without a Spark job."""
 import builtins
 import os
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -12,6 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from arcticdb_spark.catalog import Arctic
+from tests.counters import jobs_run
 
 
 def _chunk(day: int, dtype="float64", n: int = 4) -> pd.DataFrame:
@@ -19,20 +19,6 @@ def _chunk(day: int, dtype="float64", n: int = 4) -> pd.DataFrame:
         {"v": np.arange(n, dtype=dtype)},
         index=pd.date_range(f"2024-01-{day:02d}", periods=n, freq="h",
                             name="ts"))
-
-
-def _jobs_run(spark, fn):
-    """Spark jobs started by ``fn`` on this thread (its own job group)."""
-    sc = spark.sparkContext
-    # unique per call: the id of a freed lambda is reused by later ones,
-    # and a reused group name would count an earlier call's jobs too
-    group = f"staged-reader-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "staged reader job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("finalize", [
@@ -97,7 +83,7 @@ def test_incomplete_spark_read_starts_no_job(spark, tmp_lib):
     tmp_lib.stage("sym", _chunk(2))
     tmp_lib.stage("sym", _chunk(3))
     holder = {}
-    jobs = _jobs_run(spark, lambda: holder.setdefault(
+    jobs = jobs_run(spark, lambda: holder.setdefault(
         "df", tmp_lib.read("sym", incomplete=True, output_format="spark")))
     assert jobs == 0
     assert holder["df"].count() == 12

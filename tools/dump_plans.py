@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as E
 from arcticdb_spark import get_spark
@@ -63,7 +65,7 @@ def main():
         lines.append(shown)
         lines.append("```")
         lines.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(REPO / "PLANS.md", "w") as f:
         f.write("\n".join(lines))
     print("wrote PLANS.md")
 

@@ -7,8 +7,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as E
 from arcticdb_spark import get_spark
@@ -359,7 +361,7 @@ def main():
         lines.extend(probe_sf1_gates(spark))
     if "--forced-gates" in sys.argv:
         lines.extend(probe_forced_join_gates(spark))
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(REPO / "SCALING.md", "w") as f:
         f.write("\n".join(lines))
     print("wrote SCALING.md")
     for name, ts in rows.items():
@@ -370,7 +372,7 @@ def sf1_only():
     """Append just the sf1 gate-probe section to the existing SCALING.md."""
     spark = get_spark("scale_probe")
     lines = probe_sf1_gates(spark)
-    with open("/root/repo/SCALING.md", "a") as f:
+    with open(REPO / "SCALING.md", "a") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines))
 
@@ -379,7 +381,7 @@ def forced_gates_only():
     """Append just the forced-gate section to the existing SCALING.md."""
     spark = get_spark("scale_probe")
     lines = probe_forced_join_gates(spark)
-    with open("/root/repo/SCALING.md", "a") as f:
+    with open(REPO / "SCALING.md", "a") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines))
 

@@ -1,6 +1,9 @@
 """Ad-hoc smoke: exercise expr/query/resample/catalog against sf0.001."""
 import sys
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import pandas as pd
 from arcticdb_spark import get_spark, QueryBuilder, Arctic
