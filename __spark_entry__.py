@@ -842,14 +842,12 @@ def q_dedup_simhash(spark, sf):
 
 
 def q_dedup_embedding(spark, sf):
-    """Embedding-cosine near-dup pairs: exact blocked-GEMM whenever the
-    normalized matrix fits the 512 MB broadcast budget (~1M rows at d=64 —
-    every sf the harness ships), hyperplane-LSH + exact verify beyond.
-    Strategy choice comes from the parquet footer row count
-    (metadata-only), not a df.count() scan. The r12 sf1 oracle run showed
-    WHY exact is the byte-gated default: LSH candidate recall at this low
-    threshold (0.45) is ~0.49, while the blocked GEMM matches the
-    all-pairs oracle exactly at any corpus the budget admits."""
+    """Embedding-cosine near-dup pairs, exact at every scale: blocked GEMM
+    against one broadcast matrix whenever the normalized matrix fits the
+    512 MB budget (~1M rows at d=64 — every sf the harness ships), the
+    k x k block-grid GEMM beyond. The strategy comes from the parquet
+    footer row count (metadata-only), not a df.count() scan; both match
+    the all-pairs oracle exactly at this low threshold (0.45)."""
     from arcticdb_spark.sources.tables import table_rows
     e = load_table(spark, sf, "embeddings")
     return xdedup.embedding_near_dup_pairs(e, threshold=0.45,

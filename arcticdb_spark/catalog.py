@@ -1002,6 +1002,30 @@ def _schema_from_pandas_dtypes(pdf):
     return T.StructType(m)
 
 
+def _object_strings(pdf):
+    """``pdf`` with its pyarrow-backed string columns (``string[pyarrow]``,
+    ``ArrowDtype`` strings) as object columns, missing values None. Spark's
+    ``createDataFrame`` misreads their Arrow offsets: values shift by a
+    row, or the write fails in ``UTF8String.copy``."""
+    import pandas as pd
+    import pyarrow as pa
+
+    def arrow_str(dt) -> bool:
+        if isinstance(dt, pd.StringDtype):
+            return dt.storage != "python"
+        return isinstance(dt, pd.ArrowDtype) and (
+            pa.types.is_string(dt.pyarrow_dtype)
+            or pa.types.is_large_string(dt.pyarrow_dtype))
+
+    cols = [i for i, dt in enumerate(pdf.dtypes) if arrow_str(dt)]
+    if cols:
+        pdf = pdf.copy(deep=False)
+        for i in cols:
+            s = pdf.iloc[:, i]
+            pdf.isetitem(i, s.astype(object).where(s.notna(), None))
+    return pdf
+
+
 # Reference NativeVersionStore kwarg validation (_store.py:704-720 and the
 # per-method valid sets at its _validate_kwargs call sites): unknown keyword
 # arguments raise ArcticNativeException naming the method and the kwargs —
@@ -1843,12 +1867,13 @@ class Library:
         return VersionManifest.from_json(d)
 
     def _manifest_exists(self, symbol, version) -> bool:
-        """True only for a LIVE (non-tombstoned) manifest."""
+        """True only for a LIVE (non-tombstoned) manifest. Reads the JSON
+        and tests its tombstone flag; no ``FileEntry`` is built."""
         try:
-            self._load_manifest(symbol, version)
-            return True
-        except NoSuchVersionException:
+            d = self._fs.read_json(self._ver_path(symbol, version))
+        except FileNotFoundError:
             return False
+        return not d.get("tombstone")
 
     def _tombstone_manifest(self, symbol, version) -> None:
         """GC a version's manifest by REPLACING it with a tombstone stub
@@ -2523,7 +2548,8 @@ class Library:
                 schema = aw.spark_schema(tbl, (meta or {}).get("uint64", ()))
                 return aw.Normalized(pdf, meta, schema, table=tbl,
                                      _build=lambda: self.spark.createDataFrame(
-                                         pdf, schema=schema))
+                                         _object_strings(pdf), schema=schema))
+            pdf = _object_strings(pdf)
             if len(pdf) == 0:
                 # schema inference needs rows; map pandas dtypes explicitly
                 # (reference supports empty writes: test_empty_writes)

@@ -24,8 +24,9 @@ MinHash band table alone), more than the query's own work at small scale.
   (candidates -> shingle-hash sets of the candidate ids -> two equi-joins
   -> size-bound filter -> array_intersect), whose join strategy AQE picks
   at runtime from the measured sizes; no driver-side gate job.
-* **embedding near-dup** — cosine over the embedding column; see
-  similarity.py for the ANN path.
+* **embedding near-dup** — exact cosine over the embedding column by
+  blocked GEMM (one broadcast matrix, or a k x k block grid above the
+  broadcast budget); see similarity.py for the ANN path.
 """
 
 from __future__ import annotations
@@ -506,9 +507,7 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
     (defaults 16/4: ~0.23 at s=0.5, ~0.87 at s=0.8, ~0.99 at s=0.95) —
     the S-curve every banded-minhash system rides. Each call logs
     ``minhash_candidates`` with the curve at s = 0.5/0.8/0.95 so a
-    low-similarity request is visibly recall-bounded (the same discipline
-    the embedding LSH gate got after the sf1 oracle found its low-threshold
-    recall hole).
+    low-similarity request is visibly recall-bounded.
     """
     r = max(num_hashes // bands, 1)
     _gate("minhash_candidates", "banded_lsh", num_hashes=num_hashes,
@@ -540,10 +539,8 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
             .select("p.id_a", "p.id_b"))
 
 
-# driver/executor broadcast budget for the collected-lookup rescore paths
-# (shingle sets / vector matrices). Above this estimated size the rescore
-# re-attaches state by equi-join instead — a row-count gate alone undercounts
-# long documents (2M ids x a few hundred shingles each is multiple GB).
+# driver/executor broadcast budget for the normalized embedding matrix of
+# the exact near-dup path; above it the block grid takes over
 _BCAST_BYTES_MAX = 512 << 20
 
 # every physical-strategy gate decision is appended here (gate name,
@@ -633,6 +630,22 @@ def jaccard_near_dup_pairs(df: DataFrame, text_col: str = "text",
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
+def _vec_matrix(vecs) -> np.ndarray:
+    """A batch of vectors (a pandas Series or sequence of equal-length
+    arrays, one per row) as one float64 matrix with a row per vector;
+    (0, 0) for an empty batch. Every vector pandas UDF converts its input
+    with this."""
+    if len(vecs) == 0:
+        return np.empty((0, 0))
+    return np.stack(list(vecs)).astype(np.float64, copy=False)
+
+
+def _unit_rows(M: np.ndarray) -> np.ndarray:
+    """``M`` with every row scaled to unit L2 norm, in place."""
+    M /= np.linalg.norm(M, axis=1, keepdims=True)
+    return M
+
+
 def _collect_matrix(base: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """(ids_sorted, row-normalized matrix sorted by id) via ``toArrow()``
     — one Arrow batch transfer into flat buffers instead of a Row-object
@@ -649,89 +662,59 @@ def _collect_matrix(base: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     if n * d != len(flat):
         raise ValueError("ragged embedding column: all vectors must share "
                          f"one dimension (n={n}, total={len(flat)})")
-    M = flat.reshape(n, d)
-    M /= np.linalg.norm(M, axis=1, keepdims=True)
+    M = _unit_rows(flat.reshape(n, d))
     order = np.argsort(ids)
     return ids[order], M[order]
 
 
-def _score_pairs_broadcast(base: DataFrame, pairs: DataFrame) -> DataFrame:
-    """cos(id_a, id_b) via a normalized vector matrix shipped to tasks —
-    the same physical pattern as broadcasting a dimension table."""
-    ids_sorted, M_sorted = _collect_matrix(base)
+def _gemm_pairs(ida: np.ndarray, A: np.ndarray, idb: np.ndarray,
+                B: np.ndarray, threshold: float, symmetric: bool):
+    """Yield, per 1024-row block of ``A``, the (id_a, id_b, cos) frame of
+    every row pair of unit-vector matrices ``A`` x ``B`` whose cosine,
+    rounded 6dp, is >= ``threshold``, with id_a < id_b. ``symmetric``
+    says ``B``'s rows include ``A``'s, so each pair appears twice and the
+    id_a > id_b copy (and every self-pair) is dropped; otherwise the id
+    sets are disjoint and each pair is put in order.
 
-    @F.pandas_udf("double")
-    def cos_lookup(ia: pd.Series, ib: pd.Series) -> pd.Series:
-        A = M_sorted[np.searchsorted(ids_sorted, ia.to_numpy())]
-        B = M_sorted[np.searchsorted(ids_sorted, ib.to_numpy())]
-        return pd.Series(np.round((A * B).sum(axis=1), 6))
+    The GEMM runs in 1024 x 8192 tiles, rounded IN PLACE, so a float64
+    temp stays at 64 MB (ADVICE r12: 1024 x 65536 was 512 MB, doubled by
+    np.round's copy, on top of the matrices themselves)."""
+    for i in range(0, len(ida), 1024):
+        ia_blk, Ai = ida[i:i + 1024], A[i:i + 1024]
+        out = [(ia_blk[:0], idb[:0], np.empty(0))]
+        for j in range(0, len(idb), 8192):
+            S = Ai @ B[j:j + 8192].T
+            np.round(S, 6, out=S)
+            hit_r, hit_c = np.nonzero(S >= threshold)
+            ia, ib, cs = ia_blk[hit_r], idb[j + hit_c], S[hit_r, hit_c]
+            if symmetric:
+                keep = ia < ib
+                out.append((ia[keep], ib[keep], cs[keep]))
+            else:
+                out.append((np.minimum(ia, ib), np.maximum(ia, ib), cs))
+        id_a, id_b, cos = map(np.concatenate, zip(*out))
+        yield pd.DataFrame({"id_a": id_a, "id_b": id_b, "cos": cos})
 
-    return pairs.select("id_a", "id_b",
-                        cos_lookup(F.col("id_a"), F.col("id_b")).alias("cos"))
-
-
-def _score_pairs_join(base: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Re-attach vectors by equi-join, then batch-vectorized cosine."""
-    @F.pandas_udf("double")
-    def cos_np(va: pd.Series, vb: pd.Series) -> pd.Series:
-        A = np.stack([np.asarray(v, dtype="float64") for v in va])
-        B = np.stack([np.asarray(v, dtype="float64") for v in vb])
-        num = (A * B).sum(axis=1)
-        den = np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1))
-        return pd.Series(np.round(num / den, 6))
-
-    j = (pairs.join(base.select(F.col("id").alias("id_a"),
-                                F.col("vec").alias("va")), "id_a")
-              .join(base.select(F.col("id").alias("id_b"),
-                                F.col("vec").alias("vb")), "id_b"))
-    return j.select("id_a", "id_b", cos_np(F.col("va"), F.col("vb")).alias("cos"))
 
 def _exact_pairs_blocked(base: DataFrame, threshold: float) -> DataFrame:
     """EXACT all-pairs cosine >= threshold without materializing the O(n²)
     id-pair relation: the normalized matrix ships to every task (the
     dimension-table broadcast the byte gate already approved) and each
     Arrow batch of ids computes its block-row of the similarity matrix
-    with BLAS (blocked GEMM), emitting only the surviving upper-triangle
-    pairs. n=1M x d=64 is a 512 MB broadcast and ~3e13 FLOPs — seconds
-    per executor on a 1000-executor cluster — where an id-pair BNLJ would
-    shuffle 5e11 rows. Values match the DuckDB all-pairs oracle exactly
-    (round 6), at ANY threshold — unlike LSH candidates, whose recall
-    collapses for low thresholds (measured 0.49 at threshold 0.45 on
-    isotropic sf1 vectors; see embedding_near_dup_pairs)."""
+    with BLAS (blocked GEMM, :func:`_gemm_pairs`), emitting only the
+    surviving upper-triangle pairs. n=1M x d=64 is a 512 MB broadcast and
+    ~3e13 FLOPs — seconds per executor on a 1000-executor cluster — where
+    an id-pair BNLJ would shuffle 5e11 rows. Values match the DuckDB
+    all-pairs oracle exactly (round 6), at ANY threshold."""
     ids_sorted, M_sorted = _collect_matrix(base)
-    spark = base.sparkSession
 
     def gen(batches):
         for pdf in batches:
-            bid = pdf["id"].to_numpy()
-            bidx = np.searchsorted(ids_sorted, bid)
-            # block the GEMM so temp memory stays ~rows_blk x cols_blk
-            # (1024 x 8192 float64 = 64 MB per temp, rounded IN PLACE —
-            # ADVICE r12: 1024 x 65536 was 512 MB, doubled by np.round's
-            # copy, on top of the broadcast matrix itself)
-            for i in range(0, len(bidx), 1024):
-                ridx = bidx[i:i + 1024]
-                A = M_sorted[ridx]
-                out_a, out_b, out_c = [], [], []
-                for j in range(0, len(ids_sorted), 8192):
-                    S = A @ M_sorted[j:j + 8192].T
-                    np.round(S, 6, out=S)
-                    hit_r, hit_c = np.nonzero(S >= threshold)
-                    ia = ids_sorted[ridx[hit_r]]
-                    ib = ids_sorted[j + hit_c]
-                    keep = ia < ib   # upper triangle only, no self-pairs
-                    out_a.append(ia[keep])
-                    out_b.append(ib[keep])
-                    out_c.append(S[hit_r, hit_c][keep])
-                yield pd.DataFrame({
-                    "id_a": np.concatenate(out_a) if out_a else
-                            np.array([], dtype=np.int64),
-                    "id_b": np.concatenate(out_b) if out_b else
-                            np.array([], dtype=np.int64),
-                    "cos": np.concatenate(out_c) if out_c else
-                           np.array([], dtype=np.float64)})
+            bidx = np.searchsorted(ids_sorted, pdf["id"].to_numpy())
+            yield from _gemm_pairs(ids_sorted[bidx], M_sorted[bidx],
+                                   ids_sorted, M_sorted, threshold, True)
 
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
+    n_parts = max(base.sparkSession.sparkContext.defaultParallelism, 1)
     return (base.select("id").repartition(n_parts)
             .mapInPandas(gen, "id_a long, id_b long, cos double"))
 
@@ -744,30 +727,25 @@ def _exact_pairs_blocked(base: DataFrame, threshold: float) -> DataFrame:
 _GRID_BLOCK_BYTES_MAX = 128 << 20
 
 
-def _exact_pairs_grid(base: DataFrame, threshold: float, n_rows: int,
-                      dim: int,
-                      block_bytes_max: int = _GRID_BLOCK_BYTES_MAX
+def _exact_pairs_grid(base: DataFrame, threshold: float, k: int
                       ) -> DataFrame:
     """EXACT all-pairs cosine >= threshold ABOVE the single-matrix
     broadcast budget: 2-D blocked GEMM over the upper triangle of a
     k x k block grid (the SUMMA-style decomposition used by distributed
     matrix multiply, e.g. Spark MLlib's BlockMatrix).
 
-    Rows hash into k row-blocks (k = ceil(matrix_bytes / block budget));
-    one task per block pair (i, j), i <= j, receives exactly blocks i and
-    j via a grouped shuffle and BLAS-multiplies them, emitting only the
+    Rows hash into ``k`` row-blocks; one task per block pair (i, j),
+    i <= j, receives exactly blocks i and j via a grouped shuffle and
+    BLAS-multiplies them (:func:`_gemm_pairs`), emitting only the
     surviving pairs. No task ever holds more than two blocks; nothing
     O(n²) is shuffled (the k(k+1)/2 grid replicates each input row k
     times — matrix_bytes x k total shuffle, the standard 2-D-grid matmul
-    communication bound). Exact at ANY n and ANY threshold — this is the
-    above-budget default; LSH (recall collapses at low thresholds) is
-    opt-in via strategy='lsh'. Values are bit-identical to
-    _exact_pairs_blocked (same normalize + round(6))."""
-    spark = base.sparkSession
-    k = max(2, int(-(-(n_rows * dim * 8) // block_bytes_max)))
+    communication bound). Exact at ANY n and ANY threshold, and
+    bit-identical to _exact_pairs_blocked (same normalize, same GEMM
+    tiles, same round(6))."""
     blocked = base.withColumn(
         "blk", F.pmod(F.xxhash64(F.col("id")), F.lit(k)).cast("int"))
-    grid = spark.createDataFrame(
+    grid = base.sparkSession.createDataFrame(
         [(i, j) for i in range(k) for j in range(i, k)], "bi int, bj int")
     # broadcast the k(k+1)/2-row grid against the data: a row in block b
     # feeds every grid task whose bi or bj is b (k tasks)
@@ -776,223 +754,60 @@ def _exact_pairs_grid(base: DataFrame, threshold: float, n_rows: int,
     right = (blocked.join(F.broadcast(grid.filter("bi <> bj")),
                           F.col("blk") == F.col("bj"))
              .select("bi", "bj", F.lit(1).alias("side"), "id", "vec"))
-    both = left.unionByName(right)
+
+    def block(pdf):
+        return (pdf["id"].to_numpy().astype(np.int64),
+                _unit_rows(_vec_matrix(pdf["vec"])))
 
     def compute(key, pdf):
-        bi, bj = int(key[0]), int(key[1])
-        a = pdf[pdf["side"] == 0]
-        ida = a["id"].to_numpy().astype(np.int64)
-        A = np.array(a["vec"].tolist(), dtype=np.float64)
-        A /= np.linalg.norm(A, axis=1, keepdims=True)
-        if bi == bj:
-            idb, B = ida, A
-        else:
-            b = pdf[pdf["side"] == 1]
-            idb = b["id"].to_numpy().astype(np.int64)
-            B = np.array(b["vec"].tolist(), dtype=np.float64)
-            B /= np.linalg.norm(B, axis=1, keepdims=True)
-        out_a, out_b, out_c = [], [], []
-        # sub-block the GEMM: 1024 x 8192 float64 temps, rounded in place
-        for i in range(0, len(ida), 1024):
-            Ai, ia_blk = A[i:i + 1024], ida[i:i + 1024]
-            for j in range(0, len(idb), 8192):
-                S = Ai @ B[j:j + 8192].T
-                np.round(S, 6, out=S)
-                hit_r, hit_c = np.nonzero(S >= threshold)
-                ia = ia_blk[hit_r]
-                ib = idb[j + hit_c]
-                keep = ia != ib   # blocks are disjoint unless bi == bj
-                ia, ib, cs = ia[keep], ib[keep], S[hit_r, hit_c][keep]
-                if bi == bj:
-                    # symmetric block: each unordered pair appears twice
-                    m = ia < ib
-                    ia, ib, cs = ia[m], ib[m], cs[m]
-                else:
-                    lo = np.minimum(ia, ib)
-                    ib = np.maximum(ia, ib)
-                    ia = lo
-                out_a.append(ia)
-                out_b.append(ib)
-                out_c.append(cs)
-        if not out_a:
-            return pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                                 "id_b": pd.Series(dtype="int64"),
-                                 "cos": pd.Series(dtype="float64")})
-        return pd.DataFrame({"id_a": np.concatenate(out_a),
-                             "id_b": np.concatenate(out_b),
-                             "cos": np.concatenate(out_c)})
+        ida, A = block(pdf[pdf["side"] == 0])
+        same = key[0] == key[1]
+        idb, B = (ida, A) if same else block(pdf[pdf["side"] == 1])
+        frames = list(_gemm_pairs(ida, A, idb, B, threshold, same))
+        if not frames:
+            return pd.DataFrame(columns=["id_a", "id_b", "cos"])
+        return pd.concat(frames, ignore_index=True)
 
-    return both.groupBy("bi", "bj").applyInPandas(
+    return left.unionByName(right).groupBy("bi", "bj").applyInPandas(
         compute, "id_a long, id_b long, cos double")
-
-
-def lsh_candidate_recall(threshold: float, n_planes: int,
-                         n_tables: int) -> float:
-    """Expected probability that a TRUE pair at exactly ``threshold``
-    cosine collides in at least one hyperplane table:
-    p_plane = 1 - acos(threshold)/pi; 1 - (1 - p_plane^planes)^tables.
-    Pairs above the threshold collide with higher probability, so this
-    lower-bounds candidate recall at the decision boundary."""
-    import math
-    p_plane = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
-    per_table = p_plane ** n_planes
-    return 1.0 - (1.0 - per_table) ** n_tables
-
-
-def lsh_plan(threshold: float, target_recall: float = 0.9,
-             fp_budget: float = 0.02, max_planes: int = 24,
-             max_tables: int = 64) -> tuple[int, int]:
-    """Size (n_planes, n_tables) FROM the quality contract instead of a
-    fixed 6x8 (which collapses to ~0.49 candidate recall at threshold
-    0.45 — found by the r12 sf1 sweep). Inverts the S-curve:
-
-    * recall: 1-(1-p^r)^b >= target_recall at the decision boundary,
-      where p = 1 - acos(threshold)/pi, so b = ceil(ln(1-target) /
-      ln(1-p^r));
-    * precision: an orthogonal pair (cos ~ 0, p = 1/2) must collide with
-      probability <= fp_budget, i.e. b * 0.5^r <= fp_budget — without
-      this constraint the recall target alone is met by r=1, b=2, whose
-      buckets are HALF-SPACES (candidate set ~ n²/4, quadratic again);
-    * cost: among feasible (r, b) pick minimal hashing work r*b.
-
-    Raises if no (r <= max_planes, b <= max_tables) satisfies both —
-    caller should use the exact grid path instead of silently degraded
-    LSH."""
-    import math
-    p = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
-    best = None
-    for r in range(1, max_planes + 1):
-        per = p ** r
-        if per >= 1.0:
-            b = 1
-        elif per <= 0.0:
-            continue
-        else:
-            b = math.ceil(math.log(1.0 - target_recall)
-                          / math.log(1.0 - per))
-        if b > max_tables or b * 0.5 ** r > fp_budget:
-            continue
-        if best is None or r * b < best[0] * best[1]:
-            best = (r, b)
-    if best is None:
-        raise ValueError(
-            f"no LSH plan meets recall>={target_recall} at threshold "
-            f"{threshold} with fp<={fp_budget} within {max_planes} planes "
-            f"x {max_tables} tables — use the exact grid strategy")
-    return best
 
 
 def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
                              id_col: str = "vec_id", vec_col: str = "embedding",
-                             exact_below: int = 2000, dim: int = 64,
-                             n_planes: int | None = None,
-                             n_tables: int | None = None,
-                             n_rows: int | None = None,
-                             broadcast_bytes_max: int | None = None,
-                             strategy: str | None = None,
-                             grid_block_bytes: int | None = None,
-                             lsh_target_recall: float = 0.9
+                             dim: int = 64, n_rows: int | None = None,
+                             broadcast_bytes_max: int = _BCAST_BYTES_MAX,
+                             grid_block_bytes: int = _GRID_BLOCK_BYTES_MAX
                              ) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine >= threshold.
+    """Near-duplicate pairs by embedding cosine >= threshold, EXACT at
+    every scale; the two physical strategies are value-identical and a
+    byte gate picks one:
 
-    Physical strategies (``strategy=None`` picks by byte gate — EXACT at
-    every scale; both exact paths are value-identical):
-    * **'exact'** — single-matrix blocked GEMM while the normalized matrix
+    * **exact** — single-matrix blocked GEMM while the normalized matrix
       fits the broadcast byte budget (n*dim*8 <= broadcast_bytes_max —
       1M rows at d=64 under the default 512 MB): every task scores its
       Arrow batch's block-row against the broadcast matrix with BLAS; no
       O(n²) shuffle, matches the all-pairs oracle.
-    * **'grid'** — ABOVE the budget (the default there since r13): 2-D
-      blocked GEMM over the upper triangle of a k x k block grid, one
-      task per block pair, each holding two <=``grid_block_bytes``
-      blocks. Exact at any n; shuffle = matrix_bytes x k (the standard
-      distributed-matmul communication bound), never O(n²) rows.
-    * **'lsh'** — OPT-IN ONLY (demoted from the above-budget default in
-      r13): hyperplane-LSH candidates + exact verify. Sub-quadratic, but
-      candidate recall depends on the threshold: p_plane =
-      1 - acos(threshold)/pi per plane, so LOW thresholds collapse recall
-      (measured 0.49 at threshold 0.45 with 6x8 on isotropic sf1
-      vectors). When ``n_planes``/``n_tables`` are not given they are
-      sized by ``lsh_plan(threshold, lsh_target_recall)`` instead of a
-      fixed 6x8; the gate log records the estimated boundary recall.
+    * **grid** — ABOVE the budget: 2-D blocked GEMM over the upper
+      triangle of a k x k block grid, one task per block pair, each
+      holding two <=``grid_block_bytes`` blocks. Shuffle = matrix_bytes x
+      k (the standard distributed-matmul communication bound), never
+      O(n²) rows.
 
-    Pass ``n_rows`` (manifest total_rows / parquet footer count) to pick the
-    strategy without a driver-side scan; ``exact_below=0`` forces the LSH
-    path unconditionally (legacy probe knob, same as strategy='lsh'). The
-    ``df.count()`` fallback only runs when the caller provides neither.
-    """
-    from arcticdb_spark.extensions.similarity import _bucket_udf, _planes
-    if broadcast_bytes_max is None:   # resolve at CALL time (tests/probes
-        broadcast_bytes_max = _BCAST_BYTES_MAX   # monkeypatch the global)
-    if strategy is None and exact_below <= 0:
-        strategy = "lsh"
-    n = n_rows if n_rows is not None else (0 if strategy == "lsh" else df.count())
+    Pass ``n_rows`` (manifest total_rows / parquet footer count) to pick
+    the strategy without a driver-side scan; without it the gate costs a
+    ``df.count()``."""
+    n = n_rows if n_rows is not None else df.count()
+    est_bytes = n * dim * 8
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    if strategy is None:
-        # broadcast_bytes_max is a memory BUDGET: it dominates exact_below
-        # (which only keeps its legacy <=0 -> lsh meaning above).
-        strategy = ("exact" if n * dim * 8 <= broadcast_bytes_max
-                    else "grid")
-    if strategy == "exact":
+    if est_bytes <= broadcast_bytes_max:
         _gate("embedding_strategy", "exact", n_rows=n,
-              est_bytes=n * dim * 8, budget=broadcast_bytes_max)
+              est_bytes=est_bytes, budget=broadcast_bytes_max)
         return _exact_pairs_blocked(base, threshold)
-    if strategy == "grid":
-        blk = grid_block_bytes if grid_block_bytes else _GRID_BLOCK_BYTES_MAX
-        k = max(2, int(-(-(n * dim * 8) // blk)))
-        _gate("embedding_strategy", "exact_grid", n_rows=n,
-              est_bytes=n * dim * 8, budget=broadcast_bytes_max,
-              grid_k=k, block_bytes=blk)
-        return _exact_pairs_grid(base, threshold, n, dim,
-                                 block_bytes_max=blk)
-    if strategy != "lsh":
-        raise ValueError(f"unknown strategy {strategy!r}: "
-                         "None | 'exact' | 'grid' | 'lsh'")
-    if n_planes is None or n_tables is None:
-        n_planes, n_tables = lsh_plan(threshold, lsh_target_recall)
-    est_recall = lsh_candidate_recall(threshold, n_planes, n_tables)
-    _gate("embedding_strategy", "lsh", n_rows=n,
-          est_bytes=n * dim * 8, budget=broadcast_bytes_max,
-          est_boundary_recall=round(est_recall, 4))
-    buckets = _bucket_udf([_planes(dim, n_planes, seed=7000 + t)
-                           for t in range(n_tables)])
-    # candidate generation shuffles IDS ONLY: the (id, bucket) table is
-    # two scalars per row, so the bucket grouping never carries the
-    # 64-float vectors (the naive form moves dim*8 bytes per candidate).
-    # r14 (guide §2.4): group per bucket and emit ordered pairs from the
-    # sorted member array — the former self-equi-join shuffled the keyed
-    # table twice and needed an eager materialize so the bucket UDF would
-    # not run once per join side; grouping keeps the same per-bucket
-    # reducer concentration with one exchange and no materialize job.
-    keyed = base.select("id", F.explode(buckets(F.col("vec"))).alias("bk"))
-    grouped = (keyed.groupBy("bk")
-               .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-               .where(F.size("ids") >= 2))
-    arr = F.col("ids")
-    pair_structs = F.flatten(F.transform(
-        arr,
-        lambda x, i: F.transform(
-            F.slice(arr, i + F.lit(2), F.size(arr)),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    pairs = (grouped.select(F.explode(pair_structs).alias("p"))
-             .select("p.id_a", "p.id_b")
-             .dropDuplicates(["id_a", "id_b"]))
-    _gate("embedding_rescore",
-          "broadcast" if (n_rows is not None
-                          and n_rows * dim * 8 <= broadcast_bytes_max)
-          else "join",
-          est_bytes=(n_rows or 0) * dim * 8, budget=broadcast_bytes_max)
-    if n_rows is not None and n_rows * dim * 8 <= broadcast_bytes_max:
-        # vectors fit an executor-side broadcast (the dimension-table
-        # pattern; byte gate: n_rows x dim x 8B float64 matrix):
-        # rescore candidate id pairs against a normalized numpy
-        # matrix — Arrow moves 2 longs per pair, not 2 vectors
-        scored = _score_pairs_broadcast(base, pairs)
-    else:
-        # at larger scale re-attach vectors by joining the (small
-        # relative to pairs) vector table back, then rescore per batch
-        scored = _score_pairs_join(base, pairs)
-    return scored.filter(F.col("cos") >= threshold)
+    k = max(2, int(-(-est_bytes // grid_block_bytes)))
+    _gate("embedding_strategy", "exact_grid", n_rows=n,
+          est_bytes=est_bytes, budget=broadcast_bytes_max,
+          grid_k=k, block_bytes=grid_block_bytes)
+    return _exact_pairs_grid(base, threshold, k)
 
 
 # ---------------------------------------------------------------------------

@@ -5,19 +5,25 @@
   fold, no Python), then a per-query top-k window. At 100 TB the scan
   dominates; scoring is embarrassingly parallel and shuffle-free until the
   final tiny top-k aggregation.
-* **lsh_topk** — the scale path: random-hyperplane LSH. Planes are a
-  deterministic broadcast literal; bucket = sign-bit string; candidates =
-  equi-join on bucket (with multi-probe via several tables), exact-rescored.
-  Recall < 1.0 by construction; the bench compares it against brute force.
+* **lsh_topk** — random-hyperplane LSH: seeded planes, one bigint
+  bucket key per (table, sign pattern) from one matmul per table and
+  Arrow batch, multi-probe on the query side, candidates = broadcast
+  equi-join on the key, exact SQL cosine rescoring. Recall < 1.0 by
+  construction; the bench compares it against brute force.
 * **ivf_topk** — IVF-style coarse quantization: k centroid vectors (md5
   seeds refined by Lloyd rounds on a capped sample, one Spark job while
   the corpus fits the cap), assign by best dot product, search only the
   nprobe closest lists.
+* **centroid_assign** / **kmeans** — nearest-centroid assignment (cosine)
+  and Lloyd's k-means (euclidean), each an Arrow-batched pandas UDF over
+  the driver-held centroid matrix.
 
 Every cosine scorer projects each vector's norm ONCE, before the explode
 or join that multiplies the vector into many pairs, and scores a pair as
 ``dot / (qn * cn)``: the same double arithmetic as recomputing both norms
-per pair, so the scores are identical, at a third of the folds.
+per pair, so the scores are identical, at a third of the folds. The
+numpy kernels share one batch conversion (``dedup._vec_matrix``) and one
+cosine assignment (:func:`_assign_cosine`).
 """
 
 from __future__ import annotations
@@ -30,7 +36,8 @@ from pyspark.sql import functions as F
 # DataFrames persisted across an operator call (the kmeans base scan) go to
 # dedup's registry: unpersist_all() here IS dedup's, so calling either
 # releases every cached extension intermediate.
-from arcticdb_spark.extensions.dedup import _persist, unpersist_all  # noqa: F401
+from arcticdb_spark.extensions.dedup import _persist, _vec_matrix
+from arcticdb_spark.extensions.dedup import unpersist_all  # noqa: F401
 from arcticdb_spark.extensions.text import sql_ident
 
 
@@ -107,51 +114,45 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 # LSH (random hyperplanes)
 # ---------------------------------------------------------------------------
 
-def _planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    import numpy as np
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).tolist()
+def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
+    """The ``n_planes`` x ``dim`` seeded hyperplane normals of one table."""
+    return np.random.default_rng(seed).standard_normal((n_planes, dim))
 
 
-def _bucket_udf(planes_list: list[list[list[float]]], probe: int = 0):
-    """All tables' bucket ids in one vectorized numpy matmul per Arrow batch.
+def _bucket_udf(n_planes: int, n_tables: int, probe: int = 0):
+    """All tables' bucket keys of a vector: table ``t`` hashes with
+    ``_planes(width, n_planes, 1000 + t)``, where width is the batch's
+    own vector width, and its key is ``t << n_planes | bits`` with bit i
+    set when the vector is on the positive side of plane i. One matmul
+    per table and Arrow batch, no per-row Python. Bucketing is
+    self-consistent (corpus and queries hash identically), so float
+    summation order here cannot break results.
 
-    The SQL fold (`F.aggregate`) runs interpreted per element — for
-    n_tables*n_planes dot products per vector a Pandas UDF is the documented
-    fast path (~10-100x). Bucketing is self-consistent (corpus and queries
-    hash identically), so float summation order here cannot break results.
+    ``probe=1`` adds multi-probe keys (each single-bit flip of the sign
+    pattern, ``bits ^ (1 << i)``) — used on the QUERY side only: queries
+    are few, so probing 1+n_planes buckets per table costs nothing but
+    recovers the neighbors that fell one hyperplane away (the dominant
+    LSH miss mode)."""
+    weights = np.left_shift(1, np.arange(n_planes, dtype=np.int64))
+    flips = np.concatenate([[0], weights if probe >= 1 else []]
+                           ).astype(np.int64)
 
-    ``probe=1`` adds multi-probe buckets (each single-bit flip of the sign
-    pattern) — used on the QUERY side only: queries are few, so probing
-    1+n_planes buckets per table costs nothing but recovers the neighbors
-    that fell one hyperplane away (the dominant LSH miss mode).
-    """
-    mats = [np.asarray(p, dtype="float64").T for p in planes_list]  # dim x planes
-
-    @F.pandas_udf("array<string>")
+    @F.pandas_udf("array<bigint>")
     def buckets(vecs: pd.Series) -> pd.Series:
-        V = np.stack([np.asarray(v, dtype="float64") for v in vecs])
-        per_table = []
-        for t, M in enumerate(mats):
-            S = (V @ M) >= 0.0
-            names = []
-            for row in S:
-                base = "".join("1" if b else "0" for b in row)
-                ids = [f"t{t}:{base}"]
-                if probe >= 1:
-                    for i in range(len(base)):
-                        flipped = base[:i] + ("0" if base[i] == "1" else "1") + base[i + 1:]
-                        ids.append(f"t{t}:{flipped}")
-                names.append(ids)
-            per_table.append(names)
-        return pd.Series([sum(x, []) for x in zip(*per_table)])
+        V = _vec_matrix(vecs)
+        keys = []
+        for t in range(n_tables):
+            side = V @ _planes(V.shape[1], n_planes, 1000 + t).T >= 0.0
+            bits = side.astype(np.int64) @ weights
+            keys.append((t << n_planes | bits)[:, None] ^ flips)
+        return pd.Series(list(np.concatenate(keys, axis=1)))
 
     return buckets
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
              id_col: str = "vec_id", vec_col: str = "embedding",
-             n_planes: int = 6, n_tables: int = 8, dim: int = 64,
+             n_planes: int = 6, n_tables: int = 8,
              probe: int = 1) -> DataFrame:
     """Approximate top-k: ``n_tables`` independent hyperplane bucketings
     computed in ONE pass over the corpus (bucket array + explode with the
@@ -160,13 +161,12 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     Multi-probe (``probe=1``) expands QUERY buckets only — the corpus side
     stays one row per (vector, table), so the big-side explode factor is
     exactly n_tables regardless of probing."""
-    planes = [_planes(dim, n_planes, seed=1000 + t) for t in range(n_tables)]
     cb = (_id_vec(corpus, id_col, vec_col, "vec_id", "cvec", "cn")
           .withColumn("bucket", F.explode(
-              _bucket_udf(planes)(F.expr("cvec")))))
+              _bucket_udf(n_planes, n_tables)(F.expr("cvec")))))
     qb = (_id_vec(queries, id_col, vec_col, "query_id", "qvec", "qn")
           .withColumn("bucket", F.explode(
-              _bucket_udf(planes, probe=probe)(F.expr("qvec")))))
+              _bucket_udf(n_planes, n_tables, probe)(F.expr("qvec")))))
     # score BEFORE deduplicating: a (query, vector) pair colliding in
     # several tables scores identically each time, and the dedup shuffle
     # then moves (query_id, vec_id, score) triples instead of two
@@ -185,8 +185,19 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
 
 # ---------------------------------------------------------------------------
-# IVF (coarse quantization)
+# IVF (coarse quantization) and centroid assignment
 # ---------------------------------------------------------------------------
+
+def _assign_cosine(V: np.ndarray, M: np.ndarray
+                   ) -> tuple[np.ndarray, np.ndarray]:
+    """(index, cosine) of each row of ``V``'s nearest row of ``M`` by
+    cosine. Cosines are rounded to 6dp before the argmax so the decision
+    is reproducible across engines; ties go to the first (lowest) index."""
+    sims = np.round((V @ M.T) / (np.sqrt((V * V).sum(axis=1))[:, None]
+                                 * np.sqrt((M * M).sum(axis=1))[None, :]), 6)
+    best = np.argmin(-sims, axis=1)
+    return best, sims[np.arange(len(best)), best]
+
 
 def _ivf_refine_centroids(corpus: DataFrame, n_lists: int, id_col: str,
                           vec_col: str, iters: int = 2,
@@ -209,8 +220,9 @@ def _ivf_refine_centroids(corpus: DataFrame, n_lists: int, id_col: str,
     2 MB). Training rows are taken in id order, whatever order the scan
     delivers them in.
 
-    Semantics: max-cosine assignment with cosines rounded 6dp before the
-    argmax (ties -> lowest list id), member means rounded 9dp, a list that
+    Semantics: max-cosine assignment (:func:`_assign_cosine`: cosines
+    rounded 6dp before the argmax, ties -> lowest list id), member means
+    rounded 9dp, a list that
     loses all members keeps its previous centroid. Cosine is scale
     invariant, so means need no re-normalization.
 
@@ -228,12 +240,12 @@ def _ivf_refine_centroids(corpus: DataFrame, n_lists: int, id_col: str,
     if tbl.num_rows <= train_cap:
         ids = tbl.column("cid").to_pylist()
         hs = tbl.column("h").to_pylist()
-        V = np.stack(tbl.column("v").to_numpy(zero_copy_only=False))
+        V = _vec_matrix(tbl.column("v").to_numpy(zero_copy_only=False))
         seeds = sorted(range(len(ids)), key=lambda i: (hs[i], ids[i]))
         M = V[sorted(seeds[:n_lists], key=ids.__getitem__)]
     else:
-        M = np.stack([np.asarray(r["cv"], dtype="float64") for r in
-                      _seed_rows(corpus, n_lists, id_col, vec_col)])
+        M = _vec_matrix([r["cv"] for r in
+                         _seed_rows(corpus, n_lists, id_col, vec_col)])
         if iters <= 0:
             return M
         m = int(corpus.count() // train_cap) + 1
@@ -241,13 +253,10 @@ def _ivf_refine_centroids(corpus: DataFrame, n_lists: int, id_col: str,
                             f"= 0")
                      .selectExpr(f"{ident} AS cid", f"{vec} AS v").toArrow())
         ids = tbl.column("cid").to_pylist()
-        V = np.stack(tbl.column("v").to_numpy(zero_copy_only=False))
+        V = _vec_matrix(tbl.column("v").to_numpy(zero_copy_only=False))
     V = V[np.argsort(np.asarray(ids), kind="stable")]
-    Vn = np.sqrt((V * V).sum(axis=1))
     for _ in range(iters):
-        Mn = np.sqrt((M * M).sum(axis=1))
-        sims = (V @ M.T) / (Vn[:, None] * Mn[None, :])
-        best = np.argmin(-np.round(sims, 6), axis=1)
+        best = _assign_cosine(V, M)[0]
         M = M.copy()
         for l in range(M.shape[0]):
             members = V[best == l]
@@ -273,8 +282,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     @F.pandas_udf("array<bigint>")
     def centroid_order(vecs: pd.Series) -> pd.Series:
         # vectorized matmul: centroid ids sorted by descending dot product
-        V = np.stack([np.asarray(v, dtype="float64") for v in vecs])
-        order = np.argsort(-(V @ M), axis=1, kind="stable")
+        order = np.argsort(-(_vec_matrix(vecs) @ M), axis=1, kind="stable")
         return pd.Series([cids[o].tolist() for o in order])
 
     # multi-assignment: each vector is indexed into its top-``n_assign``
@@ -314,28 +322,21 @@ def centroid_assign(corpus: DataFrame, k: int = 8,
     lowest centroid id).
 
     The k x d centroid matrix is driver-collected (k rows, independent of
-    corpus size) and inlined as literal arrays, so assignment is one narrow
-    JVM-side projection — no shuffle, no Python, scan-bound at 100 TB.
+    corpus size) and held by a narrow Arrow-batched pandas UDF — one
+    matmul per batch, no shuffle, scan-bound at 100 TB (a literal
+    per-centroid fold expression is semantically identical, but Catalyst
+    codegen over k*d literals dominates wall time even at tiny k).
     Cosines are rounded to 6dp before the argmax so the decision is
     reproducible across engines (same contract as brute_force_topk).
     """
     cent = _seed_rows(corpus, k, id_col, vec_col)
     cids = np.array([int(r["cid"]) for r in cent])
-    M = np.stack([np.asarray(r["cv"], dtype="float64") for r in cent])
-    Mn = np.sqrt((M * M).sum(axis=1))
+    M = _vec_matrix([r["cv"] for r in cent])
 
-    # vectorized Arrow-batched assignment: one matmul per batch. A literal
-    # per-centroid fold expression is semantically identical but Catalyst
-    # codegen over k*d literals dominates wall time even at tiny k
     @F.pandas_udf("struct<centroid_id:bigint, cos:double>")
     def assign(vecs: pd.Series) -> pd.DataFrame:
-        V = np.stack([np.asarray(x, dtype="float64") for x in vecs])
-        sims = (V @ M.T) / (np.sqrt((V * V).sum(axis=1))[:, None] * Mn[None, :])
-        sims = np.round(sims, 6)
-        best = np.argmin(-sims, axis=1)  # first max -> lowest cid on ties
-        rows = np.arange(len(best))
-        return pd.DataFrame({"centroid_id": cids[best],
-                             "cos": sims[rows, best]})
+        best, cos = _assign_cosine(_vec_matrix(vecs), M)
+        return pd.DataFrame({"centroid_id": cids[best], "cos": cos})
 
     out = corpus.select(F.col(id_col).alias("vec_id"),
                         assign(F.col(vec_col)).alias("a"))
@@ -351,11 +352,11 @@ def _kmeans_estep(base: DataFrame, cents: dict) -> DataFrame:
     Catalyst codegen at k*d expression nodes)."""
     items = sorted(cents.items())
     cids = np.array([cid for cid, _ in items])
-    M = np.stack([np.asarray(cv, dtype="float64") for _, cv in items])
+    M = _vec_matrix([cv for _, cv in items])
 
     @F.pandas_udf("struct<cluster:bigint, dist:double>")
     def assign(vecs: pd.Series) -> pd.DataFrame:
-        V = np.stack([np.asarray(x, dtype="float64") for x in vecs])
+        V = _vec_matrix(vecs)
         d = np.sqrt(((V[:, None, :] - M[None, :, :]) ** 2).sum(axis=2))
         d = np.round(d, 6)
         best = np.argmin(d, axis=1)  # first min -> lowest cid on ties
@@ -371,8 +372,9 @@ def kmeans(corpus: DataFrame, k: int = 8, iters: int = 2,
            id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Lloyd's k-means, Spark-native and deterministic: init = the ``k``
     corpus vectors with the smallest md5(id) (content-spread seed —
-    `_seed_rows`); each iteration is one narrow E-step
-    (broadcast literal centroids, no Python) plus one M-step groupBy whose
+    `_seed_rows`); each iteration is one narrow E-step (an Arrow-batched
+    pandas UDF over the driver-held centroid matrix,
+    :func:`_kmeans_estep`) plus one M-step groupBy whose
     per-dimension ``avg`` aggregates are map-side combinable — per
     iteration the driver holds only the k x d centroid matrix and the
     cluster never shuffles the raw vectors more than once.

@@ -116,8 +116,8 @@ def table_rows(sf_dir: str, name: str) -> int:
     """Exact row count from the parquet footer — metadata-only, no scan.
 
     The distributed analogue is the manifest's ``total_rows`` / per-file
-    footer num_rows; strategy decisions (exact vs LSH) should use this, not
-    ``df.count()``."""
+    footer num_rows; strategy decisions (broadcast vs grid GEMM) should use
+    this, not ``df.count()``."""
     import os
 
     import pyarrow.parquet as pq

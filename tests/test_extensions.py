@@ -181,11 +181,23 @@ def test_lsh_recall_reasonable(spark):
         "vec_id long, embedding array<float>")
     q = df.filter(F.col("vec_id") < 5)
     exact = xsim.brute_force_topk(df, q, k=3).toPandas()
-    approx = xsim.lsh_topk(df, q, k=3, n_planes=6, n_tables=6, dim=16).toPandas()
+    approx = xsim.lsh_topk(df, q, k=3, n_planes=6, n_tables=6).toPandas()
     # recall over 5 queries x top3
     e = {(r.query_id, r.vec_id) for r in exact.itertuples()}
     a = {(r.query_id, r.vec_id) for r in approx.itertuples()}
     assert len(e & a) / len(e) >= 0.4
+    # the candidate set (k = corpus size keeps every candidate) is the
+    # bucket rule replayed in numpy: a vector is a candidate of a query
+    # when their sign patterns over some table's seeded planes differ in
+    # at most one bit (the query side probes every single-bit flip)
+    cand = xsim.lsh_topk(df, q, k=100, n_planes=6, n_tables=6).toPandas()
+    want = set()
+    for t in range(6):
+        sign = vecs.astype("float64") @ xsim._planes(16, 6, 1000 + t).T >= 0
+        for qid in range(5):
+            near = np.flatnonzero((sign != sign[qid]).sum(axis=1) <= 1)
+            want |= {(qid, int(v)) for v in near if v != qid}
+    assert {(r.query_id, r.vec_id) for r in cand.itertuples()} == want
 
 
 def test_seed_spread_on_id_sorted_corpus(spark):
@@ -751,25 +763,6 @@ def test_jaccard_matches_brute_force(spark, k, threshold):
     assert want and got.keys() == want.keys()
     for pair, score in want.items():
         assert got[pair] == pytest.approx(score, abs=1e-6), pair
-
-
-def test_embedding_byte_gate_routes_to_join(spark, monkeypatch):
-    import numpy as np
-    rng = np.random.default_rng(11)
-    base = rng.normal(size=(6, 8))
-    base[1] = base[0] + 0.001           # planted near-dup
-    rows = [(i, [float(x) for x in base[i]]) for i in range(6)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    def boom(*a, **k):
-        raise AssertionError("broadcast rescore used despite byte gate")
-    monkeypatch.setattr(xdedup, "_score_pairs_broadcast", boom)
-    # tiny byte budget: n_rows*dim*8 must exceed it -> join rescore
-    monkeypatch.setattr(xdedup, "_BCAST_BYTES_MAX", 1)
-    out = xdedup.embedding_near_dup_pairs(df, threshold=0.99, dim=8,
-                                          exact_below=0, n_rows=6).toPandas()
-    got = {(a, b) for a, b in zip(out.id_a, out.id_b)}
-    assert (0, 1) in got
 
 
 def test_shuffle_deterministic(spark):

@@ -13,11 +13,18 @@
 * Nothing in the package calls ``threading.local()``: per-thread hidden
   state outlives the call that filled it (a pool thread pins whatever it
   last stored), so state is passed explicitly instead.
+* Every name that the entry module, the bench, ``tools/`` and
+  ``perfbench/`` read from an ``arcticdb_spark`` module (a
+  ``from ... import`` name, or an attribute of a module alias) is bound
+  at that module's top level, and every keyword they pass to a function
+  of it is one of its parameters. Nothing else runs these scripts, so a
+  deleted name or parameter would otherwise strand them silently.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import re
 from pathlib import Path
 
@@ -134,3 +141,94 @@ def test_package_uses_no_thread_locals():
                     or (isinstance(f, ast.Name) and f.id in local_names)):
                 offenders.append(f"{path.relative_to(ROOT)}:{node.lineno}")
     assert not offenders, f"threading.local() calls: {offenders}"
+
+
+CONSUMERS = (ROOT / "__spark_entry__.py", ROOT / "bench.py", ROOT / "tools",
+             ROOT / "perfbench")
+
+
+def _module_source(module: str) -> Path | None:
+    """The source file of dotted package module ``module``, if any."""
+    base = ROOT.joinpath(*module.split("."))
+    for path in (base / "__init__.py", base.with_suffix(".py")):
+        if path.is_file():
+            return path
+    return None
+
+
+@functools.lru_cache(maxsize=None)
+def _top_level(path: Path) -> tuple[frozenset, dict]:
+    """(names bound at the top level of ``path``, its top-level functions
+    by name). A package's submodules count as its names."""
+    names = set()
+    if path.name == "__init__.py":
+        names |= {p.stem for p in path.parent.glob("*.py")}
+        names |= {p.name for p in path.parent.iterdir()
+                  if (p / "__init__.py").is_file()}
+    funcs, todo = {}, list(_parse(path).body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            names.add(node.name)
+            funcs[node.name] = node
+        elif isinstance(node, ast.ClassDef):
+            names.add(node.name)
+        else:
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                names |= {(a.asname or a.name).split(".")[0]
+                          for a in node.names}
+            elif isinstance(node, ast.Name) and isinstance(node.ctx,
+                                                           ast.Store):
+                names.add(node.id)
+            todo.extend(ast.iter_child_nodes(node))
+    return frozenset(names), funcs
+
+
+def _package_refs(tree: ast.Module):
+    """(node, module, name) for every name ``tree`` reads from an
+    ``arcticdb_spark`` module: each ``from <module> import <name>``, each
+    ``<alias>.<name>`` on a module alias, and each call of either (the
+    node is then the Call)."""
+    modules, funcs = {}, {}   # local name -> module / (module, name)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            modules.update((a.asname or a.name, a.name) for a in node.names
+                           if a.name.startswith("arcticdb_spark")
+                           and (a.asname or "." not in a.name))
+        elif (isinstance(node, ast.ImportFrom) and node.level == 0
+              and (node.module or "").startswith("arcticdb_spark")):
+            for a in node.names:
+                yield node, node.module, a.name
+                sub = f"{node.module}.{a.name}"
+                if _module_source(sub):
+                    modules[a.asname or a.name] = sub
+                else:
+                    funcs[a.asname or a.name] = (node.module, a.name)
+    for node in ast.walk(tree):
+        f = node.func if isinstance(node, ast.Call) else node
+        if (isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name)
+                and f.value.id in modules):
+            yield node, modules[f.value.id], f.attr
+        elif (isinstance(node, ast.Call) and isinstance(f, ast.Name)
+              and f.id in funcs):
+            yield (node, *funcs[f.id])
+
+
+def test_scripts_use_only_existing_package_names():
+    stale = []
+    for path in _py_files(*CONSUMERS):
+        for node, module, name in _package_refs(_parse(path)):
+            src = _module_source(module)
+            names, funcs = _top_level(src) if src else (frozenset(), {})
+            where = f"{path.relative_to(ROOT)}:{node.lineno} {module}.{name}"
+            if name not in names and not name.startswith(("*", "__")):
+                stale.append(where)
+            elif isinstance(node, ast.Call) and name in funcs:
+                fn = funcs[name]
+                params = {a.arg for a in (*fn.args.posonlyargs,
+                                          *fn.args.args,
+                                          *fn.args.kwonlyargs)}
+                stale += [f"{where}({k.arg}=)" for k in node.keywords
+                          if fn.args.kwarg is None and k.arg is not None
+                          and k.arg not in params]
+    assert not stale, f"names or parameters the package lacks: {stale}"

@@ -161,6 +161,27 @@ def test_pyarrow_strings_are_written_as_string(libs):
     assert list(lib.read("pa_str", output_format="pandas")["s"]) == vals
 
 
+@pytest.mark.parametrize("rows,other,dict_cols", [
+    (3, "void", ()), (5, "void", ()), (3, "int", ("s",))],
+    ids=["next_to_void_3_rows", "next_to_void_5_rows", "dictionary_column"])
+def test_pyarrow_strings_on_spark_paths(spark, tmp_path, rows, other,
+                                        dict_cols):
+    """A pyarrow-backed string column on a path that builds the Spark
+    frame (an all-None sibling column, or a dictionary column) is handed
+    to ``createDataFrame`` as an object column: given the Arrow column,
+    Spark shifts its values by a row (3 rows read back ['', 'a', None])
+    or fails in ``UTF8String.copy`` (5 rows)."""
+    vals = ["a", "bb", None, "dddd", "e"][:rows]
+    side = [None] * rows if other == "void" else list(range(rows))
+    lib = Arctic(str(tmp_path), spark).create_library(
+        "l", library_options=LibraryOptions(dictionary_columns=dict_cols))
+    lib.write("s", pd.DataFrame({"s": pd.array(vals, dtype="string[pyarrow]"),
+                                 other: side}))
+    want = pd.DataFrame({"s": pd.Series(vals, dtype=object), other: side})
+    pd.testing.assert_frame_equal(lib.read("s", output_format="pandas"),
+                                  want, check_exact=True)
+
+
 def test_append_update_stage_match_forced_path(libs, monkeypatch):
     """The same history through both paths stores and reads the same."""
     def history(lib):

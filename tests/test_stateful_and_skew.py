@@ -57,7 +57,7 @@ def test_salted_groupby_matches_plain(spark):
     assert np.allclose(out["m"], plain["m"])
 
 
-def test_embedding_near_dup_exact_vs_lsh(spark):
+def test_embedding_near_dup_exact_finds_planted(spark):
     from arcticdb_spark.extensions.dedup import embedding_near_dup_pairs
     rng = np.random.default_rng(5)
     base = rng.standard_normal((50, 16)).astype("float32")
@@ -67,23 +67,10 @@ def test_embedding_near_dup_exact_vs_lsh(spark):
     df = spark.createDataFrame(
         [(i, [float(x) for x in vecs[i]]) for i in range(55)],
         "vec_id long, embedding array<float>")
-    exact = embedding_near_dup_pairs(df, threshold=0.99, exact_below=100).toPandas()
+    exact = embedding_near_dup_pairs(df, threshold=0.99).toPandas()
     planted = {(i, 50 + i) for i in range(5)}
     got = {(a, b) for a, b in zip(exact.id_a, exact.id_b)}
     assert planted <= got
-    # LSH path (forced: exact_below=0) finds the planted dups too — at
-    # threshold 0.99 the boundary recall estimate is high, unlike low
-    # thresholds where the byte-gated exact path is mandatory
-    from arcticdb_spark.extensions.dedup import (GATE_LOG, clear_gate_log,
-                                                 lsh_candidate_recall)
-    assert lsh_candidate_recall(0.99, 4, 8) > 0.95
-    clear_gate_log()
-    lsh = embedding_near_dup_pairs(df, threshold=0.99, exact_below=0,
-                                   dim=16, n_planes=4, n_tables=8).toPandas()
-    assert [g for g in GATE_LOG
-            if g["gate"] == "embedding_strategy"][0]["path"] == "lsh"
-    got_lsh = {(a, b) for a, b in zip(lsh.id_a, lsh.id_b)}
-    assert len(planted & got_lsh) >= 4
 
 
 def test_read_index_and_defragment(tmp_lib):
@@ -190,19 +177,3 @@ def test_exact_grid_gemm_above_broadcast_budget(spark):
     ia, ib = np.nonzero(np.triu(S >= 0.7, k=1))
     assert len(grid) == len(ia)
     assert (17, 900) in set(zip(grid.id_a, grid.id_b))
-
-
-def test_lsh_plan_sizing():
-    """lsh_plan inverts the banded S-curve: the returned (planes, tables)
-    meets the recall target at the decision boundary, respects the
-    orthogonal-pair false-positive budget, and refuses thresholds where
-    no feasible plan exists (the r12 sf1 sweep's 0.49-recall hole)."""
-    import pytest
-    from arcticdb_spark.extensions.dedup import (lsh_candidate_recall,
-                                                 lsh_plan)
-    for t in (0.99, 0.95, 0.9, 0.8):
-        r, b = lsh_plan(t, target_recall=0.9)
-        assert lsh_candidate_recall(t, r, b) >= 0.9, (t, r, b)
-        assert b * 0.5 ** r <= 0.02, (t, r, b)
-    with pytest.raises(ValueError, match="exact grid"):
-        lsh_plan(0.45, target_recall=0.9)

@@ -18,9 +18,7 @@ Measured and recorded into SCALING_EMBED1M.json:
    both ways on the same input; results must be value-identical, and the
    planted pairs must ALL be found (exact path recall = 1.0 by
    construction).
-2. **opt-in LSH** sized by ``lsh_plan(threshold, 0.9)`` (formula, not the
-   legacy fixed 6x8): measured candidate recall vs the exact truth.
-3. **ANN recall@5 at 1M**: lsh_topk / ivf_topk vs brute_force_topk on 8
+2. **ANN recall@5 at 1M**: lsh_topk / ivf_topk vs brute_force_topk on 8
    held-out queries (bar: >= 0.85).
 
 Run: ``python tools/embed_1m.py`` (writes ``.scale/embed1m/``; ~10-20 min
@@ -125,10 +123,9 @@ def main() -> None:
     # 1) natural-flip A/B: the byte gate sits EXACTLY at 512 MB here
     # (n*d*8 == budget); force each side explicitly on the same corpus
     exact, t_exact, g_exact = run("exact broadcast (forced under)",
-                                  broadcast_bytes_max=1 << 40,
-                                  strategy="exact")
+                                  broadcast_bytes_max=1 << 40)
     grid, t_grid, g_grid = run("exact grid (forced above)",
-                               broadcast_bytes_max=1, strategy=None)
+                               broadcast_bytes_max=1)
     assert g_grid["path"] == "exact_grid", g_grid
     assert grid == exact, (len(grid), len(exact))
     found_pairs = {(a, b) for a, b, _c in exact}
@@ -142,23 +139,7 @@ def main() -> None:
                          "extra_random_pairs": len(exact) - len(
                              planted & found_pairs)}
 
-    # 2) opt-in LSH, formula-sized: measured recall vs the exact truth
-    r_planes, n_tables = xd.lsh_plan(THRESHOLD, target_recall=0.9)
-    lsh, t_lsh, g_lsh = run(f"LSH opt-in ({r_planes}x{n_tables})",
-                            strategy="lsh", n_planes=r_planes,
-                            n_tables=n_tables)
-    lsh_pairs = {(a, b) for a, b, _c in lsh}
-    assert lsh_pairs <= found_pairs, "LSH produced a non-true pair"
-    recall = len(lsh_pairs) / max(len(found_pairs), 1)
-    res["lsh_opt_in"] = {
-        "n_planes": r_planes, "n_tables": n_tables, "sec": round(t_lsh, 1),
-        "pairs": len(lsh_pairs), "measured_recall": round(recall, 4),
-        "est_boundary_recall": g_lsh.get("est_boundary_recall")}
-    print(f"LSH measured recall {recall:.3f} "
-          f"(boundary est {g_lsh.get('est_boundary_recall')})", flush=True)
-    assert recall >= 0.85, recall
-
-    # 3) ANN recall@5 at 1M vs brute force on 8 queries
+    # 2) ANN recall@5 at 1M vs brute force on 8 queries
     queries = emb.filter(F.col("vec_id") % 125_000 == 7).limit(8).persist()
     nq = queries.count()
 
@@ -169,7 +150,7 @@ def main() -> None:
     truth5 = topk_set(xs.brute_force_topk(emb, queries, k=5))
     t_bf = time.perf_counter() - t
     t = time.perf_counter()
-    l5 = topk_set(xs.lsh_topk(emb, queries, k=5, dim=D))
+    l5 = topk_set(xs.lsh_topk(emb, queries, k=5))
     t_l5 = time.perf_counter() - t
     t = time.perf_counter()
     i5 = topk_set(xs.ivf_topk(emb, queries, k=5, n_lists=64, nprobe=8))

@@ -134,7 +134,7 @@ def probe_sf1_gates(spark) -> list[str]:
         gates = "; ".join(
             f"{g['gate']}->{g['path']} "
             + (f"({g.get('est_bytes', g.get('edges', g.get('n_rows', '?')))}"
-               f"/{g.get('budget', g.get('exact_below', '?'))})")
+               f"/{g.get('budget', '?')})")
             for g in xd.GATE_LOG) or "-"
         lines.append(f"| {name} | {dt:.1f} | {gates} |")
         xd.unpersist_all()
@@ -145,18 +145,18 @@ def probe_sf1_gates(spark) -> list[str]:
               "Every broadcast/driver-collect sits behind one of these "
               "gates with a distributed fallback; the probe records the "
               "side that fired at this size (routing boundary tests: "
-              "test_embedding_byte_gate_routes_to_join, "
+              "test_exact_grid_gemm_above_broadcast_budget, "
               "test_near_dup_clusters_long_chain_converges_or_raises)."]
     return lines
 
 
 def probe_forced_join_gates(spark) -> list[str]:
     """End-to-end exercise of BOTH sides of the byte-gated embedding
-    rescore at the sf1 probe size (VERDICT r6 item 7): run embedding
-    near-dup with the default budget (broadcast side) and with
-    ``broadcast_bytes_max=1`` (forcing the distributed equi-join side),
-    assert the two sides return IDENTICAL pair counts, and record
-    wall-clock + the gate decision for each. Jaccard near-dup has no gate
+    strategy at the sf1 probe size (VERDICT r6 item 7): run embedding
+    near-dup with the default budget (broadcast GEMM) and with
+    ``broadcast_bytes_max=1`` (forcing the block-grid GEMM), assert the
+    two sides return IDENTICAL pair counts, and record wall-clock + the
+    gate decision for each. Jaccard near-dup has no gate
     (one plan, AQE picks its joins) and runs once for its wall-clock."""
     import time as _t
 
@@ -185,7 +185,7 @@ def probe_forced_join_gates(spark) -> list[str]:
              .persist())
     n_vecs = emb10.count()
 
-    lines = ["", f"## forced-gate probe — both rescore paths end-to-end "
+    lines = ["", f"## forced-gate probe — both embedding paths end-to-end "
                  f"({n_docs} docs, {n_vecs} vectors)", "",
              "| operator | path | gate decision | sec | result pairs |",
              "|---|---|---|---|---|"]
@@ -193,19 +193,11 @@ def probe_forced_join_gates(spark) -> list[str]:
     runs = [
         ("jaccard_verify", "one plan (AQE join)",
          lambda: xd.jaccard_near_dup_pairs(dup).count()),
-        ("embedding_rescore", "broadcast (LSH opt-in)",
-         lambda: xd.embedding_near_dup_pairs(
-             emb10, n_rows=n_vecs, exact_below=0,
-             n_planes=6, n_tables=8).count()),
-        ("embedding_exact", "blocked GEMM (default under budget)",
+        ("embedding", "blocked GEMM (default under budget)",
          lambda: xd.embedding_near_dup_pairs(emb10, n_rows=n_vecs).count()),
-        ("embedding_grid", "exact grid (forced above-budget)",
+        ("embedding", "exact grid (forced above-budget)",
          lambda: xd.embedding_near_dup_pairs(
              emb10, n_rows=n_vecs, broadcast_bytes_max=1).count()),
-        ("embedding_rescore", "join (forced, LSH opt-in)",
-         lambda: xd.embedding_near_dup_pairs(
-             emb10, n_rows=n_vecs, exact_below=0, n_planes=6, n_tables=8,
-             broadcast_bytes_max=1).count()),
     ]
     for op, path, fn in runs:
         xd.clear_gate_log()
@@ -213,7 +205,8 @@ def probe_forced_join_gates(spark) -> list[str]:
         n = fn()
         dt = _t.perf_counter() - t0
         gate = "; ".join(f"{g['gate']}->{g['path']}"
-                         for g in xd.GATE_LOG if "rescore" in g["gate"]) or "-"
+                         for g in xd.GATE_LOG
+                         if g["gate"] == "embedding_strategy") or "-"
         lines.append(f"| {op} | {path} | {gate} | {dt:.1f} | {n} |")
         results.setdefault(op, []).append(n)
         xd.unpersist_all()
@@ -221,8 +214,9 @@ def probe_forced_join_gates(spark) -> list[str]:
     emb10.unpersist()
     mismatches = {op: ns for op, ns in results.items() if len(set(ns)) != 1}
     lines += ["",
-              ("**Both sides agree on every operator** — the join fallback "
-               "is value-identical to the broadcast path at this size."
+              ("**Both sides agree on every operator** — the grid "
+               "fallback is value-identical to the broadcast path at this "
+               "size."
                if not mismatches else
                f"**MISMATCH: {mismatches}** — the two gate sides disagree; "
                "treat as a correctness bug."),

@@ -14,7 +14,7 @@ SCALING.md section:
    gated operator is re-run with the budget forced BELOW its measured sf1
    footprint — the scale path runs on the exact same sf1 inputs and the
    results are asserted VALUE-IDENTICAL to the default path:
-     * embedding_rescore broadcast vs join      (broadcast_bytes_max=1)
+     * embedding_strategy exact vs exact grid  (broadcast_bytes_max=1)
      * cluster_solver    union-find vs propagation (driver_edges_max=0)
 
 3. **ANN recall@5 at sf1** for LSH and IVF against exact brute force, on a
@@ -94,13 +94,9 @@ def flip_checks(spark) -> dict:
     docs = load_table(spark, SF1, "documents")
     emb = load_table(spark, SF1, "embeddings")
 
-    # 1) embedding strategy + rescore flips. The DEFAULT at sf1 is the
-    # exact blocked-GEMM path (byte gate: 10 MB matrix); its output is
-    # the oracle truth. The LSH scale path is then forced (exact_below=0)
-    # under both rescore budgets: the two LSH variants must be
-    # value-identical to each other, and their measured candidate recall
-    # against the exact truth is recorded (it is EXPECTED to be low at
-    # threshold 0.45 — that is exactly why the byte gate prefers exact).
+    # 1) embedding strategy flip. The DEFAULT at sf1 is the exact
+    # blocked-GEMM path (byte gate: 10 MB matrix); its output is the
+    # oracle truth.
     from arcticdb_spark.sources.tables import table_rows
     n_rows = table_rows(SF1, "embeddings")
     _cleanup(spark)
@@ -128,41 +124,6 @@ def flip_checks(spark) -> dict:
     print(f"embedding grid(forced above-budget, k={g_grid[0]['grid_k']}): "
           f"{len(grid)} pairs — hash-identical to the broadcast-exact "
           "truth", flush=True)
-    # LSH is opt-in since r13 (strategy='lsh' / legacy exact_below=0);
-    # planes/tables pinned at the historical 6x8 so the recorded recall
-    # stays comparable across rounds
-    _cleanup(spark)
-    xdedup.clear_gate_log()
-    a = _rows(xdedup.embedding_near_dup_pairs(emb, threshold=0.45,
-                                              n_rows=n_rows, exact_below=0,
-                                              n_planes=6, n_tables=8),
-              [("id_a", 0), ("id_b", 0), ("cos", 1)])
-    g_lsh = [g for g in xdedup.GATE_LOG if g["gate"] == "embedding_rescore"]
-    g_est = [g for g in xdedup.GATE_LOG if g["gate"] == "embedding_strategy"]
-    _cleanup(spark)
-    xdedup.clear_gate_log()
-    b = _rows(xdedup.embedding_near_dup_pairs(emb, threshold=0.45,
-                                              n_rows=n_rows, exact_below=0,
-                                              n_planes=6, n_tables=8,
-                                              broadcast_bytes_max=1),
-              [("id_a", 0), ("id_b", 0), ("cos", 1)])
-    g_forced = [g for g in xdedup.GATE_LOG if g["gate"] == "embedding_rescore"]
-    assert g_lsh[0]["path"] == "broadcast" and g_forced[0]["path"] == "join", \
-        (g_lsh, g_forced)
-    assert a == b, f"embedding rescore flip mismatch: {len(a)} vs {len(b)}"
-    assert set(a) <= set(truth), "LSH produced a pair the exact path missed"
-    recall = len(a) / max(len(truth), 1)
-    res["embedding_rescore"] = {
-        "default_strategy": g_def[0], "lsh_rescore": g_lsh[0],
-        "forced": g_forced[0], "exact_pairs": len(truth),
-        "lsh_pairs": len(a), "lsh_measured_recall": round(recall, 4),
-        "lsh_est_boundary_recall": g_est[0].get("est_boundary_recall"),
-        "identical": True}
-    print(f"embedding: exact(default)={len(truth)} pairs; forced-LSH "
-          f"broadcast==join on {len(a)} pairs; measured LSH recall "
-          f"{recall:.3f} (est boundary "
-          f"{g_est[0].get('est_boundary_recall')}) — the byte gate prefers "
-          "exact for exactly this reason", flush=True)
 
     # 2) cluster_solver: driver union-find (default) vs min-label propagation
     _cleanup(spark)
